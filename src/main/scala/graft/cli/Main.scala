@@ -2,13 +2,14 @@ package graft.cli
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.engine.{Engine, RunOptions}
 import graft.spec.{ConfigLoader, PipelineSpec}
 import graft.sources.Sources
+import graft.stages.CommandStage
 
 /** CLI — the `bin.js` verb surface (SURVEY §2.1 CLI table):
   *
@@ -29,10 +30,15 @@ import graft.sources.Sources
   * Options: `-c <file>` explicit config, `--cwd <dir>` working directory.
   * stdout EPIPE is tolerated so `run x | head` doesn't crash (bin.js:12-14).
   *
-  * Driver-memory discipline: stdin is spooled to a temp file and read back
-  * as a Spark text scan (never held as a driver-side Seq), and results are
-  * printed via `toLocalIterator` — the CLI handles inputs/outputs larger
-  * than the driver heap.
+  * Data plane: stdin is spooled to a temp file (never held as a driver-
+  * side Seq) and read back as line-aligned splits of at least 1 MiB, at
+  * most `defaultParallelism` of them; a command stage runs one process per
+  * split, so a stdin under 2 MiB is one split and one process per command
+  * stage. The spool is deleted when the invocation ends. Results are
+  * printed by [[Sources.printLines]], which holds at most
+  * `defaultParallelism` fetched partitions on the driver — the CLI handles
+  * inputs/outputs larger than the driver heap. Map-tee sources the
+  * pipelines persisted are released once the output is printed.
   */
 object Main {
 
@@ -99,13 +105,13 @@ object Main {
         val engine = loadEngine(args)
         val spark = mkSession()
         val names = if (args.positional.nonEmpty) args.positional else Seq("main")
-        names.foreach { n =>
+        try names.foreach { n =>
           engine.pipe(n, spark) match {
             case Some(df) => Sources.printLines(df, Int.MaxValue)
             case None if n == "main" => ()
             case None => Console.err.println(s"Could not find pipe: $n")
           }
-        }
+        } finally engine.release()
       case "pipe" =>
         val engine = loadEngine(args)
         val spark = mkSession()
@@ -120,8 +126,7 @@ object Main {
             // the same pipeline chain, and an incremental stdout sink.
             // Runs until interrupted (like the reference until stdin EOF).
             pipeStream(engine, spark, dir, names).foreach(_.awaitTermination())
-          case None =>
-            val stdin = spooledStdin(spark)
+          case None => withSpooledStdin(spark) { stdin =>
             var applied = 0
             val out = names.foldLeft(stdin) { (df, n) =>
               engine.pipe(n, spark, Some(df)) match {
@@ -133,14 +138,17 @@ object Main {
             }
             // zero resolved pipelines → no output (bin.js:174 `if
             // (!streams.length) return` — stdin is NOT echoed through)
-            if (applied > 0) Sources.printLines(out, Int.MaxValue)
+            try if (applied > 0) Sources.printLines(out, Int.MaxValue)
+            finally engine.release()
+          }
         }
       case "exec" =>
         val spark = mkSession()
-        val out = new Engine(PipelineSpec.empty)
-          .exec(args.positional.mkString(" "), spooledStdin(spark),
-            RunOptions(partitions = Some(1)))
-        Sources.printLines(out, Int.MaxValue)
+        withSpooledStdin(spark) { stdin =>
+          val out = new Engine(PipelineSpec.empty)
+            .exec(args.positional.mkString(" "), stdin, RunOptions(partitions = Some(1)))
+          Sources.printLines(out, Int.MaxValue)
+        }
       case "version" => printSafe("graft 0.1.0")
       case "completion" => printSafe(completionScript)
       case _ => printSafe(helpText)
@@ -158,7 +166,7 @@ object Main {
       spark: SparkSession,
       dir: String,
       names: Seq[String],
-      sink: org.apache.spark.sql.DataFrame => Unit = Sources.printLines(_, Int.MaxValue))
+      sink: DataFrame => Unit = Sources.printLines(_, Int.MaxValue))
       : Option[org.apache.spark.sql.streaming.StreamingQuery] = {
     val input = Sources.linesStream(spark, dir)
     var applied = 0
@@ -173,25 +181,35 @@ object Main {
     if (applied == 0) None
     else Some(out.writeStream
       .outputMode("append")
-      .foreachBatch((batch: org.apache.spark.sql.DataFrame, _: Long) => sink(batch))
+      .foreachBatch((batch: DataFrame, _: Long) => sink(batch))
       .start())
   }
 
-  /** stdin → temp-file spool → Spark text scan. Keeps arbitrarily large
-    * stdin off the driver heap (the scan is partitioned like any file
-    * read); reads from Console.in so tests can inject input.
+  /** stdin → temp-file spool → line-aligned splits, no shuffle. Keeps
+    * arbitrarily large stdin off the driver heap; reads from Console.in so
+    * tests can inject input. Splits are at least 1 MiB and at most
+    * `defaultParallelism`: a small stdin stays one split (one process per
+    * command stage), and a large one gets no fewer splits than a file scan
+    * would give it. The spool is deleted when `body` returns or throws.
     */
-  private def spooledStdin(spark: SparkSession): org.apache.spark.sql.DataFrame = {
+  private def withSpooledStdin[A](spark: SparkSession)(body: DataFrame => A): A = {
     val tmp = Files.createTempFile("graft-stdin-", ".txt")
-    tmp.toFile.deleteOnExit()
-    val w = Files.newBufferedWriter(tmp)
     try {
-      val buf = new Array[Char](8192)
-      var n = Console.in.read(buf)
-      while (n >= 0) { w.write(buf, 0, n); n = Console.in.read(buf) }
-    } finally w.close()
-    Sources.lines(spark, tmp.toString)
+      val w = Files.newBufferedWriter(tmp)
+      try {
+        val buf = new Array[Char](8192)
+        var n = Console.in.read(buf)
+        while (n >= 0) { w.write(buf, 0, n); n = Console.in.read(buf) }
+      } finally w.close()
+      val sc = spark.sparkContext
+      val splits = math.min(math.max(Files.size(tmp) / SplitBytes, 1L), sc.defaultParallelism.toLong).toInt
+      import spark.implicits._
+      body(sc.textFile(tmp.toString, splits).toDF(CommandStage.ValueCol))
+    } finally Files.deleteIfExists(tmp)
   }
+
+  /** Smallest stdin split: each split costs a process per command stage. */
+  private val SplitBytes = 1L << 20
 
   private val helpText =
     """Usage: graft <command> [args] [-c <config>] [--cwd <dir>]

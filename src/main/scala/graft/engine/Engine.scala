@@ -53,7 +53,8 @@ final case class RunOptions(
   *     inter-input ordering promise: exactly the interleave contract;
   *   - a `map` segment tees the FIRST stage's output into each remaining
   *     stage (index.js:62); the source is persisted so effectful stages
-  *     (external commands) run once, like Node's byte-tee;
+  *     (external commands) run once, like Node's byte-tee; the caller
+  *     releases that cache with [[Engine.release]];
   *   - a `reduce` segment pipes each remaining stage into the first — the
   *     aggregator (index.js:64);
   *   - segment outputs are CONCATENATED in order (`runStream(mainPipeline)`,
@@ -123,8 +124,29 @@ final class Engine(
   /** `.toJSON()` parity (index.js:208-210). */
   def toJson: String = spec.toJson
 
+  /** Map-tee sources persisted by the pipelines this engine built (see
+    * [[buildSegment]]). They are caller-owned: a DataFrame is lazy, so the
+    * cache must outlive `pipe`/`run` until the caller has consumed the
+    * output, and then be released with [[release]].
+    */
+  private val teeSources = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+
+  /** Unpersist every map-tee source this engine has persisted so far. */
+  def release(): Unit =
+    Iterator.continually(teeSources.poll()).takeWhile(_ != null).foreach(_.unpersist())
+
   // ------------------------------------------------------------- planner
 
+  /** Segments → one DataFrame: segment outputs in order, background
+    * outputs merged unordered.
+    *
+    * Open divergence from `runStream` (index.js:30-39,164): the ordered
+    * concat below is a global sort, and its range partitioner samples the
+    * sorted input with a job of its own before the real run. Each `run`
+    * segment command therefore runs twice per action — a 2-stage `run`
+    * segment whose commands append a line to a file appends 4 lines, where
+    * the reference spawns each command once.
+    */
   private def plan(
       name: String,
       stages: Seq[Stage],
@@ -222,6 +244,7 @@ final class Engine(
         // (index.js:62). persist() keeps effectful sources single-run, the
         // DataFrame analog of Node duplicating bytes to N destinations.
         val src = app(seg.head, segInput).persist(StorageLevel.MEMORY_AND_DISK)
+        teeSources.add(src)
         seg.tail match {
           case Nil => src
           case rest => rest.map(app(_, src)).reduce(_ unionByName _)

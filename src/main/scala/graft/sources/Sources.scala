@@ -1,6 +1,12 @@
 package graft.sources
 
+import scala.collection.mutable
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.SimpleFutureAction
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -246,14 +252,40 @@ object Sources {
   }
 
   /** stdout sink (CLI `gasket run` prints to stdout, bin.js:149). Driver-
-    * side by nature, but streamed through `toLocalIterator` so only ONE
-    * partition's rows are resident on the driver heap at a time — a
-    * whole-result `collect()` would cap output size at driver memory.
+    * side by nature, so the result is fetched one partition per job — a
+    * whole-result `collect()` would cap output size at driver memory, and
+    * `spark.driver.maxResultSize` applies to each partition on its own.
+    * Up to `defaultParallelism` of those jobs run at once (an ordered
+    * prefetch), so at most that many fetched partitions are resident on
+    * the driver heap. Lines are printed in partition order. A failing job
+    * raises its error once every partition before it has been printed,
+    * and cancels the jobs still in flight.
     */
   def printLines(df: DataFrame, limit: Int = 1000): Unit = {
     val projected = df.select(CommandStage.ValueCol)
     val limited = if (limit == Int.MaxValue) projected else projected.limit(limit)
-    val it = limited.toLocalIterator()
-    while (it.hasNext) println(it.next().getString(0))
+    val qe = limited.queryExecution
+    // the execution id ties the jobs to this query, as Dataset actions do;
+    // each job is submitted from this thread, so it carries the caller's
+    // job group and local properties
+    SQLExecution.withNewExecutionId(qe, Some("printLines")) {
+      val rows = qe.toRdd.map(r => if (r.isNullAt(0)) null else r.getString(0))
+      val sc = rows.sparkContext
+      val window = math.max(1, sc.defaultParallelism)
+      val inFlight = mutable.Queue.empty[SimpleFutureAction[Array[String]]]
+      def submit(p: Int): Unit = {
+        val slot = new Array[Array[String]](1)
+        inFlight += sc.submitJob(rows, (it: Iterator[String]) => it.toArray, Seq(p),
+          (_: Int, lines: Array[String]) => slot(0) = lines, slot(0))
+      }
+      val parts = rows.getNumPartitions
+      var next = 0
+      try {
+        while (next < parts || inFlight.nonEmpty) {
+          while (next < parts && inFlight.size < window) { submit(next); next += 1 }
+          Await.result(inFlight.dequeue(), Duration.Inf).foreach(println)
+        }
+      } finally inFlight.foreach(_.cancel())
+    }
   }
 }

@@ -1,7 +1,13 @@
 package graft.cli
 
-import java.io.ByteArrayOutputStream
-import java.nio.file.Files
+import java.io.{ByteArrayOutputStream, PrintStream}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.Locale
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SparkException
 
 import graft.SparkSpec
 
@@ -15,9 +21,29 @@ class MainSpec extends SparkSpec {
 
   private def capture(body: => Unit): String = {
     val out = new ByteArrayOutputStream()
-    Console.withOut(out)(body)
-    out.toString
+    Console.withOut(new PrintStream(out, true, UTF_8))(body)
+    out.toString(UTF_8)
   }
+
+  /** Runs the CLI with `stdin` and returns its stdout lines. */
+  private def piped(stdin: String, argv: String*): Seq[String] =
+    capture {
+      Console.withIn(new java.io.StringReader(stdin))(Main.run(argv.toArray, () => spark))
+    }.linesIterator.toSeq
+
+  /** The stdin spools present in the JVM's temp directory. */
+  private def spools(): Set[String] = {
+    val ls = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+    try ls.iterator.asScala.map(_.getFileName.toString).filter(_.startsWith("graft-stdin-")).toSet
+    finally ls.close()
+  }
+
+  /** About 3.4 MiB of CRLF lines of multi-byte characters, so that split
+    * boundaries fall inside both lines and characters.
+    */
+  private lazy val bigLines: Seq[String] =
+    (0 until 36000).map(i => s"$i ü€😀中é " + "ñø€" * (i % 23))
+  private lazy val bigStdin: String = bigLines.mkString("", "\r\n", "\r\n")
 
   test("ls / show verbs") {
     withDir("""{"a": ["echo hi"], "b": ["cat -"]}""") { cwd =>
@@ -102,6 +128,59 @@ class MainSpec extends SparkSpec {
       }
     }
     assert(out.trim == "cba")
+  }
+
+  test("a stdin of 2 MiB or more is split and prints its lines in input order") {
+    assert(bigStdin.getBytes(UTF_8).length >= (3 << 20))
+    withDir("""{"main": ["cat -"], "up": [{"module": "uppercase"}], "count": ["wc -l"]}""") { cwd =>
+      assert(piped(bigStdin, "pipe", "--cwd", cwd) == bigLines)
+      assert(piped(bigStdin, "pipe", "up", "--cwd", cwd) == bigLines.map(_.toUpperCase(Locale.ROOT)))
+      // one process per split: 3 MiB and more is at least 3 splits
+      val counts = piped(bigStdin, "pipe", "count", "--cwd", cwd).map(_.trim.toLong)
+      assert(counts.size >= 3 && counts.sum == bigLines.size)
+    }
+  }
+
+  test("a small stdin stays one split: wc -l prints one count") {
+    withDir("""{"main": ["wc -l"]}""") { cwd =>
+      assert(piped("a\nb\nc\n", "pipe", "--cwd", cwd).map(_.trim) == Seq("3"))
+    }
+  }
+
+  test("a command that exits non-zero on a split stdin fails with its exit status") {
+    withDir("""{"main": ["cat >/dev/null; exit 7"]}""") { cwd =>
+      val e = intercept[SparkException](piped(bigStdin, "pipe", "--cwd", cwd))
+      assert(e.getMessage.contains("status 7") ||
+        Option(e.getCause).exists(_.getMessage.contains("status 7")))
+    }
+  }
+
+  test("pipe and exec leave no stdin spool behind, on success or failure") {
+    val before = spools()
+    withDir("""{"main": ["tr a-z A-Z"], "boom": ["exit 3"]}""") { cwd =>
+      assert(piped("abc\n", "pipe", "--cwd", cwd) == Seq("ABC"))
+      assert(piped("abc\n", "exec", "rev") == Seq("cba"))
+      intercept[SparkException](piped("abc\n", "pipe", "boom", "--cwd", cwd))
+    }
+    assert(spools().diff(before).isEmpty)
+  }
+
+  test("pipe through a map segment releases the tee cache once the output is printed") {
+    val spec = """{"main": [{"command": "sed 's/^/src /'", "type": "map"},
+                 |  {"module": "uppercase", "type": "map"}, {"command": "rev", "type": "map"}]}""".stripMargin
+    withDir(spec) { cwd =>
+      // sanity: building the map segment registers the tee source's cache
+      spark.catalog.clearCache()
+      val engine = graft.engine.Engine.load(cwd)
+      val df = engine.pipe("main", spark, Some(spark.range(1).selectExpr("'x' AS value"))).get
+      assert(!spark.sharedState.cacheManager.isEmpty)
+      df.collect()
+      engine.release()
+      assert(spark.sharedState.cacheManager.isEmpty)
+      // the CLI releases it after printing
+      assert(piped("ab\n", "pipe", "--cwd", cwd).sorted == Seq("SRC AB", "ba crs"))
+      assert(spark.sharedState.cacheManager.isEmpty)
+    }
   }
 
   test("pipe --stream follows a growing directory incrementally") {

@@ -264,6 +264,20 @@ class EngineSpec extends SparkSpec {
     assert(loud.contains("oops-marker"))
   }
 
+  test("json: true module stages run on parsed records, one after another (index.js:73)") {
+    val spec = graft.spec.ConfigLoader.parse(
+      """{"records": [{"module": "redact", "json": true}, {"module": "normalize", "json": true}]}""")
+    val in = lines(
+      """{"id":1,"tag":"T1","value":"  Mail BOB@Example.com   NOW  "}""",
+      """{"id":2,"tag":"T2","value":"See http://x.org/p/1 and 1234567"}""")
+    val out = collectValues(new Engine(spec).run("records", spark, Some(in)))
+    // redact, then normalize: the placeholders are lower-cased too; only
+    // the transformed field changes, and records stay in input order
+    assert(out == Seq(
+      """{"id":1,"tag":"T1","value":"mail <email> now"}""",
+      """{"id":2,"tag":"T2","value":"see <url> and <num>"}"""))
+  }
+
   test("registry surface: list/has/toJson round-trip (index.js:180-210)") {
     val spec = PipelineSpec(ListMap(
       "a" -> Seq(Stage.Command("cat -")),
