@@ -19,15 +19,17 @@ import graft.stages.{CommandStage, ModuleRegistry, NdjsonBridge}
   * stages), Some(1) = strict single-process reference parity.
   * `orderedConcat` is the scale escape hatch: true (default) reproduces
   * the reference's sequential output order across segments and run-stages
-  * (`runStream(mainPipeline)`, index.js:164) at the price of ONE global
-  * sort over the unioned output; false skips that sort entirely — rows
-  * from different segments interleave freely (fork semantics for the
-  * whole pipeline). At 100 TB, order parity is usually chrome: any
-  * downstream aggregation/dedup/sink repartitions anyway, and the global
-  * sort is the only super-linear stage in an otherwise map-shaped
-  * pipeline — so a production run flips it off without restructuring
-  * the spec (EngineSpec asserts the plan carries no global Sort when
-  * off; EngineSoak measures the multi-segment per-doc cost flat).
+  * (`runStream(mainPipeline)`, index.js:164) with ONE exchange: every
+  * segment output, and every stage output of a run segment, is a block
+  * with a dense ordinal, and `repartitionById` sends block k to output
+  * partition k — ordered output partitions, no global sort and no
+  * sampling job, so each command still runs once per action. false skips
+  * that exchange entirely — rows from different segments interleave
+  * freely (fork semantics for the whole pipeline), and the pipeline stays
+  * map-shaped: at 100 TB order parity is usually chrome, since any
+  * downstream aggregation/dedup/sink repartitions anyway (EngineSpec
+  * asserts the plan carries no exchange for it when off; EngineSoak
+  * measures the multi-segment per-doc cost flat).
   */
 final case class RunOptions(
     cwd: String = ".",
@@ -45,7 +47,8 @@ final case class RunOptions(
   *   - stages are grouped into maximal same-type segments
   *     (`split()`, index.js:94-115);
   *   - a `pipe` segment composes its stages serially
-  *     (`pipeStream`, index.js:52-56);
+  *     (`pipeStream`, index.js:52-56); adjacent `json: true` module/inline
+  *     stages share one NDJSON parse and one serialize ([[fuse]]);
   *   - a `run` segment runs stages independently and concatenates outputs
   *     in stage order (`runStream`, index.js:30-39);
   *   - a `fork` segment runs stages independently, outputs interleaved
@@ -74,8 +77,8 @@ final class Engine(
     val modules: ModuleRegistry = ModuleRegistry.default,
     val defaults: RunOptions = RunOptions()) {
 
-  /** Internal ordinal column carrying a run-segment's stage index from
-    * buildSegment to the single ordering sort in plan().
+  /** Internal block-ordinal column: carries a run-segment's stage index
+    * from buildSegment to the single ordering exchange in plan().
     */
   private val RunOrdCol = "_graft_run"
 
@@ -139,13 +142,6 @@ final class Engine(
 
   /** Segments → one DataFrame: segment outputs in order, background
     * outputs merged unordered.
-    *
-    * Open divergence from `runStream` (index.js:30-39,164): the ordered
-    * concat below is a global sort, and its range partitioner samples the
-    * sorted input with a job of its own before the real run. Each `run`
-    * segment command therefore runs twice per action — a 2-stage `run`
-    * segment whose commands append a line to a file appends 4 lines, where
-    * the reference spawns each command once.
     */
   private def plan(
       name: String,
@@ -157,7 +153,7 @@ final class Engine(
     val empty = emptySource(spark)
     val stageCounter = new java.util.concurrent.atomic.AtomicInteger(0)
     var background = List.empty[DataFrame]
-    var segOutputs = List.empty[DataFrame]
+    var segOutputs = List.empty[(DataFrame, Int)]
     // engine input feeds the first MAIN segment's head — background
     // segments run beside the main chain and never consume its input
     // (the reference pulls them out of mainPipeline, index.js:150-151)
@@ -169,39 +165,34 @@ final class Engine(
         else empty
       val out = buildSegment(name, seg, spark, segInput, opts, stageCounter)
       if (isBackground) background ::= out
-      else segOutputs ::= out
+      else segOutputs ::= (out, if (seg.head.segType == SegType.Run) seg.size else 1)
     }
     val mains = segOutputs.reverse
-    // ordered concat of segment outputs (runStream, index.js:164): ONE
-    // sort over (segment ordinal, intra-segment stage ordinal) reproduces
-    // sequential output order without serializing execution. Run segments
-    // carry their stage ordinal in `_run` (buildSegment) — sorting only by
-    // `_seg` would let Catalyst eliminate the inner `_run` sort as
-    // redundant and lose stage order WITHIN a run segment.
     def dropOrd(df: DataFrame): DataFrame =
       if (df.columns.contains(RunOrdCol)) df.drop(RunOrdCol) else df
     val main = mains match {
       case Nil => empty
-      case one :: Nil =>
-        if (!opts.orderedConcat) dropOrd(one)
-        else if (one.columns.contains(RunOrdCol))
-          one.orderBy(RunOrdCol).drop(RunOrdCol)
-        else one
+      case (one, _) :: Nil if !one.columns.contains(RunOrdCol) => one
       case many if !opts.orderedConcat =>
-        // opt-out: plain union, no ordinal columns, NO global sort — the
+        // opt-out: plain union, no ordinal columns, NO exchange — the
         // whole pipeline stays map-shaped (fork semantics across segments)
-        many.map(dropOrd).reduce(_ unionByName _)
+        many.map { case (df, _) => dropOrd(df) }.reduce(_ unionByName _)
       case many =>
-        many.zipWithIndex
-          .map { case (df, i) =>
-            val withRun =
-              if (df.columns.contains(RunOrdCol)) df
-              else df.withColumn(RunOrdCol, lit(0))
-            withRun.withColumn("_seg", lit(i))
-          }
-          .reduce(_ unionByName _)
-          .orderBy("_seg", RunOrdCol)
-          .drop("_seg", RunOrdCol)
+        // ordered concat of segment outputs (runStream, index.js:164):
+        // each segment output — each stage output of a run segment — is
+        // one block with a dense ordinal, and block k becomes output
+        // partition k. Partition order is output order (collect and
+        // printLines both read partitions in order), and no range
+        // partitioner samples the input, so every command spawns once.
+        val (blocks, total) = many.foldLeft((List.empty[DataFrame], 0)) {
+          case ((acc, first), (df, n)) =>
+            val ord =
+              if (df.columns.contains(RunOrdCol)) col(RunOrdCol) + first else lit(first)
+            (df.withColumn(RunOrdCol, ord) :: acc, first + n)
+        }
+        blocks.reverse.reduce(_ unionByName _)
+          .repartitionById(total, col(RunOrdCol))
+          .drop(RunOrdCol)
     }
     // background output merged unordered (parallel([main, bkgds]),
     // index.js:172)
@@ -210,10 +201,23 @@ final class Engine(
 
   /** `split()` parity (index.js:94-115): maximal runs of equal type. */
   private[engine] def split(stages: Seq[Stage]): List[List[Stage]] =
+    adjacentRuns(stages)(_.segType == _.segType)
+
+  /** A pipe segment's stages as units of application: each maximal run
+    * of adjacent `json: true` module/inline stages is one unit, any other
+    * stage is a unit of its own.
+    */
+  private def fuse(seg: List[Stage]): List[List[Stage]] =
+    adjacentRuns(seg)((a, b) => onRecords(a) && onRecords(b))
+
+  private def adjacentRuns(stages: Seq[Stage])(together: (Stage, Stage) => Boolean): List[List[Stage]] =
     stages.foldRight(List.empty[List[Stage]]) {
-      case (s, (h :: t) :: rest) if h.segType == s.segType => ((s :: h :: t)) :: rest
+      case (s, (h :: t) :: rest) if together(s, h) => (s :: h :: t) :: rest
       case (s, acc) => List(s) :: acc
     }
+
+  /** A module or inline stage that runs on NDJSON records. */
+  private def onRecords(st: Stage): Boolean = st.json && !st.isInstanceOf[Stage.Command]
 
   private def buildSegment(
       pipelineName: String,
@@ -224,16 +228,15 @@ final class Engine(
       stageCounter: java.util.concurrent.atomic.AtomicInteger): DataFrame = {
     // pipeline-global stage index: observe() metric names must be unique
     // across the whole (possibly multi-segment, unioned) query
-    def app(st: Stage, in: DataFrame): DataFrame =
-      applyStage(pipelineName, st, stageCounter.getAndIncrement(), in, opts)
+    def applyRun(unit: List[Stage], in: DataFrame): DataFrame =
+      applyUnit(pipelineName, unit, stageCounter, in, opts)
+    def app(st: Stage, in: DataFrame): DataFrame = applyRun(List(st), in)
     seg.head.segType match {
       case SegType.Pipe =>
-        seg.foldLeft(segInput)((df, st) => app(st, df))
+        fuse(seg).foldLeft(segInput)((df, unit) => applyRun(unit, df))
       case SegType.Run =>
-        // stage ordinal kept as a column — the SINGLE ordering sort runs
-        // in plan() over (_seg, _run); sorting here would be eliminated
-        // by the outer sort anyway (and was: round-1 multi-segment
-        // pipelines lost intra-run order exactly that way)
+        // stage ordinal kept as a column — the SINGLE ordering exchange
+        // runs in plan() over the pipeline's dense block ordinal
         seg.zipWithIndex
           .map { case (st, i) => app(st, segInput).withColumn(RunOrdCol, lit(i)) }
           .reduce(_ unionByName _)
@@ -259,13 +262,27 @@ final class Engine(
     }
   }
 
-  private def applyStage(
+  /** Apply one unit of [[fuse]]. A run of `json: true` stages is
+    * `serialize(fn_k(…fn_1(parse(in))))`: ONE parse (one schema-inference
+    * job) and ONE serialize for the whole run, rows passing between the
+    * modules as rows — the way ndjson hands objects from one through-stream
+    * to the next (index.js:73). A single stage is a run of one.
+    */
+  private def applyUnit(
       pipelineName: String,
-      st: Stage,
-      idx: Int,
+      unit: List[Stage],
+      stageCounter: java.util.concurrent.atomic.AtomicInteger,
       in: DataFrame,
       opts: RunOptions): DataFrame = {
-    val out = st match {
+    def step(st: Stage, df: DataFrame): DataFrame =
+      observed(pipelineName, stageCounter.getAndIncrement(), applyStage(st, df, opts), opts)
+    if (onRecords(unit.head))
+      NdjsonBridge.serialize(unit.foldLeft(NdjsonBridge.parse(in))((rows, st) => step(st, rows)))
+    else unit.foldLeft(in)((df, st) => step(st, df))
+  }
+
+  private def applyStage(st: Stage, in: DataFrame, opts: RunOptions): DataFrame =
+    st match {
       case Stage.Command(cmd, _, _) if in.isStreaming =>
         // RDD.pipe has no streaming analog; fail with intent instead of a
         // cryptic planner error deep inside the query
@@ -282,27 +299,19 @@ final class Engine(
         // semantics: only explicit user params reach the command line.
         CommandStage(in, cmd, opts.params, opts.env, opts.partitions,
           Some(opts.cwd), opts.stderr)
-      case Stage.Module(name, _, json) =>
-        bridgeJson(json, modules.resolve(name), in)
-      case Stage.Inline(_, fn, _, json) =>
-        bridgeJson(json, fn, in)
+      case Stage.Module(name, _, _) => modules.resolve(name)(in)
+      case Stage.Inline(_, fn, _, _) => fn(in)
     }
-    // DEBUG tap parity (index.js:77-80, debug-stream per stage): under
-    // opts.debug every stage output carries an observed row-count metric,
-    // retrievable from QueryExecution.observedMetrics / a listener —
-    // the plan-metric analog of tapping the byte stream.
-    if (opts.debug)
-      out.observe(s"graft_${pipelineName}_stage$idx",
-        count(lit(1)).as("rows"))
-    else out
-  }
 
-  private def bridgeJson(
-      json: Boolean,
-      fn: DataFrame => DataFrame,
-      in: DataFrame): DataFrame =
-    if (json) NdjsonBridge.serialize(fn(NdjsonBridge.parse(in)))
-    else fn(in)
+  /** DEBUG tap parity (index.js:77-80, debug-stream per stage): under
+    * opts.debug every stage output — each stage of a fused json run
+    * included — carries an observed row-count metric, retrievable from
+    * QueryExecution.observedMetrics / a listener: the plan-metric analog
+    * of tapping the byte stream.
+    */
+  private def observed(pipelineName: String, idx: Int, out: DataFrame, opts: RunOptions): DataFrame =
+    if (opts.debug) out.observe(s"graft_${pipelineName}_stage$idx", count(lit(1)).as("rows"))
+    else out
 
   /** Empty source with exactly ONE empty partition — an empty
     * LocalRelation plans to a zero-partition RDD, and `RDD.pipe` on zero

@@ -303,11 +303,15 @@ object TextAnalysis {
                                          i -> concat_ws(' ', $parts)) END)[0]""")
   }
 
-  /** Canonical text normalization for dedup preprocessing: lowercase,
-    * whitespace squeeze, trim. Engine-portable (same regex dialect).
+  /** Canonical text normalization for dedup preprocessing: Spark's
+    * `lower`, then runs of spaces squeezed to one and the ends trimmed.
+    * The squeeze-and-trim is the single-pass kernel
+    * [[graft.functions.TextKernels.squeeze_spaces]], byte-identical to
+    * `trim(regexp_replace(_, " +", " "))`; that regex form is the portable
+    * spec and lives in the oracle SQL and the test reference.
     */
   def normalize(text: Column): Column =
-    trim(regexp_replace(lower(text), " +", " "))
+    graft.functions.TextKernels.squeeze_spaces(lower(text))
 
   /** Deterministic, content-addressed train/val/test split: the first hex
     * nibble of md5(key) buckets rows 13/2/1 (≈81%/12.5%/6.25%). Stable
@@ -323,23 +327,19 @@ object TextAnalysis {
   }
 
   /** PII-style scrubbing for training text: emails → `<EMAIL>`,
-    * URLs → `<URL>`, long digit runs → `<NUM>`. Patterns deliberately
-    * stay in the RE2-compatible subset (no backrefs/lookarounds) so the
-    * same regexes run identically on Java-regex (Spark) and RE2 (DuckDB,
-    * Go tooling) engines — scrubbing must be reproducible across the
-    * stack that touches the corpus. Pure codegen'd regexp_replace chain:
-    * map-only, scan-speed at any scale.
+    * URLs → `<URL>`, long digit runs → `<NUM>`, as three leftmost-greedy
+    * replacements applied in that order:
+    * `[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}`, `https?://[^ ]+`,
+    * `[0-9]{5,}`. The patterns stay in the RE2-compatible subset (no
+    * backrefs/lookarounds) so the same regexes run identically on
+    * Java-regex and RE2 (DuckDB, Go tooling) engines — scrubbing must be
+    * reproducible across the stack that touches the corpus; they live in
+    * the oracle SQL and the test reference. Here they run as one
+    * codegen'd byte pass, [[graft.functions.TextKernels.redact]],
+    * byte-identical to the `regexp_replace` chain: map-only, scan-speed
+    * at any scale.
     */
-  def redact(text: Column): Column = {
-    val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-    val url = "https?://[^ ]+"
-    val num = "[0-9]{5,}"
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(text, email, "<EMAIL>"),
-        url, "<URL>"),
-      num, "<NUM>")
-  }
+  def redact(text: Column): Column = graft.functions.TextKernels.redact(text)
 
   /** Eval-set decontamination: flag corpus documents sharing any word
     * n-gram with a held-out evaluation set (the standard guard against

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused single-pass text kernels for the quality/token scans that run
@@ -16,9 +16,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * eliminated. Each kernel here walks the token boundaries once, with no
   * token array materialized.
   *
-  * Both are semantics-identical to their composable reference forms
+  * Each is semantics-identical to its composable reference form
   * (asserted corpus-wide and property-tested in TextAnalysisSpec /
-  * PropertySpec).
+  * PropertySpec); the string-rewriting kernels ([[computeRedact]],
+  * [[computeSqueezeSpaces]]) are byte-identical to the `regexp_replace`
+  * chains they replace, invalid UTF-8 included.
   */
 object TextKernels {
 
@@ -183,6 +185,170 @@ object TextKernels {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
+  /** `regexp_replace` decodes its input to a Java string and re-encodes the
+    * result, so invalid UTF-8 comes out as U+FFFD. The kernels below start
+    * from the same repaired bytes; valid input is taken as it is.
+    */
+  private def repaired(text: UTF8String): UTF8String =
+    if (text.isValid) text else UTF8String.fromString(text.toString)
+
+  /** Copy-on-write output: the input's bytes with some ranges replaced.
+    * Nothing is allocated until the first replacement.
+    */
+  private final class Splice(src: Array[Byte]) {
+    private var out: Array[Byte] = null
+    private var len = 0
+    private var from = 0
+
+    private def append(b: Array[Byte], off: Int, n: Int): Unit = {
+      if (len + n > out.length)
+        out = java.util.Arrays.copyOf(out, math.max(out.length * 2, len + n))
+      System.arraycopy(b, off, out, len, n)
+      len += n
+    }
+
+    /** Replace `src[start, end)` with `token`. Calls come in text order. */
+    def replace(start: Int, end: Int, token: Array[Byte]): Unit = {
+      if (out == null) out = new Array[Byte](src.length + 16)
+      append(src, from, start - from)
+      append(token, 0, token.length)
+      from = end
+    }
+
+    /** Leave `src[start, end)` out. */
+    def drop(start: Int, end: Int): Unit = replace(start, end, Array.emptyByteArray)
+
+    def result(orig: UTF8String): UTF8String =
+      if (out == null) orig
+      else {
+        append(src, from, src.length - from)
+        UTF8String.fromBytes(out, 0, len)
+      }
+  }
+
+  private val EmailToken = "<EMAIL>".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private val UrlToken = "<URL>".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+  private val NumToken = "<NUM>".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+
+  private def isAlpha(c: Byte): Boolean = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
+  private def isDigit(c: Byte): Boolean = c >= '0' && c <= '9'
+  /** `[A-Za-z0-9.-]`: the email domain class. */
+  private def isDomain(c: Byte): Boolean = isAlpha(c) || isDigit(c) || c == '.' || c == '-'
+  /** `[A-Za-z0-9._%+-]`: the email local-part class. */
+  private def isLocal(c: Byte): Boolean = isDomain(c) || c == '_' || c == '%' || c == '+'
+
+  /** End of the email match whose '@' is at `at`, or -1. The domain
+    * `[A-Za-z0-9.-]+\.[A-Za-z]{2,}` backtracks from the longest domain run:
+    * the last '.' in the run that leaves a nonempty host before it and two
+    * or more letters after it, with the letters taken greedily.
+    */
+  private def emailEnd(b: Array[Byte], at: Int): Int = {
+    val n = b.length
+    var run = at + 1
+    while (run < n && isDomain(b(run))) run += 1
+    var dot = run - 1
+    while (dot >= at + 2) {
+      if (b(dot) == '.') {
+        var end = dot + 1
+        while (end < n && isAlpha(b(end))) end += 1
+        if (end - dot > 2) return end
+      }
+      dot -= 1
+    }
+    -1
+  }
+
+  /** Start of the `[^ ]+` of a URL match at `i`, or -1: `https?://`
+    * followed by at least one non-space byte.
+    */
+  private def urlBody(b: Array[Byte], i: Int): Int = {
+    val n = b.length
+    def at(j: Int, c: Char): Boolean = j < n && b(j) == c
+    if (!(at(i, 'h') && at(i + 1, 't') && at(i + 2, 't') && at(i + 3, 'p'))) return -1
+    val colon = if (at(i + 4, 's')) i + 5 else i + 4
+    val body = colon + 3
+    if (at(colon, ':') && at(colon + 1, '/') && at(colon + 2, '/') && body < n && b(body) != ' ') body
+    else -1
+  }
+
+  /** The PII scrub of [[graft.ext.TextAnalysis.redact]] in one pass over
+    * the bytes. Byte-identical to the three leftmost-greedy
+    * `regexp_replace` calls applied in order — email
+    * `[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}` → `<EMAIL>`, then
+    * `https?://[^ ]+` → `<URL>`, then `[0-9]{5,}` → `<NUM>` — because:
+    *   - an email match is decided by the local run it starts in (every
+    *     start in a run of local-class bytes meets the same '@'), so a run
+    *     that fails is skipped whole;
+    *   - a URL cannot start where an email does (its local run ends at
+    *     ':'), contains no space, and no email crosses a space, so a URL
+    *     seen on the input swallows exactly what it swallows after the
+    *     email pass;
+    *   - the tokens hold no digit, so the digit runs left are the input's
+    *     maximal runs outside the matches.
+    * All three patterns are ASCII, so multi-byte characters only ever
+    * match `[^ ]`; comparing bytes is comparing characters.
+    */
+  def computeRedact(text: UTF8String): UTF8String = {
+    val s = repaired(text)
+    val b = s.getBytes
+    val n = b.length
+    val out = new Splice(b)
+    var localEnd = 0 // no email starts before this index
+    var i = 0
+    while (i < n) {
+      val c = b(i)
+      val body = if (c == 'h') urlBody(b, i) else -1
+      if (body >= 0) {
+        var end = body + 1
+        while (end < n && b(end) != ' ') end += 1
+        out.replace(i, end, UrlToken)
+        i = end
+      } else if (i >= localEnd && isLocal(c)) {
+        var run = i + 1
+        while (run < n && isLocal(b(run))) run += 1
+        val end = if (run < n && b(run) == '@') emailEnd(b, run) else -1
+        if (end > 0) { out.replace(i, end, EmailToken); i = end }
+        else localEnd = run
+      } else if (isDigit(c)) {
+        var end = i + 1
+        while (end < n && isDigit(b(end))) end += 1
+        if (end - i >= 5) out.replace(i, end, NumToken)
+        i = end
+      } else i += 1
+    }
+    out.result(s)
+  }
+
+  /** `trim(regexp_replace(text, " +", " "))` in one pass: runs of ASCII
+    * spaces become one, and leading and trailing spaces go. Other
+    * whitespace is kept, as the regex and `trim` keep it.
+    */
+  def computeSqueezeSpaces(text: UTF8String): UTF8String = {
+    val s = repaired(text)
+    val b = s.getBytes
+    val n = b.length
+    val out = new Splice(b)
+    var i = 0
+    while (i < n) {
+      if (b(i) == ' ') {
+        var end = i + 1
+        while (end < n && b(end) == ' ') end += 1
+        // one space kept between words, none at either end
+        if (i == 0 || end == n) out.drop(i, end)
+        else if (end - i > 1) out.drop(i + 1, end)
+        i = end
+      } else i += 1
+    }
+    out.result(s)
+  }
+
+  // non-string input is cast to string first, as regexp_replace casts it
+  def redact(text: Column): Column =
+    Bridge.column(RedactExpr(Bridge.expression(text.cast("string"))))
+
+  def squeeze_spaces(text: Column): Column =
+    Bridge.column(SqueezeSpacesExpr(Bridge.expression(text.cast("string"))))
+
   def subword_count(text: Column, divisor: Int): Column =
     Bridge.column(SubwordCount(Bridge.expression(text), divisor))
 
@@ -313,5 +479,35 @@ case class StopwordCount(child: Expression, words: Seq[String]) extends UnaryExp
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+case class RedactExpr(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def prettyName: String = "redact"
+
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.computeRedact(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.TextKernels.computeRedact($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): RedactExpr =
+    copy(child = newChild)
+}
+
+case class SqueezeSpacesExpr(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def prettyName: String = "squeeze_spaces"
+
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.computeSqueezeSpaces(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.TextKernels.computeSqueezeSpaces($c);")
+
+  override protected def withNewChildInternal(newChild: Expression): SqueezeSpacesExpr =
     copy(child = newChild)
 }

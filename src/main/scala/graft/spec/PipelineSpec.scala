@@ -43,8 +43,17 @@ object Stage {
 
   /** Named transform resolved from the [[graft.stages.ModuleRegistry]]
     * (`compileModule`, index.js:71-74). `json=true` sandwiches the module
-    * between NDJSON parse/serialize, exactly like
+    * between NDJSON parse/serialize, like
     * `pumpify(ndjson.parse(), fn, ndjson.serialize())` (index.js:73).
+    * Fusion rule: inside a `pipe` segment, a maximal run of adjacent
+    * `json=true` module/inline stages shares ONE parse and ONE serialize,
+    * `serialize(fn_k(…fn_1(parse(in))))`; rows pass between the modules as
+    * rows, the way ndjson passes objects between through-streams. For
+    * JSON-native values this changes no output (parse ∘ serialize = id);
+    * a module's key order is kept, and non-JSON-native types (int, date,
+    * timestamp, decimal, binary) reach the next fused module as Spark
+    * types instead of their re-inferred JSON form. Any other stage between
+    * two json stages splits the run.
     */
   final case class Module(
       module: String,

@@ -10,9 +10,16 @@ import org.apache.spark.sql.types.StructType
   * object stream, and its output is re-serialized to NDJSON lines.
   *
   * Schema handling mirrors ndjson's dynamic typing: with no schema given we
-  * infer (an extra pass over the data — fine at module boundaries, and the
-  * scale path passes an explicit [[StructType]] so the parse is a single
-  * streaming-friendly `from_json` projection with no inference job).
+  * infer (an extra pass over the data — paid once per run of json stages,
+  * and the scale path passes an explicit [[StructType]] so the parse is a
+  * single streaming-friendly `from_json` projection with no inference job).
+  *
+  * The engine fuses adjacent `json: true` module/inline stages of a `pipe`
+  * segment: one [[parse]], the modules applied to the rows in turn, one
+  * [[serialize]]. Rows cross the module boundaries as rows, so a module's
+  * key order is kept and non-JSON-native types (int, date, timestamp,
+  * decimal, binary) reach the next fused module as Spark types, where a
+  * serialize/parse boundary would re-infer them from their JSON text.
   */
 object NdjsonBridge {
 

@@ -16,7 +16,7 @@ import graft.spec.{PipelineSpec, SegType, Stage}
   *     external process (`tr a-z A-Z` via RDD.pipe, one process per
   *     partition) — the process-bridge throughput.
   *   - `fork_fan`: a fork segment fanning the input through 3 inline
-  *     transforms (unioned, no ordering sort on the single-segment path).
+  *     transforms (unioned, no ordering exchange on the single-segment path).
   *   - `map_tee`: a map segment teeing one ACCOUNTED source (a
   *     LongAccumulator counts every source-row computation) into 2
   *     consumers — then ASSERTS the persist masked recomputation
@@ -24,8 +24,9 @@ import graft.spec.{PipelineSpec, SegType, Stage}
   *   - `reduce_fanin`: a reduce segment fanning 2 producers into one
   *     aggregator stage.
   *   - `multi_seg`: map-tee + run segment in ONE pipeline — pays the
-  *     ordered-concat sort over (segment ordinal, stage ordinal), the
-  *     documented cost of reference-parity output ordering
+  *     ordered-concat exchange (`repartitionById` over the block ordinal
+  *     of each segment and run stage), the documented cost of
+  *     reference-parity output ordering
   *     (`/root/reference/index.js:164` runStream concat).
   *
   * Reference semantics being scaled: `/root/reference/index.js:30-69`
@@ -100,7 +101,7 @@ object EngineSoak {
       "multi_seg" -> Seq(
         inline("src", SegType.MapTee)(df => df),
         inline("branch", SegType.MapTee)(df => valCol(df, upper(col("value")))),
-        // second segment: ordered concat forces the (_seg, _run) sort
+        // second segment: ordered concat forces the block-ordinal exchange
         Stage.Command("echo SEG2-A", SegType.Run),
         Stage.Command("echo SEG2-B", SegType.Run))))
 
@@ -141,9 +142,9 @@ object EngineSoak {
     // reversed-token trailing digits (feed_b) — 0–9 both ways
     timed("reduce_fanin", _ => 10L)
     timed("multi_seg", _ + 2) // one tee branch + two echo source rows
-    // same pipeline with the parity sort opted out: the one superlinear
-    // stage disappears, so per-doc cost should be flat-to-falling at 4×
-    // data (the production setting for order-insensitive downstreams)
+    // same pipeline with the parity exchange opted out: the pipeline stays
+    // map-shaped, so per-doc cost should be flat-to-falling at 4× data
+    // (the production setting for order-insensitive downstreams)
     timed("multi_seg", _ + 2, RunOptions(orderedConcat = false),
       label = "multi_seg_noord")
 

@@ -116,10 +116,16 @@ class EngineSpec extends SparkSpec {
     def globalSorts(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
       case s: org.apache.spark.sql.catalyst.plans.logical.Sort if s.global => s
     }
-    assert(globalSorts(unordered).isEmpty,
-      "orderedConcat=false must keep the pipeline free of global sorts")
-    assert(globalSorts(ordered).nonEmpty,
-      "sanity: the default parity path pays exactly the sort being opted out")
+    def byId(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression
+        if r.partitionExpressions.exists(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.DirectShufflePartitionID]) => r
+    }
+    assert(globalSorts(unordered).isEmpty && byId(unordered).isEmpty,
+      "orderedConcat=false must keep the pipeline free of ordering exchanges")
+    assert(globalSorts(ordered).isEmpty, "the ordered concat needs no global sort")
+    assert(byId(ordered).size == 1,
+      "sanity: the default parity path pays exactly the exchange being opted out")
     // ordinal bookkeeping columns must not leak into the opted-out output
     assert(unordered.columns.toSeq == Seq(CommandStage.ValueCol))
   }
@@ -276,6 +282,123 @@ class EngineSpec extends SparkSpec {
     assert(out == Seq(
       """{"id":1,"tag":"T1","value":"mail <email> now"}""",
       """{"id":2,"tag":"T2","value":"see <url> and <num>"}"""))
+  }
+
+  /** Jobs that `body` starts on this thread. Listener events arrive in
+    * order, so once a marker job started afterwards has been seen, every
+    * job of `body` has been counted.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"engine-spec-${java.util.UUID.randomUUID()}"
+    val marker = s"$group-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker), "listener never saw the marker job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("adjacent json stages share one parse: one inference job, not one per stage") {
+    val spec = graft.spec.ConfigLoader.parse(
+      """{"records": [{"module": "redact", "json": true}, {"module": "normalize", "json": true}]}""")
+    val in = lines("""{"id":1,"value":"Mail BOB@Example.com"}""", """{"id":2,"value":"x  y"}""")
+    var out: DataFrame = null
+    // the schema-inference job is the only job building the pipeline runs
+    assert(jobsDuring { out = new Engine(spec).run("records", spark, Some(in)) } == 1)
+    assert(collectValues(out) == Seq("""{"id":1,"value":"mail <email>"}""", """{"id":2,"value":"x y"}"""))
+  }
+
+  test("a fused json run equals per-stage chaining for JSON-native field types") {
+    val bump: DataFrame => DataFrame = df =>
+      df.withColumn("l", col("l") + 1).withColumn("d", col("d") * 2)
+        .withColumn("st", struct((col("st.x") + 1).as("x"), col("st.y").as("y")))
+    val shout: DataFrame => DataFrame = df =>
+      df.withColumn("s", upper(col("s"))).withColumn("b", !col("b"))
+        .withColumn("arr", transform(col("arr"), _ * 10))
+    val spec = PipelineSpec(ListMap("typed" -> Seq(
+      Stage.Inline("bump", bump, json = true), Stage.Inline("shout", shout, json = true))))
+    val in = lines(
+      """{"arr":[1,2],"b":true,"d":1.5,"l":7,"n":null,"s":"ab","st":{"x":1,"y":"p"}}""",
+      """{"arr":[],"b":false,"d":-0.25,"l":9000000000,"n":"set","s":"é","st":{"x":-3,"y":null}}""",
+      """{"arr":[5],"b":true,"d":2.0,"l":0,"s":"","st":{"x":0,"y":"q"}}""")
+    val fused = collectValues(new Engine(spec).run("typed", spark, Some(in)))
+    import graft.stages.NdjsonBridge.{parse, serialize}
+    val chained = collectValues(serialize(shout(parse(serialize(bump(parse(in)))))))
+    assert(fused == chained)
+    assert(fused.head == """{"arr":[10,20],"b":false,"d":3.0,"l":8,"s":"AB","st":{"x":2,"y":"p"}}""")
+  }
+
+  test("a fused json run keeps the module's key order; a command stage splits the run") {
+    val addNote: DataFrame => DataFrame = _.withColumn("note", lit("n"))
+    val keep: DataFrame => DataFrame = df => df
+    val spec = PipelineSpec(ListMap(
+      "fused" -> Seq(Stage.Inline("add", addNote, json = true), Stage.Inline("keep", keep, json = true)),
+      "split" -> Seq(Stage.Inline("add", addNote, json = true), Stage.Command("cat -"),
+        Stage.Inline("keep", keep, json = true))))
+    val in = lines("""{"id":1,"value":"x"}""")
+    val engine = new Engine(spec)
+    // the module appended `note`: no re-parse between the stages re-sorts it
+    assert(collectValues(engine.run("fused", spark, Some(in))) == Seq("""{"id":1,"value":"x","note":"n"}"""))
+    var split: DataFrame = null
+    // two runs of one stage each: two parses, each with its inference job
+    assert(jobsDuring { split = engine.run("split", spark, Some(in)) } == 2)
+    // the second parse infers from text, and inference sorts the keys
+    assert(collectValues(split) == Seq("""{"id":1,"note":"n","value":"x"}"""))
+  }
+
+  test("DEBUG taps report every fused json stage's own row count") {
+    val spec = PipelineSpec(ListMap("recs" -> Seq(
+      Stage.Inline("tag", _.withColumn("seen", lit(true)), json = true),
+      Stage.Inline("keep_big", _.filter(col("id") > 1), json = true))))
+    val in = lines("""{"id":1}""", """{"id":2}""", """{"id":3}""")
+    val out = new Engine(spec).run("recs", spark, Some(in), RunOptions(debug = true))
+    assert(out.collect().map(_.getString(0)).toSeq ==
+      Seq("""{"id":2,"seen":true}""", """{"id":3,"seen":true}"""))
+    val metrics = out.queryExecution.observedMetrics
+    assert(metrics.keySet == Set("graft_recs_stage0", "graft_recs_stage1"))
+    assert(metrics("graft_recs_stage0").getAs[Long]("rows") == 3L)
+    assert(metrics("graft_recs_stage1").getAs[Long]("rows") == 2L)
+  }
+
+  test("run-segment commands spawn once per action, through collect and printLines") {
+    val log = java.nio.file.Files.createTempFile("graft-spawns", ".log")
+    def spawned(): Seq[String] = {
+      val got = java.nio.file.Files.readAllLines(log).toArray.toSeq.map(_.toString)
+      java.nio.file.Files.write(log, Array.emptyByteArray)
+      got
+    }
+    def cmd(tag: String, seg: SegType) =
+      Stage.Command(s"echo $tag >> '$log'; printf '${tag}1\\n${tag}2\\n'", seg)
+    val spec = PipelineSpec(ListMap(
+      "two" -> Seq(cmd("x", SegType.Run), cmd("y", SegType.Run)),
+      "multi" -> Seq(cmd("a", SegType.Run), cmd("b", SegType.Run), cmd("c", SegType.Pipe),
+        cmd("d", SegType.Run), cmd("e", SegType.Run))))
+    val engine = new Engine(spec)
+    try {
+      assert(collectValues(engine.run("two", spark)) == Seq("x1", "x2", "y1", "y2"))
+      assert(spawned().sorted == Seq("x", "y"))
+      val multi = Seq("a1", "a2", "b1", "b2", "c1", "c2", "d1", "d2", "e1", "e2")
+      assert(collectValues(engine.run("multi", spark)) == multi)
+      assert(spawned().sorted == Seq("a", "b", "c", "d", "e"))
+      val printed = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(printed, true, "UTF-8")) {
+        graft.sources.Sources.printLines(engine.run("multi", spark), Int.MaxValue)
+      }
+      assert(printed.toString("UTF-8").split("\n").toSeq == multi)
+      assert(spawned().sorted == Seq("a", "b", "c", "d", "e"))
+    } finally java.nio.file.Files.deleteIfExists(log)
   }
 
   test("registry surface: list/has/toJson round-trip (index.js:180-210)") {
