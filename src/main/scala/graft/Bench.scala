@@ -1,9 +1,29 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** `SPARK_GRAFT_CPUS` (default 4), checked to be a positive integer: it
+    * becomes `local[N]`, the shuffle width and the bare JSON number
+    * `cpus_requested`, so anything else must fail before the run.
+    */
+  def requestedCpus(env: Option[String]): String = {
+    val cpus = env.getOrElse("4")
+    require(cpus.matches("[1-9][0-9]*") && cpus.toIntOption.isDefined,
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpus'")
+    cpus
+  }
+
+  /** `<base>.json` in `dir`, or `<base>_runN.json` with the smallest N >= 2
+    * that does not exist yet: a second run in the same round never
+    * overwrites the first run's detail file.
+    */
+  def freshDetailPath(dir: java.nio.file.Path, base: String): java.nio.file.Path =
+    Iterator.from(1)
+      .map(i => dir.resolve(if (i == 1) s"$base.json" else s"${base}_run$i.json"))
+      .find(p => !java.nio.file.Files.exists(p)).get
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = requestedCpus(sys.env.get("SPARK_GRAFT_CPUS"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -131,8 +151,8 @@ object Bench {
       val sfTag = java.nio.file.Paths.get(sfDir).getFileName.toString
         .replaceAll("[^A-Za-z0-9.]", "_")
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(f"BENCH_DETAIL_r${maxRound + 1}%02d_$sfTag%s.json"),
-        detailLine)
+        freshDetailPath(dir, f"BENCH_DETAIL_r${maxRound + 1}%02d_$sfTag%s"),
+        detailLine, java.nio.file.StandardOpenOption.CREATE_NEW)
     } catch { case _: Exception => () } // cwd may not be writable under the harness
     // …but the stdout line must survive the harness's bounded (2000-char)
     // output-tail capture with sbt's footer behind it, or it never parses:

@@ -52,6 +52,11 @@ object MinHashAggregator {
     z ^ (z >>> 31)
   }
 
+  /** splitmix64: the golden-gamma step then the [[mix]] finalizer — the
+    * seeded hash the planted fixtures derive from their ids.
+    */
+  def splitmix64(z0: Long): Long = mix(z0 + 0x9E3779B97F4A7C15L)
+
   /** Estimated Jaccard between two signatures. */
   def estJaccard(a: Array[Long], b: Array[Long]): Double = {
     val n = math.min(a.length, b.length)

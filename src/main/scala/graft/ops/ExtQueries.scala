@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ext.{Classifier, Dedup, Layout, Multimodal, Pq, Similarity, TextAnalysis}
+import graft.functions.MinHashAggregator
 import Tables._
 
 /** Mandated extension operators (BASELINE north star): deduplication,
@@ -14,6 +15,14 @@ import Tables._
   * Model-defined operators (MinHash, SimHash, LSH, heuristic language ID,
   * stub decoders) are oracle-omitted per SURVEY §7.3 and covered by seeded
   * unit tests; everything SQL-expressible carries a DuckDB oracle.
+  *
+  * The certificates' shared fixture code lives in [[Plants]]: the aHash
+  * grid raster, the four-block gray image and its quality-1.0 JPEG
+  * encode, the zero-filled pair-count summary of the dedup anchors and
+  * the vector-search top-k tail; their hash targets come from
+  * `MinHashAggregator.splitmix64`. Per-doc synthesis over a narrow
+  * `documents` scan goes through `Plants.spread`, the round-robin
+  * exchange across the session's default parallelism.
   */
 object ExtQueries {
 
@@ -769,9 +778,7 @@ object ExtQueries {
       // TakeOrderedAndProject — k rows per partition, no global sort).
       Similarity.bruteForceScoresLazy(
           emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", q, "embedding")
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     Some("""SELECT vec_id,
                    round(list_cosine_similarity(
@@ -796,9 +803,7 @@ object ExtQueries {
       Similarity.bruteForceScoresLazy(
           emb.filter(col("vec_id") =!= 0 && col("label") === 1),
           "vec_id", "embedding", q, "embedding")
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     Some("""SELECT vec_id,
                    round(list_cosine_similarity(
@@ -818,8 +823,7 @@ object ExtQueries {
       Similarity.annTopKLazy(
           emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", q, "embedding",
           k = 10, dim = 64)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
+        .transform(Plants.ranked)
     },
     None, // model-defined (LSH probe set)
     "LSH-bucketed ANN top-k (multi-probe hyperplane buckets, lazy one-plan form)")
@@ -860,9 +864,7 @@ object ExtQueries {
       Similarity.annScoresLazy(
           emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", q, "embedding",
           dim = 64, numPlanes = 8, probeRadius = 8)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     Some(brutForceOracleSql),
     "ANN top-k at full probe radius — the LSH pipeline's recall=1 anchor, " +
@@ -881,9 +883,7 @@ object ExtQueries {
       Similarity.ivfScoresLazy(
           emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", q, "embedding",
           centroids, nprobe = 8)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     Some(brutForceOracleSql),
     "IVF top-k probing every cell — the quantizer pipeline's recall=1 " +
@@ -901,8 +901,7 @@ object ExtQueries {
       Similarity.ivfSearchLazy(
           emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", q, "embedding",
           k = 10, centroids, nprobe = 3)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
+        .transform(Plants.ranked)
     },
     None, // model-defined (trained quantizer / probe set)
     "IVF ANN top-k: k-means coarse quantizer + cell-pruned exact search " +
@@ -935,9 +934,7 @@ object ExtQueries {
         .head().getSeq[Float](0).toArray
       Pq.rerankScores(Pq.encode(corpus, "embedding", books), corpus,
           "vec_id", "embedding", "pq_code", books, q, candidates = 1 << 20)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     Some(brutForceOracleSql),
     "product-quantization ADC + exact re-rank at full candidate width — " +
@@ -958,8 +955,7 @@ object ExtQueries {
         .head().getSeq[Float](0).toArray
       Pq.searchRerank(Pq.encode(corpus, "embedding", books), corpus,
           "vec_id", "embedding", "pq_code", books, q, k = 10, candidates = 50)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
+        .transform(Plants.ranked)
     },
     None, // model-defined (trained codebooks / ADC candidate set)
     "product-quantization ANN: packed-code ADC scan + exact re-rank of " +
@@ -982,9 +978,7 @@ object ExtQueries {
         .head().getSeq[Float](0).toArray
       Pq.rerankScoresIndex(s, prefix, corpus, "vec_id", "embedding", q,
           candidates = 1 << 20)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     Some(brutForceOracleSql),
     "PQ top-k served from the materialized codes+codebooks index at full " +
@@ -1012,9 +1006,7 @@ object ExtQueries {
       // oracle's 6-dp double ordering
       Similarity.ivfScoresIndex(s, prefix, "vec_id", "embedding", q,
           nprobe = 8)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     Some(brutForceOracleSql),
     "IVF top-k served from the materialized cell-partitioned index at " +
@@ -1045,9 +1037,7 @@ object ExtQueries {
         .head().getSeq[Float](0).toArray
       Similarity.ivfScoresIndex(s, prefix, "vec_id", "embedding", q,
           nprobe = 8)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     Some(brutForceOracleSql),
     "IVF index maintenance: half the corpus appended as an ingest batch " +
@@ -1155,9 +1145,7 @@ object ExtQueries {
       graft.ext.Sq.rerankScores(
           graft.ext.Sq.encode(corpus, "embedding", lo, hi), corpus,
           "vec_id", "embedding", lo, hi, q, candidates = 1 << 20)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     Some(brutForceOracleSql),
     "SQ8 scalar-quantized ADC + exact re-rank at full candidate width — " +
@@ -1179,9 +1167,7 @@ object ExtQueries {
       graft.ext.Sq.rerankScores(
           graft.ext.Sq.encode(corpus, "embedding", lo, hi), corpus,
           "vec_id", "embedding", lo, hi, q, candidates = 50)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     None, // model-defined (trained bounds / ADC candidate set)
     "SQ8 ANN: 4×-compressed byte-code ADC scan + exact re-rank of the " +
@@ -1203,9 +1189,7 @@ object ExtQueries {
         .head().getSeq[Float](0).toArray
       graft.ext.Sq.rerankScoresIndex(s, prefix, corpus, "vec_id",
           "embedding", q, candidates = 1 << 20)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     Some(brutForceOracleSql),
     "SQ8 top-k served from the materialized codes+bounds index — the " +
@@ -1243,9 +1227,7 @@ object ExtQueries {
           graft.ext.IvfPq.encode(corpus, "vec_id", "embedding", model),
           corpus, "vec_id", "embedding", model, q,
           nprobe = 4, candidates = 1 << 20)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     Some(brutForceOracleSql),
     "IVFADC (coarse cells + residual PQ) at full probe and candidate " +
@@ -1272,9 +1254,7 @@ object ExtQueries {
         .head().getSeq[Float](0).toArray
       graft.ext.IvfPq.rerankScoresIndex(s, prefix, corpus, "vec_id",
           "embedding", q, nprobe = 4, candidates = 1 << 20)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     Some(brutForceOracleSql),
     "IVFADC top-k served from the materialized cell-partitioned codes " +
@@ -1299,9 +1279,7 @@ object ExtQueries {
           graft.ext.IvfPq.encode(corpus, "vec_id", "embedding", model),
           corpus, "vec_id", "embedding", model, q,
           nprobe = 2, candidates = 50)
-        .select(col("vec_id"), round(col("score"), 6).as("score"))
-        .orderBy(col("score").desc, col("vec_id"))
-        .limit(10)
+        .transform(Plants.top10)
     },
     None, // model-defined (trained quantizers / ADC candidate set)
     "IVFADC ANN: cell-pruned 12-byte ADC scan + exact re-rank of the " +
@@ -2480,43 +2458,9 @@ object ExtQueries {
           require(id >= 0 && id < 90000,
             s"q_dedup_image_anchor: doc_id $id outside [0, 90000) — raise " +
               "the planted-id offsets for this corpus")
-          def mix(z0: Long): Long = {
-            var z = z0 + 0x9E3779B97F4A7C15L
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            z ^ (z >>> 31)
-          }
-          def png(h: Long): Array[Byte] = {
-            val px = new Array[Byte](16 * 16)
-            var y = 0
-            while (y < 16) {
-              var x = 0
-              while (x < 16) {
-                val bit = (y / 2) * 8 + (x / 2)
-                px(y * 16 + x) =
-                  if (((h >>> bit) & 1L) == 1L) 0xFF.toByte else 0x00.toByte
-                x += 1
-              }
-              y += 1
-            }
-            graft.ext.Png.encode(graft.ext.Png.Image(16, 16, 1, px))
-          }
-          def webpLossy(h: Long): Array[Byte] = {
-            val px = new Array[Byte](16 * 16)
-            var y = 0
-            while (y < 16) {
-              var x = 0
-              while (x < 16) {
-                val bit = (y / 2) * 8 + (x / 2)
-                px(y * 16 + x) =
-                  if (((h >>> bit) & 1L) == 1L) 0xFF.toByte else 0x00.toByte
-                x += 1
-              }
-              y += 1
-            }
-            graft.ext.Vp8Enc.encode(graft.ext.Png.Image(16, 16, 1, px), 4, 0)
-          }
-          val base = (mix(id) | 1L) & ~(1L << 63)
+          def png(h: Long) = graft.ext.Png.encode(Plants.gridRaster(h))
+          def webpLossy(h: Long) = graft.ext.Vp8Enc.encode(Plants.gridRaster(h), 4, 0)
+          val base = (MinHashAggregator.splitmix64(id) | 1L) & ~(1L << 63)
           val near = base ^ 0xEL // flip bits 1,2,3 → aHash hamming exactly 3
           Seq((id, png(base))) ++
             (if (id % 25 == 0) Seq((id + 90000L, png(near))) else Nil) ++
@@ -2524,21 +2468,11 @@ object ExtQueries {
             (if (id % 30 == 0) Seq((id + 270000L, webpLossy(base))) else Nil)
         }
         .toDF("media_id", "payload")
-      Multimodal.nearDupImages(media, maxHamming = 5)
-        .agg(
-          count(lit(1)).as("n_pairs"),
-          sum(when(col("id1") % 90000 =!= col("id2") % 90000, 1L)
-            .otherwise(0L)).as("n_cross_family"),
-          sum(when(col("hamming") === 3, 1L).otherwise(0L)).as("n_near_pairs"),
-          sum(when(col("hamming") === 0, 1L).otherwise(0L)).as("n_exact_pairs"),
-          sum(when(col("hamming") =!= 0 && col("hamming") =!= 3, 1L)
-            .otherwise(0L)).as("n_bad_hamming"))
-        .select(
-          coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-          coalesce(col("n_cross_family"), lit(0L)).as("n_cross_family"),
-          coalesce(col("n_near_pairs"), lit(0L)).as("n_near_pairs"),
-          coalesce(col("n_exact_pairs"), lit(0L)).as("n_exact_pairs"),
-          coalesce(col("n_bad_hamming"), lit(0L)).as("n_bad_hamming"))
+      Plants.pairSummary(Multimodal.nearDupImages(media, maxHamming = 5),
+        "n_cross_family" -> Plants.crossFamily,
+        "n_near_pairs" -> Plants.countIf(col("hamming") === 3),
+        "n_exact_pairs" -> Plants.countIf(col("hamming") === 0),
+        "n_bad_hamming" -> Plants.countIf(col("hamming") =!= 0 && col("hamming") =!= 3))
     },
     Some("""SELECT CAST((SELECT count(*) FROM documents WHERE doc_id % 25 = 0)
                       + (SELECT count(*) FROM documents WHERE doc_id % 40 = 0)
@@ -2587,29 +2521,8 @@ object ExtQueries {
           require(id >= 0 && id < 90000,
             s"q_video_thumb_anchor: doc_id $id outside [0, 90000) — raise " +
               "the planted-id offset for this corpus")
-          def mix(z0: Long): Long = {
-            var z = z0 + 0x9E3779B97F4A7C15L
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            z ^ (z >>> 31)
-          }
-          def raster(h: Long): graft.ext.Png.Image = {
-            val px = new Array[Byte](16 * 16)
-            var y = 0
-            while (y < 16) {
-              var x = 0
-              while (x < 16) {
-                val bit = (y / 2) * 8 + (x / 2)
-                px(y * 16 + x) =
-                  if (((h >>> bit) & 1L) == 1L) 0xFF.toByte else 0x00.toByte
-                x += 1
-              }
-              y += 1
-            }
-            graft.ext.Png.Image(16, 16, 1, px)
-          }
-          val base = (mix(id ^ 0x7EBAC0DEL) | 1L) & ~(1L << 63)
-          val img = raster(base)
+          val base = (MinHashAggregator.splitmix64(id ^ 0x7EBAC0DEL) | 1L) & ~(1L << 63)
+          val img = Plants.gridRaster(base)
           Seq((id, graft.ext.Png.encode(img))) ++
             (if (id % 20 == 0)
               Seq((id + 90000L,
@@ -2619,18 +2532,10 @@ object ExtQueries {
             else Nil)
         }
         .toDF("media_id", "payload")
-      Multimodal.nearDupImages(media, maxHamming = 5)
-        .agg(
-          count(lit(1)).as("n_pairs"),
-          sum(when(col("id1") % 90000 =!= col("id2") % 90000, 1L)
-            .otherwise(0L)).as("n_cross_family"),
-          sum(when(col("hamming") === 0, 1L).otherwise(0L)).as("n_h0_pairs"),
-          sum(when(col("hamming") =!= 0, 1L).otherwise(0L)).as("n_bad_hamming"))
-        .select(
-          coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-          coalesce(col("n_cross_family"), lit(0L)).as("n_cross_family"),
-          coalesce(col("n_h0_pairs"), lit(0L)).as("n_h0_pairs"),
-          coalesce(col("n_bad_hamming"), lit(0L)).as("n_bad_hamming"))
+      Plants.pairSummary(Multimodal.nearDupImages(media, maxHamming = 5),
+        "n_cross_family" -> Plants.crossFamily,
+        "n_h0_pairs" -> Plants.countIf(col("hamming") === 0),
+        "n_bad_hamming" -> Plants.countIf(col("hamming") =!= 0))
     },
     Some("""SELECT CAST((SELECT count(*) FROM documents WHERE doc_id % 20 = 0)
                      AS BIGINT) AS n_pairs,
@@ -2663,16 +2568,10 @@ object ExtQueries {
         .flatMap { id =>
           require(id >= 0 && id < 90000,
             s"q_dedup_image_rot_anchor: doc_id $id outside [0, 90000)")
-          def mix(z0: Long): Long = {
-            var z = z0 + 0x9E3779B97F4A7C15L
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            z ^ (z >>> 31)
-          }
           val px = new Array[Byte](16 * 16)
           var k = 0
           while (k < 256) {
-            px(k) = ((mix(id * 256L + k) >>> 56) & 0xFF).toByte
+            px(k) = ((MinHashAggregator.splitmix64(id * 256L + k) >>> 56) & 0xFF).toByte
             k += 1
           }
           val base = graft.ext.Png.Image(16, 16, 1, px)
@@ -2690,16 +2589,10 @@ object ExtQueries {
              else Nil)
         }
         .toDF("media_id", "payload")
-      Multimodal.nearDupImages(media, maxHamming = 0, rotInvariant = true)
-        .agg(
-          count(lit(1)).as("n_pairs"),
-          sum(when(col("id1") % 90000 =!= col("id2") % 90000, 1L)
-            .otherwise(0L)).as("n_cross_family"),
-          sum(when(col("hamming") =!= 0, 1L).otherwise(0L)).as("n_nonzero"))
-        .select(
-          coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-          coalesce(col("n_cross_family"), lit(0L)).as("n_cross_family"),
-          coalesce(col("n_nonzero"), lit(0L)).as("n_nonzero"))
+      Plants.pairSummary(
+        Multimodal.nearDupImages(media, maxHamming = 0, rotInvariant = true),
+        "n_cross_family" -> Plants.crossFamily,
+        "n_nonzero" -> Plants.countIf(col("hamming") =!= 0))
     },
     Some("""SELECT CAST((SELECT sum(m * (m - 1) / 2) FROM (
                       SELECT 1 + CASE WHEN doc_id % 25 = 0 THEN 1 ELSE 0 END
@@ -2739,32 +2632,10 @@ object ExtQueries {
       // maxHamming 5 budget.
       import s.implicits._
       val media = documents(s, d).select(col("doc_id")).as[Long]
-        // single-split input serializes the per-doc PNG encodes
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .flatMap { id =>
           require(id >= 0 && id < 90000,
             s"q_dedup_image_orient_anchor: doc_id $id outside [0, 90000)")
-          def mix(z0: Long): Long = {
-            var z = z0 + 0x9E3779B97F4A7C15L
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            z ^ (z >>> 31)
-          }
-          def gridImage(h: Long): graft.ext.Png.Image = {
-            val px = new Array[Byte](16 * 16)
-            var y = 0
-            while (y < 16) {
-              var x = 0
-              while (x < 16) {
-                val bit = (y / 2) * 8 + (x / 2)
-                px(y * 16 + x) =
-                  if (((h >>> bit) & 1L) == 1L) 0xFF.toByte else 0x00.toByte
-                x += 1
-              }
-              y += 1
-            }
-            graft.ext.Png.Image(16, 16, 1, px)
-          }
           // flip one aHash grid cell (2x2 pixel block) in place
           def flipCell(img: graft.ext.Png.Image, r: Int, c: Int): Unit = {
             var dy = 0
@@ -2778,12 +2649,12 @@ object ExtQueries {
               dy += 1
             }
           }
-          val base = (mix(id) | 1L) & ~(1L << 63)
-          val baseImg = gridImage(base)
+          val base = (MinHashAggregator.splitmix64(id) | 1L) & ~(1L << 63)
+          val baseImg = Plants.gridRaster(base)
           val out = scala.collection.mutable.ArrayBuffer(
             (id, graft.ext.Png.encode(baseImg)))
           if (id % 25 == 0) {
-            val rot = graft.ext.Png.rotate90(gridImage(base))
+            val rot = graft.ext.Png.rotate90(Plants.gridRaster(base))
             // base-frame cells (4,1),(5,1),(6,1) land at rotated-frame
             // (1,3),(1,2),(1,1) under the 90-degree rotation — flip them
             // there so the orbit distance is exactly 3
@@ -2792,11 +2663,11 @@ object ExtQueries {
           }
           if (id % 40 == 0) {
             val r180 = graft.ext.Png.rotate90(
-              graft.ext.Png.rotate90(gridImage(base)))
+              graft.ext.Png.rotate90(Plants.gridRaster(base)))
             out += ((id + 180000L, graft.ext.Png.encode(r180)))
           }
           if (id % 30 == 0) {
-            val mir = graft.ext.Png.flipH(gridImage(base))
+            val mir = graft.ext.Png.flipH(Plants.gridRaster(base))
             // base-frame cells (7,1),(7,2) mirror to (7,6),(7,5)
             flipCell(mir, 7, 5); flipCell(mir, 7, 6)
             out += ((id + 270000L, graft.ext.Png.encode(mir)))
@@ -2810,20 +2681,12 @@ object ExtQueries {
       // subsets make ~18-bit compound keys — buckets stay sparse at a
       // 2.7x smaller band table than 8 blocks' 56 subsets — and the
       // pigeonhole guarantee holds at maxHamming 5
-      Multimodal.nearDupImagesOriented(media, maxHamming = 5, nBlocks = 7)
-        .agg(
-          count(lit(1)).as("n_pairs"),
-          sum(when(col("id1") % 90000 =!= col("id2") % 90000, 1L)
-            .otherwise(0L)).as("n_cross_family"),
-          sum(col("hamming").cast("long")).as("hamming_sum"),
-          sum(when(col("hamming") === 0, 1L).otherwise(0L)).as("n_h0"),
-          sum(when(col("hamming") === 5, 1L).otherwise(0L)).as("n_h5"))
-        .select(
-          coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-          coalesce(col("n_cross_family"), lit(0L)).as("n_cross_family"),
-          coalesce(col("hamming_sum"), lit(0L)).as("hamming_sum"),
-          coalesce(col("n_h0"), lit(0L)).as("n_h0"),
-          coalesce(col("n_h5"), lit(0L)).as("n_h5"))
+      Plants.pairSummary(
+        Multimodal.nearDupImagesOriented(media, maxHamming = 5, nBlocks = 7),
+        "n_cross_family" -> Plants.crossFamily,
+        "hamming_sum" -> sum(col("hamming").cast("long")),
+        "n_h0" -> Plants.countIf(col("hamming") === 0),
+        "n_h5" -> Plants.countIf(col("hamming") === 5))
     },
     Some("""SELECT CAST((SELECT sum(m * (m - 1) / 2) FROM (
                       SELECT 1 + CASE WHEN doc_id % 25 = 0 THEN 1 ELSE 0 END
@@ -2864,16 +2727,9 @@ object ExtQueries {
       // anchor's (q_dedup_audio_anchor).
       import s.implicits._
       val media = documents(s, d).select(col("doc_id")).as[Long]
-        // single-split input serializes the per-doc synth+encode
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .flatMap { id =>
-          def mix(z0: Long): Long = {
-            var z = z0 + 0x9E3779B97F4A7C15L
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            z ^ (z >>> 31)
-          }
-          val base = graft.ext.AudioFp.synthSamples(mix(id))
+          val base = graft.ext.AudioFp.synthSamples(MinHashAggregator.splitmix64(id))
           val regained = Array.tabulate(base.length) { i =>
             base(i) * 3 / 4 + ((id * 31 + i * 17) % 7).toInt - 3
           }
@@ -2928,19 +2784,12 @@ object ExtQueries {
       // `documents` alone.
       import s.implicits._
       val media = documents(s, d).select(col("doc_id")).as[Long]
-        // single-split input serializes the per-doc synth+encode
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .flatMap { id =>
           require(id >= 0 && id < 90000,
             s"q_dedup_audio_anchor: doc_id $id outside [0, 90000) — raise " +
               "the planted-id offsets for this corpus")
-          def mix(z0: Long): Long = {
-            var z = z0 + 0x9E3779B97F4A7C15L
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            z ^ (z >>> 31)
-          }
-          val base = mix(id)
+          val base = MinHashAggregator.splitmix64(id)
           val near = base ^ 0xEL // flip bits 1,2,3 → fingerprint hamming 3
           val baseSamples = graft.ext.AudioFp.synthSamples(base)
           Seq((id, graft.ext.AudioFp.wavPcm16(baseSamples))) ++
@@ -2976,28 +2825,14 @@ object ExtQueries {
              else Nil)
         }
         .toDF("media_id", "payload")
-      Multimodal.nearDupAudio(media, maxHamming = 5)
-        .agg(
-          count(lit(1)).as("n_pairs"),
-          sum(when(col("id1") % 90000 =!= col("id2") % 90000, 1L)
-            .otherwise(0L)).as("n_cross_family"),
-          sum(when(col("hamming") === 3 && col("id2") < 270000L, 1L)
-            .otherwise(0L)).as("n_near_pairs"),
-          sum(when(col("hamming") === 0 && col("id2") < 270000L, 1L)
-            .otherwise(0L)).as("n_exact_pairs"),
-          sum(when(col("id2") >= 270000L && col("id2") < 360000L, 1L)
-            .otherwise(0L)).as("n_mp3_pairs"),
-          sum(when(col("id2") >= 360000L, 1L).otherwise(0L)).as("n_vorbis_pairs"),
-          sum(when(col("hamming") =!= 0 && col("hamming") =!= 3 &&
-            col("id2") < 270000L, 1L).otherwise(0L)).as("n_bad_hamming"))
-        .select(
-          coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-          coalesce(col("n_cross_family"), lit(0L)).as("n_cross_family"),
-          coalesce(col("n_near_pairs"), lit(0L)).as("n_near_pairs"),
-          coalesce(col("n_exact_pairs"), lit(0L)).as("n_exact_pairs"),
-          coalesce(col("n_mp3_pairs"), lit(0L)).as("n_mp3_pairs"),
-          coalesce(col("n_vorbis_pairs"), lit(0L)).as("n_vorbis_pairs"),
-          coalesce(col("n_bad_hamming"), lit(0L)).as("n_bad_hamming"))
+      Plants.pairSummary(Multimodal.nearDupAudio(media, maxHamming = 5),
+        "n_cross_family" -> Plants.crossFamily,
+        "n_near_pairs" -> Plants.countIf(col("hamming") === 3 && col("id2") < 270000L),
+        "n_exact_pairs" -> Plants.countIf(col("hamming") === 0 && col("id2") < 270000L),
+        "n_mp3_pairs" -> Plants.countIf(col("id2") >= 270000L && col("id2") < 360000L),
+        "n_vorbis_pairs" -> Plants.countIf(col("id2") >= 360000L),
+        "n_bad_hamming" -> Plants.countIf(col("hamming") =!= 0 && col("hamming") =!= 3 &&
+          col("id2") < 270000L))
     },
     Some("""SELECT CAST((SELECT count(*) FROM documents WHERE doc_id % 25 = 0)
                       + (SELECT count(*) FROM documents WHERE doc_id % 40 = 0)
@@ -3037,15 +2872,9 @@ object ExtQueries {
       // silence-shifted copy must match exactly (Hamming 0).
       import s.implicits._
       documents(s, d).select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { id =>
-          def mix(z0: Long): Long = {
-            var z = z0 + 0x9E3779B97F4A7C15L
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            z ^ (z >>> 31)
-          }
-          val target = mix(id * 17 + 9)
+          val target = MinHashAggregator.splitmix64(id * 17 + 9)
           val samples = graft.ext.AudioFp.synthSamples(target)
           val shift = 37 + (id % 1000).toInt
           val shifted = new Array[Int](shift + samples.length)
@@ -3091,16 +2920,10 @@ object ExtQueries {
       // exchange-free. Every expected pair lands at its constructed
       // distance, decoys match nothing, counts DuckDB-derivable.
       import s.implicits._
-      def mix(z0: Long): Long = {
-        var z = z0 + 0x9E3779B97F4A7C15L
-        z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-        z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-        z ^ (z >>> 31)
-      }
       val corpusMedia = documents(s, d).select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map(id => (id, graft.ext.AudioFp.wavPcm16(
-          graft.ext.AudioFp.synthSamples(mix(id)))))
+          graft.ext.AudioFp.synthSamples(MinHashAggregator.splitmix64(id)))))
         .toDF("media_id", "payload")
       val corpusFps = Multimodal.audioFingerprints(corpusMedia).toDF()
         .select("media_id", "phash")
@@ -3109,11 +2932,11 @@ object ExtQueries {
         maxHamming = 3, nBlocks = 6, numBuckets = 4,
         basePath = Some(s"/tmp/$prefix"))
       val batchMedia = documents(s, d).select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .flatMap { id =>
           require(id >= 0 && id < 90000,
             s"q_dedup_audio_incremental: doc_id $id outside [0, 90000)")
-          val base = mix(id)
+          val base = MinHashAggregator.splitmix64(id)
           (if (id % 25 == 0)
             Seq((id + 90000L, graft.ext.AudioFp.wavPcm16(
               graft.ext.AudioFp.synthSamples(base ^ 0xEL))))
@@ -3125,27 +2948,18 @@ object ExtQueries {
            else Nil) ++
           (if (id % 30 == 0)
             Seq((id + 270000L, graft.ext.AudioFp.wavPcm16(
-              graft.ext.AudioFp.synthSamples(mix(id * 31 + 12345L)))))
+              graft.ext.AudioFp.synthSamples(MinHashAggregator.splitmix64(id * 31 + 12345L)))))
            else Nil)
         }
         .toDF("media_id", "payload")
       val batchFps = Multimodal.audioFingerprints(batchMedia).toDF()
         .select("media_id", "phash")
-      Dedup.hammingAgainstIndex(s, prefix, batchFps, "media_id", "phash")
-        .agg(
-          count(lit(1)).as("n_pairs"),
-          sum(when(col("hamming") === 3, 1L).otherwise(0L)).as("n_near"),
-          sum(when(col("hamming") === 0, 1L).otherwise(0L)).as("n_exact"),
-          sum(when(col("batch_id") % 90000 =!= col("corpus_id"), 1L)
-            .otherwise(0L)).as("n_cross_family"),
-          sum(when(col("batch_id") >= 270000L, 1L).otherwise(0L))
-            .as("n_decoy_hits"))
-        .select(
-          coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-          coalesce(col("n_near"), lit(0L)).as("n_near"),
-          coalesce(col("n_exact"), lit(0L)).as("n_exact"),
-          coalesce(col("n_cross_family"), lit(0L)).as("n_cross_family"),
-          coalesce(col("n_decoy_hits"), lit(0L)).as("n_decoy_hits"))
+      Plants.pairSummary(
+        Dedup.hammingAgainstIndex(s, prefix, batchFps, "media_id", "phash"),
+        "n_near" -> Plants.countIf(col("hamming") === 3),
+        "n_exact" -> Plants.countIf(col("hamming") === 0),
+        "n_cross_family" -> Plants.countIf(col("batch_id") % 90000 =!= col("corpus_id")),
+        "n_decoy_hits" -> Plants.countIf(col("batch_id") >= 270000L))
     },
     Some("""SELECT CAST((SELECT count(*) FROM documents WHERE doc_id % 25 = 0)
                       + (SELECT count(*) FROM documents WHERE doc_id % 40 = 0)
@@ -3252,16 +3066,9 @@ object ExtQueries {
       // (2304 samples -> ceil(2304/1152) + 2 flush = 4 frames/doc).
       import s.implicits._
       documents(s, d).select(col("doc_id")).as[Long]
-        // single-split input serializes the per-doc encode+decode
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { id =>
-          def mix(z0: Long): Long = {
-            var z = z0 + 0x9E3779B97F4A7C15L
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            z ^ (z >>> 31)
-          }
-          val target = mix(id * 7 + 3)
+          val target = MinHashAggregator.splitmix64(id * 7 + 3)
           val samples = graft.ext.AudioFp.synthSamples(target)
           val mp3 = graft.ext.Mp3Enc.encode(samples)
           val meta = graft.ext.Mpeg.mp3Meta(mp3)
@@ -3305,15 +3112,9 @@ object ExtQueries {
       // pages per doc.
       import s.implicits._
       documents(s, d).select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { id =>
-          def mix(z0: Long): Long = {
-            var z = z0 + 0x9E3779B97F4A7C15L
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            z ^ (z >>> 31)
-          }
-          val target = mix(id * 11 + 5)
+          val target = MinHashAggregator.splitmix64(id * 11 + 5)
           val samples = graft.ext.AudioFp.synthSamples(target)
           val ogg = graft.ext.VorbisEnc.encode(samples)
           val meta = graft.ext.Ogg.meta(ogg)
@@ -3361,8 +3162,7 @@ object ExtQueries {
       import s.implicits._
       val (w, h) = (20, 12)
       documents(s, d).select(col("doc_id")).as[Long]
-        // single-split input serializes the per-doc VP8L encode+decode
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { id =>
           val px = Array.tabulate(w * h)(i =>
             0xFF000000 | ((id * 2654435761L + i.toLong * 40503L) % 16777216L).toInt)
@@ -3417,7 +3217,7 @@ object ExtQueries {
       // whole arm driver-checked at corpus scale.
       import s.implicits._
       documents(s, d).select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { id =>
           val w = 24 + (id % 3).toInt * 8
           val h = 16 + (id % 5).toInt * 4
@@ -3485,8 +3285,7 @@ object ExtQueries {
       import s.implicits._
       val (w, h, nF) = (10, 6, 3)
       val media = documents(s, d).select(col("doc_id")).as[Long]
-        // single-split input serializes the per-doc frame encodes
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { id =>
           val frames = (0 until nF).map { f =>
             val px = Array.tabulate(w * h)(i =>
@@ -3538,8 +3337,7 @@ object ExtQueries {
       import s.implicits._
       val (w, h, nF) = (10, 6, 3)
       val media = documents(s, d).select(col("doc_id")).as[Long]
-        // single-split input serializes the per-doc frame encodes
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { id =>
           val frames = (0 until nF).map { f =>
             graft.ext.Png.Image(w, h, 3, Array.tabulate(w * h * 3)(i =>
@@ -3581,8 +3379,7 @@ object ExtQueries {
       import s.implicits._
       val (w, h) = (11, 7)
       documents(s, d).select(col("doc_id")).as[Long]
-        // single-split input serializes the per-doc build+decode
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { id =>
           val img =
             if (id % 2 == 0)
@@ -3621,8 +3418,7 @@ object ExtQueries {
       // still-PNG codec. Entry count from the directory walk.
       import s.implicits._
       documents(s, d).select(col("doc_id")).as[Long]
-        // single-split input serializes the per-doc PNG encodes
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { id =>
           val small = graft.ext.Png.Image(8, 8, 1,
             Array.tabulate(64)(i => ((id * 7 + i * 3) % 256).toByte))
@@ -3661,8 +3457,7 @@ object ExtQueries {
       import s.implicits._
       val (w, h) = (14, 9)
       documents(s, d).select(col("doc_id")).as[Long]
-        // single-split input serializes the per-doc encode+decode
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { id =>
           val ch = if (id % 5 == 0) 1 else 3
           val src = graft.ext.Png.Image(w, h, ch,
@@ -3714,7 +3509,7 @@ object ExtQueries {
       import s.implicits._
       val (w, h) = (40, 11)
       documents(s, d).select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { id =>
           val gray = new Array[Byte](w * h)
           var i = 0
@@ -3760,7 +3555,7 @@ object ExtQueries {
       import s.implicits._
       val (w, h) = (13, 8)
       documents(s, d).select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { id =>
           val ch = if (id % 2 == 0) 3 else 1
           val src = graft.ext.Png.Image(w, h, ch,
@@ -3852,9 +3647,7 @@ object ExtQueries {
       // hash-match DuckDB computing the same arithmetic directly.
       import s.implicits._
       val media = documents(s, d).select(col("doc_id")).as[Long]
-        // small parquet inputs arrive as ONE split; the per-doc ImageIO
-        // encode is the cost here, so spread it across the executor
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .mapPartitions { ids =>
           graft.ext.Png.jdkImageIoInit // headless + no disk cache, once per JVM
           ids.map { id =>
@@ -3917,36 +3710,13 @@ object ExtQueries {
       // hash-match DuckDB's direct arithmetic.
       import s.implicits._
       documents(s, d).select(col("doc_id")).as[Long]
-        // small parquet inputs arrive as ONE split; the per-doc ImageIO
-        // encode is the cost here, so spread it across the executor
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .mapPartitions { ids =>
-          graft.ext.Png.jdkImageIoInit // headless + no disk cache, once per JVM
+          val jpeg = new Plants.JpegWriter()
           ids.map { id =>
-            val bi = new java.awt.image.BufferedImage(16, 16,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < 16) {
-              var x = 0
-              while (x < 16) {
-                val b = (y / 8) * 2 + (x / 8)
-                val g = ((id * 7 + 13 + 29 * b) % 256).toInt
-                bi.setRGB(x, y, (g << 16) | (g << 8) | g)
-                x += 1
-              }
-              y += 1
-            }
-            val writer = javax.imageio.ImageIO
-              .getImageWritersByFormatName("jpeg").next()
-            val bos = new java.io.ByteArrayOutputStream()
-            val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-            writer.setOutput(ios)
-            val p = writer.getDefaultWriteParam
-            p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-            p.setCompressionQuality(1.0f)
-            writer.write(null, new javax.imageio.IIOImage(bi, null, null), p)
-            ios.close(); writer.dispose()
-            val img = graft.ext.Png.decodeAny(bos.toByteArray).getOrElse(
+            val bytes = jpeg.encode(
+              Plants.grayBlocks(b => ((id * 7 + 13 + 29 * b) % 256).toInt))
+            val img = graft.ext.Png.decodeAny(bytes).getOrElse(
               throw new IllegalStateException(s"jpeg decode failed for $id"))
             def corner(bx: Int, by: Int): Long =
               (img.pixels((by * 8 * img.width + bx * 8) * img.channels) & 0xFF).toLong
@@ -4193,36 +3963,13 @@ object ExtQueries {
       // on the production contract.
       import s.implicits._
       documents(s, d).select(col("doc_id")).as[Long]
-        // small parquet inputs arrive as ONE split; the per-doc ImageIO
-        // encode is the cost here, so spread it across the executor
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .mapPartitions { ids =>
-          graft.ext.Png.jdkImageIoInit // headless + no disk cache, once per JVM
+          val jpeg = new Plants.JpegWriter()
           ids.map { id =>
-            val bi = new java.awt.image.BufferedImage(16, 16,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < 16) {
-              var x = 0
-              while (x < 16) {
-                val blk = (y / 8) * 2 + (x / 8)
-                val g = ((id * 7 + 13 + 29 * blk) % 256).toInt
-                bi.setRGB(x, y, (g << 16) | (g << 8) | g)
-                x += 1
-              }
-              y += 1
-            }
-            val writer = javax.imageio.ImageIO
-              .getImageWritersByFormatName("jpeg").next()
-            val bos = new java.io.ByteArrayOutputStream()
-            val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-            writer.setOutput(ios)
-            val p = writer.getDefaultWriteParam
-            p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-            p.setCompressionQuality(1.0f)
-            writer.write(null, new javax.imageio.IIOImage(bi, null, null), p)
-            ios.close(); writer.dispose()
-            val img = graft.ext.Png.decodeViaJdk(bos.toByteArray).getOrElse(
+            val bytes = jpeg.encode(
+              Plants.grayBlocks(b => ((id * 7 + 13 + 29 * b) % 256).toInt))
+            val img = graft.ext.Png.decodeViaJdk(bytes).getOrElse(
               throw new IllegalStateException(s"imageio decode failed for $id"))
             var sum = 0L
             img.pixels.foreach(v => sum += (v & 0xFF))
@@ -4258,37 +4005,13 @@ object ExtQueries {
       // coefficient-accumulation machinery.
       import s.implicits._
       documents(s, d).select(col("doc_id")).as[Long]
-        // small parquet inputs arrive as ONE split; the per-doc ImageIO
-        // encode is the cost here, so spread it across the executor
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .mapPartitions { ids =>
-          graft.ext.Png.jdkImageIoInit // headless + no disk cache, once per JVM
+          val jpeg = new Plants.JpegWriter(progressive = true)
           ids.map { id =>
-            val bi = new java.awt.image.BufferedImage(16, 16,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < 16) {
-              var x = 0
-              while (x < 16) {
-                val blk = (y / 8) * 2 + (x / 8)
-                val g = ((id * 7 + 13 + 29 * blk) % 256).toInt
-                bi.setRGB(x, y, (g << 16) | (g << 8) | g)
-                x += 1
-              }
-              y += 1
-            }
-            val writer = javax.imageio.ImageIO
-              .getImageWritersByFormatName("jpeg").next()
-            val bos = new java.io.ByteArrayOutputStream()
-            val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-            writer.setOutput(ios)
-            val p = writer.getDefaultWriteParam
-            p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-            p.setCompressionQuality(1.0f)
-            p.setProgressiveMode(javax.imageio.ImageWriteParam.MODE_DEFAULT)
-            writer.write(null, new javax.imageio.IIOImage(bi, null, null), p)
-            ios.close(); writer.dispose()
-            val img = graft.ext.Jpeg.decode(bos.toByteArray).getOrElse(
+            val bytes = jpeg.encode(
+              Plants.grayBlocks(b => ((id * 7 + 13 + 29 * b) % 256).toInt))
+            val img = graft.ext.Jpeg.decode(bytes).getOrElse(
               throw new IllegalStateException(s"progressive decode failed for $id"))
             var sum = 0L
             img.pixels.foreach(v => sum += (v & 0xFF))
@@ -4399,13 +4122,9 @@ object ExtQueries {
       // certifying the whole video→keyframe path end to end.
       import s.implicits._
       documents(s, d).select(col("doc_id")).as[Long]
-        // small parquet inputs arrive as ONE split; the per-doc ImageIO
-        // encode is the cost here, so spread it across the executor
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .mapPartitions { ids =>
-          graft.ext.Png.jdkImageIoInit // headless + no disk cache, once per JVM
-          val writer = javax.imageio.ImageIO
-            .getImageWritersByFormatName("jpeg").next()
+          val jpeg = new Plants.JpegWriter()
           ids.map { id =>
             def le32(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte,
               (v >>> 16).toByte, (v >>> 24).toByte)
@@ -4413,28 +4132,8 @@ object ExtQueries {
             movi.write("movi".getBytes("US-ASCII"))
             var f = 0
             while (f < 6) {
-              val bi = new java.awt.image.BufferedImage(16, 16,
-                java.awt.image.BufferedImage.TYPE_INT_RGB)
-              var y = 0
-              while (y < 16) {
-                var x = 0
-                while (x < 16) {
-                  val blk = (y / 8) * 2 + (x / 8)
-                  val g = ((id * 7 + 13 + 29 * blk + 11 * f) % 256).toInt
-                  bi.setRGB(x, y, (g << 16) | (g << 8) | g)
-                  x += 1
-                }
-                y += 1
-              }
-              val bos = new java.io.ByteArrayOutputStream()
-              val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-              writer.setOutput(ios)
-              val p = writer.getDefaultWriteParam
-              p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-              p.setCompressionQuality(1.0f)
-              writer.write(null, new javax.imageio.IIOImage(bi, null, null), p)
-              ios.close()
-              val jpg = bos.toByteArray
+              val jpg = jpeg.encode(
+                Plants.grayBlocks(b => ((id * 7 + 13 + 29 * b + 11 * f) % 256).toInt))
               movi.write("00dc".getBytes("US-ASCII"))
               movi.write(le32(jpg.length))
               movi.write(jpg)
@@ -4849,14 +4548,7 @@ object ExtQueries {
       val input = docs
         .unionByName(docs.filter(col("doc_id") % 7 === 0)
           .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-        // spread the CPU-heavy per-doc work (gzip WARC synthesis here,
-        // gunzip+HTML-extract in the engine's map stages downstream)
-        // across the session's cores: the documents scan is 2 splits at
-        // bench scale, and BenchOne showed this query's dominant stages
-        // running 3.5 task-seconds wide-2 (round 17). At lake scale the
-        // scan already has >= parallelism splits and this exchange of
-        // the raw rows is the cheap part of the plan.
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .as[(Long, String)]
         .map { case (id, text) => (id, graft.ext.WebCurate.warcGzBlob(id, text)) }
         .toDF("doc_id", "warc")
@@ -5052,36 +4744,14 @@ object ExtQueries {
       // bytes at the wrong offset and fails loudly.
       import s.implicits._
       documents(s, d).select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .mapPartitions { ids =>
-          graft.ext.Png.jdkImageIoInit
-          val writer = javax.imageio.ImageIO
-            .getImageWritersByFormatName("jpeg").next()
+          val jpeg = new Plants.JpegWriter()
           ids.map { id =>
             import Mp4Build._
             val jpgs = (0 until 6).map { f =>
-              val bi = new java.awt.image.BufferedImage(16, 16,
-                java.awt.image.BufferedImage.TYPE_INT_RGB)
-              var y = 0
-              while (y < 16) {
-                var x = 0
-                while (x < 16) {
-                  val blk = (y / 8) * 2 + (x / 8)
-                  val g = ((id * 11 + 17 + 23 * blk + 7 * f) % 256).toInt
-                  bi.setRGB(x, y, (g << 16) | (g << 8) | g)
-                  x += 1
-                }
-                y += 1
-              }
-              val bos = new java.io.ByteArrayOutputStream()
-              val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-              writer.setOutput(ios)
-              val p = writer.getDefaultWriteParam
-              p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-              p.setCompressionQuality(1.0f)
-              writer.write(null, new javax.imageio.IIOImage(bi, null, null), p)
-              ios.close()
-              bos.toByteArray
+              jpeg.encode(
+                Plants.grayBlocks(b => ((id * 11 + 17 + 23 * b + 7 * f) % 256).toInt))
             }
             val mdat = box("mdat", jpgs: _*)
             val header = ftyp("isom")
@@ -5370,34 +5040,12 @@ object ExtQueries {
       // decoded pixel sum stays exactly on direct arithmetic.
       import s.implicits._
       val media = documents(s, d).select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .mapPartitions { ids =>
-          graft.ext.Png.jdkImageIoInit
-          val writer = javax.imageio.ImageIO
-            .getImageWritersByFormatName("jpeg").next()
+          val jpeg = new Plants.JpegWriter()
           ids.map { id =>
-            val bi = new java.awt.image.BufferedImage(16, 16,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < 16) {
-              var x = 0
-              while (x < 16) {
-                val blk = (y / 8) * 2 + (x / 8)
-                val g = ((id * 13 + 29 + 17 * blk) % 256).toInt
-                bi.setRGB(x, y, (g << 16) | (g << 8) | g)
-                x += 1
-              }
-              y += 1
-            }
-            val bos = new java.io.ByteArrayOutputStream()
-            val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-            writer.setOutput(ios)
-            val p = writer.getDefaultWriteParam
-            p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-            p.setCompressionQuality(1.0f)
-            writer.write(null, new javax.imageio.IIOImage(bi, null, null), p)
-            ios.close()
-            val jpg = bos.toByteArray
+            val jpg = jpeg.encode(
+              Plants.grayBlocks(b => ((id * 13 + 29 + 17 * b) % 256).toInt))
 
             // hand-assembled Exif APP1 (little-endian TIFF)
             val gps = id % 2 == 0
@@ -5599,35 +5247,13 @@ object ExtQueries {
       // pixels, so post-strip copies are byte-identical.)
       import s.implicits._
       val media = documents(s, d).select(col("doc_id")).as[Long]
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .mapPartitions { ids =>
-          graft.ext.Png.jdkImageIoInit
-          val writer = javax.imageio.ImageIO
-            .getImageWritersByFormatName("jpeg").next()
+          val jpeg = new Plants.JpegWriter()
           ids.map { id =>
             val gid = id % 250
-            val bi = new java.awt.image.BufferedImage(16, 16,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            var y = 0
-            while (y < 16) {
-              var x = 0
-              while (x < 16) {
-                val blk = (y / 8) * 2 + (x / 8)
-                val g = ((gid * 3 + 37 + 19 * blk) % 256).toInt
-                bi.setRGB(x, y, (g << 16) | (g << 8) | g)
-                x += 1
-              }
-              y += 1
-            }
-            val bos = new java.io.ByteArrayOutputStream()
-            val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-            writer.setOutput(ios)
-            val p = writer.getDefaultWriteParam
-            p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-            p.setCompressionQuality(1.0f)
-            writer.write(null, new javax.imageio.IIOImage(bi, null, null), p)
-            ios.close()
-            val jpg = bos.toByteArray
+            val jpg = jpeg.encode(
+              Plants.grayBlocks(b => ((gid * 3 + 37 + 19 * b) % 256).toInt))
             // per-COPY Exif: same pixels, different metadata
             val gps = id % 2 == 0
             val n0 = 2 + (if (gps) 1 else 0)
@@ -6744,8 +6370,7 @@ object ExtQueries {
       import s.implicits._
       documents(s, d).select(col("doc_id"), col("text"))
         .as[(Long, String)]
-        // single-split input serializes the per-doc codec encodes
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { case (id, text) =>
           val textB = text.getBytes("UTF-8")
           val tar = graft.ext.Tar.build(Seq(
@@ -6793,8 +6418,7 @@ object ExtQueries {
       import s.implicits._
       documents(s, d).select(col("doc_id"), col("text"))
         .as[(Long, String)]
-        // single-split input serializes the per-doc zstd encode+decode
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { case (id, text) =>
           def rec(wType: String, uri: String, payload: String): Array[Byte] = {
             val p = payload.getBytes("UTF-8")
@@ -6835,8 +6459,7 @@ object ExtQueries {
       import s.implicits._
       documents(s, d).select(col("doc_id"), col("text"))
         .as[(Long, String)]
-        // single-split input serializes the per-doc LZMA2 encode
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { case (id, text) =>
           val bin = Array.tabulate(32)(k => (((id * 13 + k) % 256) & 0xFF).toByte)
           val z = graft.ext.SevenZ.build(Seq(
@@ -6922,9 +6545,7 @@ object ExtQueries {
       val methods = Seq(0, 8, 9, 12, 14, 93, 95)
       documents(s, d).select(col("doc_id"), col("text"))
         .as[(Long, String)]
-        // small parquet inputs arrive as ONE split; the 6 compressors
-        // per doc are the cost — spread them across the executor
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .flatMap { case (id, text) =>
           val raw = text.getBytes("UTF-8")
           val z = graft.ext.Zip.buildMethods(
@@ -6969,8 +6590,7 @@ object ExtQueries {
         // grow with corpus size the way the cost does
         .filter(pmod(col("doc_id"), lit(5)) === 0)
         .as[(Long, String)]
-        // spread the per-doc key stretching across the executor
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { case (id, text) =>
           val pw = s"aespw-${id % 5}"
           val strength = (id % 3).toInt + 1
@@ -7021,8 +6641,7 @@ object ExtQueries {
       import s.implicits._
       documents(s, d).select(col("doc_id"), col("text"))
         .as[(Long, String)]
-        // single-split input serializes the per-doc encodes
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { case (id, text) =>
           val codec = (id % 4) match {
             case 0 => "xz"; case 1 => "gzip"; case 2 => "zstd"; case _ => "bzip2"
@@ -7066,7 +6685,7 @@ object ExtQueries {
       import s.implicits._
       documents(s, d).select(col("doc_id"), col("text"))
         .as[(Long, String)]
-        .repartition(s.sparkContext.defaultParallelism)
+        .transform(Plants.spread)
         .map { case (id, text) =>
           val dialect = (id % 3) match {
             case 0 => "newc"; case 1 => "crc"; case _ => "odc"

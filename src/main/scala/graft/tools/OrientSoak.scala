@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.functions.MinHashAggregator.splitmix64
+
 /** Round-14 scale soak for the D4-orbit oriented image pairing
   * ([[graft.ext.Multimodal.nearDupImagesOriented]]): the orbit fan-out
   * multiplies band rows by 8 versus single-hash Hamming pairing, so the
@@ -48,19 +50,13 @@ object OrientSoak {
         .repartition(spark.sparkContext.defaultParallelism)
         .as[Long]
         .flatMap { id =>
-          def mix(z0: Long): Long = {
-            var z = z0 + 0x9E3779B97F4A7C15L
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            z ^ (z >>> 31)
-          }
-          val base = mix(id)
-          val orbit = Array.tabulate(8)(j => if (j == 0) base else mix(base + j))
+          val base = splitmix64(id)
+          val orbit = Array.tabulate(8)(j => if (j == 0) base else splitmix64(base + j))
           val out = scala.collection.mutable.ArrayBuffer((id, orbit))
           if (id % 100 == 0) {
             val twin = Array.tabulate(8)(j =>
               if (j == 3) base ^ 0x1600L // 3 bits
-              else mix(base * 31 + j + 7))
+              else splitmix64(base * 31 + j + 7))
             out += ((id + n, twin))
           }
           out.toSeq

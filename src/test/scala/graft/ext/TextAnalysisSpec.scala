@@ -361,14 +361,13 @@ class TextAnalysisSpec extends SparkSpec {
     assert(out.toSeq == again.toSeq)
   }
 
-  test("lmScore grouped (doc,tok)-count form is bit-equal to the per-instance reference") {
-    // round-17 shape change: lmScore aggregates token INSTANCES to
-    // per-(doc, tok) counts before any exchange (guide §2.3 "aggregate
-    // before you shuffle"). This pins bit-equality to the original
-    // per-instance form on a corpus with heavy repetition (where the two
-    // shapes differ most): Σ_instances round(-ln p, 6) must equal
-    // Σ_(doc,tok) count · round(-ln p, 6) exactly — DECIMAL × integer is
-    // exact — and n_toks = Σ count.
+  test("lmScore vocab-persist form equals its inline reference") {
+    // lmScore persists the vocab aggregate and derives the corpus token
+    // total from it instead of re-running the explode. This pins its
+    // output to the inline form below (vocab and total as plain
+    // subtrees) on a corpus with heavy repetition, an empty doc and a
+    // single-token doc, under the input's own layout and a 7-partition
+    // one.
     val docs = Seq(
       (0L, "a a a a a a b"),
       (1L, "a b c d e f g h"),

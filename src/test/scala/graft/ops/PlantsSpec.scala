@@ -1,0 +1,151 @@
+package graft.ops
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
+
+import graft.SparkSpec
+import graft.ext.Png
+import graft.functions.MinHashAggregator
+
+/** [[Plants]] and `MinHashAggregator.splitmix64` against the inline forms
+  * they replaced ([[PlantsReference]]), plus the exchange of
+  * [[Plants.spread]].
+  */
+class PlantsSpec extends SparkSpec {
+
+  test("splitmix64 equals the inline body on 10 000 seeded inputs and the edge values") {
+    val rnd = new scala.util.Random(20261017L)
+    val inputs = Seq.fill(10000)(rnd.nextLong()) ++
+      Seq(0L, -1L, Long.MinValue, Long.MaxValue)
+    inputs.foreach(z => assert(MinHashAggregator.splitmix64(z) == PlantsReference.splitmix64(z), s"z=$z"))
+  }
+
+  test("gridRaster equals the inline raster and its aHash is exactly the planted target") {
+    (0L until 2000L).foreach { id =>
+      val h = (MinHashAggregator.splitmix64(id) | 1L) & ~(1L << 63)
+      val img = Plants.gridRaster(h)
+      assert(img.pixels.sameElements(PlantsReference.gridRaster(h).pixels), s"id=$id")
+      assert(Png.aHash(img) == h, s"id=$id")
+      if (id % 100 == 0) assert(Png.aHash(Png.decode(Png.encode(img)).get) == h, s"id=$id")
+    }
+  }
+
+  test("JpegWriter bytes equal the inline ImageIO sequence for every block-gray generator") {
+    // (label, progressive, gray(id, frame)(block)) — one entry per query
+    val generators: Seq[(String, Boolean, (Long, Int) => Int => Int)] = Seq(
+      ("q_jpeg_stats / q_jpeg_imageio", false,
+        (id, _) => b => ((id * 7 + 13 + 29 * b) % 256).toInt),
+      ("q_jpeg_progressive", true,
+        (id, _) => b => ((id * 7 + 13 + 29 * b) % 256).toInt),
+      ("q_avi_frames", false,
+        (id, f) => b => ((id * 7 + 13 + 29 * b + 11 * f) % 256).toInt),
+      ("q_mp4_frames", false,
+        (id, f) => b => ((id * 11 + 17 + 23 * b + 7 * f) % 256).toInt),
+      ("q_exif_meta", false,
+        (id, _) => b => ((id * 13 + 29 + 17 * b) % 256).toInt),
+      ("q_media_curate_engine", false,
+        (id, _) => b => ((id % 250 * 3 + 37 + 19 * b) % 256).toInt))
+    generators.foreach { case (label, progressive, gray) =>
+      val jpeg = new Plants.JpegWriter(progressive) // reused, as per partition
+      for (id <- 0L until 40L; f <- 0 until 3) {
+        val ours = jpeg.encode(Plants.grayBlocks(gray(id, f)))
+        val ref = PlantsReference.blockJpeg(gray(id, f), progressive)
+        assert(ours.sameElements(ref), s"$label id=$id frame=$f")
+      }
+    }
+  }
+
+  private val pairSchema = StructType.fromDDL("id1 BIGINT, id2 BIGINT, hamming INT")
+
+  private def imageAnchorSummary(pairs: DataFrame): DataFrame =
+    Plants.pairSummary(pairs,
+      "n_cross_family" -> Plants.crossFamily,
+      "n_near_pairs" -> Plants.countIf(col("hamming") === 3),
+      "n_exact_pairs" -> Plants.countIf(col("hamming") === 0),
+      "n_bad_hamming" -> Plants.countIf(col("hamming") =!= 0 && col("hamming") =!= 3))
+
+  test("pairSummary over an empty pair set is one row of non-null zeros with the inline schema") {
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], pairSchema)
+    val ours = imageAnchorSummary(empty)
+    val ref = PlantsReference.imageAnchorSummary(empty)
+    assert(ours.schema == ref.schema)
+    assert(ours.schema.fieldNames.toSeq ==
+      Seq("n_pairs", "n_cross_family", "n_near_pairs", "n_exact_pairs", "n_bad_hamming"))
+    assert(ours.schema.forall(f => f.dataType == LongType && !f.nullable))
+    assert(ours.collect().toSeq == Seq(Row(0L, 0L, 0L, 0L, 0L)))
+    assert(ours.queryExecution.optimizedPlan.sameResult(ref.queryExecution.optimizedPlan))
+  }
+
+  test("pairSummary over planted pairs equals the inline summary") {
+    val pairs = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, 90001L, 3), Row(2L, 180002L, 0), Row(3L, 4L, 5), Row(5L, 90005L, 0))), pairSchema)
+    val ours = imageAnchorSummary(pairs)
+    assert(ours.collect().toSeq == Seq(Row(4L, 1L, 1L, 2L, 1L)))
+    assert(ours.collect().toSeq == PlantsReference.imageAnchorSummary(pairs).collect().toSeq)
+  }
+
+  test("top10 is the inline select/orderBy/limit tail") {
+    val scores = spark.range(40).select(col("id").as("vec_id"),
+      (lit(1.0) / (pmod(col("id"), lit(7)) + 1) + lit(1e-9) * col("id")).as("score"))
+    val ours = Plants.top10(scores)
+    val ref = PlantsReference.top10(scores)
+    assert(ours.queryExecution.optimizedPlan.sameResult(ref.queryExecution.optimizedPlan))
+    assert(ours.collect().toSeq == ref.collect().toSeq)
+    assert(ours.count() == 10)
+  }
+
+  private def roundRobinExchanges(df: DataFrame): Int =
+    "RoundRobinPartitioning".r.findAllMatchIn(df.queryExecution.executedPlan.toString).size
+
+  private def docIds(df: DataFrame): Seq[Long] =
+    df.collect().map(_.getLong(0)).toSeq.sorted
+
+  test("spread keeps the round-robin exchange over the single-split sf0.001 documents scan") {
+    val docs = Tables.documents(spark, sfDir).select(col("doc_id"))
+    val spread = Plants.spread(docs)
+    assert(roundRobinExchanges(spread) == 1)
+    assert(spread.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+    assert(docIds(spread) == docIds(docs))
+  }
+
+  test("spread keeps the exchange when one single-row-group file is cut into many splits") {
+    // Spark cuts a parquet file into byte ranges whatever its row groups,
+    // and only the range holding a row group's midpoint reads it: the
+    // scan has defaultParallelism splits but one task holds every row.
+    val par = spark.sparkContext.defaultParallelism
+    val dir = Files.createTempDirectory("graft-plants-spread")
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    try {
+      val path = dir.resolve("documents").toString
+      Tables.documents(spark, sfDir).select("doc_id", "text")
+        .coalesce(1).write.parquet(path)
+      val bytes = new java.io.File(path).listFiles
+        .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+      spark.conf.set(key, math.max(1L, bytes / (2 * par)))
+      val docs = spark.read.parquet(path).select(col("doc_id"))
+      assert(docs.rdd.getNumPartitions >= par)
+      assert(docs.rdd.mapPartitions(it => Iterator(it.size)).collect().count(_ > 0) == 1)
+      val spread = Plants.spread(docs)
+      assert(roundRobinExchanges(spread) == 1)
+      assert(docIds(spread) == docIds(Tables.documents(spark, sfDir)))
+    } finally {
+      saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      scala.reflect.io.Directory(dir.toFile).deleteRecursively()
+    }
+  }
+
+  test("the spread exchange is still planned in the sf0.001 head queries") {
+    Seq("q_dedup_image_orient_anchor", "q_web_curate_engine").foreach { name =>
+      val df = graft.SparkEntry.queries(name)(spark, sfDir)
+      assert(roundRobinExchanges(df) >= 1, name)
+      CacheUtils.releaseAll(spark)
+    }
+  }
+}
