@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-7 scale soak: the new operator families at 10–100× the sf0.1
@@ -17,37 +16,18 @@ object AnalyticsSoak {
     val nDocs = args.headOption.map(_.toLong).getOrElse(2000000L)
     val nVecs = args.lift(1).map(_.toLong).getOrElse(1000000L)
     val nEdges = args.lift(2).map(_.toLong).getOrElse(8000000L)
+    val spark = Harness.session(32, 64)
     // optional 4th arg: comma-separated substrings — only stages whose
     // name contains one run (the ScaleSoak re-measurement loop)
-    val only: Seq[String] = args.lift(3)
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    def selected(name: String): Boolean =
-      only.isEmpty || only.exists(name.contains)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed(name: String, unit: Long)(body: => Long): Unit = if (selected(name)) {
-      val t0 = System.nanoTime()
-      val rows = body
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"[asoak] $name%-24s $dt%8.2f s   rows=$rows%,d   " +
-        f"(${dt * 1e6 / unit}%.2f µs/unit)")
-      graft.ops.CacheUtils.releaseAll(spark)
-    }
+    val stages = new Harness.Stages(spark, "asoak", args.lift(3))
+    def timed(name: String, units: Long)(body: => Long): Unit =
+      stages(name, units, "unit")(body)
 
     // ---- text family over the ScaleSoak corpus, MATERIALIZED to parquet
     // once: releaseAll between stages would otherwise drop an in-memory
     // persist and every later stage would re-pay corpus generation inside
     // its own timing (the round-7 wordpiece_stats artifact)
-    val docsDir = s"/tmp/graft_asoak_docs_$nDocs"
-    if (!new java.io.File(s"$docsDir/_SUCCESS").exists())
-      ScaleSoak.corpus(spark, nDocs).write.mode("overwrite").parquet(docsDir)
-    val docs = spark.read.parquet(docsDir)
+    val docs = ScaleSoak.docs(spark, nDocs)
     println(s"[asoak] docs=${docs.count()} vecs=$nVecs edges=$nEdges")
     timed("blocklist_gate", nDocs) {
       docs.select(col("doc_id"),
@@ -112,8 +92,7 @@ object AnalyticsSoak {
     // decode through the PURE T.81 codec (decodeAny routes JPEG there)
     // + aHash + pixel checksum, one mapPartitions pass
     val jpegDir = "/tmp/graft_asoak_jpeg_100k"
-    if (selected("jpeg_decode_hash_100k") &&
-      !new java.io.File(s"$jpegDir/_SUCCESS").exists()) {
+    if (stages.selected("jpeg_decode_hash_100k")) Harness.materialize(spark, jpegDir) {
       import spark.implicits._
       spark.range(0, 100000, 1, 64).as[Long]
         .mapPartitions { ids =>
@@ -141,7 +120,6 @@ object AnalyticsSoak {
             (id, bos.toByteArray)
           }
         }.toDF("media_id", "payload")
-        .write.mode("overwrite").parquet(jpegDir)
     }
     timed("jpeg_decode_hash_100k", 100000) {
       val media = spark.read.parquet(jpegDir)
@@ -154,8 +132,7 @@ object AnalyticsSoak {
     // slice — MP3 frame chains, Ogg/Opus pages, two-track MP4 moov trees —
     // scanned by all three triage arms (each sniffs its own magic and
     // drops the rest, the realistic dispatch for an untyped blob column)
-    val mediaDir = "/tmp/graft_asoak_media_600k"
-    if (!new java.io.File(s"$mediaDir/_SUCCESS").exists()) {
+    val triage = Harness.materialize(spark, "/tmp/graft_asoak_media_600k") {
       import spark.implicits._
       spark.range(0, 600000, 1, 64).as[Long]
         .mapPartitions { ids =>
@@ -208,20 +185,17 @@ object AnalyticsSoak {
             (id, payload)
           }
         }.toDF("media_id", "payload")
-        .write.mode("overwrite").parquet(mediaDir)
     }
     timed("media_triage_600k", 600000) {
-      val media = spark.read.parquet(mediaDir)
-      graft.ext.Multimodal.mpegMeta(media).toDF().agg(count(lit(1))).head().getLong(0) +
-        graft.ext.Multimodal.oggMeta(media).toDF().agg(count(lit(1))).head().getLong(0) +
-        graft.ext.Multimodal.mp4Meta(media).toDF().agg(count(lit(1))).head().getLong(0)
+      graft.ext.Multimodal.mpegMeta(triage).toDF().agg(count(lit(1))).head().getLong(0) +
+        graft.ext.Multimodal.oggMeta(triage).toDF().agg(count(lit(1))).head().getLong(0) +
+        graft.ext.Multimodal.mp4Meta(triage).toDF().agg(count(lit(1))).head().getLong(0)
     }
     // ---- sniff dispatch + WebP triage (round 11): the modern-web image
     // slice — WebP lossy/lossless/extended, HEIC and AVIF ftyp brands —
     // through the format sniff (must NOT land on mp4/unknown) and the
     // WebP chunk-walk arm
-    val webDir = "/tmp/graft_asoak_webimg_600k"
-    if (!new java.io.File(s"$webDir/_SUCCESS").exists()) {
+    val webImages = Harness.materialize(spark, "/tmp/graft_asoak_webimg_600k") {
       import spark.implicits._
       spark.range(0, 600000, 1, 64).as[Long]
         .mapPartitions { ids =>
@@ -244,23 +218,20 @@ object AnalyticsSoak {
             (id, payload)
           }
         }.toDF("media_id", "payload")
-        .write.mode("overwrite").parquet(webDir)
     }
     timed("sniff_webp_600k", 600000) {
-      val media = spark.read.parquet(webDir)
-      val named = graft.ext.Multimodal.sniffMedia(media)
+      val named = graft.ext.Multimodal.sniffMedia(webImages)
         .filter(col("format").isin("webp", "heic", "avif"))
         .agg(count(lit(1))).head().getLong(0)
       require(named == 600000L, s"sniff misrouted: $named/600000")
-      named + graft.ext.Multimodal.webpMeta(media).toDF()
+      named + graft.ext.Multimodal.webpMeta(webImages).toDF()
         .agg(count(lit(1))).head().getLong(0)
     }
     // ---- mixed-format dispatch curation (round 11): the realistic
     // untyped-blob landing — six families sniffed and routed through the
     // engine-declared CurateDispatch pipeline (sniff → five arms over one
     // persisted corpus → gate), end to end at 600 k payloads
-    val dispDir = "/tmp/graft_asoak_dispatch_600k"
-    if (!new java.io.File(s"$dispDir/_SUCCESS").exists()) {
+    val mixed = Harness.materialize(spark, "/tmp/graft_asoak_dispatch_600k") {
       import spark.implicits._
       spark.range(0, 600000, 1, 64).as[Long]
         .mapPartitions { ids =>
@@ -293,12 +264,10 @@ object AnalyticsSoak {
             (id, payload)
           }
         }.toDF("media_id", "payload")
-        .write.mode("overwrite").parquet(dispDir)
     }
     timed("curate_dispatch_600k", 600000) {
-      val media = spark.read.parquet(dispDir)
       val out = new graft.engine.Engine(graft.ext.CurateDispatch.spec())
-        .run("curate_dispatch", spark, Some(media),
+        .run("curate_dispatch", spark, Some(mixed),
           graft.engine.RunOptions(orderedConcat = false))
       val n = out.agg(count(lit(1))).head().getLong(0)
       require(n == 525000L, s"dispatch gate kept $n/525000") // 7 of 8 families
@@ -310,8 +279,7 @@ object AnalyticsSoak {
     // The round-10 whole-blob concatenation dies here with
     // OutOfMemoryError regardless of heap — the member-streaming walk
     // flatMaps records through each task with one member in flight.
-    val warcGzDir = "/tmp/graft_asoak_warcgz_8"
-    if (!new java.io.File(s"$warcGzDir/_SUCCESS").exists()) {
+    val warcGz = Harness.materialize(spark, "/tmp/graft_asoak_warcgz_8") {
       import spark.implicits._
       spark.range(0, 8, 1, 8).as[Long]
         .map { id =>
@@ -330,12 +298,11 @@ object AnalyticsSoak {
           (id, blob)
         }
         .toDF("doc_id", "warc")
-        .write.mode("overwrite").parquet(warcGzDir)
     }
     timed("warc_gz_2gib_rows", 8L * 40) {
       import spark.implicits._
       val recs = graft.ext.Warc.records(
-        spark.read.parquet(warcGzDir), "doc_id", "warc")
+        warcGz, "doc_id", "warc")
       val row = recs.selectExpr("count(*) AS c",
         "sum(content_length) AS cl", "sum(length(body)) AS bl").head()
       val (c, cl, bl) = (row.getLong(0), row.getLong(1), row.getLong(2))
@@ -349,8 +316,7 @@ object AnalyticsSoak {
     // the inflated stream walks as bounded slabs (Codecs.chunks) rather
     // than gzip's member iterator — the heap bound must hold identically
     // past the 2 GiB single-array cap.
-    val warcZstDir = "/tmp/graft_asoak_warczst_8"
-    if (!new java.io.File(s"$warcZstDir/_SUCCESS").exists()) {
+    val warcZst = Harness.materialize(spark, "/tmp/graft_asoak_warczst_8") {
       import spark.implicits._
       spark.range(0, 8, 1, 8).as[Long]
         .map { id =>
@@ -369,12 +335,11 @@ object AnalyticsSoak {
           (id, blob)
         }
         .toDF("doc_id", "warc")
-        .write.mode("overwrite").parquet(warcZstDir)
     }
     timed("warc_zst_2gib_rows", 8L * 40) {
       import spark.implicits._
       val recs = graft.ext.Warc.records(
-        spark.read.parquet(warcZstDir), "doc_id", "warc")
+        warcZst, "doc_id", "warc")
       val row = recs.selectExpr("count(*) AS c",
         "sum(content_length) AS cl", "sum(length(body)) AS bl").head()
       val (c, cl, bl) = (row.getLong(0), row.getLong(1), row.getLong(2))
@@ -387,8 +352,7 @@ object AnalyticsSoak {
     // blobs built once, extracted by the real container walks — the
     // document-modality twin of media_triage (deflate members, CRC
     // verify, shared-string resolution, checksum-verified tar headers)
-    val officeDir = "/tmp/graft_asoak_office_300k"
-    if (!new java.io.File(s"$officeDir/_SUCCESS").exists()) {
+    val office = Harness.materialize(spark, "/tmp/graft_asoak_office_300k") {
       import spark.implicits._
       spark.range(0, 300000, 1, 64).as[Long]
         .mapPartitions { ids =>
@@ -416,11 +380,10 @@ object AnalyticsSoak {
             (id, payload)
           }
         }.toDF("media_id", "payload")
-        .write.mode("overwrite").parquet(officeDir)
     }
     timed("office_extract_300k", 300000) {
       import spark.implicits._
-      spark.read.parquet(officeDir).select("media_id", "payload")
+      office.select("media_id", "payload")
         .as[(Long, Array[Byte])]
         .mapPartitions(_.map { case (_, p) =>
           graft.ext.Office.docxText(p)
@@ -484,18 +447,9 @@ object AnalyticsSoak {
         .orderBy(col("k").desc).limit(1000).count()
     }
 
-    // ---- k-means over ScaleSoak-style synthetic vectors (32 latent
-    // clusters planted by construction)
-    val vecDir = s"/tmp/graft_asoak_vec_$nVecs"
-    if (!new java.io.File(s"$vecDir/_SUCCESS").exists())
-      spark.range(0, nVecs, 1, 64)
-        .withColumn("embedding", expr(
-          """transform(sequence(1, 64),
-             i -> cast(pmod(hash(pmod(id, 32), i), 1000) / 500.0 - 1.0
-                       + pmod(hash(id, i), 100) / 250.0 as float))"""))
-        .select(col("id").as("vec_id"), col("embedding"))
-        .write.mode("overwrite").parquet(vecDir)
-    val emb = spark.read.parquet(vecDir)
+    // ---- k-means over the ScaleSoak vectors (32 latent clusters planted
+    // by construction)
+    val emb = ScaleSoak.vectors(spark, nVecs)
     timed("kmeans_k32_2rounds", nVecs) {
       graft.ext.Cluster.clusterProfile(emb, "vec_id", "embedding",
         k = 32, iters = 2).count()
@@ -507,18 +461,7 @@ object AnalyticsSoak {
     }
 
     // ---- BFS over the GraphSoak power-law graph
-    val gDir = s"/tmp/graft_graphsoak_$nEdges"
-    if (!new java.io.File(s"$gDir/_SUCCESS").exists()) {
-      val v = math.max(nEdges / 10, 16L)
-      spark.range(0, nEdges, 1, 64)
-        .select(
-          pmod(hash(col("id"), lit(1)), lit(v)).cast("long").as("src"),
-          pmod(hash(col("id"), lit(2)),
-            lit(1L) + pmod(hash(col("id"), lit(3)), lit(v))).cast("long").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .write.mode("overwrite").parquet(gDir)
-    }
-    val edges = spark.read.parquet(gDir)
+    val edges = GraphSoak.edges(spark, nEdges)
     val m = edges.count()
     timed("bfs_maxhops8", m) {
       graft.ext.Graph.shortestPaths(edges, source = 0L, maxHops = 8).count()
@@ -530,8 +473,7 @@ object AnalyticsSoak {
     // ---- event-analytics family over a synthetic clickstream
     // (10× the docs count; user/type/ts/value all id-derived)
     val nEv = nDocs * 10
-    val evDir = s"/tmp/graft_asoak_ev_$nEv"
-    if (!new java.io.File(s"$evDir/_SUCCESS").exists())
+    val ev = Harness.materialize(spark, s"/tmp/graft_asoak_ev_$nEv") {
       spark.range(0, nEv, 1, 64)
         .select(
           col("id").as("event_id"),
@@ -542,8 +484,7 @@ object AnalyticsSoak {
             lit("signup"), lit("error")),
             (pmod(hash(col("id"), lit(3)), lit(5)) + 1).cast("int")).as("event_type"),
           (pmod(hash(col("id"), lit(4)), lit(10000)) / 100.0).as("value"))
-        .write.mode("overwrite").parquet(evDir)
-    val ev = spark.read.parquet(evDir)
+    }
     val nEvActual = ev.count()
     println(s"[asoak] events=$nEvActual (~${nEv / 200} users)")
     def funnelCount(): Long = {

@@ -1,30 +1,24 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.Dedup
 
-/** Stage-by-stage timing of the MinHash-LSH pipeline (bench tuning aid). */
+/** Stage-by-stage timing of the MinHash-LSH pipeline (bench tuning aid)
+  * over any parquet of (doc_id, text) documents: an sf corpus's
+  * `documents.parquet`, or a ScaleSoak corpus (`ScaleSoak.docsDir`).
+  * Persisted intermediates use the default MEMORY_AND_DISK level.
+  *
+  * Usage: runMain graft.tools.DedupProfile <documents parquet path>
+  */
 object DedupProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    require(args.length == 1, "usage: DedupProfile <documents parquet path>")
+    val spark = Harness.session(32, 32, Harness.NanosAsLong)
+    val docs = spark.read.parquet(args(0))
     docs.count() // warm
 
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
+    def time[T](label: String)(f: => T): T = Harness.step(spark)(f).report("prof", label)
 
     val sh = Dedup.WordShingles(3)
     time("shingles-only") {

@@ -1,8 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Round-12b scale soak: the document/sidecar format arms at 100×+ the
   * bench corpus — per-format build+parse throughput (the certificate
   * shape: the real writer feeds the real parser inside one task) and
@@ -20,31 +17,13 @@ import org.apache.spark.sql.functions._
 object DocSoak {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(200000L)
-    val only: Seq[String] = args.lift(1)
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    def selected(name: String): Boolean =
-      only.isEmpty || only.exists(name.contains)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32, 64)
     import spark.implicits._
+    val stages = new Harness.Stages(spark, "docsoak", args.lift(1))
+    def timed(name: String)(body: => Long): Unit = stages(name, nDocs)(body)
 
-    val docsDir = s"/tmp/graft_docsoak_$nDocs"
-    if (!new java.io.File(s"$docsDir/_SUCCESS").exists())
-      ScaleSoak.corpus(spark, nDocs).write.mode("overwrite").parquet(docsDir)
-    val docs = spark.read.parquet(docsDir).select("doc_id", "text")
+    val docs = ScaleSoak.docs(spark, nDocs)
     println(s"[docsoak] docs=${docs.count()}")
-
-    def timed(name: String)(body: => Long): Unit = if (selected(name)) {
-      val t0 = System.nanoTime()
-      val rows = body
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"[docsoak] $name%-18s $dt%8.2f s   rows=$rows%,d   " +
-        f"(${dt * 1e6 / nDocs}%.2f µs/doc)")
-    }
 
     val ds = docs.as[(Long, String)]
 
@@ -129,9 +108,8 @@ object DocSoak {
     // buffer alloc/free the encode side was paying).
     val inflateStages = Seq("inflate_zip", "inflate_warc", "inflate_png",
       "inflate_pdf")
-    if (inflateStages.exists(selected)) {
-      val infDir = s"/tmp/graft_docsoak_inf_$nDocs"
-      if (!new java.io.File(s"$infDir/_SUCCESS").exists())
+    if (inflateStages.exists(stages.selected)) {
+      val inf = Harness.materialize(spark, s"/tmp/graft_docsoak_inf_$nDocs") {
         ds.map { case (id, text) =>
           val textB = text.getBytes("UTF-8")
           val zip = graft.ext.Zip.build(Seq(("d.txt", textB, true)))
@@ -147,8 +125,7 @@ object DocSoak {
           val pdf = graft.ext.Pdf.buildSimple(Seq(text), flate = true)
           (id, zip, warc, png, pdf)
         }.toDF("media_id", "zip", "warc", "png", "pdf")
-          .write.mode("overwrite").parquet(infDir)
-      val inf = spark.read.parquet(infDir)
+      }
       timed("inflate_zip") {
         inf.select("zip").as[Array[Byte]].map(b =>
           graft.ext.Zip.read(b, "d.txt").map(_.length).getOrElse(-1))

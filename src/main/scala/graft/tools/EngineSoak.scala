@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Engine, RunOptions}
@@ -39,21 +39,8 @@ object EngineSoak {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(8000000L)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // same write-once corpus materialization as ScaleSoak (stages read
-    // parquet from disk, like a real pipeline)
-    val corpusGen = 2
-    val dir = s"/tmp/graft_soak_g${corpusGen}_$n"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists())
-      ScaleSoak.corpus(spark, n).write.mode("overwrite").parquet(dir)
-    val docs = spark.read.parquet(dir)
+    val spark = Harness.session(32, 64)
+    val docs = ScaleSoak.docs(spark, n)
 
     // the engine's data plane is a single value:string column (the
     // byte-stream analog) — one line per document
@@ -107,32 +94,28 @@ object EngineSoak {
 
     val engine = new Engine(spec)
 
-    def timed(name: String, expectRows: Long => Long,
-        opts: RunOptions = RunOptions(), label: String = ""): Unit = {
-      val t0 = System.nanoTime()
-      // sum(length(value)) forces every branch's value column to actually
-      // materialize — a bare count() lets Catalyst prune the inline
-      // projections (cache/parquet count-star optimization) and would
-      // time the engine's plumbing without the stages' work
-      val r = engine.run(name, spark, Some(input), opts)
-        .agg(count(lit(1)).as("rows"), sum(length(col("value"))).as("chars"))
-        .head()
-      val rows = r.getLong(0)
-      val mb = r.getLong(1) / 1e6
-      val dt = (System.nanoTime() - t0) / 1e9
-      val exp = expectRows(n)
-      val ok = if (rows == exp) "" else s"  ROWS MISMATCH (expected $exp)"
-      val shown = if (label.isEmpty) name else label
-      println(f"[engine-soak] $shown%-14s $dt%8.2f s   rows=$rows%,d   " +
-        f"${mb / dt}%8.1f MB/s   (${dt * 1e9 / n}%.0f ns/doc)$ok")
+    // `chars` sums over every output row, which forces every branch's
+    // value column to actually materialize — a bare count() lets
+    // Catalyst prune the inline projections (cache/parquet count-star
+    // optimization) and would time the engine's plumbing without the
+    // stages' work
+    def timed(label: String, expected: Long,
+        chars: Column = length(col("value")))(out: => DataFrame): Unit = {
+      val s = Harness.step(spark)(out.agg(count(lit(1)), coalesce(sum(chars), lit(0L))).head())
+      val rows = s.value.getLong(0)
+      val ok = if (rows == expected) "" else s"  ROWS MISMATCH (expected $expected)"
+      s.report("engine-soak", label, f"rows=$rows%,d   " +
+        f"${s.value.getLong(1) / 1e6 / s.wallS}%8.1f MB/s   (${s.wallS * 1e9 / n}%.0f ns/doc)$ok")
       graft.ops.CacheUtils.releaseAll(spark)
     }
+    def run(name: String, opts: RunOptions = RunOptions()): DataFrame =
+      engine.run(name, spark, Some(input), opts)
 
-    println(s"[engine-soak] n=$n dir=$dir")
-    timed("pipe_cmd", identity)
-    timed("fork_fan", _ * 3)
+    println(s"[engine-soak] n=$n dir=${ScaleSoak.docsDir(n)}")
+    timed("pipe_cmd", n)(run("pipe_cmd"))
+    timed("fork_fan", n * 3)(run("fork_fan"))
     teeComputed.reset()
-    timed("map_tee", _ * 2)
+    timed("map_tee", n * 2)(run("map_tee"))
     val computed = teeComputed.value
     val teeOk = computed == n
     println(s"[engine-soak] map_tee source computed $computed rows for 2 " +
@@ -140,13 +123,12 @@ object EngineSoak {
       "recomputation")
     // aggregator groups by first char: doc-id digits (feed_a) and
     // reversed-token trailing digits (feed_b) — 0–9 both ways
-    timed("reduce_fanin", _ => 10L)
-    timed("multi_seg", _ + 2) // one tee branch + two echo source rows
+    timed("reduce_fanin", 10L)(run("reduce_fanin"))
+    timed("multi_seg", n + 2)(run("multi_seg")) // one tee branch + two echo source rows
     // same pipeline with the parity exchange opted out: the pipeline stays
     // map-shaped, so per-doc cost should be flat-to-falling at 4× data
     // (the production setting for order-insensitive downstreams)
-    timed("multi_seg", _ + 2, RunOptions(orderedConcat = false),
-      label = "multi_seg_noord")
+    timed("multi_seg_noord", n + 2)(run("multi_seg", RunOptions(orderedConcat = false)))
 
     // End-to-end curation THROUGH the engine (WebCurate spec): per-doc
     // .warc.gz blobs (written once, read like a real crawl landing) →
@@ -155,27 +137,16 @@ object EngineSoak {
     // Expected survivors: the corpus's exact-dup families ({id-1, id} for
     // id ≡ 0 mod 20, id > 0) collapse; near-dups (perturbed last token)
     // stay distinct lines, so rows = n - (n/20 - 1).
-    val warcDir = s"/tmp/graft_soak_warc_g1_$n"
-    if (!new java.io.File(s"$warcDir/_SUCCESS").exists()) {
+    val warcs = Harness.materialize(spark, s"/tmp/graft_soak_warc_g1_$n") {
       import spark.implicits._
       docs.select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, t) => (id, graft.ext.WebCurate.warcGzBlob(id, t)) }
-        .toDF("doc_id", "warc").write.mode("overwrite").parquet(warcDir)
+        .toDF("doc_id", "warc")
     }
-    val warcs = spark.read.parquet(warcDir)
-    val curate = new Engine(graft.ext.WebCurate.spec())
-    val tc0 = System.nanoTime()
-    val rc = curate
-      .run("web_curate", spark, Some(warcs), RunOptions(orderedConcat = false))
-      .agg(count(lit(1)).as("rows"), sum(col("n_chars")).as("chars"))
-      .head()
-    val curRows = rc.getLong(0)
-    val curDt = (System.nanoTime() - tc0) / 1e9
-    val curExp = n - (n / 20 - 1)
-    val curOk = if (curRows == curExp) "" else s"  ROWS MISMATCH (expected $curExp)"
-    println(f"[engine-soak] web_curate     $curDt%8.2f s   rows=$curRows%,d   " +
-      f"(${curDt * 1e9 / n}%.0f ns/doc)$curOk")
-    graft.ops.CacheUtils.releaseAll(spark)
+    timed("web_curate", n - (n / 20 - 1), col("n_chars")) {
+      new Engine(graft.ext.WebCurate.spec())
+        .run("web_curate", spark, Some(warcs), RunOptions(orderedConcat = false))
+    }
     if (!teeOk) sys.error(s"map-tee persist failed to mask recomputation: " +
       s"$computed source rows computed for $n-doc input")
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** PageRank scale soak: synthetic power-law-ish edge list (pure function
@@ -14,35 +14,37 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.tools.GraphSoak [numEdges] [iters] (default 8M, 5)
   */
 object GraphSoak {
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toLong).getOrElse(8000000L)
-    val iters = args.lift(1).map(_.toInt).getOrElse(5)
-    val v = math.max(n / 10, 16L)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val dir = s"/tmp/graft_graphsoak_$n"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists())
+
+  /** The `n`-row edge list (self-loops dropped) over ~n/10 nodes, written
+    * once; shared with [[AnalyticsSoak]].
+    */
+  def edges(spark: SparkSession, n: Long): DataFrame = {
+    val v = nodes(n)
+    Harness.materialize(spark, s"/tmp/graft_graphsoak_$n") {
       spark.range(0, n, 1, 64)
         .select(
           pmod(hash(col("id"), lit(1)), lit(v)).cast("long").as("src"),
           pmod(hash(col("id"), lit(2)),
             lit(1L) + pmod(hash(col("id"), lit(3)), lit(v))).cast("long").as("dst"))
         .filter(col("src") =!= col("dst"))
-        .write.mode("overwrite").parquet(dir)
-    val edges = spark.read.parquet(dir)
+    }
+  }
+
+  private def nodes(n: Long): Long = math.max(n / 10, 16L)
+
+  def main(args: Array[String]): Unit = {
+    val n = args.headOption.map(_.toLong).getOrElse(8000000L)
+    val iters = args.lift(1).map(_.toInt).getOrElse(5)
+    val v = nodes(n)
+    val spark = Harness.session(32, 64)
+    val edges = GraphSoak.edges(spark, n)
     val m = edges.count()
     println(s"[graphsoak] $m edges, ~$v nodes, $iters iterations")
-    val t0 = System.nanoTime()
-    val ranks = graft.ext.Graph.pageRank(edges, iters)
-    val top = ranks.orderBy(col("rank").desc).limit(5).collect()
-    val dt = (System.nanoTime() - t0) / 1e9
-    println(f"[graphsoak] pagerank $dt%8.2f s  (${dt / iters}%.2f s/round, " +
-      f"${dt * 1e6 / m / iters}%.3f µs/edge/round)")
+    val s = Harness.step(spark) {
+      graft.ext.Graph.pageRank(edges, iters).orderBy(col("rank").desc).limit(5).collect()
+    }
+    val top = s.report("graphsoak", "pagerank", f"(${s.wallS / iters}%.2f s/round, " +
+      f"${s.wallS * 1e6 / m / iters}%.3f µs/edge/round)")
     println("[graphsoak] top ranks: " + top.map(r =>
       s"${r.getLong(0)}:${r.getLong(1)}").mkString(" "))
     // skew sanity: low ids must dominate (the planted in-degree decay)

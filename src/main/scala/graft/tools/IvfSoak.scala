@@ -34,13 +34,7 @@ object IvfSoak {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val batch = args.lift(1).map(_.toLong).getOrElse(250000L)
     val nBatches = args.lift(2).map(_.toInt).getOrElse(4)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32, 64)
 
     val prefix = s"ivfsoak_$n"
     val base = s"/tmp/graft_ivfsoak_$n"
@@ -48,25 +42,10 @@ object IvfSoak {
     // LOCATION_ALREADY_EXISTS class — see TokenizerStore.reset)
     Seq(s"${prefix}_cells", s"${prefix}_centroids").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
-    try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
-    catch { case _: Exception => () }
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
 
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        cpuNs.addAndGet(sc.stageInfo.taskMetrics.executorCpuTime)
-    })
-    def timed[A](name: String)(body: => A): A = {
-      val c0 = cpuNs.get
-      val t0 = System.nanoTime()
-      val r = body
-      val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // listener drain
-      println(f"[ivf-soak] n=$n%-9d $name%-18s $dt%8.2f s  " +
-        f"cpu=${(cpuNs.get - c0) / 1e9}%8.1f s")
-      r
-    }
+    def timed[A](name: String)(body: => A): A =
+      Harness.step(spark)(body).report("ivf-soak", f"n=$n%-9d $name")
 
     println(s"[ivf-soak] base=$n batch=$batch nBatches=$nBatches dim=64 k=256")
     timed("build_index") {

@@ -1,10 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Round-12 dedup scale soak: the LSH near-dup pipeline and the span
   * gram index at corpus sizes 10× the previous largest measured point
   * (2 M docs in AnalyticsSoak) — the evidence the 100-TB claims in
@@ -17,8 +12,8 @@ import org.apache.spark.sql.functions._
   *      groupBy; its write volume is one (band_id, band_hash, id) row
   *      per doc per band. A pairs-shaped shuffle would grow with the
   *      number of CANDIDATE PAIRS (quadratic inside dup families); the
-  *      printed shuffle-GB column doubling (not quadrupling) from 10 M
-  *      → 20 M docs is the proof.
+  *      printed shuffle-write (shufW) column doubling (not quadrupling)
+  *      from 10 M → 20 M docs is the proof.
   *   2. **Wall stays near-linear in docs.** Both stages are one keyed
   *      shuffle plus map work; doubling docs should ~double wall.
   *
@@ -33,58 +28,18 @@ object LshSoak {
       .map(_.split(",").toSeq.filter(_.nonEmpty).map(_.trim.toLong))
       .getOrElse(Seq(10L, 20L))
       .map(_ * 1000000L)
-    val only: Seq[String] = args.lift(1)
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    def selected(name: String): Boolean =
-      only.isEmpty || only.exists(name.contains)
     val pid = ProcessHandle.current().pid()
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", s"/tmp/graft_lshsoak_wh_$pid")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Contention-independent cost counters: wall clock on this host is
-    // noisy, so report executor CPU + shuffle write volume alongside it
-    // (the SessionTune discipline). Stage metrics arrive on the listener
-    // bus asynchronously; a short drain sleep before reading suffices at
-    // soak granularity.
-    val shufBytes = new AtomicLong
-    val shufRecs = new AtomicLong
-    val cpuNs = new AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        shufBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        shufRecs.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-        cpuNs.addAndGet(sc.stageInfo.taskMetrics.executorCpuTime)
-      }
-    })
-
-    def timed(name: String, unit: Long)(body: => Long): Unit = if (selected(name)) {
-      Thread.sleep(1500) // drain prior stage's listener events
-      shufBytes.set(0); shufRecs.set(0); cpuNs.set(0)
-      val t0 = System.nanoTime()
-      val rows = body
-      val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(1500) // drain this stage's listener events
-      println(f"[lshsoak] $name%-22s $dt%8.2f s  rows=$rows%,14d  " +
-        f"cpu=${cpuNs.get / 1e9}%8.1f s  shufGB=${shufBytes.get / 1e9}%7.2f  " +
-        f"shufRecs=${shufRecs.get}%,14d  (${dt * 1e6 / unit}%.2f µs/doc)")
-      graft.ops.CacheUtils.releaseAll(spark)
-    }
+    val spark = Harness.session(32, 64,
+      Map("spark.sql.warehouse.dir" -> s"/tmp/graft_lshsoak_wh_$pid"))
+    // each stage's executor CPU and shuffle write volume are its
+    // contention-independent cost (wall clock on this host is noisy)
+    val timed = new Harness.Stages(spark, "lshsoak", args.lift(1))
 
     points.foreach { n =>
       val m = n / 1000000L
       // materialized once per size: corpus generation must not be paid
       // inside a stage's timing (the round-7 wordpiece_stats artifact)
-      val docsDir = s"/tmp/graft_asoak_docs_$n"
-      if (!new java.io.File(s"$docsDir/_SUCCESS").exists())
-        ScaleSoak.corpus(spark, n).write.mode("overwrite").parquet(docsDir)
-      val docs = spark.read.parquet(docsDir)
+      val docs = ScaleSoak.docs(spark, n)
 
       timed(s"lsh_candidates_${m}m", n) {
         // the full near-dup candidate pipeline: map-only signatures →
@@ -157,16 +112,13 @@ object LshSoak {
     // soak artifacts are throwaway — reclaim /tmp
     points.foreach { n =>
       val m = n / 1000000L
-      try {
-        spark.sql(s"DROP TABLE IF EXISTS lshsoak_${m}m_grams")
-        spark.sql(s"DROP TABLE IF EXISTS lshsoak_${m}m_meta")
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(s"/tmp/graft_lshsoak_idx_${pid}_$m"))
-      } catch { case _: Exception => () }
+      spark.sql(s"DROP TABLE IF EXISTS lshsoak_${m}m_grams")
+      spark.sql(s"DROP TABLE IF EXISTS lshsoak_${m}m_meta")
+      org.apache.commons.io.FileUtils.deleteQuietly(
+        new java.io.File(s"/tmp/graft_lshsoak_idx_${pid}_$m"))
     }
-    try org.apache.commons.io.FileUtils.deleteDirectory(
+    org.apache.commons.io.FileUtils.deleteQuietly(
       new java.io.File(s"/tmp/graft_lshsoak_wh_$pid"))
-    catch { case _: Exception => () }
     spark.stop()
   }
 }

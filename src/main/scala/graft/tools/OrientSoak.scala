@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.MinHashAggregator.splitmix64
@@ -33,17 +32,11 @@ object OrientSoak {
       .getOrElse(Seq(200L, 800L))
     val maxResidentSubsets = if (args.length > 1) args(1).toInt else 0
     val nBlocks = if (args.length > 2) args(2).toInt else 7
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(32, 64)
     import spark.implicits._
 
     for (k <- points) {
       val n = k * 1000
-      val t0 = System.nanoTime()
       // orbits table: (media_id, orbit[8]); every 100th image gets a
       // twin whose orbit member 3 is the base hash with 3 bits flipped
       val orbits = spark.range(n)
@@ -64,12 +57,13 @@ object OrientSoak {
         .toDF("media_id", "orbit")
       // the pairing core itself (shared with nearDupImagesOriented)
       val orbitsP = orbits.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val pairs = graft.ext.Multimodal.orientedPairsFromOrbits(
-        orbitsP, 5, nBlocks, maxResidentSubsets)
-      val found = pairs.count()
+      val s = Harness.step(spark) {
+        graft.ext.Multimodal.orientedPairsFromOrbits(
+          orbitsP, 5, nBlocks, maxResidentSubsets).count()
+      }
       val planted = (n + 99) / 100
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[orientsoak] images=$n%,d planted=$planted%,d found=$found%,d wall=$wall%.2f s (${wall * 1e6 / n}%.2f us/img)")
+      val found = s.report("orientsoak", f"images=$n%,d", f"planted=$planted%,d " +
+        f"found=${s.value}%,d (${s.wallS * 1e6 / n}%.2f us/img)")
       require(found >= planted,
         s"oriented pairing lost planted twins: $found < $planted")
       orbitsP.unpersist()

@@ -63,20 +63,13 @@ object RecallCurve {
     val sections = args.lift(3).map(_.split(',').toSet)
     def section(s: String): Boolean = sections.forall(_.contains(s))
     val k = 10
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32, 64)
     import spark.implicits._
 
     // materialized like a real corpus (scans from disk, not a cached range)
-    val dir = s"/tmp/graft_recall_${n}_$dim"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists())
-      corpus(spark, n, dim, clusters = 256).write.mode("overwrite").parquet(dir)
-    val emb = spark.read.parquet(dir)
+    val emb = Harness.materialize(spark, s"/tmp/graft_recall_${n}_$dim") {
+      corpus(spark, n, dim, clusters = 256)
+    }
     // held-out queries: same generator, ids past the corpus end
     val queries = corpus(spark, n + numQueries, dim, clusters = 256)
       .filter(col("vec_id") >= n)
@@ -98,24 +91,21 @@ object RecallCurve {
           .cosine_similarity(col("embedding"), col("qvec")).as("score"))
 
     def measure(name: String, candidates: DataFrame, truth: DataFrame): Unit = {
-      val t0 = System.nanoTime()
       val cand = candidates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nCand = cand.count()
-      val got = topK(scoreAll(cand))
-      val hits = got.join(truth, Seq("qid", "vec_id")).count()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val s = Harness.step(spark) {
+        (cand.count(), topK(scoreAll(cand)).join(truth, Seq("qid", "vec_id")).count())
+      }
+      val (nCand, hits) = s.value
       val recall = hits.toDouble / (queries.length.toLong * k)
       val candFrac = nCand.toDouble / (n.toDouble * queries.length)
-      println(f"[recall] $name%-28s recall@$k=$recall%.3f cand=$candFrac%.4f t=$dt%6.1f s")
+      s.report("recall", name, f"recall@$k=$recall%.3f cand=$candFrac%.4f")
       cand.unpersist(blocking = false)
     }
 
     val all = emb.crossJoin(queryDf)
     val truth = topK(scoreAll(all))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val t0 = System.nanoTime()
-    truth.count()
-    println(f"[recall] brute-force ground truth      t=${(System.nanoTime() - t0) / 1e9}%6.1f s")
+    Harness.step(spark)(truth.count()).report("recall", "brute-force ground truth")
 
     // --- hyperplane LSH: (numPlanes, probeRadius) grid -------------------
     if (section("ann")) for (planes <- Seq(8, 12, 16); radius <- Seq(0, 1, 2)) {
@@ -189,18 +179,17 @@ object RecallCurve {
         .map { case (qid, rs) => qid -> rs.map(_.getLong(1)).toSet }
       val qs = queries.map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       for (c <- Seq(20, 100)) {
-        val t0 = System.nanoTime()
-        var hits = 0
-        for ((qid, q) <- qs) {
-          val got = graft.ext.Sq
-            .rerankScores(enc, emb, "vec_id", "embedding", lo, hi, q, c)
-            .orderBy(col("score").desc, col("vec_id")).limit(k)
-            .collect().map(_.getLong(0)).toSet
-          hits += (got & truthMap(qid)).size
+        val s = Harness.step(spark) {
+          qs.map { case (qid, q) =>
+            val got = graft.ext.Sq
+              .rerankScores(enc, emb, "vec_id", "embedding", lo, hi, q, c)
+              .orderBy(col("score").desc, col("vec_id")).limit(k)
+              .collect().map(_.getLong(0)).toSet
+            (got & truthMap(qid)).size
+          }.sum
         }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val recall = hits.toDouble / (qs.length.toLong * k)
-        println(f"[recall] sq8 cand=$c%-19s recall@$k=$recall%.3f cand=${c / n.toDouble}%.4f t=$dt%6.1f s")
+        val recall = s.value.toDouble / (qs.length.toLong * k)
+        s.report("recall", s"sq8 cand=$c", f"recall@$k=$recall%.3f cand=${c / n.toDouble}%.4f")
       }
       enc.unpersist(blocking = false)
     }

@@ -41,43 +41,47 @@ object ScaleSoak {
       .select(col("id").as("doc_id"), concat_ws(" ", col("toks")).as("text"))
   }
 
+  /** BUMP whenever corpus() or vectors() changes: both are written once
+    * to paths keyed by it, and every soak re-reads what is there.
+    */
+  private val CorpusGen = 2
+
+  def docsDir(n: Long): String = s"/tmp/graft_soak_g${CorpusGen}_$n"
+  def vectorsDir(n: Long): String = s"/tmp/graft_soak_vec_g${CorpusGen}_$n"
+
+  /** The `n`-doc corpus as parquet, so every stage reads from disk like a
+    * real pipeline (not from a cached in-memory range); shared by every
+    * soak that runs on documents.
+    */
+  def docs(spark: SparkSession, n: Long): DataFrame =
+    Harness.materialize(spark, docsDir(n))(corpus(spark, n))
+
+  /** `n` synthetic 64-dim embeddings with clustered structure: 32 seeded
+    * anchor directions plus per-vector noise, so IVF cells are meaningful.
+    */
+  def vectors(spark: SparkSession, n: Long): DataFrame =
+    Harness.materialize(spark, vectorsDir(n)) {
+      spark.range(0, n, 1, 64)
+        .withColumn("embedding", expr(
+          """transform(sequence(1, 64),
+             i -> cast(pmod(hash(pmod(id, 32), i), 1000) / 500.0 - 1.0
+                       + pmod(hash(id, i), 100) / 250.0 as float))"""))
+        .select(col("id").as("vec_id"), col("embedding"))
+    }
+
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(500000L)
+    // NOTE: driver heap cannot be set from inside a running JVM — it
+    // comes from the forked JVM's -Xmx (build.sbt run settings)
+    val spark = Harness.session(32, 64)
     // optional 2nd arg: comma-separated substrings — only stages whose
     // name contains one of them run (fast re-measurement of one family)
-    val only: Seq[String] = args.drop(1).headOption
-      .map(_.split(",").toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    def selected(name: String): Boolean =
-      only.isEmpty || only.exists(name.contains)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // NOTE: driver heap cannot be set from inside a running JVM — it
-      // comes from the forked JVM's -Xmx (build.sbt run settings)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val stages = new Harness.Stages(spark, "soak", args.lift(1))
+    import stages.selected
+    def timed(name: String)(body: => Long): Unit = stages(name, n)(body)
 
-    // materialize the corpus to parquet so every stage reads from disk
-    // like a real pipeline (not from a cached in-memory range)
-    // the corpus is a pure function of (generator version, n) — reuse an
-    // existing materialization (stage-filtered re-measurement runs
-    // shouldn't pay the write). BUMP corpusGen whenever corpus() changes,
-    // or re-measurements would silently run against stale data.
-    val corpusGen = 2
-    val dir = s"/tmp/graft_soak_g${corpusGen}_$n"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists())
-      corpus(spark, n).write.mode("overwrite").parquet(dir)
-    val docs = spark.read.parquet(dir)
-
-    def timed(name: String)(body: => Long): Unit = if (selected(name)) {
-      val t0 = System.nanoTime()
-      val rows = body
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"[soak] $name%-22s $dt%8.2f s   rows=$rows%,d   (${dt * 1e6 / n}%.2f µs/doc)")
-      graft.ops.CacheUtils.releaseAll(spark)
-    }
+    val dir = docsDir(n)
+    val docs = ScaleSoak.docs(spark, n)
 
     println(s"[soak] corpus: $n docs at $dir")
     timed("exact_dedup") {
@@ -199,7 +203,7 @@ object ScaleSoak {
     // exists for; running it kills the whole soak JVM by design.
     // EXACT name required (not the substring filter): "degenerate_bucket"
     // must select only the bounded stage, never the JVM-killing twin
-    if (only.contains("degenerate_bucket_unbounded"))
+    if (stages.names.contains("degenerate_bucket_unbounded"))
       timed("degenerate_bucket_unbounded") {
         graft.ext.Dedup.candidatePairs(degenerateBands, "doc_id",
           maxBucket = Int.MaxValue).count()
@@ -406,8 +410,6 @@ object ScaleSoak {
         graft.ext.Classifier.hashIndex(_, 1 << 12)).count()
     }
 
-    // synthetic 64-dim embeddings, clustered structure: 32 seeded anchor
-    // directions plus per-vector noise, so IVF cells are meaningful
     // names exactly as printed, so a stage name copied from a previous
     // soak log always selects what it names
     val vectorStages =
@@ -420,23 +422,15 @@ object ScaleSoak {
         "sq_train_bounds", "sq_index_write", "sq_adc_serve")
     if (!vectorStages.exists(selected)) { spark.stop(); return }
     val nVec = math.max(n / 2, 100000L)
-    val vecDir = s"/tmp/graft_soak_vec_g${corpusGen}_$nVec"
-    if (!new java.io.File(s"$vecDir/_SUCCESS").exists())
-      spark.range(0, nVec, 1, 64)
-        .withColumn("embedding", expr(
-          """transform(sequence(1, 64),
-             i -> cast(pmod(hash(pmod(id, 32), i), 1000) / 500.0 - 1.0
-                       + pmod(hash(id, i), 100) / 250.0 as float))"""))
-        .select(col("id").as("vec_id"), col("embedding"))
-        .write.mode("overwrite").parquet(vecDir)
-    val emb = spark.read.parquet(vecDir)
+    val emb = vectors(spark, nVec)
+    val vecDir = vectorsDir(nVec)
     println(s"[soak] vectors: $nVec x 64 at $vecDir")
-    def vtimed(name: String)(body: => Long): Unit = if (selected(name)) {
-      val t0 = System.nanoTime()
-      val rows = body
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"[soak] $name%-22s $dt%8.2f s   rows=$rows%,d   (${dt * 1e6 / nVec}%.2f µs/vec)")
-      graft.ops.CacheUtils.releaseAll(spark)
+    def vtimed(name: String)(body: => Long): Unit = stages(name, nVec, "vec")(body)
+    // the quantizers train when a stage first needs them; the train is a
+    // step of its own, printed when selected by name
+    def trained[A](name: String)(body: => A): A = {
+      val s = Harness.step(spark)(body)
+      if (selected(name)) s.report("soak", name) else s.value
     }
     val q = Array.tabulate(64)(i => ((i * 2654435761L % 1000) / 500.0 - 1.0).toFloat)
     vtimed("brute_force_top10") {
@@ -444,13 +438,9 @@ object ScaleSoak {
     }
     // trained only when an IVF stage needs it (train time printed when
     // explicitly selected or when running unfiltered)
-    lazy val centroids = {
-      val t0 = System.nanoTime()
-      val c = graft.ext.Similarity.trainIvfCentroids(
+    lazy val centroids = trained("ivf_train_on_sample") {
+      graft.ext.Similarity.trainIvfCentroids(
         emb.sample(0.02, 42), "embedding", k = 32, iters = 2)
-      if (selected("ivf_train_on_sample"))
-        println(f"[soak] ivf_train_on_sample   ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      c
     }
     if (selected("ivf_train_on_sample")) centroids // force the train + print
     vtimed("ivf_assign") {
@@ -488,13 +478,9 @@ object ScaleSoak {
     }
     // product quantization: 64-dim float (256 B) → one packed BIGINT
     // (8 B) — the compression serve path (m=8 × 256 codes)
-    lazy val pqBooks = {
-      val t0 = System.nanoTime()
-      val b = graft.ext.Pq.trainCodebooks(
+    lazy val pqBooks = trained("pq_train_on_sample") {
+      graft.ext.Pq.trainCodebooks(
         emb.sample(0.02, 42), "embedding", m = 8, codes = 256, iters = 2)
-      if (selected("pq_train_on_sample"))
-        println(f"[soak] pq_train_on_sample    ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      b
     }
     if (selected("pq_train_on_sample")) pqBooks
     def buildPqIndex(): Unit =
@@ -518,13 +504,9 @@ object ScaleSoak {
     }
     // IVFADC: cell-pruned probes over 12-byte (cell, code) rows — the
     // composed serve layout (cells=256, m=8 × 256 codes on residuals)
-    lazy val ivfPqModel = {
-      val t0 = System.nanoTime()
-      val mod = graft.ext.IvfPq.train(
+    lazy val ivfPqModel = trained("ivfpq_train_on_sample") {
+      graft.ext.IvfPq.train(
         emb.sample(0.02, 42), "embedding", cells = 256, m = 8, codes = 256, iters = 2)
-      if (selected("ivfpq_train_on_sample"))
-        println(f"[soak] ivfpq_train_on_sample ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      mod
     }
     if (selected("ivfpq_train_on_sample")) ivfPqModel
     def buildIvfPqIndex(): Unit =
@@ -548,12 +530,8 @@ object ScaleSoak {
     }
     // SQ8: per-dimension byte quantization — 4× scan compression with
     // near-exact ranking (the cheap point on the compression curve)
-    lazy val sqBounds = {
-      val t0 = System.nanoTime()
-      val b = graft.ext.Sq.trainBounds(emb.sample(0.02, 42), "embedding")
-      if (selected("sq_train_bounds"))
-        println(f"[soak] sq_train_bounds       ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      b
+    lazy val sqBounds = trained("sq_train_bounds") {
+      graft.ext.Sq.trainBounds(emb.sample(0.02, 42), "embedding")
     }
     if (selected("sq_train_bounds")) sqBounds
     def buildSqIndex(): Unit =

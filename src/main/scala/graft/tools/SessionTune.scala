@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Session-window state-store tuning matrix (round-9 verdict #3): the
   * session stage ran ~5× below its streaming siblings in the 80 M soak
@@ -25,13 +24,7 @@ object SessionTune {
     val nEvents = args.headOption.map(_.toLong).getOrElse(40000000L)
     val nFiles = args.lift(1).map(_.toInt).getOrElse(64)
     val filesPerBatch = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32, 32)
 
     val dir = StreamingSoak.corpus(spark, nEvents, nFiles)
     val schema = spark.read.parquet(dir).schema
@@ -45,64 +38,19 @@ object SessionTune {
     val RocksDb =
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-    def run(name: String, confs: Map[String, String],
-        statePartitions: Int = 32): Unit =
-      runWith(name, confs, statePartitions,
-        src => graft.streaming.StreamOps
-          .sessionCounts(src, "ts", "user_id", "30 minutes", "30 minutes"))
+    def sessions(src: DataFrame): DataFrame = graft.streaming.StreamOps
+      .sessionCounts(src, "ts", "user_id", "30 minutes", "30 minutes")
+    def fastSessions(src: DataFrame): DataFrame = graft.streaming.StreamOps
+      .sessionCountsFast(src, "ts", "user_id", "30 minutes", "30 minutes")
 
-    def runWith(name: String, confs: Map[String, String],
-        statePartitions: Int,
-        build: DataFrame => DataFrame): Unit = {
-      val ck = s"/dev/shm/graft_stune_$name"
-      try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
-      catch { case _: Exception => () }
-      // wall clock on this host is noisy (2× swings between identical
-      // runs); executor CPU time + shuffle volume are the contention-
-      // independent cost of the variant, so report those too
-      val cpuNs = new java.util.concurrent.atomic.AtomicLong
-      val shufBytes = new java.util.concurrent.atomic.AtomicLong
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          cpuNs.addAndGet(sc.stageInfo.taskMetrics.executorCpuTime)
-          shufBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val t0 = System.nanoTime()
-      val q =
-        try {
-          confs.foreach { case (k, v) => spark.conf.set(k, v) }
-          spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-          build(source())
-            .writeStream.outputMode("append").format("noop")
-            .option("checkpointLocation", ck)
-            .trigger(Trigger.AvailableNow()).start()
-        } finally {
-          prev.foreach { case (k, v) =>
-            v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        }
-      q.awaitTermination()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val st = q.recentProgress.reverseIterator
-        .find(p => p.stateOperators != null && p.stateOperators.nonEmpty)
-        .map(_.stateOperators)
-      val stateRows = st.map(_.map(_.numRowsTotal).sum).getOrElse(0L)
-      val stateMb = st.map(_.map(_.memoryUsedBytes).sum / 1e6).getOrElse(0.0)
-      // allow the listener bus to drain before reading the counters
-      Thread.sleep(2000)
-      spark.sparkContext.removeSparkListener(listener)
-      println(f"[stune] $name%-28s $dt%8.2f s  ${nEvents / dt / 1e6}%6.2f M ev/s" +
-        f"  cpu=${cpuNs.get / 1e9}%8.1f s  shufMB=${shufBytes.get / 1e6}%8.1f" +
-        f"  stateRows=$stateRows%,12d  stateMB=$stateMb%8.1f")
-      q.stop()
-      try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
-      catch { case _: Exception => () }
-    }
+    // wall clock on this host is noisy (2× swings between identical
+    // runs); the replay's executor CPU time + shuffle volume are the
+    // contention-independent cost of the variant
+    def run(name: String, confs: Map[String, String], statePartitions: Int = 32,
+        build: DataFrame => DataFrame = sessions): Unit =
+      StreamingSoak.report("stune", name, nEvents, StreamingSoak.replay(spark, name,
+        confs = confs + ("spark.sql.shuffle.partitions" -> statePartitions.toString))(
+        build(source())))
 
     val Changelog =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
@@ -133,9 +81,7 @@ object SessionTune {
           run(s"session_w$w", Map.empty, statePartitions = w))
       case "widths:fast" =>
         Seq(1, 4, 8, 16, 32).foreach(w =>
-          runWith(s"fmgws_w$w", Map.empty, w,
-            src => graft.streaming.StreamOps
-              .sessionCountsFast(src, "ts", "user_id", "30 minutes", "30 minutes")))
+          run(s"fmgws_w$w", Map.empty, w, fastSessions))
       // one variant per JVM, for clean A/B runs
       case "only:base" => run("baseline_hdfs32", Map.empty)
       case "only:lm"   => run("local_merge", Map(LocalMerge -> "true"))
@@ -144,50 +90,14 @@ object SessionTune {
         // the fMGWS sessionizer (StreamOps.sessionCountsFast) — same
         // sessions, hand-rolled state machine (oracle-certified by
         // q_stream_session_fast)
-        runWith("fmgws_sessions", Map.empty, 32,
-          src => graft.streaming.StreamOps
-            .sessionCountsFast(src, "ts", "user_id", "30 minutes", "30 minutes"))
+        run("fmgws_sessions", Map.empty, build = fastSessions)
       case "only:dense" =>
         // dense-key replay: 1 k session keys instead of 1 M — the regime
         // where per-partition pre-merge has sessions to actually merge
-        def denseSource(): DataFrame = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", filesPerBatch).parquet(dir)
-          .withColumn("user_id", pmod(col("user_id"), lit(1000L)))
-        def runDense(name: String, confs: Map[String, String]): Unit = {
-          val ck = s"/dev/shm/graft_stune_$name"
-          try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
-          catch { case _: Exception => () }
-          val cpuNs = new java.util.concurrent.atomic.AtomicLong
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onStageCompleted(
-                sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-              cpuNs.addAndGet(sc.stageInfo.taskMetrics.executorCpuTime)
-          }
-          spark.sparkContext.addSparkListener(listener)
-          val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-          val t0 = System.nanoTime()
-          val q =
-            try {
-              confs.foreach { case (k, v) => spark.conf.set(k, v) }
-              graft.streaming.StreamOps
-                .sessionCounts(denseSource(), "ts", "user_id",
-                  "30 minutes", "30 minutes")
-                .writeStream.outputMode("append").format("noop")
-                .option("checkpointLocation", ck)
-                .trigger(Trigger.AvailableNow()).start()
-            } finally prev.foreach { case (k, v) =>
-              v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-          q.awaitTermination()
-          val dt = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(2000)
-          spark.sparkContext.removeSparkListener(listener)
-          println(f"[stune] $name%-28s $dt%8.2f s  cpu=${cpuNs.get / 1e9}%8.1f s")
-          q.stop()
-          try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
-          catch { case _: Exception => () }
-        }
-        runDense("dense_base", Map.empty)
-        runDense("dense_lm", Map(LocalMerge -> "true"))
+        def dense(src: DataFrame): DataFrame =
+          sessions(src.withColumn("user_id", pmod(col("user_id"), lit(1000L))))
+        run("dense_base", Map.empty, build = dense)
+        run("dense_lm", Map(LocalMerge -> "true"), build = dense)
       case other => sys.error(s"unknown variant set: $other")
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.SkewUtils
@@ -34,30 +34,22 @@ object SkewSoak {
     val hotPct = args.lift(1).map(_.toInt).getOrElse(30)
     val buckets = args.lift(2).map(_.toInt).getOrElse(32)
     val nKeys = 1000000L
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32, 32)
 
     val dir = s"/tmp/graft_skewsoak_${n}_$hotPct"
-    if (!new java.io.File(s"$dir/facts/_SUCCESS").exists()) {
-      // hotPct% of rows carry key 0; the rest hash over [1, nKeys)
+    // hotPct% of rows carry key 0; the rest hash over [1, nKeys)
+    val facts = Harness.materialize(spark, s"$dir/facts") {
       spark.range(0, n, 1, 64)
         .select(
           when(pmod(col("id"), lit(100)) < hotPct, lit(0L))
             .otherwise(pmod(hash(col("id")), lit(nKeys - 1)) + 1).as("k"),
           (col("id") % 997).as("v"))
-        .write.mode("overwrite").parquet(s"$dir/facts")
+    }
+    val dim = Harness.materialize(spark, s"$dir/dim") {
       spark.range(0, nKeys, 1, 32)
         .select(col("id").as("k"),
           concat(lit("dim_"), col("id") % 13).as("attr"))
-        .write.mode("overwrite").parquet(s"$dir/dim")
     }
-    val facts = spark.read.parquet(s"$dir/facts")
-    val dim = spark.read.parquet(s"$dir/dim")
     println(s"[skew-soak] n=$n hotPct=$hotPct nKeys=$nKeys buckets=$buckets")
 
     def verify(joined: DataFrame): (Long, Long) = {
@@ -67,19 +59,15 @@ object SkewSoak {
 
     var expected: Option[(Long, Long)] = None
     def timed(name: String, aqe: Boolean)(join: => DataFrame): Unit = {
-      val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      try {
-        spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
-        val t0 = System.nanoTime()
-        val got = verify(join)
-        val dt = (System.nanoTime() - t0) / 1e9
-        val check = expected match {
-          case None => expected = Some(got); "(reference)"
-          case Some(e) if e == got => "agree"
-          case Some(e) => s"MISMATCH: $got vs $e"
-        }
-        println(f"[skew-soak] $name%-16s $dt%8.2f s   ${n / dt / 1e6}%6.2f M rows/s   $check")
-      } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+      val s = Harness.withConf(spark, Map("spark.sql.adaptive.enabled" -> aqe.toString)) {
+        Harness.step(spark)(verify(join))
+      }
+      val check = expected match {
+        case None => expected = Some(s.value); "(reference)"
+        case Some(e) if e == s.value => "agree"
+        case Some(e) => s"MISMATCH: ${s.value} vs $e"
+      }
+      s.report("skew-soak", name, f"${n / s.wallS / 1e6}%6.2f M rows/s   $check")
     }
 
     def plain = facts.hint("merge").join(dim, "k")

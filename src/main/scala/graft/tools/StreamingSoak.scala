@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.commons.io.FileUtils
 
 /** Round-8 streaming scale soak: the Structured-Streaming operator family
   * (tumbling / sliding / session windows, watermark dedup, custom
@@ -29,7 +30,7 @@ object StreamingSoak {
     */
   def corpus(spark: SparkSession, nEvents: Long, nFiles: Int): String = {
     val dir = s"/tmp/graft_streamsoak_${nEvents}_$nFiles"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+    Harness.materialize(spark, dir) {
       val spanUs = 30L * 24 * 3600 * 1000000
       val stepUs = math.max(1L, spanUs / nEvents) // id*spanUs would overflow
       spark.range(0, nEvents, 1, nFiles)
@@ -40,10 +41,48 @@ object StreamingSoak {
           pmod(hash(col("id")), lit(1000000)).cast("long").as("user_id"),
           concat(lit("t"), pmod(col("id"), lit(5))).as("event_type"),
           (pmod(hash(col("id"), lit(7)), lit(10000)) / lit(100.0)).as("value"))
-        .write.mode("overwrite").parquet(dir)
     }
     dir
   }
+
+  /** The micro-batches a replay ran and its end-of-run state-store
+    * footprint.
+    */
+  final case class Replay(batches: Int, stateRows: Long, stateMb: Double)
+
+  /** One bounded replay as a metered step: `agg` runs AvailableNow to a
+    * noop sink from a fresh checkpoint under /dev/shm, with `confs` set
+    * while it is built and started (the stream keeps the confs it started
+    * with). Shared with [[SessionTune]].
+    */
+  def replay(spark: SparkSession, name: String, mode: String = "append",
+      confs: Map[String, String] = Map.empty)(agg: => DataFrame): Harness.Step[Replay] = {
+    val ck = new java.io.File(s"/dev/shm/graft_replay_$name")
+    FileUtils.deleteQuietly(ck)
+    try Harness.step(spark) {
+      val q = Harness.withConf(spark, confs) {
+        agg.writeStream.outputMode(mode).format("noop")
+          .option("checkpointLocation", ck.getPath)
+          .trigger(Trigger.AvailableNow()).start()
+      }
+      try {
+        q.awaitTermination()
+        val progress = q.recentProgress
+        val st = progress.reverseIterator
+          .find(p => p.stateOperators != null && p.stateOperators.nonEmpty)
+          .map(_.stateOperators)
+        Replay(progress.length, st.map(_.map(_.numRowsTotal).sum).getOrElse(0L),
+          st.map(_.map(_.memoryUsedBytes).sum / 1e6).getOrElse(0.0))
+      } finally q.stop()
+    } finally FileUtils.deleteQuietly(ck)
+  }
+
+  /** Prints a replay of `nEvents` events: wall, throughput, batches and
+    * state footprint.
+    */
+  def report(prefix: String, name: String, nEvents: Long, s: Harness.Step[Replay]): Unit =
+    s.report(prefix, name, f"${nEvents / s.wallS / 1e6}%6.2f M ev/s  batches=${s.value.batches}%2d" +
+      f"  stateRows=${s.value.stateRows}%,12d  stateMB=${s.value.stateMb}%8.1f")
 
   /** Micro-batch floor certification (`runMain ... floor`): the bench's
     * q_stream_* family sits at 1–2.4 s per query by design (bounded
@@ -59,30 +98,17 @@ object StreamingSoak {
     * data paths. Numbers land in PERF.md.
     */
   private def floorCert(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     val schemaDir = corpus(spark, 10000L, 16)
     val schema = spark.read.parquet(schemaDir).schema
-    def run(nEvents: Long, nFiles: Int): Double = {
+    def run(nEvents: Long, nFiles: Int): Unit = {
       val dir = corpus(spark, nEvents, nFiles)
-      val ck = s"/dev/shm/graft_ssoak_floor_${nEvents}_$nFiles"
-      try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
-      catch { case _: Exception => () }
-      val src = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(dir)
-      val agg = graft.streaming.StreamOps.tumblingCounts(
-        src, "ts", "event_type", "1 hour", "1 hour")
-      val t0 = System.nanoTime()
-      val q = agg.writeStream.outputMode("append").format("noop")
-        .option("checkpointLocation", ck)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val dt = (System.nanoTime() - t0) / 1e9
-      q.stop()
-      try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
-      catch { case _: Exception => () }
-      println(f"[ssoak] floor events=$nEvents%,10d batches=$nFiles%2d " +
-        f"wall=$dt%6.2f s  (${dt / nFiles}%5.2f s/batch)")
-      dt
+      val s = replay(spark, s"floor_${nEvents}_$nFiles") {
+        graft.streaming.StreamOps.tumblingCounts(
+          spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir),
+          "ts", "event_type", "1 hour", "1 hour")
+      }
+      s.report("ssoak", f"floor events=$nEvents%,10d",
+        f"files=$nFiles%2d batches=${s.value.batches}%2d  (${s.wallS / s.value.batches}%5.2f s/batch)")
     }
     println("[ssoak] -- data-invariance at pinned batch count (4) --")
     Seq((10000L, 4), (1000000L, 4), (4000000L, 4)).foreach { case (e, f) => run(e, f) }
@@ -91,14 +117,8 @@ object StreamingSoak {
   }
 
   def main(args: Array[String]): Unit = {
+    val spark = Harness.session(32, 32)
     if (args.headOption.contains("floor")) {
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
       floorCert(spark)
       spark.stop()
       return
@@ -106,13 +126,6 @@ object StreamingSoak {
     val nEvents = args.headOption.map(_.toLong).getOrElse(40000000L)
     val nFiles = args.lift(1).map(_.toInt).getOrElse(64)
     val filesPerBatch = args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val dir = corpus(spark, nEvents, nFiles)
@@ -122,61 +135,27 @@ object StreamingSoak {
     def source(): DataFrame = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerBatch).parquet(dir)
 
-    /** Run one bounded replay to a noop sink; report wall, throughput,
-      * batches, and end-of-run state-store footprint.
-      */
-    def soak(name: String, agg: DataFrame, mode: String,
-        statePartitions: Int = 32): Unit = {
-      val ck = s"/dev/shm/graft_ssoak_$name"
-      try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
-      catch { case _: Exception => () }
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      val t0 = System.nanoTime()
-      val q =
-        try {
-          spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-          agg.writeStream.outputMode(mode).format("noop")
-            .option("checkpointLocation", ck)
-            .trigger(Trigger.AvailableNow()).start()
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-      q.awaitTermination()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val progress = q.recentProgress
-      val batches = progress.length
-      val st = progress.reverseIterator
-        .find(p => p.stateOperators != null && p.stateOperators.nonEmpty)
-        .map(_.stateOperators)
-      val stateRows = st.map(_.map(_.numRowsTotal).sum).getOrElse(0L)
-      val stateMb = st.map(_.map(_.memoryUsedBytes).sum / 1e6).getOrElse(0.0)
-      println(f"[ssoak] $name%-22s $dt%8.2f s  ${nEvents / dt / 1e6}%6.2f M ev/s" +
-        f"  batches=$batches%2d  stateRows=$stateRows%,12d  stateMB=$stateMb%8.1f")
-      q.stop()
-      try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ck))
-      catch { case _: Exception => () }
-    }
+    def soak(name: String, mode: String = "append")(agg: => DataFrame): Unit =
+      report("ssoak", name, nEvents, replay(spark, name, mode)(agg))
 
-    soak("tumbling_1h", graft.streaming.StreamOps
-      .tumblingCounts(source(), "ts", "event_type", "1 hour", "30 minutes"),
-      "append")
-    soak("sliding_1h_15m", graft.streaming.StreamOps
+    soak("tumbling_1h")(graft.streaming.StreamOps
+      .tumblingCounts(source(), "ts", "event_type", "1 hour", "30 minutes"))
+    soak("sliding_1h_15m")(graft.streaming.StreamOps
       .slidingCounts(source(), "ts", "event_type", "1 hour", "15 minutes",
-        "30 minutes"),
-      "append")
-    soak("session_gap30m", graft.streaming.StreamOps
-      .sessionCounts(source(), "ts", "user_id", "30 minutes", "30 minutes"),
-      "append")
-    soak("dedup_watermark", graft.streaming.StreamOps
+        "30 minutes"))
+    soak("session_gap30m")(graft.streaming.StreamOps
+      .sessionCounts(source(), "ts", "user_id", "30 minutes", "30 minutes"))
+    soak("dedup_watermark")(graft.streaming.StreamOps
       .dedupWithinWatermark(
         source().withColumn("dup_key", col("event_id") % (nEvents / 2)),
-        "ts", Seq("dup_key"), "30 minutes"),
-      "append")
-    soak("fmgws_running", {
+        "ts", Seq("dup_key"), "30 minutes"))
+    soak("fmgws_running", "update") {
       val ev = source()
         .select(col("user_id").as("key"), col("ts"),
           floor(col("value") * lit(10000.0)).cast("double").as("value"))
         .as[graft.streaming.Stateful.KeyedEvent]
       graft.streaming.Stateful.runningStats(ev).toDF()
-    }, "update")
+    }
 
     spark.stop()
   }

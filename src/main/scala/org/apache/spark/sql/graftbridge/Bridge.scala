@@ -29,6 +29,14 @@ object Bridge {
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
         .queryExecution.logical)
 
+  /** Block until every listener has handled every event posted so far
+    * (`LiveListenerBus.waitUntilEmpty` is `private[spark]`): counters a
+    * listener summed are exact once this returns, with no sleep. Throws a
+    * `TimeoutException` if the bus has not drained within 10 s.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Register an expression builder as a session-temporary SQL function —
     * makes custom Catalyst expressions (cosine_similarity, …) callable
     * from `spark.sql`, matching how the engine's module registry exposes
