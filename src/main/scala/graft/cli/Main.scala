@@ -37,8 +37,9 @@ import graft.stages.CommandStage
   * stage. The spool is deleted when the invocation ends. Results are
   * printed by [[Sources.printLines]], which holds at most
   * `defaultParallelism` fetched partitions on the driver — the CLI handles
-  * inputs/outputs larger than the driver heap. Map-tee sources the
-  * pipelines persisted are released once the output is printed.
+  * inputs/outputs larger than the driver heap. The frames the pipelines
+  * persisted (map-tee sources, command output feeding a json stage) are
+  * released once the output is printed.
   */
 object Main {
 
@@ -127,18 +128,9 @@ object Main {
             // Runs until interrupted (like the reference until stdin EOF).
             pipeStream(engine, spark, dir, names).foreach(_.awaitTermination())
           case None => withSpooledStdin(spark) { stdin =>
-            var applied = 0
-            val out = names.foldLeft(stdin) { (df, n) =>
-              engine.pipe(n, spark, Some(df)) match {
-                case Some(next) => applied += 1; next
-                case None =>
-                  if (n != "main") Console.err.println(s"$n does not exist")
-                  df
-              }
-            }
             // zero resolved pipelines → no output (bin.js:174 `if
             // (!streams.length) return` — stdin is NOT echoed through)
-            try if (applied > 0) Sources.printLines(out, Int.MaxValue)
+            try chain(engine, spark, stdin, names).foreach(Sources.printLines(_, Int.MaxValue))
             finally engine.release()
           }
         }
@@ -168,7 +160,18 @@ object Main {
       names: Seq[String],
       sink: DataFrame => Unit = Sources.printLines(_, Int.MaxValue))
       : Option[org.apache.spark.sql.streaming.StreamingQuery] = {
-    val input = Sources.linesStream(spark, dir)
+    chain(engine, spark, Sources.linesStream(spark, dir), names).map(_.writeStream
+      .outputMode("append")
+      .foreachBatch((batch: DataFrame, _: Long) => sink(batch))
+      .start())
+  }
+
+  /** `pipe`'s chain: `input` through each named pipeline in turn. A
+    * missing name is skipped with a stderr note (silent for `main`,
+    * bin.js:158-175); None when no name resolved.
+    */
+  private def chain(engine: Engine, spark: SparkSession, input: DataFrame,
+      names: Seq[String]): Option[DataFrame] = {
     var applied = 0
     val out = names.foldLeft(input) { (df, n) =>
       engine.pipe(n, spark, Some(df)) match {
@@ -178,11 +181,7 @@ object Main {
           df
       }
     }
-    if (applied == 0) None
-    else Some(out.writeStream
-      .outputMode("append")
-      .foreachBatch((batch: DataFrame, _: Long) => sink(batch))
-      .start())
+    if (applied == 0) None else Some(out)
   }
 
   /** stdin → temp-file spool → line-aligned splits, no shuffle. Keeps

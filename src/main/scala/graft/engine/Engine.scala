@@ -127,16 +127,23 @@ final class Engine(
   /** `.toJSON()` parity (index.js:208-210). */
   def toJson: String = spec.toJson
 
-  /** Map-tee sources persisted by the pipelines this engine built (see
-    * [[buildSegment]]). They are caller-owned: a DataFrame is lazy, so the
+  /** Frames persisted by the pipelines this engine built: map-tee sources
+    * (see [[buildSegment]]) and command output feeding a json run (see
+    * [[applyUnit]]). They are caller-owned: a DataFrame is lazy, so the
     * cache must outlive `pipe`/`run` until the caller has consumed the
     * output, and then be released with [[release]].
     */
-  private val teeSources = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+  private val persisted = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
-  /** Unpersist every map-tee source this engine has persisted so far. */
+  /** Unpersist every frame this engine has persisted so far. */
   def release(): Unit =
-    Iterator.continually(teeSources.poll()).takeWhile(_ != null).foreach(_.unpersist())
+    Iterator.continually(persisted.poll()).takeWhile(_ != null).foreach(_.unpersist())
+
+  private def persist(df: DataFrame): DataFrame = {
+    val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+    persisted.add(cached)
+    cached
+  }
 
   // ------------------------------------------------------------- planner
 
@@ -246,8 +253,7 @@ final class Engine(
         // tee: first stage's output duplicated into each remaining stage
         // (index.js:62). persist() keeps effectful sources single-run, the
         // DataFrame analog of Node duplicating bytes to N destinations.
-        val src = app(seg.head, segInput).persist(StorageLevel.MEMORY_AND_DISK)
-        teeSources.add(src)
+        val src = persist(app(seg.head, segInput))
         seg.tail match {
           case Nil => src
           case rest => rest.map(app(_, src)).reduce(_ unionByName _)
@@ -266,7 +272,10 @@ final class Engine(
     * `serialize(fn_k(…fn_1(parse(in))))`: ONE parse (one schema-inference
     * job) and ONE serialize for the whole run, rows passing between the
     * modules as rows — the way ndjson hands objects from one through-stream
-    * to the next (index.js:73). A single stage is a run of one.
+    * to the next (index.js:73). A single stage is a run of one. When a
+    * command stage feeds the run, its input is persisted: the inference
+    * job fills the cache and the action reads it, so the command spawns
+    * once (index.js:14-27).
     */
   private def applyUnit(
       pipelineName: String,
@@ -276,9 +285,10 @@ final class Engine(
       opts: RunOptions): DataFrame = {
     def step(st: Stage, df: DataFrame): DataFrame =
       observed(pipelineName, stageCounter.getAndIncrement(), applyStage(st, df, opts), opts)
-    if (onRecords(unit.head))
-      NdjsonBridge.serialize(unit.foldLeft(NdjsonBridge.parse(in))((rows, st) => step(st, rows)))
-    else unit.foldLeft(in)((df, st) => step(st, df))
+    if (onRecords(unit.head)) {
+      val lines = if (!in.isStreaming && CommandStage.feeds(in)) persist(in) else in
+      NdjsonBridge.serialize(unit.foldLeft(NdjsonBridge.parse(lines))((rows, st) => step(st, rows)))
+    } else unit.foldLeft(in)((df, st) => step(st, df))
   }
 
   private def applyStage(st: Stage, in: DataFrame, opts: RunOptions): DataFrame =

@@ -2,6 +2,8 @@ package graft.ext
 
 import java.util.zip.CRC32
 
+import graft.ext.Bytes.{be32, be32u, putBe32}
+
 /** APNG (animated PNG) frame extraction — the PNG-family sibling of
   * [[Webp.animFrames]], completing the animated-container set
   * (GIF / AVI-MJPEG / MP4 / WebP-ANMF / APNG) behind
@@ -43,8 +45,8 @@ object Apng {
         val mini = new java.io.ByteArrayOutputStream()
         mini.write(Png.Magic, 0, Png.Magic.length)
         val hdr = ihdr.clone()
-        Png.putBe32(hdr, 0, cur.w)
-        Png.putBe32(hdr, 4, cur.h)
+        putBe32(hdr, 0, cur.w)
+        putBe32(hdr, 4, cur.h)
         Png.writeChunk(mini, "IHDR", hdr)
         if (plte != null) Png.writeChunk(mini, "PLTE", plte)
         if (trns != null) Png.writeChunk(mini, "tRNS", trns)
@@ -59,12 +61,12 @@ object Apng {
       var i = Png.Magic.length
       var sawIend = false
       while (!sawIend && i + 12 <= bytes.length) {
-        val len = Png.be32(bytes, i)
+        val len = be32(bytes, i)
         if (len < 0 || len > bytes.length - 12 - i) return None
         val tpe = new String(bytes, i + 4, 4, "US-ASCII")
         crc.reset()
         crc.update(bytes, i + 4, 4 + len)
-        if (crc.getValue != (Png.be32(bytes, i + 8 + len) & 0xFFFFFFFFL))
+        if (crc.getValue != be32u(bytes, i + 8 + len))
           return None
         tpe match {
           case "IHDR" =>
@@ -76,14 +78,14 @@ object Apng {
           case "fcTL" =>
             if (len != 26) return None
             flush()
-            val num = Png.be32(bytes, i + 12 + 16) >>> 16 // delay_num (u16)
-            val den0 = Png.be32(bytes, i + 12 + 16) & 0xFFFF
+            val num = be32(bytes, i + 12 + 16) >>> 16 // delay_num (u16)
+            val den0 = be32(bytes, i + 12 + 16) & 0xFFFF
             val den = if (den0 == 0) 100 else den0
             cur = Fctl(
-              Png.be32(bytes, i + 12),      // width
-              Png.be32(bytes, i + 16),      // height
-              Png.be32(bytes, i + 20),      // x offset
-              Png.be32(bytes, i + 24),      // y offset
+              be32(bytes, i + 12), // width
+              be32(bytes, i + 16), // height
+              be32(bytes, i + 20), // x offset
+              be32(bytes, i + 24), // y offset
               num * 1000 / den)
             curData = new java.io.ByteArrayOutputStream()
           case "IDAT" =>
@@ -118,29 +120,29 @@ object Apng {
       val whole = Png.encode(img)
       // single-IDAT layout (Png.encode contract): Magic(8) + IHDR(25) +
       // IDAT chunk; payload sits at 8+25+8 for length at 8+25
-      val len = Png.be32(whole, 33)
+      val len = be32(whole, 33)
       java.util.Arrays.copyOfRange(whole, 41, 41 + len)
     }
     val head = frames.head
     val out = new java.io.ByteArrayOutputStream()
     out.write(Png.Magic, 0, Png.Magic.length)
     val ihdr = new Array[Byte](13)
-    Png.putBe32(ihdr, 0, head.width)
-    Png.putBe32(ihdr, 4, head.height)
+    putBe32(ihdr, 0, head.width)
+    putBe32(ihdr, 4, head.height)
     ihdr(8) = 8
     ihdr(9) = (head.channels match {
       case 1 => 0; case 2 => 4; case 3 => 2; case 4 => 6
     }).toByte
     Png.writeChunk(out, "IHDR", ihdr)
     val actl = new Array[Byte](8)
-    Png.putBe32(actl, 0, frames.length)
+    putBe32(actl, 0, frames.length)
     Png.writeChunk(out, "acTL", actl)
     var seq = 0
     frames.zipWithIndex.foreach { case (img, k) =>
       val fctl = new Array[Byte](26)
-      Png.putBe32(fctl, 0, seq); seq += 1
-      Png.putBe32(fctl, 4, img.width)
-      Png.putBe32(fctl, 8, img.height)
+      putBe32(fctl, 0, seq); seq += 1
+      putBe32(fctl, 4, img.width)
+      putBe32(fctl, 8, img.height)
       // x/y offsets 0; delay 1/100 s; dispose/blend 0
       fctl(20) = 0; fctl(21) = 1; fctl(22) = 0; fctl(23) = 100
       Png.writeChunk(out, "fcTL", fctl)
@@ -148,7 +150,7 @@ object Apng {
       if (k == 0) Png.writeChunk(out, "IDAT", data)
       else {
         val fdat = new Array[Byte](4 + data.length)
-        Png.putBe32(fdat, 0, seq); seq += 1
+        putBe32(fdat, 0, seq); seq += 1
         System.arraycopy(data, 0, fdat, 4, data.length)
         Png.writeChunk(out, "fdAT", fdat)
       }

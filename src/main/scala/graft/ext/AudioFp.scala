@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.ext.Bytes.{putLe16, putLe32}
+
 /** Perceptual audio fingerprint: the missing cell of the dedup modality
   * matrix (text → MinHash/SimHash, images → aHash, embeddings →
   * hyperplane LSH; audio previously deduped on exact bytes only).
@@ -232,29 +234,37 @@ object AudioFp {
     */
   private[graft] def wavPcm16(samples: Array[Int], rate: Int = 8000): Array[Byte] = {
     val n = samples.length
-    val bytes = new Array[Byte](44 + n * 2)
-    def ascii(off: Int, v: String): Unit = {
-      var k = 0
-      while (k < v.length) { bytes(off + k) = v.charAt(k).toByte; k += 1 }
-    }
-    def le32(off: Int, v: Int): Unit = {
-      bytes(off) = v.toByte; bytes(off + 1) = (v >>> 8).toByte
-      bytes(off + 2) = (v >>> 16).toByte; bytes(off + 3) = (v >>> 24).toByte
-    }
-    def le16(off: Int, v: Int): Unit = {
-      bytes(off) = v.toByte; bytes(off + 1) = (v >>> 8).toByte
-    }
-    ascii(0, "RIFF"); le32(4, 36 + n * 2); ascii(8, "WAVE")
-    ascii(12, "fmt "); le32(16, 16)
-    le16(20, 1); le16(22, 1) // PCM, mono
-    le32(24, rate); le32(28, rate * 2)
-    le16(32, 2); le16(34, 16) // block align, bits
-    ascii(36, "data"); le32(40, n * 2)
+    val bytes = wavFile(formatTag = 1, channels = 1, rate = rate, bits = 16,
+      blockAlign = 2, dataLen = n * 2)
     var i = 0
     while (i < n) {
-      le16(44 + i * 2, samples(i) & 0xFFFF)
+      putLe16(bytes, 44 + i * 2, samples(i))
       i += 1
     }
+    bytes
+  }
+
+  /** A WAVE file of `dataLen` zero data bytes behind its RIFF, `fmt ` and
+    * `data` headers — the one WAVE header writer; callers fill the data
+    * from offset `length - dataLen`. The byte rate is rate × blockAlign.
+    * A block-coded format (IMA ADPCM) passes `samplesPerBlock` > 0: the
+    * `fmt ` chunk then carries the two-byte extension holding it, and the
+    * byte rate is divided by it.
+    */
+  private[graft] def wavFile(formatTag: Int, channels: Int, rate: Int, bits: Int,
+      blockAlign: Int, dataLen: Int, samplesPerBlock: Int = 0): Array[Byte] = {
+    val fmtLen = if (samplesPerBlock > 0) 20 else 16
+    val bytes = new Array[Byte](28 + fmtLen + dataLen)
+    def ascii(off: Int, v: String): Unit =
+      System.arraycopy(v.getBytes("US-ASCII"), 0, bytes, off, 4)
+    ascii(0, "RIFF"); putLe32(bytes, 4, bytes.length - 8); ascii(8, "WAVE")
+    ascii(12, "fmt "); putLe32(bytes, 16, fmtLen)
+    putLe16(bytes, 20, formatTag); putLe16(bytes, 22, channels)
+    putLe32(bytes, 24, rate)
+    putLe32(bytes, 28, rate * blockAlign / math.max(samplesPerBlock, 1))
+    putLe16(bytes, 32, blockAlign); putLe16(bytes, 34, bits)
+    if (samplesPerBlock > 0) { putLe16(bytes, 36, 2); putLe16(bytes, 38, samplesPerBlock) }
+    ascii(20 + fmtLen, "data"); putLe32(bytes, 24 + fmtLen, dataLen)
     bytes
   }
 }

@@ -2,6 +2,8 @@ package graft.ext
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.ext.Bytes.{le16, le32, writeLe16, writeLe32}
+
 /** Android binary XML (AXML) — `AndroidManifest.xml` inside every APK,
   * the routing metadata of an app-store crawl (an APK itself is a ZIP
   * the [[Zip]] arm already opens; this decodes what it contains).
@@ -129,13 +131,6 @@ object Axml {
     }
   }
 
-  private def le16(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8) |
-      ((b(at + 2) & 0xFF) << 16) | ((b(at + 3) & 0xFF) << 24)
-
   // ----- deterministic builder (fixtures/certificates) ------------------
 
   /** Build an AXML document: elements as (depth-implied) nested
@@ -162,38 +157,36 @@ object Axml {
     // memory but FIRST in file — indices are stable because intern()
     // saw everything above
     val body = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit = { body.write(v & 0xFF); body.write((v >> 8) & 0xFF) }
-    def w32(v: Int): Unit = { w16(v & 0xFFFF); w16((v >>> 16) & 0xFFFF) }
     // emit start elements with end elements via a depth stack
     val stack = scala.collection.mutable.Stack.empty[(Int, String)]
     def endElement(name: String): Unit = {
-      w16(0x0103); w16(16); w32(24)
-      w32(-1); w32(-1) // line, comment
-      w32(-1); w32(intern(name))
+      writeLe16(body, 0x0103); writeLe16(body, 16); writeLe32(body, 24)
+      writeLe32(body, -1); writeLe32(body, -1) // line, comment
+      writeLe32(body, -1); writeLe32(body, intern(name))
     }
     for ((depth, name, attrs) <- doc) {
       while (stack.nonEmpty && stack.top._1 >= depth)
         endElement(stack.pop()._2)
       val size = 36 + 20 * attrs.length
-      w16(0x0102); w16(16); w32(size)
-      w32(-1); w32(-1) // line, comment
-      w32(-1); w32(intern(name))
-      w16(0x14); w16(0x14); w16(attrs.length)
-      w16(0); w16(0); w16(0) // id/class/style indices
+      writeLe16(body, 0x0102); writeLe16(body, 16); writeLe32(body, size)
+      writeLe32(body, -1); writeLe32(body, -1) // line, comment
+      writeLe32(body, -1); writeLe32(body, intern(name))
+      writeLe16(body, 0x14); writeLe16(body, 0x14); writeLe16(body, attrs.length)
+      writeLe16(body, 0); writeLe16(body, 0); writeLe16(body, 0) // id/class/style indices
       for ((an, av) <- attrs) {
-        w32(-1); w32(intern(an))
+        writeLe32(body, -1); writeLe32(body, intern(an))
         av match {
           case s: String =>
-            w32(intern(s)); w16(8); body.write(0); body.write(0x03)
-            w32(intern(s))
+            writeLe32(body, intern(s)); writeLe16(body, 8); body.write(0); body.write(0x03)
+            writeLe32(body, intern(s))
           case n: Int =>
-            w32(-1); w16(8); body.write(0); body.write(0x10); w32(n)
+            writeLe32(body, -1); writeLe16(body, 8); body.write(0); body.write(0x10); writeLe32(body, n)
           case x: Boolean =>
-            w32(-1); w16(8); body.write(0); body.write(0x12)
-            w32(if (x) -1 else 0)
+            writeLe32(body, -1); writeLe16(body, 8); body.write(0); body.write(0x12)
+            writeLe32(body, if (x) -1 else 0)
           case f: Float =>
-            w32(-1); w16(8); body.write(0); body.write(0x04)
-            w32(java.lang.Float.floatToIntBits(f))
+            writeLe32(body, -1); writeLe16(body, 8); body.write(0); body.write(0x04)
+            writeLe32(body, java.lang.Float.floatToIntBits(f))
           case other =>
             throw new IllegalArgumentException(s"${other.getClass}")
         }
@@ -227,20 +220,16 @@ object Axml {
     val stringsStart = headerSize + 4 * strings.length
     val poolChunkSize = stringsStart + poolData.size
     val pool = new java.io.ByteArrayOutputStream()
-    def p16(v: Int): Unit = { pool.write(v & 0xFF); pool.write((v >> 8) & 0xFF) }
-    def p32(v: Int): Unit = { p16(v & 0xFFFF); p16((v >>> 16) & 0xFFFF) }
-    p16(0x0001); p16(headerSize); p32(poolChunkSize)
-    p32(strings.length); p32(0) // styleCount
-    p32(if (utf8Pool) 0x100 else 0)
-    p32(stringsStart); p32(0)
-    offs.foreach(p32)
+    writeLe16(pool, 0x0001); writeLe16(pool, headerSize); writeLe32(pool, poolChunkSize)
+    writeLe32(pool, strings.length); writeLe32(pool, 0) // styleCount
+    writeLe32(pool, if (utf8Pool) 0x100 else 0)
+    writeLe32(pool, stringsStart); writeLe32(pool, 0)
+    offs.foreach(writeLe32(pool, _))
     pool.write(poolData.toByteArray)
 
     val total = 8 + pool.size + bodyBytes.length
     val out = new java.io.ByteArrayOutputStream()
-    def o16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-    def o32(v: Int): Unit = { o16(v & 0xFFFF); o16((v >>> 16) & 0xFFFF) }
-    o16(0x0003); o16(8); o32(total)
+    writeLe16(out, 0x0003); writeLe16(out, 8); writeLe32(out, total)
     out.write(pool.toByteArray)
     out.write(bodyBytes)
     out.toByteArray

@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.ext.Bytes.{le16, le32, putLe32, writeLe16, writeLe32}
+
 /** BMP (Windows DIB) pixel decode and ICO (icon container) extraction —
   * two formats crawls see constantly (favicon.ico above all) that the
   * sniff already named but no arm decoded. Same discipline as every
@@ -15,16 +17,10 @@ package graft.ext
   */
 object Bmp {
 
-  private def u16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-  private def i32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8) |
-      ((b(i + 2) & 0xFF) << 16) | ((b(i + 3) & 0xFF) << 24)
-
   /** Full .bmp file (with the 14-byte "BM" file header). */
   def decode(b: Array[Byte]): Option[Png.Image] = {
     if (b == null || b.length < 54 || b(0) != 'B' || b(1) != 'M') return None
-    try decodeDib(b, 14, i32(b, 10), icoHalfHeight = false)
+    try decodeDib(b, 14, le32(b, 10), icoHalfHeight = false)
     catch { case scala.util.control.NonFatal(_) => None }
   }
 
@@ -35,20 +31,20 @@ object Bmp {
   private[ext] def decodeDib(b: Array[Byte], off: Int, dataOff0: Int,
       icoHalfHeight: Boolean): Option[Png.Image] = {
     if (off + 40 > b.length) return None
-    val hdrSize = i32(b, off)
+    val hdrSize = le32(b, off)
     if (hdrSize < 40 || off + hdrSize > b.length) return None
-    val width = i32(b, off + 4)
-    val rawHeight = i32(b, off + 8)
+    val width = le32(b, off + 4)
+    val rawHeight = le32(b, off + 8)
     val heightAbs0 = math.abs(rawHeight)
     val height = if (icoHalfHeight) heightAbs0 / 2 else heightAbs0
     val topDown = rawHeight < 0
-    val bpp = u16(b, off + 14)
-    val compression = i32(b, off + 16)
+    val bpp = le16(b, off + 14)
+    val compression = le32(b, off + 16)
     if (width <= 0 || height <= 0) return None
     if (width.toLong * height * 4 > (1L << 28)) return None // bomb guard
     if (compression != 0) return None // BI_RGB only
     if (!Set(1, 4, 8, 24, 32).contains(bpp)) return None
-    val colorsUsed0 = i32(b, off + 32)
+    val colorsUsed0 = le32(b, off + 32)
     val palEntries =
       if (bpp > 8) 0
       else if (colorsUsed0 > 0) math.min(colorsUsed0, 1 << bpp)
@@ -104,15 +100,11 @@ object Bmp {
     val dataOff = 14 + 40 + palEntries * 4
     val total = dataOff + rowBytes * img.height
     val b = new Array[Byte](total)
-    def putI32(i: Int, v: Int): Unit = {
-      b(i) = v.toByte; b(i + 1) = (v >> 8).toByte
-      b(i + 2) = (v >> 16).toByte; b(i + 3) = (v >> 24).toByte
-    }
     b(0) = 'B'; b(1) = 'M'
-    putI32(2, total); putI32(10, dataOff)
-    putI32(14, 40); putI32(18, img.width); putI32(22, img.height)
+    putLe32(b, 2, total); putLe32(b, 10, dataOff)
+    putLe32(b, 14, 40); putLe32(b, 18, img.width); putLe32(b, 22, img.height)
     b(26) = 1; b(28) = bpp.toByte
-    putI32(34, rowBytes * img.height)
+    putLe32(b, 34, rowBytes * img.height)
     var k = 0
     while (k < palEntries) { // gray BGRA palette
       b(54 + k * 4) = k.toByte; b(54 + k * 4 + 1) = k.toByte
@@ -144,29 +136,23 @@ object Bmp {
   */
 object Ico {
 
-  private def u16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-  private def i32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8) |
-      ((b(i + 2) & 0xFF) << 16) | ((b(i + 3) & 0xFF) << 24)
-
   final case class Entry(width: Int, height: Int, size: Int, offset: Int)
 
   def isIco(b: Array[Byte]): Boolean =
     b != null && b.length >= 6 && b(0) == 0 && b(1) == 0 && b(2) == 1 &&
-      b(3) == 0 && u16(b, 4) > 0 && u16(b, 4) <= 64 &&
-      b.length >= 6 + u16(b, 4) * 16
+      b(3) == 0 && le16(b, 4) > 0 && le16(b, 4) <= 64 &&
+      b.length >= 6 + le16(b, 4) * 16
 
   def entries(b: Array[Byte]): Option[Seq[Entry]] = {
     if (!isIco(b)) return None
     try {
-      val n = u16(b, 4)
+      val n = le16(b, 4)
       val out = (0 until n).flatMap { k =>
         val e = 6 + k * 16
         val w0 = b(e) & 0xFF
         val h0 = b(e + 1) & 0xFF
-        val size = i32(b, e + 8)
-        val off = i32(b, e + 12)
+        val size = le32(b, e + 8)
+        val off = le32(b, e + 12)
         if (size <= 0 || off <= 0 || off.toLong + size > b.length) None
         else Some(Entry(if (w0 == 0) 256 else w0, if (h0 == 0) 256 else h0,
           size, off))
@@ -195,16 +181,14 @@ object Ico {
     require(images.nonEmpty && images.forall(i => i.width <= 256 && i.height <= 256))
     val pngs = images.map(Png.encode)
     val out = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-    def w32(v: Int): Unit = { w16(v & 0xFFFF); w16((v >>> 16) & 0xFFFF) }
-    w16(0); w16(1); w16(images.length)
+    writeLe16(out, 0); writeLe16(out, 1); writeLe16(out, images.length)
     var off = 6 + images.length * 16
     images.zip(pngs).foreach { case (img, png) =>
       out.write(if (img.width == 256) 0 else img.width)
       out.write(if (img.height == 256) 0 else img.height)
       out.write(0); out.write(0) // colors, reserved
-      w16(1); w16(32) // planes, bpp hints
-      w32(png.length); w32(off)
+      writeLe16(out, 1); writeLe16(out, 32) // planes, bpp hints
+      writeLe32(out, png.length); writeLe32(out, off)
       off += png.length
     }
     pngs.foreach(p => out.write(p, 0, p.length))

@@ -2,6 +2,8 @@ package graft.ext
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.ext.Bytes.{le16, le32, le64, putLe16, putLe32, putLe64}
+
 /** Compound File Binary (MS-CFB) — the OLE2 container every legacy
   * Office document (.doc/.xls/.ppt), MSI installer and Outlook .msg is
   * wrapped in; a scraped document dump is full of them. Implements the
@@ -190,16 +192,6 @@ object Cfb {
         names.contains("__properties_version1.0")) "msg"
       else "cfb"
     }.getOrElse("cfb")
-
-  private def le16(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8) |
-      ((b(at + 2) & 0xFF) << 16) | ((b(at + 3) & 0xFF) << 24)
-
-  private def le64(b: Array[Byte], at: Int): Long =
-    (le32(b, at) & 0xFFFFFFFFL) | ((le32(b, at + 4) & 0xFFFFFFFFL) << 32)
 
   // ----- deterministic builder (fixtures/certificates) ------------------
 
@@ -394,21 +386,5 @@ object Cfb {
       out.write(new Array[Byte](pad))
     }
     out.toByteArray
-  }
-
-  private def putLe16(b: Array[Byte], at: Int, v: Int): Unit = {
-    b(at) = (v & 0xFF).toByte; b(at + 1) = ((v >> 8) & 0xFF).toByte
-  }
-
-  private def putLe32(b: Array[Byte], at: Int, v: Int): Unit = {
-    b(at) = (v & 0xFF).toByte
-    b(at + 1) = ((v >> 8) & 0xFF).toByte
-    b(at + 2) = ((v >> 16) & 0xFF).toByte
-    b(at + 3) = ((v >> 24) & 0xFF).toByte
-  }
-
-  private def putLe64(b: Array[Byte], at: Int, v: Long): Unit = {
-    putLe32(b, at, (v & 0xFFFFFFFFL).toInt)
-    putLe32(b, at + 4, ((v >> 32) & 0xFFFFFFFFL).toInt)
   }
 }

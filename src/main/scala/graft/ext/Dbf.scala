@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.ext.Bytes.{le16, le32, putLe16, putLe32}
+
 /** dBase .dbf table reader — the tabular sidecar of open-data and GIS
   * dumps (every shapefile ships one). dBase III/IV layout:
   *
@@ -98,13 +100,6 @@ object Dbf {
     case _ => raw
   }
 
-  private def le16(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8) |
-      ((b(at + 2) & 0xFF) << 16) | ((b(at + 3) & 0xFF) << 24)
-
   // ----- deterministic builder (fixtures/certificates) ------------------
 
   /** dBase III fixture writer; values null/String/Long/Double/Boolean
@@ -118,10 +113,8 @@ object Dbf {
     out(0) = 0x03
     out(1) = 26; out(2) = 8; out(3) = 15 // 2026-08-15
     putLe32(out, 4, rows.length)
-    out(8) = (headerSize & 0xFF).toByte
-    out(9) = ((headerSize >> 8) & 0xFF).toByte
-    out(10) = (recordSize & 0xFF).toByte
-    out(11) = ((recordSize >> 8) & 0xFF).toByte
+    putLe16(out, 8, headerSize)
+    putLe16(out, 10, recordSize)
     fields.zipWithIndex.foreach { case (f, k) =>
       val at = 32 + 32 * k
       val nb = f.name.getBytes("US-ASCII")
@@ -155,12 +148,5 @@ object Dbf {
     }
     out(out.length - 1) = 0x1A // EOF marker
     out
-  }
-
-  private def putLe32(b: Array[Byte], at: Int, v: Int): Unit = {
-    b(at) = (v & 0xFF).toByte
-    b(at + 1) = ((v >> 8) & 0xFF).toByte
-    b(at + 2) = ((v >> 16) & 0xFF).toByte
-    b(at + 3) = ((v >> 24) & 0xFF).toByte
   }
 }

@@ -137,9 +137,6 @@ object Dedup {
                                  i -> array_join(slice(toks, i, $n), ' ')))[0])""")
   }
 
-  /** Character k-shingles (back-compat helper). */
-  def shinglesExpr(textCol: String, k: Int): Column = CharShingles(k)(textCol)
-
   /** MinHash signature per document as ONE `array<bigint>` column `sig`.
     *
     * MAP-ONLY: each shingle string is hashed once, and the k seeded

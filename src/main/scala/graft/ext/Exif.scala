@@ -38,21 +38,17 @@ object Exif {
       has_gps: Boolean)
 
   private final class Tiff(b: Array[Byte], base: Int, end: Int, le: Boolean) {
-    def u16(i: Int): Int =
-      if (i < base || i + 2 > end) -1
-      else if (le) (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-      else ((b(i) & 0xFF) << 8) | (b(i + 1) & 0xFF)
-    def u32(i: Int): Long =
-      if (i < base || i + 4 > end) -1L
-      else if (le) (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) |
-        ((b(i + 2) & 0xFFL) << 16) | ((b(i + 3) & 0xFFL) << 24)
-      else ((b(i) & 0xFFL) << 24) | ((b(i + 1) & 0xFFL) << 16) |
-        ((b(i + 2) & 0xFFL) << 8) | (b(i + 3) & 0xFFL)
+    /** SHORT at `i`, -1 outside `[base, end)`. */
+    def short(i: Int): Int =
+      if (i < base || i + 2 > end) -1 else Bytes.u16(b, i, !le)
+    /** LONG at `i`, -1 outside `[base, end)`. */
+    def long(i: Int): Long =
+      if (i < base || i + 4 > end) -1L else Bytes.u32(b, i, !le)
     /** ASCII value of an entry: inline when count ≤ 4, else via offset. */
     def ascii(entry: Int, count: Long): String = {
       val at =
         if (count <= 4) entry + 8
-        else base + u32(entry + 8).toInt
+        else base + long(entry + 8).toInt
       if (at < base || count <= 0 || at + count > end) return ""
       var n = count.toInt
       while (n > 0 && b(at + n - 1) == 0) n -= 1 // trailing NULs
@@ -62,8 +58,8 @@ object Exif {
     def scalar(entry: Int, tpe: Int, count: Long): Long = {
       val at =
         if ((if (tpe == 3) 2 else 4) * count <= 4) entry + 8
-        else base + u32(entry + 8).toInt
-      if (tpe == 3) u16(at).toLong else u32(at)
+        else base + long(entry + 8).toInt
+      if (tpe == 3) short(at).toLong else long(at)
     }
   }
 
@@ -87,22 +83,22 @@ object Exif {
       val be = jpeg(base) == 'M' && jpeg(base + 1) == 'M'
       if (!le && !be) return None
       val t = new Tiff(jpeg, base, segEnd, le)
-      if (t.u16(base + 2) != 42) return None
+      if (t.short(base + 2) != 42) return None
       var make = ""; var model = ""; var orientation = 0
       var datetime = ""; var dtOriginal = ""
       var width = 0; var height = 0; var hasGps = false
       def walkIfd(off: Long, isExifIfd: Boolean): Unit = {
         if (off <= 0 || base + off + 2 > segEnd) return
         val ifd = base + off.toInt
-        val n = t.u16(ifd)
+        val n = t.short(ifd)
         var k = 0
         while (k >= 0 && k < n) {
           val e = ifd + 2 + k * 12
           if (e + 12 > segEnd) k = n
           else {
-            val tag = t.u16(e)
-            val tpe = t.u16(e + 2)
-            val cnt = t.u32(e + 4)
+            val tag = t.short(e)
+            val tpe = t.short(e + 2)
+            val cnt = t.long(e + 4)
             tag match {
               case 0x010F if tpe == 2 => make = t.ascii(e, cnt)
               case 0x0110 if tpe == 2 => model = t.ascii(e, cnt)
@@ -111,7 +107,7 @@ object Exif {
               case 0x9003 if tpe == 2 && isExifIfd => dtOriginal = t.ascii(e, cnt)
               case 0xA002 if isExifIfd => width = t.scalar(e, tpe, cnt).toInt
               case 0xA003 if isExifIfd => height = t.scalar(e, tpe, cnt).toInt
-              case 0x8769 if !isExifIfd => walkIfd(t.u32(e + 8), isExifIfd = true)
+              case 0x8769 if !isExifIfd => walkIfd(t.long(e + 8), isExifIfd = true)
               case 0x8825 if !isExifIfd => hasGps = true
               case _ => ()
             }
@@ -119,7 +115,7 @@ object Exif {
           }
         }
       }
-      walkIfd(t.u32(base + 4), isExifIfd = false)
+      walkIfd(t.long(base + 4), isExifIfd = false)
       Some(ExifMeta(make, model, orientation,
         if (dtOriginal.nonEmpty) dtOriginal else datetime,
         width, height, hasGps))
@@ -148,10 +144,10 @@ object Exif {
       val be = b(0) == 'M' && b(1) == 'M'
       if (!le && !be) return None
       val t = new Tiff(b, 0, b.length, le)
-      if (t.u16(2) != 42) return None
-      val ifd = t.u32(4).toInt
+      if (t.short(2) != 42) return None
+      val ifd = t.long(4).toInt
       if (ifd < 8 || ifd + 2 > b.length) return None
-      val n = t.u16(ifd)
+      val n = t.short(ifd)
       var width = 0; var height = 0; var bits = 0
       var orientation = 0; var make = ""
       var k = 0
@@ -159,9 +155,9 @@ object Exif {
         val e = ifd + 2 + k * 12
         if (e + 12 > b.length) k = n
         else {
-          val tag = t.u16(e)
-          val tpe = t.u16(e + 2)
-          val cnt = t.u32(e + 4)
+          val tag = t.short(e)
+          val tpe = t.short(e + 2)
+          val cnt = t.long(e + 4)
           tag match {
             case 0x0100 => width = t.scalar(e, tpe, cnt).toInt
             case 0x0101 => height = t.scalar(e, tpe, cnt).toInt
@@ -208,7 +204,7 @@ object Exif {
         i = j + 1
       else {
         if (j + 2 >= b.length) return -1
-        val len = ((b(j + 1) & 0xFF) << 8) | (b(j + 2) & 0xFF)
+        val len = Bytes.be16(b, j + 1)
         if (len < 2 || j + 1 + len > b.length) return -1
         f(marker, j + 3, j + 1 + len)
         i = j + 1 + len
@@ -241,4 +237,11 @@ object Exif {
     out.write(jpeg, i, jpeg.length - i)
     out.toByteArray
   }
+
+  /** `jpg` with an Exif APP1 segment ("Exif\0\0" + `tiff`) spliced in
+    * right after SOI — the fixture counterpart of [[meta]].
+    */
+  private[graft] def withApp1(jpg: Array[Byte], tiff: Array[Byte]): Array[Byte] =
+    jpg.take(2) ++ Array[Byte](0xFF.toByte, 0xE1.toByte) ++ Bytes.be16Of(2 + 6 + tiff.length) ++
+      "Exif".getBytes("US-ASCII") ++ Array[Byte](0, 0) ++ tiff ++ jpg.drop(2)
 }

@@ -2,6 +2,8 @@ package graft.ext
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.ext.Bytes.{le32, putBe32, putLe32}
+
 /** ISO 9660 disc-image walk — OS installers, driver discs and software
   * archives crawl as `.iso`. Implements ECMA-119 plus the two naming
   * extensions that carry real filenames:
@@ -129,10 +131,6 @@ object Iso {
     None
   }
 
-  private def le32(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8) |
-      ((b(at + 2) & 0xFF) << 16) | ((b(at + 3) & 0xFF) << 24)
-
   // ----- deterministic builder (fixtures/certificates) ------------------
 
   /** Build a hybrid PVD+Joliet image: the primary tree carries 8.3-ish
@@ -155,20 +153,6 @@ object Iso {
     }
     val img = new Array[Byte](next * Sector)
 
-    def putLe32(at: Int, v: Int): Unit = {
-      img(at) = (v & 0xFF).toByte
-      img(at + 1) = ((v >> 8) & 0xFF).toByte
-      img(at + 2) = ((v >> 16) & 0xFF).toByte
-      img(at + 3) = ((v >> 24) & 0xFF).toByte
-    }
-    def putBe32(at: Int, v: Int): Unit = {
-      img(at) = ((v >> 24) & 0xFF).toByte
-      img(at + 1) = ((v >> 16) & 0xFF).toByte
-      img(at + 2) = ((v >> 8) & 0xFF).toByte
-      img(at + 3) = (v & 0xFF).toByte
-    }
-    def putBoth32(at: Int, v: Int): Unit = { putLe32(at, v); putBe32(at + 4, v) }
-
     /** One directory record; returns its length. `nm` plants a Rock
       * Ridge NM entry.
       */
@@ -178,8 +162,8 @@ object Iso {
       val pad = if (name.length % 2 == 0) 1 else 0
       val len = 33 + name.length + pad + su
       img(at) = len.toByte
-      putBoth32(at + 2, extent)
-      putBoth32(at + 10, size)
+      putLe32(img, at + 2, extent); putBe32(img, at + 6, extent) // both-endian
+      putLe32(img, at + 10, size); putBe32(img, at + 14, size)
       img(at + 25) = (if (dir) 0x02 else 0x00).toByte
       img(at + 28) = 1 // volume sequence number (both-endian low half)
       img(at + 31) = 1

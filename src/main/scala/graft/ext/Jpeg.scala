@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ext.Bytes.be16
 import graft.ext.Png.Image
 
 /** Pure-JVM baseline JPEG decoder, written against the public ITU-T T.81
@@ -51,7 +52,6 @@ object Jpeg {
     12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
-
 
   /** Canonical Huffman table in the spec's mincode/maxcode/valptr form
     * (T.81 F.2.2.3): decode walks code lengths 1..16, comparing the
@@ -169,9 +169,6 @@ object Jpeg {
     var blocksPerRow = 0; var blocksRows = 0
     var nbw = 0; var nbh = 0 // actual data-unit grid (non-interleaved scans)
   }
-
-  private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xFF) << 8) | (b(i + 1) & 0xFF)
 
   private def decodeImpl(b: Array[Byte]): Option[Image] = {
     if (!isJpeg(b)) return None
@@ -831,13 +828,6 @@ object Jpeg {
       }
       Image(width, height, 3, out)
     }
-  }
-
-  @inline private def clamp8(v: Double): Byte = {
-    // truncation of v+0.5 equals floor(v+0.5) for v ≥ -0.5, and every
-    // v < 0 clamps to 0 either way — round-half-up without the floor call
-    val iv = (v + 0.5).toInt
-    (if (iv < 0) 0 else if (iv > 255) 255 else iv).toByte
   }
 
   // JFIF/BT.601 coefficients in libjpeg's FIX() fixed point (round of

@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.ext.Bytes.{be16, le32, putLe32}
+
 /** LZFu ("compressed RTF") — the codec Outlook applies to message
   * bodies stored under PR_RTF_COMPRESSED (0x1009), spec [MS-OXRTFCP].
   * Most real .msg files carry ONLY this body form, so [[Msg]] falls
@@ -59,7 +61,7 @@ object Lzfu {
         while (!done && bit < 8 && out.size < rawSize && i < b.length) {
           if ((control & 1) == 1) {
             // big-endian reference
-            val ref = ((b(i) & 0xFF) << 8) | (b(i + 1) & 0xFF)
+            val ref = be16(b, i)
             i += 2
             val off = ref >>> 4
             val len = (ref & 0x0F) + 2
@@ -182,16 +184,5 @@ object Lzfu {
     val c = new java.util.zip.CRC32()
     c.update(b)
     c.getValue.toInt
-  }
-
-  private def le32(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8) |
-      ((b(at + 2) & 0xFF) << 16) | ((b(at + 3) & 0xFF) << 24)
-
-  private def putLe32(b: Array[Byte], at: Int, v: Int): Unit = {
-    b(at) = (v & 0xFF).toByte
-    b(at + 1) = ((v >> 8) & 0xFF).toByte
-    b(at + 2) = ((v >> 16) & 0xFF).toByte
-    b(at + 3) = ((v >> 24) & 0xFF).toByte
   }
 }

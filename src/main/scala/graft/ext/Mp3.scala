@@ -873,84 +873,6 @@ object Mp3 {
     rms(y, 1500, 2800) / rms(x, 1500, 2800)
   }
 
-  /** Roundtrip SNR for candidate modulation phase offsets — the probe
-    * that pinned the (analysis d-16, synthesis n+17) pairing this
-    * implementation's newest-first buffering requires (Mp3Spec explains;
-    * the ISO C/D formulation's +-16 pair assumes its own indexing).
-    */
-  private[ext] def phaseProbe(anOff: Int, synOff: Int): (Int, Double) = {
-    val n = 4096
-    val x = Array.tabulate(n)(t => math.sin(2 * math.Pi * 0.0131 * t) +
-      0.6 * math.sin(2 * math.Pi * 0.094 * t + 1.1))
-    val cosA = Array.tabulate(32, 128)((k, d) =>
-      math.cos((2 * k + 1) * (d - anOff) * math.Pi / 64.0))
-    val cosS = Array.tabulate(64, 32)((i, k) =>
-      math.cos((synOff + i) * (2 * k + 1) * math.Pi / 64.0))
-    val buf = new Array[Double](512)
-    val v = Array.ofDim[Double](16, 64)
-    var head = 0
-    val y = new Array[Double](n)
-    val s = new Array[Double](32)
-    var t = 0
-    while (t + 32 <= n) {
-      System.arraycopy(buf, 0, buf, 32, 480)
-      var j = 0
-      while (j < 32) { buf(j) = x(t + 31 - j); j += 1 }
-      var k = 0
-      while (k < 32) {
-        var acc = 0.0
-        var d = 0
-        while (d < 512) { acc += prototype(d) * buf(d) * cosA(k)(d & 127); d += 1 }
-        s(k) = acc
-        k += 1
-      }
-      head = (head + 15) % 16
-      var i2 = 0
-      while (i2 < 64) {
-        var acc = 0.0
-        var k2 = 0
-        while (k2 < 32) { acc += cosS(i2)(k2) * s(k2); k2 += 1 }
-        v(head)(i2) = acc
-        i2 += 1
-      }
-      j = 0
-      while (j < 32) {
-        var acc = 0.0
-        var a = 0
-        while (a < 16) {
-          val blk = v((head + a) % 16)
-          val idx = if (a % 2 == 0) j else 32 + j
-          val sgn = if (a % 4 < 2) 1.0 else -1.0
-          acc += prototype(32 * a + j) * sgn * blk(idx)
-          a += 1
-        }
-        y(t + j) = acc
-        j += 1
-      }
-      t += 32
-    }
-    // best delay + gain-compensated SNR over the interior
-    def snrAt(d: Int): Double = {
-      var sxy = 0.0
-      var sxx = 0.0
-      var i = 1024
-      while (i < n - 1024) { sxy += x(i) * y(i + d); sxx += y(i + d) * y(i + d); i += 1 }
-      val g = if (sxx == 0) 1.0 else sxy / sxx
-      var se = 0.0
-      var ss = 0.0
-      i = 1024
-      while (i < n - 1024) {
-        val e = x(i) - g * y(i + d)
-        se += e * e
-        ss += x(i) * x(i)
-        i += 1
-      }
-      10.0 * math.log10(ss / math.max(se, 1e-30))
-    }
-    val best = (380 to 640).maxBy(snrAt)
-    (best, snrAt(best))
-  }
-
   /** analysis then synthesis, no MDCT — init calibration + spec probe.
     * Output y[t] aligned to input with the filterbank's group delay
     * (~511 samples) still in place.

@@ -2,6 +2,8 @@ package graft.ext
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.ext.Bytes.{be16, be16Of, be32Of, be32u, be64, writeBe32}
+
 /** ISO base-media (MP4/MOV, ISO/IEC 14496-12) container walk — pure byte
   * parsing, no media library. MP4 is the dominant web *video* container
   * (the AVI arm in [[Multimodal]] covers the legacy RIFF shape), so a
@@ -52,16 +54,6 @@ object Mp4 {
       duration_ms: Long,
       tracks: Vector[Track])
 
-  private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xFF) << 8) | (b(i + 1) & 0xFF)
-
-  private def be32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xFFL) << 24) | ((b(i + 1) & 0xFFL) << 16) |
-      ((b(i + 2) & 0xFFL) << 8) | (b(i + 3) & 0xFFL)
-
-  private def be64(b: Array[Byte], i: Int): Long =
-    (be32(b, i) << 32) | be32(b, i + 4)
-
   private def fourcc(b: Array[Byte], i: Int): String =
     new String(b, i, 4, "US-ASCII")
 
@@ -77,7 +69,7 @@ object Mp4 {
       private def advance(): Unit = {
         nxt = null
         if (i + 8 > end) return
-        val size32 = be32(b, i)
+        val size32 = be32u(b, i)
         val tpe = fourcc(b, i + 4)
         var header = 8L
         var size = size32
@@ -121,9 +113,9 @@ object Mp4 {
             case "mvhd" if e2 - s2 >= 20 =>
               val v = b(s2) & 0xFF
               if (v == 1 && e2 - s2 >= 32) {
-                mvTimescale = be32(b, s2 + 20); mvDuration = be64(b, s2 + 24)
+                mvTimescale = be32u(b, s2 + 20); mvDuration = be64(b, s2 + 24)
               } else if (v == 0) {
-                mvTimescale = be32(b, s2 + 12); mvDuration = be32(b, s2 + 16)
+                mvTimescale = be32u(b, s2 + 12); mvDuration = be32u(b, s2 + 16)
               }
             case "trak" => parseTrak(b, s2, e2).foreach(tracks += _)
             case _ => ()
@@ -148,20 +140,20 @@ object Mp4 {
         // + layer(2) altgroup(2) volume(2) reserved(2) + matrix(36)
         val base = ts + 4 + (if (v == 1) 32 else 20)
         // v1 track id sits at payload offset 20 → needs 24 bytes present
-        if (v == 1 && te - ts >= 24) trackId = be32(b, ts + 4 + 16)
-        else if (v == 0 && te - ts >= 16) trackId = be32(b, ts + 4 + 8)
+        if (v == 1 && te - ts >= 24) trackId = be32u(b, ts + 4 + 16)
+        else if (v == 0 && te - ts >= 16) trackId = be32u(b, ts + 4 + 8)
         if (te >= base + 60) {
-          width = (be32(b, base + 52) >>> 16).toInt
-          height = (be32(b, base + 56) >>> 16).toInt
+          width = (be32u(b, base + 52) >>> 16).toInt
+          height = (be32u(b, base + 56) >>> 16).toInt
         }
       case "mdia" =>
         for ((t2, s2, e2) <- boxes(b, ts, te)) t2 match {
           case "mdhd" if e2 - s2 >= 20 =>
             val v = b(s2) & 0xFF
             if (v == 1 && e2 - s2 >= 32) {
-              mdTimescale = be32(b, s2 + 20); mdDuration = be64(b, s2 + 24)
+              mdTimescale = be32u(b, s2 + 20); mdDuration = be64(b, s2 + 24)
             } else if (v == 0) {
-              mdTimescale = be32(b, s2 + 12); mdDuration = be32(b, s2 + 16)
+              mdTimescale = be32u(b, s2 + 12); mdDuration = be32u(b, s2 + 16)
             }
           case "hdlr" if e2 - s2 >= 12 => handler = fourcc(b, s2 + 8)
           case "minf" =>
@@ -174,21 +166,21 @@ object Mp4 {
                 // entry: size(4) + format 4cc
                 codec = fourcc(b, s3 + 12)
               case "stts" if e3 - s3 >= 8 =>
-                val n = be32(b, s3 + 4).toInt
+                val n = be32u(b, s3 + 4).toInt
                 var k = 0; var total = 0L
                 while (k < n && s3 + 8 + k * 8 + 8 <= e3) {
-                  total += be32(b, s3 + 8 + k * 8); k += 1
+                  total += be32u(b, s3 + 8 + k * 8); k += 1
                 }
                 if (nSamples == 0) nSamples = total
               case "stsz" if e3 - s3 >= 12 =>
-                val uniform = be32(b, s3 + 4)
-                val n = be32(b, s3 + 8)
+                val uniform = be32u(b, s3 + 4)
+                val n = be32u(b, s3 + 8)
                 nSamples = n // stsz is authoritative when present
                 if (uniform > 0) totalBytes = uniform * n
                 else {
                   var k = 0; var total = 0L
                   while (k < n && s3 + 12 + k * 4 + 4 <= e3) {
-                    total += be32(b, s3 + 12 + k * 4); k += 1
+                    total += be32u(b, s3 + 12 + k * 4); k += 1
                   }
                   totalBytes = total
                 }
@@ -217,23 +209,23 @@ object Mp4 {
     var stscRuns: Array[(Long, Long)] = Array.empty // (firstChunk 1-based, samplesPerChunk)
     for ((t, s, e) <- boxes(b, stblS, stblE)) t match {
       case "stsz" if e - s >= 12 =>
-        sizesUniform = be32(b, s + 4)
-        nSamples = be32(b, s + 8).toInt
+        sizesUniform = be32u(b, s + 4)
+        nSamples = be32u(b, s + 8).toInt
         if (sizesUniform == 0) {
           val n = math.min(nSamples.toLong, (e - s - 12) / 4).toInt
-          sizes = Array.tabulate(n)(k => be32(b, s + 12 + k * 4))
+          sizes = Array.tabulate(n)(k => be32u(b, s + 12 + k * 4))
           nSamples = n
         }
       case "stco" if e - s >= 8 =>
-        val n = math.min(be32(b, s + 4), (e - s - 8) / 4).toInt
-        chunkOffsets = Array.tabulate(n)(k => be32(b, s + 8 + k * 4))
+        val n = math.min(be32u(b, s + 4), (e - s - 8) / 4).toInt
+        chunkOffsets = Array.tabulate(n)(k => be32u(b, s + 8 + k * 4))
       case "co64" if e - s >= 8 =>
-        val n = math.min(be32(b, s + 4), (e - s - 8) / 8).toInt
+        val n = math.min(be32u(b, s + 4), (e - s - 8) / 8).toInt
         chunkOffsets = Array.tabulate(n)(k => be64(b, s + 8 + k * 8))
       case "stsc" if e - s >= 8 =>
-        val n = math.min(be32(b, s + 4), (e - s - 8) / 12).toInt
+        val n = math.min(be32u(b, s + 4), (e - s - 8) / 12).toInt
         stscRuns = Array.tabulate(n)(k =>
-          (be32(b, s + 8 + k * 12), be32(b, s + 8 + k * 12 + 4)))
+          (be32u(b, s + 8 + k * 12), be32u(b, s + 8 + k * 12 + 4)))
       case _ => ()
     }
     if (nSamples == 0 || chunkOffsets.isEmpty || stscRuns.isEmpty)
@@ -340,12 +332,12 @@ object Mp4 {
       }
       val count =
         if (v < 2) { if (p + 2 > le) return None; val c = be16(b, p); p += 2; c }
-        else { if (p + 4 > le) return None; val c = be32(b, p).toInt; p += 4; c }
+        else { if (p + 4 > le) return None; val c = be32u(b, p).toInt; p += 4; c }
       var k = 0
       while (k < count && loc.isEmpty && p < le) {
         val iid =
           if (v < 2) { val x = be16(b, p).toLong; p += 2; x }
-          else { val x = be32(b, p); p += 4; x }
+          else { val x = be32u(b, p); p += 4; x }
         var method = 0
         if (v == 1 || v == 2) {
           if (p + 2 > le) return None
@@ -385,11 +377,11 @@ object Mp4 {
             while (k < n && cs + 4 + 2 * k + 2 <= ce) {
               out += be16(b, cs + 4 + 2 * k).toLong; k += 1
             }
-          } else if (v == 1 && ce - cs >= 6 && be32(b, cs) == from) {
+          } else if (v == 1 && ce - cs >= 6 && be32u(b, cs) == from) {
             val n = be16(b, cs + 4)
             var k = 0
             while (k < n && cs + 6 + 4 * k + 4 <= ce) {
-              out += be32(b, cs + 6 + 4 * k); k += 1
+              out += be32u(b, cs + 6 + 4 * k); k += 1
             }
           }
         }
@@ -423,7 +415,7 @@ object Mp4 {
         child(b, s, me, "pitm").foreach { case (ps, pe) =>
           val v = b(ps) & 0xFF
           if (v == 0 && ps + 6 <= pe) primary = be16(b, ps + 4).toLong
-          else if (v >= 1 && ps + 8 <= pe) primary = be32(b, ps + 4)
+          else if (v >= 1 && ps + 8 <= pe) primary = be32u(b, ps + 4)
         }
         var nItems = 0
         var primaryType = ""
@@ -431,13 +423,13 @@ object Mp4 {
           val v = b(is0) & 0xFF
           var p = is0 + 4
           if (v == 0 && p + 2 <= ie) { nItems = be16(b, p); p += 2 }
-          else if (p + 4 <= ie) { nItems = be32(b, p).toInt; p += 4 }
+          else if (p + 4 <= ie) { nItems = be32u(b, p).toInt; p += 4 }
           boxes(b, p, ie).foreach { case (tpe, es, ee) =>
             if (tpe == "infe" && ee - es >= 12) {
               val ev = b(es) & 0xFF
               val (iid, tOff) =
                 if (ev == 2) (be16(b, es + 4).toLong, es + 8)
-                else if (ev == 3) (be32(b, es + 4), es + 10)
+                else if (ev == 3) (be32u(b, es + 4), es + 10)
                 else (-1L, -1)
               if (iid == primary && tOff >= 0 && tOff + 4 <= ee)
                 primaryType = fourcc(b, tOff)
@@ -457,11 +449,11 @@ object Mp4 {
           def ispeAt(idx: Int): Option[(Int, Int)] =
             props.lift(idx - 1).collect {
               case ("ispe", ps, pe) if pe - ps >= 12 =>
-                (be32(b, ps + 4).toInt, be32(b, ps + 8).toInt)
+                (be32u(b, ps + 4).toInt, be32u(b, ps + 8).toInt)
             }
           child(b, rs, re, "ipma").foreach { case (as0, ae) =>
             val v = b(as0) & 0xFF
-            val wideIdx = (be32(b, as0) & 1L) == 1L // fullbox flags bit 0
+            val wideIdx = (be32u(b, as0) & 1L) == 1L // fullbox flags bit 0
             var p = as0 + 4
             if (p + 4 <= ae) {
               def walkAssoc(end: Int, iid: Long): Boolean = {
@@ -483,7 +475,7 @@ object Mp4 {
                 }
                 true
               }
-              val cnt = be32(b, p); p += 4
+              val cnt = be32u(b, p); p += 4
               var k = 0L
               var ok = true
               while (ok && k < cnt) {
@@ -491,7 +483,7 @@ object Mp4 {
                   val iid = be16(b, p).toLong; p += 2
                   ok = walkAssoc(ae, iid)
                 } else if (v >= 1 && p + 4 <= ae) {
-                  val iid = be32(b, p); p += 4
+                  val iid = be32u(b, p); p += 4
                   ok = walkAssoc(ae, iid)
                 } else ok = false
                 k += 1
@@ -501,7 +493,7 @@ object Mp4 {
           val dims = ispeByItem.get(primary).getOrElse {
             val all = props.collect {
               case ("ispe", ps, pe) if pe - ps >= 12 =>
-                (be32(b, ps + 4).toInt, be32(b, ps + 8).toInt)
+                (be32u(b, ps + 4).toInt, be32u(b, ps + 8).toInt)
             }
             if (all.isEmpty) (0, 0)
             else all.maxBy(d => d._1.toLong * d._2.toLong)
@@ -544,7 +536,7 @@ object Mp4 {
               if ((flags & 1) == 0 && ge - gs >= 8)
                 (be16(b, gs + 4), be16(b, gs + 6))
               else if ((flags & 1) == 1 && ge - gs >= 12)
-                (be32(b, gs + 4).toInt, be32(b, gs + 8).toInt)
+                (be32u(b, gs + 4).toInt, be32u(b, gs + 8).toInt)
               else (0, 0)
             val tiles = dimgRefs(b, s, me, primary)
             val consistent = tiles.isEmpty || tiles.length == rows * cols
@@ -592,7 +584,7 @@ object Mp4 {
               val ev = b(es) & 0xFF
               val (iid, tOff) =
                 if (ev == 2) (be16(b, es + 4).toLong, es + 8)
-                else if (ev == 3) (be32(b, es + 4), es + 10)
+                else if (ev == 3) (be32u(b, es + 4), es + 10)
                 else (-1L, -1)
               if (tOff >= 0 && tOff + 4 <= ee && fourcc(b, tOff) == "Exif")
                 exifId = iid
@@ -620,12 +612,12 @@ object Mp4 {
           }
           val count =
             if (v < 2) { if (p + 2 > le) return None; val c = be16(b, p); p += 2; c }
-            else { if (p + 4 > le) return None; val c = be32(b, p).toInt; p += 4; c }
+            else { if (p + 4 > le) return None; val c = be32u(b, p).toInt; p += 4; c }
           var k = 0
           while (k < count && loc.isEmpty && p < le) {
             val iid =
               if (v < 2) { val x = be16(b, p).toLong; p += 2; x }
-              else { val x = be32(b, p); p += 4; x }
+              else { val x = be32u(b, p); p += 4; x }
             var method = 0
             if (v == 1 || v == 2) {
               if (p + 2 > le) return None
@@ -656,7 +648,7 @@ object Mp4 {
             val end = (off + len).toInt
             // ExifDataBlock: u32 offset to the TIFF header (counts the
             // "Exif\0\0" identifier when present)
-            val skip = be32(b, start)
+            val skip = be32u(b, start)
             val base = start + 4 + skip
             if (skip < 0 || base + 8 > end) None
             else Exif.metaFromTiff(b, base.toInt, end)
@@ -666,6 +658,18 @@ object Mp4 {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
+  /** One ISO-BMFF box: big-endian size, the 4cc, then the payload parts
+    * — the grammar [[parse]] walks. Every box fixture (the HEIF stills
+    * below, the MP4 certificates, the soak corpora) is built through it.
+    */
+  private[graft] def box(tpe: String, parts: Array[Byte]*): Array[Byte] = {
+    val n = 8 + parts.map(_.length).sum
+    val bos = new java.io.ByteArrayOutputStream(n)
+    writeBe32(bos, n); bos.write(tpe.getBytes("US-ASCII"))
+    parts.foreach(bos.write)
+    bos.toByteArray
+  }
+
   /** HEIF fixture assembly (spec/certificate counterpart of [[heifMeta]]):
     * a two-item still — primary coded image + one auxiliary — whose ipco
     * holds the AUX ispe first and a LARGER aux image, so the right answer
@@ -673,23 +677,11 @@ object Mp4 {
     * largest-ispe shortcuts survive the oracle).
     */
   private[graft] object HeifBuild {
-    private def be32(v: Long): Array[Byte] = Array(
-      ((v >>> 24) & 0xFF).toByte, ((v >>> 16) & 0xFF).toByte,
-      ((v >>> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-    private def be16(v: Int): Array[Byte] =
-      Array(((v >>> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-    private def box(tpe: String, parts: Array[Byte]*): Array[Byte] = {
-      val n = 8 + parts.map(_.length).sum
-      val bos = new java.io.ByteArrayOutputStream(n)
-      bos.write(be32(n)); bos.write(tpe.getBytes("US-ASCII"))
-      parts.foreach(bos.write)
-      bos.toByteArray
-    }
     private val full0: Array[Byte] = Array(0, 0, 0, 0)
     private def ispe(w: Int, h: Int): Array[Byte] =
-      box("ispe", full0, be32(w), be32(h))
+      box("ispe", full0, be32Of(w), be32Of(h))
     private def infe(id: Int, tpe: String): Array[Byte] =
-      box("infe", Array[Byte](2, 0, 0, 0), be16(id), be16(0),
+      box("infe", Array[Byte](2, 0, 0, 0), be16Of(id), be16Of(0),
         tpe.getBytes("US-ASCII"), Array[Byte](0))
 
     /** One still image: primary item `itemType` at `w`×`h`, plus an aux
@@ -702,32 +694,32 @@ object Mp4 {
       */
     def still(brand: String, itemType: String, w: Int, h: Int,
         withIpma: Boolean = true, exifTiff: Array[Byte] = null): Array[Byte] = {
-      val hdlr = box("hdlr", full0, be32(0), "pict".getBytes("US-ASCII"),
+      val hdlr = box("hdlr", full0, be32Of(0), "pict".getBytes("US-ASCII"),
         new Array[Byte](12), Array[Byte](0))
-      val pitm = box("pitm", full0, be16(1))
+      val pitm = box("pitm", full0, be16Of(1))
       val iinf =
         if (exifTiff == null)
-          box("iinf", full0, be16(2), infe(1, itemType), infe(2, itemType))
+          box("iinf", full0, be16Of(2), infe(1, itemType), infe(2, itemType))
         else
-          box("iinf", full0, be16(3), infe(1, itemType), infe(2, itemType),
+          box("iinf", full0, be16Of(3), infe(1, itemType), infe(2, itemType),
             infe(3, "Exif"))
       // aux ispe FIRST and LARGER than the primary (ipma must pick idx 2);
       // without ipma the largest fallback lands on the aux dims
       val ipco = box("ipco", ispe(w * 2, h * 2), ispe(w, h))
-      val ipma = box("ipma", full0, be32(1),
-        be16(1), Array[Byte](1, 2)) // item 1: one association, index 2
+      val ipma = box("ipma", full0, be32Of(1),
+        be16Of(1), Array[Byte](1, 2)) // item 1: one association, index 2
       val iprp =
         if (withIpma) box("iprp", ipco, ipma) else box("iprp", ipco)
-      val ftypB = box("ftyp", brand.getBytes("US-ASCII"), be32(0))
+      val ftypB = box("ftyp", brand.getBytes("US-ASCII"), be32Of(0))
       if (exifTiff == null)
         ftypB ++ box("meta", full0, hdlr, pitm, iinf, iprp)
       else {
         // ExifDataBlock: u32 skip over "Exif\0\0", identifier, TIFF
-        val block = be32(6) ++ "Exif".getBytes("US-ASCII") ++
+        val block = be32Of(6) ++ "Exif".getBytes("US-ASCII") ++
           Array[Byte](0, 0) ++ exifTiff
         def iloc(fileOff: Long): Array[Byte] =
-          box("iloc", full0, Array[Byte](0x44, 0x00), be16(1),
-            be16(3), be16(0), be16(1), be32(fileOff), be32(block.length))
+          box("iloc", full0, Array[Byte](0x44, 0x00), be16Of(1),
+            be16Of(3), be16Of(0), be16Of(1), be32Of(fileOff), be32Of(block.length))
         // the iloc's field widths are fixed, so meta's LENGTH does not
         // depend on the offset value: measure with 0, then rebuild
         val metaLen =
@@ -750,29 +742,29 @@ object Mp4 {
         tileW: Int, tileH: Int, rows: Int = 2, cols: Int = 2,
         zeroOutputDims: Boolean = false): Array[Byte] = {
       val n = rows * cols
-      val hdlr = box("hdlr", full0, be32(0), "pict".getBytes("US-ASCII"),
+      val hdlr = box("hdlr", full0, be32Of(0), "pict".getBytes("US-ASCII"),
         new Array[Byte](12), Array[Byte](0))
-      val pitm = box("pitm", full0, be16(1))
+      val pitm = box("pitm", full0, be16Of(1))
       val infes = infe(1, "grid") +: (2 to n + 1).map(infe(_, "hvc1"))
-      val iinf = box("iinf", (Seq(full0, be16(n + 1)) ++ infes): _*)
+      val iinf = box("iinf", (Seq(full0, be16Of(n + 1)) ++ infes): _*)
       val dimg = box("dimg",
-        (Seq(be16(1), be16(n)) ++ (2 to n + 1).map(be16)): _*)
+        (Seq(be16Of(1), be16Of(n)) ++ (2 to n + 1).map(be16Of)): _*)
       val iref = box("iref", full0, dimg)
       // idx 1: the grid item's (wrong) ispe; idx 2: the tile ispe
       val ipco = box("ipco", ispe(canvasW + 7, canvasH + 7), ispe(tileW, tileH))
       val assoc = Array.concat(
-        (Seq(be16(1) ++ Array[Byte](1, 1)) ++
-          (2 to n + 1).map(i => be16(i) ++ Array[Byte](1, 2))): _*)
-      val ipma = box("ipma", full0, be32(n + 1), assoc)
+        (Seq(be16Of(1) ++ Array[Byte](1, 1)) ++
+          (2 to n + 1).map(i => be16Of(i) ++ Array[Byte](1, 2))): _*)
+      val ipma = box("ipma", full0, be32Of(n + 1), assoc)
       val iprp = box("iprp", ipco, ipma)
       val gridPayload = Array[Byte](0, 0, (rows - 1).toByte, (cols - 1).toByte) ++
-        (if (zeroOutputDims) be16(0) ++ be16(0)
-         else be16(canvasW) ++ be16(canvasH))
+        (if (zeroOutputDims) be16Of(0) ++ be16Of(0)
+         else be16Of(canvasW) ++ be16Of(canvasH))
       val iloc = box("iloc", Array[Byte](1, 0, 0, 0), Array[Byte](0x44, 0x00),
-        be16(1), be16(1), be16(1), be16(0), be16(1),
-        be32(0), be32(gridPayload.length))
+        be16Of(1), be16Of(1), be16Of(1), be16Of(0), be16Of(1),
+        be32Of(0), be32Of(gridPayload.length))
       val idat = box("idat", gridPayload)
-      box("ftyp", brand.getBytes("US-ASCII"), be32(0)) ++
+      box("ftyp", brand.getBytes("US-ASCII"), be32Of(0)) ++
         box("meta", full0, hdlr, pitm, iinf, iref, iprp, iloc, idat)
     }
   }

@@ -133,8 +133,7 @@ object Mpeg {
           val id = new String(b, i, 4, "US-ASCII")
           val size =
             if (major >= 4) syncsafe(b, i + 4)
-            else ((b(i + 4) & 0xFF) << 24) | ((b(i + 5) & 0xFF) << 16) |
-              ((b(i + 6) & 0xFF) << 8) | (b(i + 7) & 0xFF)
+            else Bytes.be32(b, i + 4)
           if (size <= 0 || i + 10 + size > tagEnd) ok = false
           else {
             if (id.startsWith("T") && size >= 1) {
@@ -206,11 +205,9 @@ object Mpeg {
                 val magic = new String(b, x, 4, "US-ASCII")
                 if (magic == "Xing" || magic == "Info") {
                   xingVbr = magic == "Xing"
-                  val flags = ((b(x + 4) & 0xFF) << 24) | ((b(x + 5) & 0xFF) << 16) |
-                    ((b(x + 6) & 0xFF) << 8) | (b(x + 7) & 0xFF)
+                  val flags = Bytes.be32(b, x + 4)
                   if ((flags & 1) != 0 && x + 12 <= b.length)
-                    xingFrames = ((b(x + 8) & 0xFFL) << 24) | ((b(x + 9) & 0xFFL) << 16) |
-                      ((b(x + 10) & 0xFFL) << 8) | (b(x + 11) & 0xFFL)
+                    xingFrames = Bytes.be32u(b, x + 8)
                 }
               }
             } else if (kbps != first._3) sawVariedBitrate = true

@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.ext.Bytes.{le16, le32, putLe16, putLe32}
+
 /** Legacy Word (.doc, Word 97–2003) text extraction — the highest-hit
   * binary document format in scraped office dumps. Implements the open
   * spec ([MS-DOC]) text path over the [[Cfb]] container:
@@ -103,13 +105,6 @@ object MsDoc {
     out.toString
   }
 
-  private def le16(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8) |
-      ((b(at + 2) & 0xFF) << 16) | ((b(at + 3) & 0xFF) << 24)
-
   // ----- deterministic builder (fixtures/certificates) ------------------
 
   /** Build a fast-saved-shaped `.doc`: the text arrives as CP-ordered
@@ -164,16 +159,5 @@ object MsDoc {
     putLe32(word, 0x01A6, table.length)   // lcbClx
 
     Cfb.build(Seq(("WordDocument", word), ("1Table", table)))
-  }
-
-  private def putLe16(b: Array[Byte], at: Int, v: Int): Unit = {
-    b(at) = (v & 0xFF).toByte; b(at + 1) = ((v >> 8) & 0xFF).toByte
-  }
-
-  private def putLe32(b: Array[Byte], at: Int, v: Int): Unit = {
-    b(at) = (v & 0xFF).toByte
-    b(at + 1) = ((v >> 8) & 0xFF).toByte
-    b(at + 2) = ((v >> 16) & 0xFF).toByte
-    b(at + 3) = ((v >> 24) & 0xFF).toByte
   }
 }

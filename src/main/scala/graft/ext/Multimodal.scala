@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ext.Bytes.{be16, be32, le16, le24, le32, le32u}
+
 /** Multimodal column support: image/audio/video payloads ride as opaque
   * `binary` columns with a typed metadata struct beside them.
   *
@@ -1023,8 +1025,7 @@ object Multimodal {
         if (depth > 4) return
         var i = start
         while (i + 8 <= end) {
-          val size = (bytes(i + 4) & 0xFF) | ((bytes(i + 5) & 0xFF) << 8) |
-            ((bytes(i + 6) & 0xFF) << 16) | ((bytes(i + 7) & 0xFF) << 24)
+          val size = le32(bytes, i + 4)
           if (size < 0 || size > end - i - 8) return
           val isList = bytes(i) == 'L' && bytes(i + 1) == 'I' &&
             bytes(i + 2) == 'S' && bytes(i + 3) == 'T'
@@ -1061,15 +1062,6 @@ object Multimodal {
 object ImageHeaders {
 
   private val PngMagic = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
-
-  private def be32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xFF) << 24) | ((b(i + 1) & 0xFF) << 16) | ((b(i + 2) & 0xFF) << 8) | (b(i + 3) & 0xFF)
-
-  private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xFF) << 8) | (b(i + 1) & 0xFF)
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
 
   /** PNG: 8-byte signature, then the IHDR chunk (len + "IHDR") with
     * width/height as big-endian u32 at offsets 16 and 20.
@@ -1125,13 +1117,6 @@ object ImageHeaders {
   */
 object AudioHeaders {
 
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) |
-      ((b(i + 2) & 0xFFL) << 16) | ((b(i + 3) & 0xFFL) << 24)
-
   /** (sampleRate, channels, bitsPerSample, durationMs). Walks the chunk
     * list rather than assuming the canonical 44-byte layout — real WAV
     * files may carry LIST/fact chunks before data.
@@ -1146,7 +1131,7 @@ object AudioHeaders {
     var corrupt = false
     while (!corrupt && i + 8 <= b.length) {
       val id = new String(b.slice(i, i + 4), "US-ASCII")
-      val size = le32(b, i + 4) // unsigned u32 ∈ [0, 0xFFFFFFFF]
+      val size = le32u(b, i + 4) // unsigned u32 ∈ [0, 0xFFFFFFFF]
       // A chunk size that overflows Int or runs past the payload means the
       // header is corrupt; bail rather than looping on a non-advancing index.
       if (size > Int.MaxValue - 9 || i + 8 + size > b.length.toLong) {
@@ -1160,8 +1145,8 @@ object AudioHeaders {
       } else {
         if (id == "fmt " && i + 24 <= b.length) {
           channels = le16(b, i + 10)
-          rate = le32(b, i + 12).toInt
-          byteRate = le32(b, i + 16)
+          rate = le32u(b, i + 12).toInt
+          byteRate = le32u(b, i + 16)
           bits = le16(b, i + 22)
         } else if (id == "data") {
           dataLen = size
@@ -1214,12 +1199,12 @@ object AudioHeaders {
     var dataOff = -1; var dataLen = 0
     while (i + 8 <= b.length) {
       val id = new String(b.slice(i, i + 4), "US-ASCII")
-      val size = le32(b, i + 4)
+      val size = le32u(b, i + 4)
       if (size > Int.MaxValue - 9 || i + 8 + size > b.length.toLong) return None
       if (id == "fmt " && i + 24 <= b.length) {
         fmtTag = le16(b, i + 8)
         channels = le16(b, i + 10)
-        rate = le32(b, i + 12).toInt
+        rate = le32u(b, i + 12).toInt
         blockAlign = le16(b, i + 20)
         bits = le16(b, i + 22)
       } else if (id == "data") {
@@ -1257,7 +1242,7 @@ object AudioHeaders {
         } else if (fmtTag == 3) {
           // IEEE float32 LE in [-1, 1] → floor(f·32768), clamped
           val f = java.lang.Float.intBitsToFloat(
-            le32(b, dataOff + s * 4).toInt)
+            le32u(b, dataOff + s * 4).toInt)
           if (f.isNaN) 0
           else math.max(-32768, math.min(32767,
             math.floor(f * 32768.0).toInt))
@@ -1268,9 +1253,7 @@ object AudioHeaders {
         } else {
           // 24-bit LE signed, stats on the top 16 bits (floor division
           // toward -inf = arithmetic shift, so quantization is monotone)
-          val raw = (b(dataOff + s * 3) & 0xFF) |
-            ((b(dataOff + s * 3 + 1) & 0xFF) << 8) |
-            ((b(dataOff + s * 3 + 2) & 0xFF) << 16)
+          val raw = le24(b, dataOff + s * 3)
           val signed = if (raw >= 0x800000) raw - 0x1000000 else raw
           signed >> 8
         }

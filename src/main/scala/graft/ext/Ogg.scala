@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.ext.Bytes.{le16, le32u, le64}
+
 /** Ogg container walk (RFC 3533) with Vorbis / Opus identification
   * headers — the metadata-triage arm for the open web-audio stack, the
   * sibling of [[Mpeg]] (MPEG audio headers) and [[Mp4]] (ISO-BMFF):
@@ -63,16 +65,6 @@ object Ogg {
     c
   }
 
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) |
-      ((b(i + 2) & 0xFFL) << 16) | ((b(i + 3) & 0xFFL) << 24)
-
-  private def le64(b: Array[Byte], i: Int): Long =
-    le32(b, i) | (le32(b, i + 4) << 32)
-
   /** Container metadata. None unless at least one CRC-valid page with a
     * recognizable begin-of-stream codec header is present.
     */
@@ -99,7 +91,7 @@ object Ogg {
             while (k < nSegs) { payloadLen += b(i + 27 + k) & 0xFF; k += 1 }
             val pageEnd = i + headerLen + payloadLen
             if (pageEnd <= b.length) {
-              val stored = le32(b, i + 22).toInt
+              val stored = le32u(b, i + 22).toInt
               val computed = crc(b, i, pageEnd, i + 22, i + 26)
               if (stored == computed) {
                 val headerType = b(i + 5) & 0xFF
@@ -114,14 +106,14 @@ object Ogg {
                       b(p + 4) == 'b' && b(p + 5) == 'i' && b(p + 6) == 's') {
                     codec = "vorbis"
                     channels = b(p + 11) & 0xFF
-                    rate = le32(b, p + 12).toInt
+                    rate = le32u(b, p + 12).toInt
                   } else if (payloadLen >= 19 && b(p) == 'O' && b(p + 1) == 'p' &&
                       b(p + 2) == 'u' && b(p + 3) == 's' && b(p + 4) == 'H' &&
                       b(p + 5) == 'e' && b(p + 6) == 'a' && b(p + 7) == 'd') {
                     codec = "opus"
                     channels = b(p + 9) & 0xFF
                     preSkip = le16(b, p + 10)
-                    rate = le32(b, p + 12).toInt
+                    rate = le32u(b, p + 12).toInt
                   } else if (payloadLen >= 7 && (b(p) & 0xFF) == 0x80 &&
                       b(p + 1) == 't' && b(p + 2) == 'h' && b(p + 3) == 'e' &&
                       b(p + 4) == 'o' && b(p + 5) == 'r' && b(p + 6) == 'a') {
@@ -182,10 +174,10 @@ object Ogg {
             while (k < nSegs) { payloadLen += b(i + 27 + k) & 0xFF; k += 1 }
             val pageEnd = i + headerLen + payloadLen
             if (pageEnd <= b.length) {
-              val stored = le32(b, i + 22).toInt
+              val stored = le32u(b, i + 22).toInt
               if (stored == crc(b, i, pageEnd, i + 22, i + 26)) {
                 val headerType = b(i + 5) & 0xFF
-                val pageSerial = le32(b, i + 14)
+                val pageSerial = le32u(b, i + 14)
                 if (serial == -1L && (headerType & 2) != 0) serial = pageSerial
                 if (serial == pageSerial) {
                   // a fresh page NOT flagged continued starts a new packet

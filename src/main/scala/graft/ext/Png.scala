@@ -2,6 +2,8 @@ package graft.ext
 
 import java.util.zip.{CRC32, Deflater, Inflater}
 
+import graft.ext.Bytes.{be32, putBe32}
+
 /** Pure-JVM PNG codec — REAL pixel decode/encode with zero external
   * dependencies (zlib via `java.util.zip`, CRC via `java.util.zip.CRC32`
   * — both core JDK).
@@ -42,10 +44,6 @@ object Png {
   }
 
   private[ext] val Magic = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
-
-  private[ext] def be32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xFF) << 24) | ((b(i + 1) & 0xFF) << 16) |
-      ((b(i + 2) & 0xFF) << 8) | (b(i + 3) & 0xFF)
 
   // ------------------------------------------------------------- decode
 
@@ -303,12 +301,7 @@ object Png {
     out.toByteArray
   }
 
-  private[ext] def putBe32(b: Array[Byte], i: Int, v: Int): Unit = {
-    b(i) = (v >>> 24).toByte; b(i + 1) = (v >>> 16).toByte
-    b(i + 2) = (v >>> 8).toByte; b(i + 3) = v.toByte
-  }
-
-  private[ext] def writeChunk(out: java.io.ByteArrayOutputStream, chunkType: String,
+  private[graft] def writeChunk(out: java.io.ByteArrayOutputStream, chunkType: String,
       data: Array[Byte]): Unit = {
     val len = new Array[Byte](4)
     putBe32(len, 0, data.length)

@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.ext.Bytes.{le16, le32, putLe16, putLe32}
+
 /** Legacy PowerPoint (.ppt) text extraction ([MS-PPT]) — the third leg
   * of the legacy-Office family on the [[Cfb]] container. The
   * `PowerPoint Document` stream is a tree of 8-byte-headed records
@@ -56,13 +58,6 @@ object Ppt {
   private def stripMarks(s: String): String =
     s.replace('\r', '\n').replace('\u000B', '\n')
 
-  private def le16(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8) |
-      ((b(at + 2) & 0xFF) << 16) | ((b(at + 3) & 0xFF) << 24)
-
   // ----- deterministic builder (fixtures/certificates) ------------------
 
   /** Build a deck-shaped record tree: a Document container holding one
@@ -93,16 +88,5 @@ object Ppt {
     val doc = container(0x03E8, slwts.flatten.toArray)      // DocumentContainer
     Cfb.build(Seq(("PowerPoint Document", doc),
       ("Current User", new Array[Byte](24))))
-  }
-
-  private def putLe16(b: Array[Byte], at: Int, v: Int): Unit = {
-    b(at) = (v & 0xFF).toByte; b(at + 1) = ((v >> 8) & 0xFF).toByte
-  }
-
-  private def putLe32(b: Array[Byte], at: Int, v: Int): Unit = {
-    b(at) = (v & 0xFF).toByte
-    b(at + 1) = ((v >> 8) & 0xFF).toByte
-    b(at + 2) = ((v >> 16) & 0xFF).toByte
-    b(at + 3) = ((v >> 24) & 0xFF).toByte
   }
 }

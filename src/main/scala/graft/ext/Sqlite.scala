@@ -2,6 +2,8 @@ package graft.ext
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.ext.Bytes.{be16, be32, putBe16, putBe32}
+
 /** SQLite database-file reader — the app-data format of a device/app
   * crawl (browser histories, chat exports, telemetry dumps, and a fair
   * number of published datasets ship `.sqlite`/`.db`). Implements the
@@ -113,7 +115,7 @@ object Sqlite {
 
   private object Geometry {
     def apply(b: Array[Byte]): Geometry = {
-      val raw = ((b(16) & 0xFF) << 8) | (b(17) & 0xFF)
+      val raw = be16(b, 16)
       val pageSize = if (raw == 1) 65536 else raw
       val reserved = b(20) & 0xFF
       Geometry(pageSize, pageSize - reserved)
@@ -146,14 +148,13 @@ object Sqlite {
     val base = pageStart(g, page)
     val hdr = base + (if (page == 1) 100 else 0)
     val typ = b(hdr) & 0xFF
-    val nCells = ((b(hdr + 3) & 0xFF) << 8) | (b(hdr + 4) & 0xFF)
+    val nCells = be16(b, hdr + 3)
     typ match {
       case 0x05 => // interior: left children then right-most pointer
         val ptrs = hdr + 12
         var k = 0
         while (k < nCells) {
-          val off = base + (((b(ptrs + 2 * k) & 0xFF) << 8) |
-            (b(ptrs + 2 * k + 1) & 0xFF))
+          val off = base + be16(b, ptrs + 2 * k)
           walkTable(b, g, be32(b, off), depth + 1)(f)
           k += 1
         }
@@ -162,8 +163,7 @@ object Sqlite {
         val ptrs = hdr + 8
         var k = 0
         while (k < nCells) {
-          var p = base + (((b(ptrs + 2 * k) & 0xFF) << 8) |
-            (b(ptrs + 2 * k + 1) & 0xFF))
+          var p = base + be16(b, ptrs + 2 * k)
           val (payloadLen, p1) = varint(b, p); p = p1
           val (rowid, p2) = varint(b, p); p = p2
           val payload = assemblePayload(b, g, p, payloadLen.toInt)
@@ -256,10 +256,6 @@ object Sqlite {
     while (k < n) { v = (v << 8) | (p(at + k) & 0xFFL); k += 1 }
     v
   }
-
-  private def be32(b: Array[Byte], at: Int): Int =
-    ((b(at) & 0xFF) << 24) | ((b(at + 1) & 0xFF) << 16) |
-      ((b(at + 2) & 0xFF) << 8) | (b(at + 3) & 0xFF)
 
   /** SQLite varint: 1-8 bytes of 7 bits high-bit-continued; a 9th byte
     * contributes all 8 bits. Returns (value, next offset).
@@ -414,8 +410,7 @@ object Sqlite {
     // ---- file header on page 1
     val h = pages(0)
     System.arraycopy(Magic, 0, h, 0, 16)
-    h(16) = ((pageSize >> 8) & 0xFF).toByte
-    h(17) = (pageSize & 0xFF).toByte
+    putBe16(h, 16, pageSize)
     h(18) = 1; h(19) = 1         // file format versions
     h(21) = 64; h(22) = 32; h(23) = 32
     putBe32(h, 28, pages.length) // size in pages
@@ -502,7 +497,7 @@ object Sqlite {
         val p = pages(pg - 1)
         p(0) = 0x05
         val n = kids.length - 1
-        p(3) = ((n >> 8) & 0xFF).toByte; p(4) = (n & 0xFF).toByte
+        putBe16(p, 3, n)
         putBe32(p, 8, kids.last._1) // right-most pointer
         var contentEnd = pageSize
         var k = 0
@@ -512,12 +507,10 @@ object Sqlite {
           contentEnd -= cell.length
           putBe32(cell, 0, child)
           System.arraycopy(cell, 0, p, contentEnd, cell.length)
-          p(12 + 2 * k) = ((contentEnd >> 8) & 0xFF).toByte
-          p(12 + 2 * k + 1) = (contentEnd & 0xFF).toByte
+          putBe16(p, 12 + 2 * k, contentEnd)
           k += 1
         }
-        p(5) = ((contentEnd >> 8) & 0xFF).toByte
-        p(6) = (contentEnd & 0xFF).toByte
+        putBe16(p, 5, contentEnd)
         (pg, kids.last._2)
       }.toSeq
     }
@@ -527,17 +520,14 @@ object Sqlite {
   private def writeLeaf(p: Array[Byte], hdrAt: Int,
       cells: Seq[(Long, Array[Byte])], pageSize: Int): Unit = {
     p(hdrAt) = 0x0D
-    p(hdrAt + 3) = ((cells.length >> 8) & 0xFF).toByte
-    p(hdrAt + 4) = (cells.length & 0xFF).toByte
+    putBe16(p, hdrAt + 3, cells.length)
     var contentEnd = pageSize
     cells.zipWithIndex.foreach { case ((_, cell), k) =>
       contentEnd -= cell.length
       System.arraycopy(cell, 0, p, contentEnd, cell.length)
-      p(hdrAt + 8 + 2 * k) = ((contentEnd >> 8) & 0xFF).toByte
-      p(hdrAt + 8 + 2 * k + 1) = (contentEnd & 0xFF).toByte
+      putBe16(p, hdrAt + 8 + 2 * k, contentEnd)
     }
-    p(hdrAt + 5) = ((contentEnd >> 8) & 0xFF).toByte
-    p(hdrAt + 6) = (contentEnd & 0xFF).toByte
+    putBe16(p, hdrAt + 5, contentEnd)
   }
 
   private[ext] def encodeRecord(raw: Seq[Value]): Array[Byte] = {
@@ -612,12 +602,5 @@ object Sqlite {
       while (k < out.length - 1) { out(k) = (out(k) | 0x80).toByte; k += 1 }
       out
     }
-  }
-
-  private def putBe32(b: Array[Byte], at: Int, v: Int): Unit = {
-    b(at) = ((v >> 24) & 0xFF).toByte
-    b(at + 1) = ((v >> 16) & 0xFF).toByte
-    b(at + 2) = ((v >> 8) & 0xFF).toByte
-    b(at + 3) = (v & 0xFF).toByte
   }
 }

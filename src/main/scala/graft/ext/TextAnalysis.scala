@@ -277,9 +277,6 @@ object TextAnalysis {
   /** 128-bit content fingerprint (md5 hex — portable across engines). */
   def fingerprintMd5(text: Column): Column = md5(text)
 
-  /** 64-bit xxhash fingerprint (fast path for shuffle keys / dedup). */
-  def fingerprint64(text: Column): Column = xxhash64(text)
-
   /** Word n-grams of a text column. Production form is the fused
     * zero-copy kernel ([[graft.functions.TextKernels.word_ngrams]]):
     * each n-gram is a byte-range view of the input (an n-gram joined

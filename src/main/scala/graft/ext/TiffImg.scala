@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.ext.Bytes.{put16, put32, putLe32, u16, u32}
+
 /** TIFF pixel decode — lifts the q_tiff_meta envelope cut ("pixel codecs
   * out of envelope"): baseline strips in both byte orders, uncompressed
   * (1), LZW (5, the TIFF variant: MSB-first codes, Clear=256/EOI=257,
@@ -228,25 +230,19 @@ object TiffImg {
   def decode(b: Array[Byte]): Option[Png.Image] = {
     try {
       if (b == null || b.length < 8) return None
-      val le =
-        if (b(0) == 'I' && b(1) == 'I') true
-        else if (b(0) == 'M' && b(1) == 'M') false
+      val be =
+        if (b(0) == 'I' && b(1) == 'I') false
+        else if (b(0) == 'M' && b(1) == 'M') true
         else return None
-      def u16(i: Int): Int =
-        if (le) (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-        else ((b(i) & 0xFF) << 8) | (b(i + 1) & 0xFF)
-      def u32(i: Int): Long =
-        if (le) (u16(i).toLong) | (u16(i + 2).toLong << 16)
-        else (u16(i).toLong << 16) | u16(i + 2).toLong
-      if (u16(2) != 42) return None
-      val ifd = u32(4).toInt
+      if (u16(b, 2, be) != 42) return None
+      val ifd = u32(b, 4, be).toInt
       if (ifd < 8 || ifd + 2 > b.length) return None
-      val n = u16(ifd)
+      val n = u16(b, ifd, be)
       if (ifd + 2 + n * 12 > b.length) return None
       // tag → LONG-widened values (SHORT/LONG only — all we need)
       def values(e: Int): Option[Array[Long]] = {
-        val tpe = u16(e + 2)
-        val cnt = u32(e + 4)
+        val tpe = u16(b, e + 2, be)
+        val cnt = u32(b, e + 4, be)
         if (cnt <= 0 || cnt > (1L << 20)) return None
         val elemSize = tpe match {
           case 3 => 2
@@ -257,12 +253,12 @@ object TiffImg {
         val at =
           if (total <= 4) e + 8
           else {
-            val off = u32(e + 8).toInt
+            val off = u32(b, e + 8, be).toInt
             if (off < 0 || off + total > b.length) return None
             off
           }
         Some(Array.tabulate(cnt.toInt)(k =>
-          if (elemSize == 2) u16(at + k * 2).toLong else u32(at + k * 4)))
+          if (elemSize == 2) u16(b, at + k * 2, be).toLong else u32(b, at + k * 4, be)))
       }
       var width = 0L; var height = 0L
       var bits: Array[Long] = Array(1L)
@@ -273,7 +269,7 @@ object TiffImg {
       var k2 = 0
       while (k2 < n) {
         val e = ifd + 2 + k2 * 12
-        u16(e) match {
+        u16(b, e, be) match {
           case 256 => width = values(e).flatMap(_.headOption).getOrElse(0L)
           case 257 => height = values(e).flatMap(_.headOption).getOrElse(0L)
           case 258 => bits = values(e).getOrElse(return None)
@@ -475,19 +471,7 @@ object TiffImg {
     val stripOffs = strips.map { s2 => val o = dataOff; dataOff += s2.length; o }
     val total = dataOff
     val b = new Array[Byte](total)
-    def w16(i: Int, v: Int): Unit =
-      if (bigEndian) { b(i) = (v >>> 8).toByte; b(i + 1) = v.toByte }
-      else { b(i) = v.toByte; b(i + 1) = (v >>> 8).toByte }
-    def w32(i: Int, v: Long): Unit =
-      if (bigEndian) {
-        b(i) = (v >>> 24).toByte; b(i + 1) = (v >>> 16).toByte
-        b(i + 2) = (v >>> 8).toByte; b(i + 3) = v.toByte
-      } else {
-        b(i) = v.toByte; b(i + 1) = (v >>> 8).toByte
-        b(i + 2) = (v >>> 16).toByte; b(i + 3) = (v >>> 24).toByte
-      }
-    if (bigEndian) { b(0) = 'M'; b(1) = 'M' } else { b(0) = 'I'; b(1) = 'I' }
-    w16(2, 42); w32(4, ifdOff)
+    putHeader(b, ifdOff, bigEndian)
     // entries, ascending tag order
     tags += ((256, 3, 1L, img.width.toLong))
     tags += ((257, 3, 1L, img.height.toLong))
@@ -503,27 +487,14 @@ object TiffImg {
       else strips.head.length.toLong))
     if (predictor == 2) tags += ((317, 3, 1L, 2L))
     val sorted = tags.sortBy(_._1)
-    w16(ifdOff, sorted.length)
-    sorted.zipWithIndex.foreach { case ((tag, tpe, cnt, value), k) =>
-      val e = ifdOff + 2 + k * 12
-      w16(e, tag); w16(e + 2, tpe); w32(e + 4, cnt)
-      if (tag == 258 && needBitsHeap) w32(e + 8, value)
-      else if ((tag == 273 || tag == 279) && needStripHeap) w32(e + 8, value)
-      else if (tpe == 3 && cnt == 1) {
-        // inline SHORT sits in the first two bytes of the value field
-        w16(e + 8, value.toInt); w16(e + 10, 0)
-      } else if (tpe == 3 && cnt == 2) {
-        w16(e + 8, (value & 0xFFFF).toInt); w16(e + 10, (value >> 16).toInt)
-      } else w32(e + 8, value)
-    }
-    w32(ifdOff + 2 + sorted.length * 12, 0) // next-IFD terminator
-    if (needBitsHeap) (0 until ch).foreach(k => w16(bitsOff + k * 2, 8))
+    putIfd(b, ifdOff, sorted.toSeq, bigEndian)
+    if (needBitsHeap) (0 until ch).foreach(k => put16(b, bitsOff + k * 2, 8, bigEndian))
     if (needStripHeap) {
       stripOffs.zipWithIndex.foreach { case (o, k) =>
-        w32(stripOffsOff + k * 4, o.toLong)
+        put32(b, stripOffsOff + k * 4, o, bigEndian)
       }
       strips.zipWithIndex.foreach { case (s2, k) =>
-        w32(stripOffsOff + nStrips * 4 + k * 4, s2.length.toLong)
+        put32(b, stripOffsOff + nStrips * 4 + k * 4, s2.length, bigEndian)
       }
     }
     strips.zip(stripOffs).foreach { case (s2, o) =>
@@ -569,14 +540,7 @@ object TiffImg {
     var dataOff = heap
     val stripOffs = strips.map { s => val o = dataOff; dataOff += s.length; o }
     val b = new Array[Byte](dataOff)
-    def w16(o: Int, v: Int): Unit = {
-      b(o) = v.toByte; b(o + 1) = (v >>> 8).toByte
-    }
-    def w32(o: Int, v: Long): Unit = {
-      b(o) = v.toByte; b(o + 1) = (v >>> 8).toByte
-      b(o + 2) = (v >>> 16).toByte; b(o + 3) = (v >>> 24).toByte
-    }
-    b(0) = 'I'; b(1) = 'I'; w16(2, 42); w32(4, ifdOff)
+    putHeader(b, ifdOff, bigEndian = false)
     var tags = Vector[(Int, Int, Long, Long)](
       (256, 3, 1L, w.toLong),
       (257, 3, 1L, h.toLong),
@@ -592,25 +556,56 @@ object TiffImg {
         else strips.head.length.toLong))
     if (compression == 3) tags = tags :+ ((292, 4, 1L, t4Options.toLong))
     val sorted = tags.sortBy(_._1)
-    w16(ifdOff, sorted.length)
-    sorted.zipWithIndex.foreach { case ((tag, tpe, cnt, value), k) =>
-      val e = ifdOff + 2 + k * 12
-      w16(e, tag); w16(e + 2, tpe); w32(e + 4, cnt)
-      if (tpe == 3) { w16(e + 8, value.toInt); w16(e + 10, 0) }
-      else w32(e + 8, value)
-    }
-    w32(ifdOff + 2 + sorted.length * 12, 0)
+    putIfd(b, ifdOff, sorted, bigEndian = false)
     if (needStripHeap) {
       stripOffs.zipWithIndex.foreach { case (o, k) =>
-        w32(stripOffsOff + k * 4, o.toLong)
+        putLe32(b, stripOffsOff + k * 4, o)
       }
       strips.zipWithIndex.foreach { case (s, k) =>
-        w32(stripOffsOff + nStrips * 4 + k * 4, s.length.toLong)
+        putLe32(b, stripOffsOff + nStrips * 4 + k * 4, s.length)
       }
     }
     strips.zip(stripOffs).foreach { case (s, o) =>
       System.arraycopy(s, 0, b, o, s.length)
     }
     b
+  }
+
+  // ------------------------------------------------- IFD writers
+
+  /** The 8-byte TIFF header: byte-order mark, 42, first-IFD offset. */
+  private[graft] def putHeader(b: Array[Byte], ifdOff: Int, bigEndian: Boolean): Unit = {
+    if (bigEndian) { b(0) = 'M'; b(1) = 'M' } else { b(0) = 'I'; b(1) = 'I' }
+    put16(b, 2, 42, bigEndian); put32(b, 4, ifdOff, bigEndian)
+  }
+
+  /** One 12-byte IFD entry at `at`: tag, type, count, value field. An
+    * inline SHORT sits left-justified in the value field: one SHORT is
+    * written with a zero SHORT after it, two are split from `value`
+    * low half first. Anything else (LONG, an ASCII or heap offset, a
+    * SHORT array too long to inline) writes `value` as one LONG.
+    */
+  private def putIfdEntry(b: Array[Byte], at: Int, tag: Int, tpe: Int,
+      cnt: Long, value: Long, bigEndian: Boolean): Unit = {
+    put16(b, at, tag, bigEndian); put16(b, at + 2, tpe, bigEndian)
+    put32(b, at + 4, cnt, bigEndian)
+    if (tpe == 3 && cnt == 1) {
+      put16(b, at + 8, value.toInt, bigEndian); put16(b, at + 10, 0, bigEndian)
+    } else if (tpe == 3 && cnt == 2) {
+      put16(b, at + 8, (value & 0xFFFF).toInt, bigEndian)
+      put16(b, at + 10, (value >> 16).toInt, bigEndian)
+    } else put32(b, at + 8, value, bigEndian)
+  }
+
+  /** A whole IFD at `at`: entry count, the `(tag, type, count, value)`
+    * entries in the order given, then a zero next-IFD offset.
+    */
+  private[graft] def putIfd(b: Array[Byte], at: Int,
+      entries: Seq[(Int, Int, Long, Long)], bigEndian: Boolean): Unit = {
+    put16(b, at, entries.length, bigEndian)
+    entries.zipWithIndex.foreach { case ((tag, tpe, cnt, value), k) =>
+      putIfdEntry(b, at + 2 + k * 12, tag, tpe, cnt, value, bigEndian)
+    }
+    put32(b, at + 2 + entries.length * 12, 0, bigEndian)
   }
 }

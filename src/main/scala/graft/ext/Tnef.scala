@@ -2,6 +2,8 @@ package graft.ext
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.ext.Bytes.{le16, le32, writeLe16, writeLe32}
+
 /** TNEF (`winmail.dat`, [MS-OXTNEF]) — the transport-neutral wrapper
   * Outlook attaches to mail when rich content rides along; mail-dump
   * crawls are littered with them and the payload (body + the REAL
@@ -147,13 +149,6 @@ object Tnef {
     None
   }
 
-  private def le16(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8) |
-      ((b(at + 2) & 0xFF) << 16) | ((b(at + 3) & 0xFF) << 24)
-
   // ----- deterministic builder (fixtures/certificates) ------------------
 
   /** Outlook-shaped TNEF: version + codepage preamble, subject, either
@@ -163,16 +158,16 @@ object Tnef {
   private[graft] def build(subject: String, body: String, rtfBody: Boolean,
       attachments: Seq[(String, Array[Byte])]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    putLe32(out, Signature)
+    writeLe32(out, Signature)
     out.write(0x12); out.write(0x34) // attach key
     def attr(level: Int, id: Int, data: Array[Byte]): Unit = {
       out.write(level)
-      putLe32(out, id)
-      putLe32(out, data.length)
+      writeLe32(out, id)
+      writeLe32(out, data.length)
       out.write(data)
       var sum = 0
       data.foreach(x => sum = (sum + (x & 0xFF)) & 0xFFFF)
-      out.write(sum & 0xFF); out.write((sum >> 8) & 0xFF)
+      writeLe16(out, sum)
     }
     attr(1, AttTnefVersion, Array[Byte](0, 0, 1, 0))
     attr(1, AttOemCodepage, Array[Byte](0xE4.toByte, 4, 0, 0, 0, 0, 0, 0))
@@ -180,14 +175,14 @@ object Tnef {
     if (rtfBody) {
       val comp = Lzfu.compress(Rtf.build(body).getBytes("US-ASCII"))
       val props = new java.io.ByteArrayOutputStream()
-      putLe32(props, 2)
+      writeLe32(props, 2)
       // a leading i32 property the walk must skip over
       props.write(3); props.write(0); props.write(0x07); props.write(0x30)
-      putLe32(props, 42)
+      writeLe32(props, 42)
       // PR_RTF_COMPRESSED as PT_BINARY
       props.write(2); props.write(1); props.write(9); props.write(0x10)
-      putLe32(props, 1)
-      putLe32(props, comp.length)
+      writeLe32(props, 1)
+      writeLe32(props, comp.length)
       props.write(comp)
       var pad = (4 - comp.length % 4) % 4
       while (pad > 0) { props.write(0); pad -= 1 }
@@ -201,10 +196,5 @@ object Tnef {
       attr(2, AttAttachData, data)
     }
     out.toByteArray
-  }
-
-  private def putLe32(o: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    o.write(v & 0xFF); o.write((v >> 8) & 0xFF)
-    o.write((v >> 16) & 0xFF); o.write((v >> 24) & 0xFF)
   }
 }

@@ -76,7 +76,6 @@ object Vorbis {
       v
     }
     def bit(): Int = bits(1)
-    def atEnd: Boolean = (pos >> 3) >= b.length
   }
 
   private def ilog(x0: Int): Int = {

@@ -38,7 +38,6 @@ object Vp8 {
   final case class Yuv(width: Int, height: Int,
       y: Array[Byte], u: Array[Byte], v: Array[Byte]) {
     def chromaW: Int = (width + 1) / 2
-    def chromaH: Int = (height + 1) / 2
   }
 
   // ------------------------------------------------------- bool decoder
@@ -173,8 +172,7 @@ object Vp8 {
     var p = 12
     while (p + 8 <= b.length) {
       val cc = new String(b, p, 4, "US-ASCII")
-      val len = (b(p + 4) & 0xFFL) | ((b(p + 5) & 0xFFL) << 8) |
-        ((b(p + 6) & 0xFFL) << 16) | ((b(p + 7) & 0xFFL) << 24)
+      val len = Bytes.le32u(b, p + 4)
       val payload = p + 8L
       if (payload + len > b.length) return None
       if (cc == "VP8 ") return Some((payload.toInt, (payload + len).toInt))
@@ -203,7 +201,7 @@ object Vp8 {
 
   private def decodeFrameImpl(b: Array[Byte], start: Int, end: Int): Option[Yuv] = {
     if (end - start < 10 || end > b.length) return None
-    val tag = (b(start) & 0xFF) | ((b(start + 1) & 0xFF) << 8) | ((b(start + 2) & 0xFF) << 16)
+    val tag = Bytes.le24(b, start)
     val keyFrame = (tag & 1) == 0
     val version = (tag >> 1) & 7
     val show = (tag >> 4) & 1
@@ -211,8 +209,8 @@ object Vp8 {
     if (!keyFrame || version > 3 || show != 1) return None
     if (!(b(start + 3) == 0x9d.toByte && b(start + 4) == 0x01.toByte &&
           b(start + 5) == 0x2a.toByte)) return None
-    val width = ((b(start + 6) & 0xFF) | ((b(start + 7) & 0xFF) << 8)) & 0x3FFF
-    val height = ((b(start + 8) & 0xFF) | ((b(start + 9) & 0xFF) << 8)) & 0x3FFF
+    val width = Bytes.le16(b, start + 6) & 0x3FFF
+    val height = Bytes.le16(b, start + 8) & 0x3FFF
     // full 14-bit dim range (WebP's own limit): worst case 16383² is
     // ~0.7 GB of planes+borders — bounded, and huge-valid images decode
     if (width == 0 || height == 0 || width > 16383 || height > 16383) return None
@@ -277,8 +275,7 @@ object Vp8 {
     while (pi < numParts) {
       val sz =
         if (pi == numParts - 1) end - off
-        else (b(sizesAt + 3 * pi) & 0xFF) | ((b(sizesAt + 3 * pi + 1) & 0xFF) << 8) |
-          ((b(sizesAt + 3 * pi + 2) & 0xFF) << 16)
+        else Bytes.le24(b, sizesAt + 3 * pi)
       if (sz < 0 || off + sz > end) return None
       partStart(pi) = off; partLim(pi) = off + sz
       off += sz

@@ -549,8 +549,7 @@ object Vp8l {
       var p = 12
       while (p + 8 <= b.length) {
         val cc = new String(b, p, 4, "US-ASCII")
-        val size = ((b(p + 4) & 0xFF) | ((b(p + 5) & 0xFF) << 8) |
-          ((b(p + 6) & 0xFF) << 16) | ((b(p + 7) & 0xFF) << 24))
+        val size = Bytes.le32(b, p + 4)
         if (size < 0 || p + 8 + size > b.length) return None
         if (cc == "VP8L")
           return decodePayload(java.util.Arrays.copyOfRange(b, p + 8, p + 8 + size))

@@ -127,10 +127,7 @@ object Warc {
       val bytes = member.toByteArray
       val crc = new java.util.zip.CRC32()
       crc.update(bytes)
-      val t = p + consumed
-      val stored = (blob(t) & 0xffL) | ((blob(t + 1) & 0xffL) << 8) |
-        ((blob(t + 2) & 0xffL) << 16) | ((blob(t + 3) & 0xffL) << 24)
-      if (crc.getValue != stored) return None
+      if (crc.getValue != Bytes.le32u(blob, p + consumed)) return None
       Some((bytes, p + consumed + 8))
     } finally inf.reset()
   }

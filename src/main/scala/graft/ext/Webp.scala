@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.ext.Bytes.{le16, le24, le24Of, le32Of, le32u}
+
 /** WebP container walk (RFC 9649) — the TRIAGE arm for the web's third
   * image format: variant, pixel dimensions, alpha / animation /
   * metadata presence and frame count from pure byte reads. Pixel decode
@@ -40,13 +42,6 @@ object Webp {
       has_icc: Boolean,
       n_frames: Int) // ANMF count; 0 for still images
 
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-  private def u24le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8) | ((b(i + 2) & 0xFF) << 16)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) |
-      ((b(i + 2) & 0xFFL) << 16) | ((b(i + 3) & 0xFFL) << 24)
   private def fourcc(b: Array[Byte], i: Int): String =
     new String(b, i, 4, "US-ASCII")
 
@@ -55,11 +50,11 @@ object Webp {
     */
   private def lossyDims(b: Array[Byte], p: Int, end: Int): Option[(Int, Int)] = {
     if (p + 10 > end) return None
-    val tag = u24le(b, p)
+    val tag = le24(b, p)
     if ((tag & 1) != 0) return None // interframe can't open a still
     if ((b(p + 3) & 0xFF) != 0x9D || (b(p + 4) & 0xFF) != 0x01 ||
       (b(p + 5) & 0xFF) != 0x2A) return None
-    Some((u16le(b, p + 6) & 0x3FFF, u16le(b, p + 8) & 0x3FFF))
+    Some((le16(b, p + 6) & 0x3FFF, le16(b, p + 8) & 0x3FFF))
   }
 
   /** (width, height, alpha) from a 'VP8L' (lossless) chunk payload:
@@ -68,7 +63,7 @@ object Webp {
   private def losslessDims(b: Array[Byte], p: Int, end: Int): Option[(Int, Int, Boolean)] = {
     if (p + 5 > end) return None
     if ((b(p) & 0xFF) != 0x2F) return None
-    val v = u32le(b, p + 1)
+    val v = le32u(b, p + 1)
     if (((v >>> 29) & 0x7) != 0) return None // version must be 0
     Some((((v & 0x3FFF) + 1).toInt, (((v >> 14) & 0x3FFF) + 1).toInt,
       ((v >> 28) & 1) == 1))
@@ -81,18 +76,18 @@ object Webp {
     if (b == null || b.length < 20) return None
     if (fourcc(b, 0) != "RIFF" || fourcc(b, 8) != "WEBP") return None
     // chunk walk bound: the declared RIFF size, clamped to the payload
-    val end = math.min(b.length.toLong, 8L + u32le(b, 4)).toInt
+    val end = math.min(b.length.toLong, 8L + le32u(b, 4)).toInt
     var p = 12
     if (p + 8 > end) return None
     fourcc(b, p) match {
       case "VP8 " =>
-        lossyDims(b, p + 8, math.min(end.toLong, p + 8L + u32le(b, p + 4)).toInt)
+        lossyDims(b, p + 8, math.min(end.toLong, p + 8L + le32u(b, p + 4)).toInt)
           .map { case (w, h) =>
             WebpMeta("lossy", w, h, has_alpha = false, has_animation = false,
               has_exif = false, has_icc = false, n_frames = 0)
           }
       case "VP8L" =>
-        losslessDims(b, p + 8, math.min(end.toLong, p + 8L + u32le(b, p + 4)).toInt)
+        losslessDims(b, p + 8, math.min(end.toLong, p + 8L + le32u(b, p + 4)).toInt)
           .map { case (w, h, a) =>
             WebpMeta("lossless", w, h, has_alpha = a, has_animation = false,
               has_exif = false, has_icc = false, n_frames = 0)
@@ -104,17 +99,17 @@ object Webp {
         var alpha = (f & 0x10) != 0
         var exif = (f & 0x08) != 0
         val anim = (f & 0x02) != 0
-        val w = u24le(b, p + 12) + 1
-        val h = u24le(b, p + 15) + 1
+        val w = le24(b, p + 12) + 1
+        val h = le24(b, p + 15) + 1
         // count animation frames / confirm feature chunks; headers only,
         // payloads skipped by size — damage cuts the walk short with the
         // chunks seen so far
         var frames = 0
-        val sz0 = u32le(b, p + 4)
+        val sz0 = le32u(b, p + 4)
         var q = math.min(end.toLong, p + 8L + sz0 + (sz0 & 1L)).toInt
         while (q + 8 <= end) {
           val cc = fourcc(b, q)
-          val sz = u32le(b, q + 4)
+          val sz = le32u(b, q + 4)
           if (cc == "ANMF") frames += 1
           else if (cc == "ALPH") alpha = true
           else if (cc == "EXIF") exif = true
@@ -133,11 +128,11 @@ object Webp {
   def exif(b: Array[Byte]): Option[Exif.ExifMeta] = {
     if (b == null || b.length < 20) return None
     if (fourcc(b, 0) != "RIFF" || fourcc(b, 8) != "WEBP") return None
-    val end = math.min(b.length.toLong, 8L + u32le(b, 4)).toInt
+    val end = math.min(b.length.toLong, 8L + le32u(b, 4)).toInt
     var p = 12
     while (p + 8 <= end) {
       val cc = fourcc(b, p)
-      val sz = u32le(b, p + 4)
+      val sz = le32u(b, p + 4)
       val ds = p + 8
       val de = math.min(end.toLong, ds + sz).toInt
       if (cc == "EXIF" && de - ds >= 8) {
@@ -164,7 +159,7 @@ object Webp {
   def stripMeta(b: Array[Byte]): Array[Byte] = {
     if (b == null || b.length < 20) return b
     if (fourcc(b, 0) != "RIFF" || fourcc(b, 8) != "WEBP") return b
-    val end = math.min(b.length.toLong, 8L + u32le(b, 4)).toInt
+    val end = math.min(b.length.toLong, 8L + le32u(b, 4)).toInt
     // first pass: anything to strip?
     var p = 12
     var found = false
@@ -172,7 +167,7 @@ object Webp {
       val cc = fourcc(b, p)
       if (cc == "EXIF" || cc == "XMP ") found = true
       else {
-        val sz = u32le(b, p + 4)
+        val sz = le32u(b, p + 4)
         val next = p + 8L + sz + (sz & 1L)
         p = if (next > end || next <= p) end else next.toInt
       }
@@ -183,7 +178,7 @@ object Webp {
     p = 12
     while (p + 8 <= end) {
       val cc = fourcc(b, p)
-      val sz = u32le(b, p + 4)
+      val sz = le32u(b, p + 4)
       val full = math.min(end.toLong, p + 8L + sz + (sz & 1L)).toInt
       if (cc != "EXIF" && cc != "XMP ") {
         if (cc == "VP8X" && full - p >= 9) {
@@ -196,11 +191,7 @@ object Webp {
       p = if (full <= p) end else full
     }
     val bytes = out.toByteArray
-    val size = bytes.length - 8L
-    bytes(4) = (size & 0xFF).toByte
-    bytes(5) = ((size >> 8) & 0xFF).toByte
-    bytes(6) = ((size >> 16) & 0xFF).toByte
-    bytes(7) = ((size >> 24) & 0xFF).toByte
+    Bytes.putLe32(bytes, 4, bytes.length - 8L)
     bytes
   }
 
@@ -223,11 +214,11 @@ object Webp {
     val w = m.width
     val h = m.height
     if (w.toLong * h > 16L * 1024 * 1024) return None
-    val end = math.min(b.length.toLong, 8L + u32le(b, 4)).toInt
+    val end = math.min(b.length.toLong, 8L + le32u(b, 4)).toInt
     var p = 12
     while (p + 8 <= end) {
       val cc = fourcc(b, p)
-      val sz = u32le(b, p + 4)
+      val sz = le32u(b, p + 4)
       val ds = p + 8
       val de = math.min(end.toLong, ds + sz).toInt
       if (cc == "ALPH" && de - ds >= 1)
@@ -302,24 +293,17 @@ object Webp {
 
   // ---- fixture builders (spec / certificate counterparts) ------------
 
-  private def le32(v: Long): Array[Byte] =
-    Array((v & 0xFF).toByte, ((v >> 8) & 0xFF).toByte,
-      ((v >> 16) & 0xFF).toByte, ((v >> 24) & 0xFF).toByte)
-  private def le24(v: Int): Array[Byte] =
-    Array((v & 0xFF).toByte, ((v >> 8) & 0xFF).toByte,
-      ((v >> 16) & 0xFF).toByte)
-
   /** One padded chunk: FourCC + size + payload (+ pad byte if odd). */
   private[graft] def chunk(cc: String, payload: Array[Byte]): Array[Byte] = {
     require(cc.length == 4, s"FourCC must be 4 chars: $cc")
     val pad = if (payload.length % 2 == 1) Array(0.toByte) else Array.emptyByteArray
-    cc.getBytes("US-ASCII") ++ le32(payload.length.toLong) ++ payload ++ pad
+    cc.getBytes("US-ASCII") ++ le32Of(payload.length) ++ payload ++ pad
   }
 
   /** RIFF/WEBP container around pre-built chunks. */
   private[graft] def container(chunks: Array[Byte]*): Array[Byte] = {
     val body = "WEBP".getBytes("US-ASCII") ++ chunks.flatten
-    "RIFF".getBytes("US-ASCII") ++ le32(body.length.toLong) ++ body
+    "RIFF".getBytes("US-ASCII") ++ le32Of(body.length) ++ body
   }
 
   /** 'VP8 ' lossy key-frame header bytes for the given dimensions (the
@@ -339,7 +323,7 @@ object Webp {
     require(w >= 1 && w <= 0x4000 && h >= 1 && h <= 0x4000, s"dims: ${w}x$h")
     val v = (w - 1).toLong | ((h - 1).toLong << 14) |
       (if (alpha) 1L << 28 else 0L)
-    chunk("VP8L", Array(0x2F.toByte) ++ le32(v))
+    chunk("VP8L", Array(0x2F.toByte) ++ le32Of(v))
   }
 
   /** Decoded animation frames of an extended WebP: every ANMF chunk's
@@ -362,14 +346,14 @@ object Webp {
       var sawAnmf = false
       while (p + 8 <= b.length) {
         val cc = fourcc(b, p)
-        val size = u32le(b, p + 4)
+        val size = le32u(b, p + 4)
         if (size < 0 || p + 8 + size > b.length) return None
         if (cc == "ANMF" && size >= 16) {
           sawAnmf = true
           val fp = p + 8
-          val fx = u24le(b, fp) * 2
-          val fy = u24le(b, fp + 3) * 2
-          val dur = u24le(b, fp + 12)
+          val fx = le24(b, fp) * 2
+          val fy = le24(b, fp + 3) * 2
+          val dur = le24(b, fp + 12)
           // frame data chunks start after the 16-byte ANMF header; a
           // lossy+alpha frame carries ALPH before VP8 (container spec)
           var q = fp + 16
@@ -378,7 +362,7 @@ object Webp {
           var alphE = -1
           while (q + 8 <= qEnd) {
             val fcc = fourcc(b, q)
-            val fsize = u32le(b, q + 4)
+            val fsize = le32u(b, q + 4)
             if (fsize < 0 || q + 8 + fsize > qEnd) return None
             if (fcc == "ALPH") { alphS = q + 8; alphE = q + 8 + fsize.toInt }
             else if (fcc == "VP8L")
@@ -416,12 +400,12 @@ object Webp {
     */
   private[graft] def buildAnim(canvasW: Int, canvasH: Int,
       frames: Seq[(Int, Int, Int, Vp8l.Image)]): Array[Byte] = {
-    val anim = chunk("ANIM", le32(0xFFFFFFFFL) ++ Array[Byte](0, 0))
+    val anim = chunk("ANIM", le32Of(0xFFFFFFFFL) ++ Array[Byte](0, 0))
     val anmfs = frames.map { case (x, y, durMs, img) =>
       require(x % 2 == 0 && y % 2 == 0, "ANMF offsets must be even")
-      val hdr = le24(x / 2) ++ le24(y / 2) ++
-        le24(img.width - 1) ++ le24(img.height - 1) ++
-        le24(durMs) ++ Array[Byte](0)
+      val hdr = le24Of(x / 2) ++ le24Of(y / 2) ++
+        le24Of(img.width - 1) ++ le24Of(img.height - 1) ++
+        le24Of(durMs) ++ Array[Byte](0)
       chunk("ANMF", hdr ++ chunk("VP8L", Vp8l.encodePayload(img)))
     }
     extended(canvasW, canvasH, icc = false, alpha = false, exif = false,
@@ -437,7 +421,7 @@ object Webp {
     val flags = (if (icc) 0x20 else 0) | (if (alpha) 0x10 else 0) |
       (if (exif) 0x08 else 0) | (if (anim) 0x02 else 0)
     val vp8x = chunk("VP8X", Array[Byte](flags.toByte, 0, 0, 0) ++
-      le24(w - 1) ++ le24(h - 1))
+      le24Of(w - 1) ++ le24Of(h - 1))
     container((vp8x +: rest): _*)
   }
 }

@@ -127,13 +127,6 @@ object WordPiece {
     trainVocab(hist.toSeq, numMerges)
   }
 
-  /** Greedy longest-match-first segmentation (the serve rule) — pieces of
-    * one word against a vocab set. Driver/test helper; the corpus-scale
-    * path is the codegen'd [[graft.functions.WordPieceOps.wordpiece_stats]].
-    */
-  def segmentWord(word: String, vocab: Set[String]): Seq[String] =
-    graft.functions.WordPieceOps.segment(word, vocab)
-
   /** The trained vocabulary as a write-once artifact table. */
   def vocabDf(spark: SparkSession, vocab: Seq[String]): DataFrame = {
     import spark.implicits._

@@ -2,6 +2,8 @@ package graft.ext
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.ext.Bytes.{le16, le32, le64, putLe32, writeLe16, writeLe32}
+
 /** Legacy Excel (.xls, BIFF8 / Excel 97–2003) cell extraction over the
   * [[Cfb]] container — the other half of the legacy-Office pair with
   * [[MsDoc]]. Implements the open spec ([MS-XLS]) read path:
@@ -166,8 +168,8 @@ object Xls {
         bi += 1; off = blocks(bi)._1
       }
     def u8(): Int = { advance(); val v = wb(off) & 0xFF; off += 1; v }
-    def u16(): Int = { val a = u8(); val b = u8(); a | (b << 8) }
-    def u32(): Long = { val a = u16(); val b = u16(); (a | (b.toLong << 16)) & 0xFFFFFFFFL }
+    def nextU16(): Int = { val a = u8(); val b = u8(); a | (b << 8) }
+    def nextU32(): Long = { val a = nextU16(); val b = nextU16(); (a | (b.toLong << 16)) & 0xFFFFFFFFL }
     def skip(n: Long): Unit = {
       var left = n
       while (left > 0) {
@@ -183,12 +185,12 @@ object Xls {
     val out = Vector.newBuilder[String]
     var s = 0
     while (s < total) {
-      val cch = u16()
+      val cch = nextU16()
       var grbit = u8()
       val fRich = (grbit & 0x08) != 0
       val fExt = (grbit & 0x04) != 0
-      val cRun = if (fRich) u16() else 0
-      val cbExt = if (fExt) u32() else 0L
+      val cRun = if (fRich) nextU16() else 0
+      val cbExt = if (fExt) nextU32() else 0L
       val sb = new java.lang.StringBuilder(cch)
       var got = 0
       while (got < cch) {
@@ -218,16 +220,6 @@ object Xls {
     out.result()
   }
 
-  private def le16(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], at: Int): Int =
-    (b(at) & 0xFF) | ((b(at + 1) & 0xFF) << 8) |
-      ((b(at + 2) & 0xFF) << 16) | ((b(at + 3) & 0xFF) << 24)
-
-  private def le64(b: Array[Byte], at: Int): Long =
-    (le32(b, at) & 0xFFFFFFFFL) | ((le32(b, at + 4) & 0xFFFFFFFFL) << 32)
-
   // ----- deterministic builder (fixtures/certificates) ------------------
 
   /** Build a BIFF8 workbook: globals (BOF, SST, BOUNDSHEET, EOF) + one
@@ -256,7 +248,7 @@ object Xls {
     rec(0x0809, bofBody(0x0005))
     // SST with optional CONTINUE split
     val sstHead = new java.io.ByteArrayOutputStream()
-    putLe32s(sstHead, strings.length); putLe32s(sstHead, strings.length)
+    writeLe32(sstHead, strings.length); writeLe32(sstHead, strings.length)
     val payload = strings.map(strBytes)
     if (sstSplitAt < 0) {
       val all = new java.io.ByteArrayOutputStream()
@@ -306,7 +298,7 @@ object Xls {
     // BOUNDSHEET: patch position later (record index saved)
     val bsIdx = recs.length
     val bs = new java.io.ByteArrayOutputStream()
-    putLe32s(bs, 0) // placeholder lbPlyPos
+    writeLe32(bs, 0) // placeholder lbPlyPos
     bs.write(0); bs.write(0) // visible, worksheet
     bs.write(6) // cch
     bs.write(0) // compressed name
@@ -320,22 +312,22 @@ object Xls {
     for (c <- cells) {
       val body = new java.io.ByteArrayOutputStream()
       def cellHead(): Unit = {
-        putLe16s(body, c.row); putLe16s(body, c.col); putLe16s(body, 0)
+        writeLe16(body, c.row); writeLe16(body, c.col); writeLe16(body, 0)
       }
       c.value match {
         case s: String =>
-          cellHead(); putLe32s(body, sstIdx(s))
+          cellHead(); writeLe32(body, sstIdx(s))
           sheetRecs += ((0x00FD, body.toByteArray))
         case d: Double =>
           // integral small values as RK int form, x.5 via RK double
           // form when exact, else NUMBER — exercises all three
           if (d == math.rint(d) && math.abs(d) < (1 << 29)) {
-            cellHead(); putLe32s(body, (d.toInt << 2) | 0x02)
+            cellHead(); writeLe32(body, (d.toInt << 2) | 0x02)
             sheetRecs += ((0x027E, body.toByteArray))
           } else {
             val bits = java.lang.Double.doubleToLongBits(d)
             if ((bits & 0x3FFFFFFFFL) == 0) { // fits RK double form
-              cellHead(); putLe32s(body, ((bits >>> 32) & 0xFFFFFFFCL).toInt)
+              cellHead(); writeLe32(body, ((bits >>> 32) & 0xFFFFFFFCL).toInt)
               sheetRecs += ((0x027E, body.toByteArray))
             } else {
               cellHead()
@@ -356,32 +348,20 @@ object Xls {
     def size(rs: Seq[(Int, Array[Byte])]) = rs.map(4 + _._2.length).sum
     val sheetPos = size(recs.toSeq)
     val bsBody = recs(bsIdx)._2
-    bsBody(0) = (sheetPos & 0xFF).toByte
-    bsBody(1) = ((sheetPos >> 8) & 0xFF).toByte
-    bsBody(2) = ((sheetPos >> 16) & 0xFF).toByte
-    bsBody(3) = ((sheetPos >> 24) & 0xFF).toByte
+    putLe32(bsBody, 0, sheetPos)
     val out = new java.io.ByteArrayOutputStream()
     for ((typ, body) <- recs ++ sheetRecs) {
-      putLe16s(out, typ); putLe16s(out, body.length); out.write(body)
+      writeLe16(out, typ); writeLe16(out, body.length); out.write(body)
     }
     Cfb.build(Seq(("Workbook", out.toByteArray)))
   }
 
   private def bofBody(dt: Int): Array[Byte] = {
     val o = new java.io.ByteArrayOutputStream()
-    putLe16s(o, 0x0600) // BIFF8
-    putLe16s(o, dt)
-    putLe16s(o, 0x0DBB); putLe16s(o, 0x07CC) // build/year stamps
-    putLe32s(o, 0); putLe32s(o, 0)
+    writeLe16(o, 0x0600) // BIFF8
+    writeLe16(o, dt)
+    writeLe16(o, 0x0DBB); writeLe16(o, 0x07CC) // build/year stamps
+    writeLe32(o, 0); writeLe32(o, 0)
     o.toByteArray
-  }
-
-  private def putLe16s(o: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    o.write(v & 0xFF); o.write((v >> 8) & 0xFF)
-  }
-
-  private def putLe32s(o: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    o.write(v & 0xFF); o.write((v >> 8) & 0xFF)
-    o.write((v >> 16) & 0xFF); o.write((v >> 24) & 0xFF)
   }
 }

@@ -1,5 +1,7 @@
 package graft.ext
 
+import graft.ext.Bytes.{le16, le32u, le64, writeLe16, writeLe32, writeLe64}
+
 /** ZIP container walk (PKWARE APPNOTE layout) — pure `java.util.zip`
   * primitives, no filesystem: crawled archives and, more importantly,
   * the OOXML/ODF office-document family (`.docx`/`.xlsx`/`.odt` are ZIP
@@ -257,16 +259,6 @@ object Zip {
     finally { try in.close() catch { case scala.util.control.NonFatal(_) => () } }
   }
 
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8)
-
-  private def le32(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xFFL) | ((b(i + 1) & 0xFFL) << 8) |
-      ((b(i + 2) & 0xFFL) << 16) | ((b(i + 3) & 0xFFL) << 24)
-
-  private def le64(b: Array[Byte], i: Int): Long =
-    le32(b, i) | (le32(b, i + 4) << 32)
-
   /** Central-directory listing. Nil when no EOCD record is found. */
   def entries(b: Array[Byte]): Seq[Entry] = {
     if (b == null || b.length < 22) return Nil
@@ -282,7 +274,7 @@ object Zip {
       }
       if (eocd < 0) return Nil
       var n = le16(b, eocd + 10).toLong
-      var cdOff = le32(b, eocd + 16)
+      var cdOff = le32u(b, eocd + 16)
       // ZIP64: masked EOCD fields resolve through the EOCD64 locator
       // (immediately before the EOCD) and the EOCD64 record it points at
       if (n == 0xFFFFL || cdOff == 0xFFFFFFFFL) {
@@ -307,13 +299,13 @@ object Zip {
           b(p) == 'P' && b(p + 1) == 'K' && b(p + 2) == 1 && b(p + 3) == 2) {
         val flags = le16(b, p + 8)
         val method = le16(b, p + 10)
-        val crc = le32(b, p + 16)
-        var compSize = le32(b, p + 20)
-        var uncompSize = le32(b, p + 24)
+        val crc = le32u(b, p + 16)
+        var compSize = le32u(b, p + 20)
+        var uncompSize = le32u(b, p + 24)
         val nameLen = le16(b, p + 28)
         val extraLen = le16(b, p + 30)
         val commentLen = le16(b, p + 32)
-        var localOff = le32(b, p + 42)
+        var localOff = le32u(b, p + 42)
         if (p + 46 + nameLen > b.length) return out.toSeq
         val name = new String(b, p + 46, nameLen, "UTF-8")
         // extra-field walk: masked 32-bit fields resolve through the
@@ -461,7 +453,7 @@ object Zip {
           val propsLen = le16(src, srcOff + 2)
           if (propsLen < 5 || 4 + propsLen > srcLen) return None
           val propsByte = src(srcOff + 4)
-          val dictSize = le32(src, srcOff + 5).toInt
+          val dictSize = le32u(src, srcOff + 5).toInt
           val dataOff = srcOff + 4 + propsLen
           val dataLen = srcLen - 4 - propsLen
           def lzmaIn(size: Long) = new org.tukaani.xz.LZMAInputStream(
@@ -530,19 +522,13 @@ object Zip {
     require(aes.isEmpty || !zip64, "aes + zip64 unsupported in the builder")
     val flagBits = if (password.isDefined || aes.isDefined) 0x0001 else 0
     val out = new java.io.ByteArrayOutputStream()
-    def w16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >>> 8) & 0xFF) }
-    def w32(v: Long): Unit = {
-      out.write((v & 0xFF).toInt); out.write(((v >>> 8) & 0xFF).toInt)
-      out.write(((v >>> 16) & 0xFF).toInt); out.write(((v >>> 24) & 0xFF).toInt)
-    }
-    def w64(v: Long): Unit = { w32(v & 0xFFFFFFFFL); w32(v >>> 32) }
     // (name, writtenMethod, writtenCrc, compLen, rawLen, offset, realMethod)
     val cds = scala.collection.mutable.ArrayBuffer
       .empty[(String, Int, Long, Long, Long, Long, Int)]
     def writeAesExtra(realMethod: Int): Unit = aes.foreach { case (_, strength, ae) =>
-      w16(0x9901); w16(7)
-      w16(ae); out.write('A'); out.write('E'); out.write(strength)
-      w16(realMethod)
+      writeLe16(out, 0x9901); writeLe16(out, 7)
+      writeLe16(out, ae); out.write('A'); out.write('E'); out.write(strength)
+      writeLe16(out, realMethod)
     }
     def rawDeflate(raw: Array[Byte]): Array[Byte] = {
       // per-thread Deflater reuse: a fresh instance per member costs a
@@ -575,8 +561,7 @@ object Zip {
           val n = math.min(65535, raw.length - i)
           val last = i + n >= raw.length
           o.write(if (last) 1 else 0) // BFINAL + BTYPE 00 + pad bits
-          o.write(n & 0xFF); o.write((n >>> 8) & 0xFF)
-          o.write(~n & 0xFF); o.write((~n >>> 8) & 0xFF)
+          writeLe16(o, n); writeLe16(o, ~n)
           o.write(raw, i, n)
           i += n
         } while (i < raw.length)
@@ -641,9 +626,9 @@ object Zip {
       val off = out.size().toLong
       val nameB = name.getBytes("UTF-8")
       out.write('P'); out.write('K'); out.write(3); out.write(4)
-      w16(20); w16(flagBits); w16(wMethod); w16(0); w16(0)
-      w32(wCrc); w32(comp.length); w32(raw.length)
-      w16(nameB.length); w16(aesExtraLen)
+      writeLe16(out, 20); writeLe16(out, flagBits); writeLe16(out, wMethod); writeLe16(out, 0); writeLe16(out, 0)
+      writeLe32(out, wCrc); writeLe32(out, comp.length); writeLe32(out, raw.length)
+      writeLe16(out, nameB.length); writeLe16(out, aesExtraLen)
       out.write(nameB); writeAesExtra(method); out.write(comp)
       cds += ((name, wMethod, wCrc,
         comp.length.toLong, raw.length.toLong, off, method))
@@ -655,19 +640,19 @@ object Zip {
       if (zip64) {
         // version 4.5; sizes and local offset masked into the 0x0001
         // extra field (APPNOTE order: uncompressed, compressed, offset)
-        w16(45); w16(45); w16(flagBits); w16(method); w16(0); w16(0)
-        w32(crc); w32(0xFFFFFFFFL); w32(0xFFFFFFFFL)
-        w16(nameB.length); w16(4 + 24); w16(0); w16(0); w16(0)
-        w32(0); w32(0xFFFFFFFFL)
+        writeLe16(out, 45); writeLe16(out, 45); writeLe16(out, flagBits); writeLe16(out, method); writeLe16(out, 0); writeLe16(out, 0)
+        writeLe32(out, crc); writeLe32(out, 0xFFFFFFFFL); writeLe32(out, 0xFFFFFFFFL)
+        writeLe16(out, nameB.length); writeLe16(out, 4 + 24); writeLe16(out, 0); writeLe16(out, 0); writeLe16(out, 0)
+        writeLe32(out, 0); writeLe32(out, 0xFFFFFFFFL)
         out.write(nameB)
-        w16(0x0001); w16(24)
-        w64(rawLen); w64(compLen); w64(off)
+        writeLe16(out, 0x0001); writeLe16(out, 24)
+        writeLe64(out, rawLen); writeLe64(out, compLen); writeLe64(out, off)
       } else {
         val aesExtraLen = if (aes.isDefined) 11 else 0
-        w16(20); w16(20); w16(flagBits); w16(method); w16(0); w16(0)
-        w32(crc); w32(compLen); w32(rawLen)
-        w16(nameB.length); w16(aesExtraLen); w16(0); w16(0); w16(0)
-        w32(0); w32(off)
+        writeLe16(out, 20); writeLe16(out, 20); writeLe16(out, flagBits); writeLe16(out, method); writeLe16(out, 0); writeLe16(out, 0)
+        writeLe32(out, crc); writeLe32(out, compLen); writeLe32(out, rawLen)
+        writeLe16(out, nameB.length); writeLe16(out, aesExtraLen); writeLe16(out, 0); writeLe16(out, 0); writeLe16(out, 0)
+        writeLe32(out, 0); writeLe32(out, off)
         out.write(nameB); writeAesExtra(realMethod)
       }
     }
@@ -675,19 +660,19 @@ object Zip {
     if (zip64) {
       val e64 = out.size().toLong
       out.write('P'); out.write('K'); out.write(6); out.write(6)
-      w64(44) // record size, not counting sig+this field
-      w16(45); w16(45); w32(0); w32(0)
-      w64(cds.length.toLong); w64(cds.length.toLong)
-      w64(cdLen.toLong); w64(cdStart)
+      writeLe64(out, 44) // record size, not counting sig+this field
+      writeLe16(out, 45); writeLe16(out, 45); writeLe32(out, 0); writeLe32(out, 0)
+      writeLe64(out, cds.length.toLong); writeLe64(out, cds.length.toLong)
+      writeLe64(out, cdLen.toLong); writeLe64(out, cdStart)
       out.write('P'); out.write('K'); out.write(6); out.write(7) // locator
-      w32(0); w64(e64); w32(1)
+      writeLe32(out, 0); writeLe64(out, e64); writeLe32(out, 1)
       out.write('P'); out.write('K'); out.write(5); out.write(6) // masked EOCD
-      w16(0); w16(0); w16(0xFFFF); w16(0xFFFF)
-      w32(0xFFFFFFFFL); w32(0xFFFFFFFFL); w16(0)
+      writeLe16(out, 0); writeLe16(out, 0); writeLe16(out, 0xFFFF); writeLe16(out, 0xFFFF)
+      writeLe32(out, 0xFFFFFFFFL); writeLe32(out, 0xFFFFFFFFL); writeLe16(out, 0)
     } else {
       out.write('P'); out.write('K'); out.write(5); out.write(6)
-      w16(0); w16(0); w16(cds.length); w16(cds.length)
-      w32(cdLen); w32(cdStart); w16(0)
+      writeLe16(out, 0); writeLe16(out, 0); writeLe16(out, cds.length); writeLe16(out, cds.length)
+      writeLe32(out, cdLen); writeLe32(out, cdStart); writeLe16(out, 0)
     }
     out.toByteArray
   }

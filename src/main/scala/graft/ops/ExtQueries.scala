@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ext.{Classifier, Dedup, Layout, Multimodal, Pq, Similarity, TextAnalysis}
+import graft.ext.{AudioFp, Bytes, Classifier, Dedup, Layout, Multimodal, Pq, Similarity, TextAnalysis}
 import graft.functions.MinHashAggregator
 import Tables._
 
@@ -3593,30 +3593,8 @@ object ExtQueries {
       val n = 400
       documents(s, d).select(col("doc_id")).as[Long]
         .map { id =>
-          val bytes = new Array[Byte](44 + n * 2)
-          def putAscii(off: Int, sVal: String): Unit = {
-            var k = 0
-            while (k < sVal.length) { bytes(off + k) = sVal.charAt(k).toByte; k += 1 }
-          }
-          def putLe32(off: Int, v: Int): Unit = {
-            bytes(off) = v.toByte; bytes(off + 1) = (v >>> 8).toByte
-            bytes(off + 2) = (v >>> 16).toByte; bytes(off + 3) = (v >>> 24).toByte
-          }
-          def putLe16(off: Int, v: Int): Unit = {
-            bytes(off) = v.toByte; bytes(off + 1) = (v >>> 8).toByte
-          }
-          putAscii(0, "RIFF"); putLe32(4, 36 + n * 2); putAscii(8, "WAVE")
-          putAscii(12, "fmt "); putLe32(16, 16)
-          putLe16(20, 1); putLe16(22, 1) // PCM, mono
-          putLe32(24, 8000); putLe32(28, 16000) // rate, byte rate
-          putLe16(32, 2); putLe16(34, 16) // block align, bits
-          putAscii(36, "data"); putLe32(40, n * 2)
-          var i = 0
-          while (i < n) {
-            putLe16(44 + i * 2, (((id * 7 + i.toLong * 11) % 2001) - 1000).toInt)
-            i += 1
-          }
-          (id, bytes)
+          (id, AudioFp.wavPcm16(
+            Array.tabulate(n)(i => (((id * 7 + i.toLong * 11) % 2001) - 1000).toInt)))
         }
         .toDF("media_id", "payload")
         .transform(m => graft.ext.Multimodal.audioSampleStats(m).toDF())
@@ -3751,9 +3729,10 @@ object ExtQueries {
     (s, d) => {
       // Sub-byte decode certificate (the q_jpeg_stats discipline for the
       // new 4-bit arm): per doc, a 4-bit PALETTE PNG is built BY HAND —
-      // MSB-first packed indexes with ragged row padding, deflate + CRC
-      // chunks, an independent construction from the codec under test —
-      // and decoded through Png.decode. Indexes and palette are modular
+      // MSB-first packed indexes with ragged row padding, deflated and
+      // framed by Png.writeChunk (the packing is independent of the
+      // codec's encoder, which writes no sub-byte rasters) — and decoded
+      // through Png.decode. Indexes and palette are modular
       // arithmetic in doc_id, so the decoded-pixel sum is hash-checked
       // against DuckDB computing the same arithmetic directly. Any bit
       // slip in the unpacker (shift origin, padding, palette expansion)
@@ -3786,28 +3765,19 @@ object ExtQueries {
           }
           val out = new java.io.ByteArrayOutputStream()
           out.write(Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A))
-          def chunk(t: String, data: Array[Byte]): Unit = {
-            def be32(v: Int) = Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte,
-              (v >>> 8).toByte, v.toByte)
-            out.write(be32(data.length))
-            val tb = t.getBytes("US-ASCII")
-            out.write(tb); out.write(data)
-            val crc = new java.util.zip.CRC32(); crc.update(tb); crc.update(data)
-            out.write(be32(crc.getValue.toInt))
-          }
           val ihdr = new Array[Byte](13)
           ihdr(3) = w.toByte; ihdr(7) = h.toByte // widths < 256
           ihdr(8) = 4; ihdr(9) = 3 // 4-bit, palette
-          chunk("IHDR", ihdr)
-          chunk("PLTE", plte)
+          graft.ext.Png.writeChunk(out, "IHDR", ihdr)
+          graft.ext.Png.writeChunk(out, "PLTE", plte)
           val defl = new java.util.zip.Deflater()
           defl.setInput(raw); defl.finish()
           val cbuf = new java.io.ByteArrayOutputStream()
           val tmp = new Array[Byte](512)
           while (!defl.finished()) cbuf.write(tmp, 0, defl.deflate(tmp))
           defl.end()
-          chunk("IDAT", cbuf.toByteArray)
-          chunk("IEND", Array.emptyByteArray)
+          graft.ext.Png.writeChunk(out, "IDAT", cbuf.toByteArray)
+          graft.ext.Png.writeChunk(out, "IEND", Array.emptyByteArray)
           val img = graft.ext.Png.decode(out.toByteArray).getOrElse(
             throw new IllegalStateException(s"4-bit decode failed for $id"))
           var sum = 0L
@@ -3841,28 +3811,12 @@ object ExtQueries {
       val n = 200
       documents(s, d).select(col("doc_id")).as[Long]
         .map { id =>
-          val bytes = new Array[Byte](44 + n * 4)
-          def putAscii(off: Int, sVal: String): Unit = {
-            var k = 0
-            while (k < sVal.length) { bytes(off + k) = sVal.charAt(k).toByte; k += 1 }
-          }
-          def putLe32(off: Int, v: Int): Unit = {
-            bytes(off) = v.toByte; bytes(off + 1) = (v >>> 8).toByte
-            bytes(off + 2) = (v >>> 16).toByte; bytes(off + 3) = (v >>> 24).toByte
-          }
-          def putLe16(off: Int, v: Int): Unit = {
-            bytes(off) = v.toByte; bytes(off + 1) = (v >>> 8).toByte
-          }
-          putAscii(0, "RIFF"); putLe32(4, 36 + n * 4); putAscii(8, "WAVE")
-          putAscii(12, "fmt "); putLe32(16, 16)
-          putLe16(20, 3); putLe16(22, 1) // IEEE float, mono
-          putLe32(24, 8000); putLe32(28, 32000)
-          putLe16(32, 4); putLe16(34, 32)
-          putAscii(36, "data"); putLe32(40, n * 4)
+          val bytes = AudioFp.wavFile(formatTag = 3, channels = 1, rate = 8000, // IEEE float
+            bits = 32, blockAlign = 4, dataLen = n * 4)
           var i = 0
           while (i < n) {
             val k = ((id * 7 + i.toLong * 13) % 512L - 256L).toInt
-            putLe32(44 + i * 4, java.lang.Float.floatToIntBits(k / 256.0f))
+            Bytes.putLe32(bytes, 44 + i * 4, java.lang.Float.floatToIntBits(k / 256.0f))
             i += 1
           }
           (id, bytes)
@@ -3895,24 +3849,8 @@ object ExtQueries {
       val n = 200
       documents(s, d).select(col("doc_id")).as[Long]
         .map { id =>
-          val bytes = new Array[Byte](44 + n)
-          def putAscii(off: Int, sVal: String): Unit = {
-            var k = 0
-            while (k < sVal.length) { bytes(off + k) = sVal.charAt(k).toByte; k += 1 }
-          }
-          def putLe32(off: Int, v: Int): Unit = {
-            bytes(off) = v.toByte; bytes(off + 1) = (v >>> 8).toByte
-            bytes(off + 2) = (v >>> 16).toByte; bytes(off + 3) = (v >>> 24).toByte
-          }
-          def putLe16(off: Int, v: Int): Unit = {
-            bytes(off) = v.toByte; bytes(off + 1) = (v >>> 8).toByte
-          }
-          putAscii(0, "RIFF"); putLe32(4, 36 + n); putAscii(8, "WAVE")
-          putAscii(12, "fmt "); putLe32(16, 16)
-          putLe16(20, if (id % 2 == 0) 7 else 6); putLe16(22, 1)
-          putLe32(24, 8000); putLe32(28, 8000)
-          putLe16(32, 1); putLe16(34, 8)
-          putAscii(36, "data"); putLe32(40, n)
+          val bytes = AudioFp.wavFile(formatTag = if (id % 2 == 0) 7 else 6,
+            channels = 1, rate = 8000, bits = 8, blockAlign = 1, dataLen = n)
           var i = 0
           while (i < n) {
             bytes(44 + i) = ((id * 7 + i * 13) % 256).toByte
@@ -4053,27 +3991,11 @@ object ExtQueries {
         .map { id =>
           val pred0 = ((id * 37) % 2048 - 1024).toInt
           val k = (id % 4).toInt
-          val bytes = new Array[Byte](44 + 4 + blockAlign)
-          def putAscii(off: Int, sVal: String): Unit = {
-            var j = 0
-            while (j < sVal.length) { bytes(off + j) = sVal.charAt(j).toByte; j += 1 }
-          }
-          def putLe32(off: Int, v: Int): Unit = {
-            bytes(off) = v.toByte; bytes(off + 1) = (v >>> 8).toByte
-            bytes(off + 2) = (v >>> 16).toByte; bytes(off + 3) = (v >>> 24).toByte
-          }
-          def putLe16(off: Int, v: Int): Unit = {
-            bytes(off) = v.toByte; bytes(off + 1) = (v >>> 8).toByte
-          }
-          putAscii(0, "RIFF"); putLe32(4, 40 + blockAlign); putAscii(8, "WAVE")
-          putAscii(12, "fmt "); putLe32(16, 20) // 16 + cbSize(2) + ext(2)
-          putLe16(20, 0x11); putLe16(22, 1) // IMA ADPCM, mono
-          putLe32(24, 8000); putLe32(28, 8000 * blockAlign / 505)
-          putLe16(32, blockAlign); putLe16(34, 4)
-          putLe16(36, 2); putLe16(38, 505) // cbSize, samplesPerBlock
-          putAscii(40, "data"); putLe32(44, blockAlign)
+          val bytes = AudioFp.wavFile(formatTag = 0x11, channels = 1, // IMA ADPCM
+            rate = 8000, bits = 4, blockAlign = blockAlign, dataLen = blockAlign,
+            samplesPerBlock = 505)
           val blk = 48
-          putLe16(blk, pred0 & 0xFFFF)
+          Bytes.putLe16(bytes, blk, pred0)
           bytes(blk + 2) = 16 // index0
           var j = blk + 4
           while (j < blk + blockAlign) {
@@ -4126,8 +4048,6 @@ object ExtQueries {
         .mapPartitions { ids =>
           val jpeg = new Plants.JpegWriter()
           ids.map { id =>
-            def le32(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte,
-              (v >>> 16).toByte, (v >>> 24).toByte)
             val movi = new java.io.ByteArrayOutputStream()
             movi.write("movi".getBytes("US-ASCII"))
             var f = 0
@@ -4135,7 +4055,7 @@ object ExtQueries {
               val jpg = jpeg.encode(
                 Plants.grayBlocks(b => ((id * 7 + 13 + 29 * b + 11 * f) % 256).toInt))
               movi.write("00dc".getBytes("US-ASCII"))
-              movi.write(le32(jpg.length))
+              Bytes.writeLe32(movi, jpg.length)
               movi.write(jpg)
               if ((jpg.length & 1) == 1) movi.write(0)
               f += 1
@@ -4143,25 +4063,16 @@ object ExtQueries {
             val moviBytes = movi.toByteArray
             val out = new java.io.ByteArrayOutputStream()
             out.write("RIFF".getBytes("US-ASCII"))
-            out.write(le32(4 + 8 + moviBytes.length))
+            Bytes.writeLe32(out, 4 + 8 + moviBytes.length)
             out.write("AVI ".getBytes("US-ASCII"))
             out.write("LIST".getBytes("US-ASCII"))
-            out.write(le32(moviBytes.length))
+            Bytes.writeLe32(out, moviBytes.length)
             out.write(moviBytes)
             (id, out.toByteArray)
           }
         }
         .toDF("media_id", "payload")
-        .transform(m => graft.ext.Multimodal.sampleFramesReal(m, stride = 2)
-          .map { sf =>
-            val img = graft.ext.Png.decode(sf.frame_png).getOrElse(
-              throw new IllegalStateException(
-                s"frame png decode failed for ${sf.media_id}/${sf.frame_no}"))
-            var sum = 0L
-            img.pixels.foreach(v => sum += (v & 0xFF))
-            (sf.media_id, sf.frame_no, sf.width, sf.height, sum)
-          }
-          .toDF("media_id", "frame_no", "width", "height", "pixel_sum"))
+        .transform(Plants.framePixelSums)
         .orderBy("media_id", "frame_no")
     },
     Some("""SELECT doc_id AS media_id, f AS frame_no, 16 AS width,
@@ -4598,73 +4509,61 @@ object ExtQueries {
       "planned as one lazy query, hash-checked against a full closed-" +
       "form replay of every stage")
 
-  /** Shared ISO-BMFF box assembly for the MP4 certificates: big-endian
-    * size + 4cc + payload parts, the exact grammar [[graft.ext.Mp4]]
-    * walks. Kept tiny and local — the BUILDER is harness code; the
-    * operator under test is the parser.
+  /** The MP4 certificates' boxes, each assembled with the codec's own
+    * [[graft.ext.Mp4.box]] writer — the grammar [[graft.ext.Mp4]] walks.
     */
-  private object Mp4Build {
-    def be32(v: Long): Array[Byte] = Array(
-      ((v >>> 24) & 0xFF).toByte, ((v >>> 16) & 0xFF).toByte,
-      ((v >>> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-    def be16(v: Int): Array[Byte] =
-      Array(((v >>> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-    def box(tpe: String, parts: Array[Byte]*): Array[Byte] = {
-      val n = 8 + parts.map(_.length).sum
-      val bos = new java.io.ByteArrayOutputStream(n)
-      bos.write(be32(n)); bos.write(tpe.getBytes("US-ASCII"))
-      parts.foreach(bos.write)
-      bos.toByteArray
-    }
+  private[ops] object Mp4Build {
+    import graft.ext.Bytes.{be16Of, be32Of, putBe32}
+    import graft.ext.Mp4.box
     val full0: Array[Byte] = Array(0, 0, 0, 0) // version 0 + zero flags
     def ftyp(brand: String): Array[Byte] =
-      box("ftyp", brand.getBytes("US-ASCII"), be32(0))
+      box("ftyp", brand.getBytes("US-ASCII"), be32Of(0))
     def mvhd(timescale: Long, duration: Long): Array[Byte] = {
       val p = new Array[Byte](100) // v0 payload: times/scale/dur + rate/vol/matrix/next
-      System.arraycopy(be32(timescale), 0, p, 12, 4)
-      System.arraycopy(be32(duration), 0, p, 16, 4)
-      System.arraycopy(be32(0x00010000L), 0, p, 20, 4) // rate 1.0
+      putBe32(p, 12, timescale)
+      putBe32(p, 16, duration)
+      putBe32(p, 20, 0x00010000L) // rate 1.0
       p(96) = 0; p(97) = 0; p(98) = 0; p(99) = 3 // next_track_id
       box("mvhd", p)
     }
     def tkhd(trackId: Long, w: Int, h: Int): Array[Byte] = {
       val p = new Array[Byte](84)
       p(3) = 7 // flags: enabled | in-movie | in-preview
-      System.arraycopy(be32(trackId), 0, p, 12, 4)
+      putBe32(p, 12, trackId)
       // unity matrix at offset 40 (after reserved/layer/volume block)
-      System.arraycopy(be32(0x00010000L), 0, p, 40, 4)
-      System.arraycopy(be32(0x00010000L), 0, p, 56, 4)
-      System.arraycopy(be32(0x40000000L), 0, p, 72, 4)
-      System.arraycopy(be32(w.toLong << 16), 0, p, 76, 4)
-      System.arraycopy(be32(h.toLong << 16), 0, p, 80, 4)
+      putBe32(p, 40, 0x00010000L)
+      putBe32(p, 56, 0x00010000L)
+      putBe32(p, 72, 0x40000000L)
+      putBe32(p, 76, w.toLong << 16)
+      putBe32(p, 80, h.toLong << 16)
       box("tkhd", p)
     }
     def mdhd(timescale: Long, duration: Long): Array[Byte] = {
       val p = new Array[Byte](24)
-      System.arraycopy(be32(timescale), 0, p, 12, 4)
-      System.arraycopy(be32(duration), 0, p, 16, 4)
+      putBe32(p, 12, timescale)
+      putBe32(p, 16, duration)
       p(20) = 0x55; p(21) = 0xC4.toByte // language "und"
       box("mdhd", p)
     }
     def hdlr(handler: String): Array[Byte] =
-      box("hdlr", full0, be32(0), handler.getBytes("US-ASCII"),
+      box("hdlr", full0, be32Of(0), handler.getBytes("US-ASCII"),
         new Array[Byte](12), Array[Byte](0))
     def stsd(codec: String): Array[Byte] =
       // one bare 16-byte SampleEntry: size + format 4cc + 6 reserved + dri
-      box("stsd", full0, be32(1),
-        be32(16), codec.getBytes("US-ASCII"), new Array[Byte](6), be16(1))
+      box("stsd", full0, be32Of(1),
+        be32Of(16), codec.getBytes("US-ASCII"), new Array[Byte](6), be16Of(1))
     def stts(n: Long, delta: Long): Array[Byte] =
-      box("stts", full0, be32(1), be32(n), be32(delta))
+      box("stts", full0, be32Of(1), be32Of(n), be32Of(delta))
     def stszUniform(size: Long, n: Long): Array[Byte] =
-      box("stsz", full0, be32(size), be32(n))
+      box("stsz", full0, be32Of(size), be32Of(n))
     def stszSizes(sizes: Seq[Int]): Array[Byte] =
-      box("stsz", full0 ++ be32(0) ++ be32(sizes.length) ++
-        sizes.flatMap(sz => be32(sz)).toArray)
+      box("stsz", full0 ++ be32Of(0) ++ be32Of(sizes.length) ++
+        sizes.flatMap(sz => be32Of(sz)).toArray)
     def stsc(samplesPerChunk: Long): Array[Byte] =
-      box("stsc", full0, be32(1), be32(1), be32(samplesPerChunk), be32(1))
+      box("stsc", full0, be32Of(1), be32Of(1), be32Of(samplesPerChunk), be32Of(1))
     def stco(offsets: Seq[Long]): Array[Byte] =
-      box("stco", full0 ++ be32(offsets.length) ++
-        offsets.flatMap(o => be32(o)).toArray)
+      box("stco", full0 ++ be32Of(offsets.length) ++
+        offsets.flatMap(o => be32Of(o)).toArray)
     def trak(tkhdBox: Array[Byte], mdhdBox: Array[Byte], hdlrBox: Array[Byte],
         stblParts: Array[Byte]*): Array[Byte] =
       box("trak", tkhdBox,
@@ -4685,6 +4584,7 @@ object ExtQueries {
       documents(s, d).select(col("doc_id")).as[Long]
         .map { id =>
           import Mp4Build._
+          import graft.ext.Mp4.box
           val w = (320 + (id % 16) * 16).toInt
           val h = (240 + (id % 9) * 16).toInt
           val nV = 25 + id % 100
@@ -4749,6 +4649,7 @@ object ExtQueries {
           val jpeg = new Plants.JpegWriter()
           ids.map { id =>
             import Mp4Build._
+            import graft.ext.Mp4.box
             val jpgs = (0 until 6).map { f =>
               jpeg.encode(
                 Plants.grayBlocks(b => ((id * 11 + 17 + 23 * b + 7 * f) % 256).toInt))
@@ -4764,16 +4665,7 @@ object ExtQueries {
           }
         }
         .toDF("media_id", "payload")
-        .transform(m => graft.ext.Multimodal.sampleFramesReal(m, stride = 2)
-          .map { sf =>
-            val img = graft.ext.Png.decode(sf.frame_png).getOrElse(
-              throw new IllegalStateException(
-                s"frame png decode failed for ${sf.media_id}/${sf.frame_no}"))
-            var sum = 0L
-            img.pixels.foreach(v => sum += (v & 0xFF))
-            (sf.media_id, sf.frame_no, sf.width, sf.height, sum)
-          }
-          .toDF("media_id", "frame_no", "width", "height", "pixel_sum"))
+        .transform(Plants.framePixelSums)
         .orderBy("media_id", "frame_no")
     },
     Some("""SELECT doc_id AS media_id, f AS frame_no, 16 AS width,
@@ -4816,10 +4708,7 @@ object ExtQueries {
               val x = 4 + 32
               System.arraycopy(magic.getBytes("US-ASCII"), 0, f, x, 4)
               f(x + 7) = 1 // flags: frames present
-              f(x + 8) = ((n >>> 24) & 0xFF).toByte
-              f(x + 9) = ((n >>> 16) & 0xFF).toByte
-              f(x + 10) = ((n >>> 8) & 0xFF).toByte
-              f(x + 11) = (n & 0xFF).toByte
+              Bytes.putBe32(f, x + 8, n)
             }
             out.write(f)
           }
@@ -5046,50 +4935,7 @@ object ExtQueries {
           ids.map { id =>
             val jpg = jpeg.encode(
               Plants.grayBlocks(b => ((id * 13 + 29 + 17 * b) % 256).toInt))
-
-            // hand-assembled Exif APP1 (little-endian TIFF)
-            val gps = id % 2 == 0
-            val make = s"Cam${id % 10}"
-            val dt = s"2026:01:15 10:0${id % 10}:00"
-            val n0 = 4 + (if (gps) 1 else 0)
-            val makeOff = 8 + 2 + n0 * 12 + 4
-            val dtOff = makeOff + 6
-            val exifOff = dtOff + 20
-            val gpsOff = exifOff + 30
-            val t = new Array[Byte](gpsOff + (if (gps) 6 else 0))
-            def w16(i: Int, v: Int): Unit = {
-              t(i) = v.toByte; t(i + 1) = (v >>> 8).toByte
-            }
-            def w32(i: Int, v: Long): Unit = {
-              t(i) = v.toByte; t(i + 1) = (v >>> 8).toByte
-              t(i + 2) = (v >>> 16).toByte; t(i + 3) = (v >>> 24).toByte
-            }
-            t(0) = 'I'; t(1) = 'I'; w16(2, 42); w32(4, 8)
-            w16(8, n0)
-            var e = 10
-            def entry(tag: Int, tpe: Int, cnt: Long, value: Long): Unit = {
-              w16(e, tag); w16(e + 2, tpe); w32(e + 4, cnt); w32(e + 8, value)
-              e += 12
-            }
-            entry(0x010F, 2, 5, makeOff)
-            entry(0x0112, 3, 1, 1 + id % 8)
-            entry(0x0132, 2, 20, dtOff)
-            entry(0x8769, 4, 1, exifOff)
-            if (gps) entry(0x8825, 4, 1, gpsOff)
-            w32(e, 0)
-            System.arraycopy(make.getBytes("US-ASCII"), 0, t, makeOff, 4)
-            System.arraycopy(dt.getBytes("US-ASCII"), 0, t, dtOff, 19)
-            w16(exifOff, 2)
-            e = exifOff + 2
-            entry(0xA002, 4, 1, 16)
-            entry(0xA003, 4, 1, 16)
-            w32(e, 0)
-            if (gps) { w16(gpsOff, 0); w32(gpsOff + 2, 0) }
-            val len = 2 + 6 + t.length
-            val app1 = Array[Byte](0xFF.toByte, 0xE1.toByte,
-              ((len >>> 8) & 0xFF).toByte, (len & 0xFF).toByte) ++
-              "Exif".getBytes("US-ASCII") ++ Array[Byte](0, 0) ++ t
-            (id, jpg.take(2) ++ app1 ++ jpg.drop(2))
+            (id, graft.ext.Exif.withApp1(jpg, Plants.exifMetaTiff(id)))
           }
         }
         .toDF("media_id", "payload")
@@ -5255,36 +5101,7 @@ object ExtQueries {
             val jpg = jpeg.encode(
               Plants.grayBlocks(b => ((gid * 3 + 37 + 19 * b) % 256).toInt))
             // per-COPY Exif: same pixels, different metadata
-            val gps = id % 2 == 0
-            val n0 = 2 + (if (gps) 1 else 0)
-            val makeOff = 8 + 2 + n0 * 12 + 4
-            val gpsOff = makeOff + 6
-            val t = new Array[Byte](gpsOff + (if (gps) 6 else 0))
-            def w16(i: Int, v: Int): Unit = {
-              t(i) = v.toByte; t(i + 1) = (v >>> 8).toByte
-            }
-            def w32(i: Int, v: Long): Unit = {
-              t(i) = v.toByte; t(i + 1) = (v >>> 8).toByte
-              t(i + 2) = (v >>> 16).toByte; t(i + 3) = (v >>> 24).toByte
-            }
-            t(0) = 'I'; t(1) = 'I'; w16(2, 42); w32(4, 8)
-            w16(8, n0)
-            var e = 10
-            def entry(tag: Int, tpe: Int, cnt: Long, value: Long): Unit = {
-              w16(e, tag); w16(e + 2, tpe); w32(e + 4, cnt); w32(e + 8, value)
-              e += 12
-            }
-            entry(0x010F, 2, 5, makeOff)
-            entry(0x0112, 3, 1, 1 + id % 8)
-            if (gps) entry(0x8825, 4, 1, gpsOff)
-            w32(e, 0)
-            System.arraycopy(s"Cam${id % 10}".getBytes("US-ASCII"), 0, t, makeOff, 4)
-            if (gps) { w16(gpsOff, 0); w32(gpsOff + 2, 0) }
-            val len = 2 + 6 + t.length
-            val app1 = Array[Byte](0xFF.toByte, 0xE1.toByte,
-              ((len >>> 8) & 0xFF).toByte, (len & 0xFF).toByte) ++
-              "Exif".getBytes("US-ASCII") ++ Array[Byte](0, 0) ++ t
-            (id, jpg.take(2) ++ app1 ++ jpg.drop(2))
+            (id, graft.ext.Exif.withApp1(jpg, Plants.copyExifTiff(id)))
           }
         }
         .toDF("media_id", "payload")
@@ -5884,19 +5701,7 @@ object ExtQueries {
         .map { id =>
           val orientation = (1 + id % 8).toInt
           val gps = id % 2 == 0
-          val n = if (gps) 2 else 1
-          val t = new Array[Byte](8 + 2 + n * 12 + 4)
-          t(0) = 'I'; t(1) = 'I'; t(2) = 42; t(4) = 8
-          def le16(i: Int, v: Int): Unit = {
-            t(i) = v.toByte; t(i + 1) = (v >> 8).toByte
-          }
-          def le32(i: Int, v: Long): Unit = {
-            t(i) = v.toByte; t(i + 1) = (v >> 8).toByte
-            t(i + 2) = (v >> 16).toByte; t(i + 3) = (v >> 24).toByte
-          }
-          le16(8, n)
-          le16(10, 0x0112); le16(12, 3); le32(14, 1); le16(18, orientation)
-          if (gps) { le16(22, 0x8825); le16(24, 4); le32(26, 1); le32(30, 0) }
+          val t = Plants.orientationTiff(orientation, gps)
           val exifPayload =
             if (id % 3 == 0) "Exif".getBytes("US-ASCII") ++
               Array[Byte](0, 0) ++ t
@@ -6083,19 +5888,7 @@ object ExtQueries {
         .map { id =>
           val orientation = (1 + id % 8).toInt
           val gps = id % 2 == 0
-          val n = if (gps) 2 else 1
-          val t = new Array[Byte](8 + 2 + n * 12 + 4)
-          t(0) = 'I'; t(1) = 'I'; t(2) = 42; t(4) = 8
-          def le16(i: Int, v: Int): Unit = {
-            t(i) = v.toByte; t(i + 1) = (v >> 8).toByte
-          }
-          def le32(i: Int, v: Long): Unit = {
-            t(i) = v.toByte; t(i + 1) = (v >> 8).toByte
-            t(i + 2) = (v >> 16).toByte; t(i + 3) = (v >> 24).toByte
-          }
-          le16(8, n)
-          le16(10, 0x0112); le16(12, 3); le32(14, 1); le16(18, orientation)
-          if (gps) { le16(22, 0x8825); le16(24, 4); le32(26, 1); le32(30, 0) }
+          val t = Plants.orientationTiff(orientation, gps)
           val brand = if (id % 2 == 0) "heic" else "avif"
           val w = (640 + id % 2000).toInt
           val h = (480 + id % 1000).toInt
@@ -6153,10 +5946,7 @@ object ExtQueries {
             val payload = enc.toByte +: tb
             val sizeB =
               if (v4) ss(payload.length)
-              else Array(((payload.length >>> 24) & 0xFF).toByte,
-                ((payload.length >>> 16) & 0xFF).toByte,
-                ((payload.length >>> 8) & 0xFF).toByte,
-                (payload.length & 0xFF).toByte)
+              else Bytes.be32Of(payload.length)
             fid.getBytes("US-ASCII") ++ sizeB ++ Array[Byte](0, 0) ++ payload
           }
           val (title, enc) = (id % 3) match {
@@ -6262,41 +6052,7 @@ object ExtQueries {
       // envelope by design; this is the metadata-triage arm.
       import s.implicits._
       documents(s, d).select(col("doc_id")).as[Long]
-        .map { id =>
-          val le = id % 2 == 0
-          val w = (100 + id % 900).toInt
-          val h = (100 + id % 600).toInt
-          val t = new Array[Byte](86)
-          def w16(i: Int, v: Int): Unit =
-            if (le) { t(i) = v.toByte; t(i + 1) = (v >>> 8).toByte }
-            else { t(i) = (v >>> 8).toByte; t(i + 1) = v.toByte }
-          def w32(i: Int, v: Long): Unit =
-            if (le) {
-              t(i) = v.toByte; t(i + 1) = (v >>> 8).toByte
-              t(i + 2) = (v >>> 16).toByte; t(i + 3) = (v >>> 24).toByte
-            } else {
-              t(i) = (v >>> 24).toByte; t(i + 1) = (v >>> 16).toByte
-              t(i + 2) = (v >>> 8).toByte; t(i + 3) = v.toByte
-            }
-          if (le) { t(0) = 'I'; t(1) = 'I' } else { t(0) = 'M'; t(1) = 'M' }
-          w16(2, 42); w32(4, 8); w16(8, 5)
-          var e = 10
-          def entry(tag: Int, tpe: Int, cnt: Long, value: Long,
-              short: Boolean = false): Unit = {
-            w16(e, tag); w16(e + 2, tpe); w32(e + 4, cnt)
-            if (short) w16(e + 8, value.toInt) else w32(e + 8, value)
-            e += 12
-          }
-          entry(0x0100, 4, 1, w)
-          entry(0x0101, 4, 1, h)
-          entry(0x0102, 3, 3, 74) // SHORT x3 -> offset heap
-          entry(0x010F, 2, 6, 80)
-          entry(0x0112, 3, 1, 1 + id % 8, short = true)
-          w32(e, 0)
-          w16(74, 8); w16(76, 8); w16(78, 8)
-          System.arraycopy(s"Scan${id % 10}".getBytes("US-ASCII"), 0, t, 80, 5)
-          (id, t)
-        }
+        .map(id => (id, Plants.scanTiff(id)))
         .toDF("media_id", "payload")
         .as[(Long, Array[Byte])]
         .map { case (id, p) =>

@@ -7,13 +7,16 @@ import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 
-import graft.ext.Png
+import graft.ext.{Bytes, Multimodal, Png, TiffImg}
 
 /** Planted-fixture helpers shared by the [[ExtQueries]] certificates: the
-  * per-doc payload synthesis (rasters, JPEG encodes), the spread of a
-  * narrow per-doc scan across the session's cores, and the result tails
-  * several query families share. Each helper is the single copy of code
-  * the queries used to inline; outputs and plans are the inlined forms'.
+  * per-doc payload synthesis (rasters, JPEG encodes, Exif TIFFs), the
+  * spread of a narrow per-doc scan across the session's cores, and the
+  * result tails several query families share. Each helper is the single
+  * copy of code the queries used to inline; outputs and plans are the
+  * inlined forms'. A fixture that needs a container (WAVE, ISO-BMFF box,
+  * PNG chunk, TIFF IFD, Exif APP1) calls that codec's own writer and
+  * [[graft.ext.Bytes]] for byte order; it never keeps a copy of either.
   */
 private[ops] object Plants {
 
@@ -88,6 +91,106 @@ private[ops] object Plants {
       ios.close()
       bos.toByteArray
     }
+  }
+
+  /** q_exif_meta's little-endian Exif TIFF for doc `id`: Make (`Cam`
+    * id%10) on the ASCII heap, an inline SHORT Orientation 1 + id%8, a
+    * DateTime string, an Exif sub-IFD with 16×16 pixel dimensions, and an
+    * empty GPS IFD behind a pointer on even ids.
+    */
+  def exifMetaTiff(id: Long): Array[Byte] = {
+    val gps = id % 2 == 0
+    val n0 = 4 + (if (gps) 1 else 0)
+    val makeOff = 8 + 2 + n0 * 12 + 4
+    val dtOff = makeOff + 6
+    val exifOff = dtOff + 20
+    val gpsOff = exifOff + 30
+    val t = new Array[Byte](gpsOff + (if (gps) 6 else 0))
+    TiffImg.putHeader(t, 8, bigEndian = false)
+    TiffImg.putIfd(t, 8, Seq[(Int, Int, Long, Long)](
+      (0x010F, 2, 5, makeOff),
+      (0x0112, 3, 1, 1 + id % 8),
+      (0x0132, 2, 20, dtOff),
+      (0x8769, 4, 1, exifOff)) ++
+      (if (gps) Seq((0x8825, 4, 1L, gpsOff.toLong)) else Nil), bigEndian = false)
+    System.arraycopy(s"Cam${id % 10}".getBytes("US-ASCII"), 0, t, makeOff, 4)
+    System.arraycopy(s"2026:01:15 10:0${id % 10}:00".getBytes("US-ASCII"), 0, t, dtOff, 19)
+    TiffImg.putIfd(t, exifOff, Seq((0xA002, 4, 1L, 16L), (0xA003, 4, 1L, 16L)),
+      bigEndian = false)
+    if (gps) TiffImg.putIfd(t, gpsOff, Nil, bigEndian = false)
+    t
+  }
+
+  /** q_media_curate_engine's per-copy Exif TIFF for doc `id`: Make
+    * (`Cam` id%10), Orientation 1 + id%8 and, on even ids, an empty GPS
+    * IFD — metadata that differs between copies of the same pixels.
+    */
+  def copyExifTiff(id: Long): Array[Byte] = {
+    val gps = id % 2 == 0
+    val n0 = 2 + (if (gps) 1 else 0)
+    val makeOff = 8 + 2 + n0 * 12 + 4
+    val gpsOff = makeOff + 6
+    val t = new Array[Byte](gpsOff + (if (gps) 6 else 0))
+    TiffImg.putHeader(t, 8, bigEndian = false)
+    TiffImg.putIfd(t, 8, Seq[(Int, Int, Long, Long)](
+      (0x010F, 2, 5, makeOff),
+      (0x0112, 3, 1, 1 + id % 8)) ++
+      (if (gps) Seq((0x8825, 4, 1L, gpsOff.toLong)) else Nil), bigEndian = false)
+    System.arraycopy(s"Cam${id % 10}".getBytes("US-ASCII"), 0, t, makeOff, 4)
+    if (gps) TiffImg.putIfd(t, gpsOff, Nil, bigEndian = false)
+    t
+  }
+
+  /** q_tiff_meta's standalone TIFF for doc `id`, little-endian on even
+    * ids and big-endian on odd: LONG width 100 + id%900 and height
+    * 100 + id%600, BitsPerSample 8,8,8 on the offset heap, Make (`Scan`
+    * id%10) on the ASCII heap and an inline SHORT Orientation 1 + id%8.
+    */
+  def scanTiff(id: Long): Array[Byte] = {
+    val be = id % 2 != 0
+    val t = new Array[Byte](86)
+    TiffImg.putHeader(t, 8, be)
+    TiffImg.putIfd(t, 8, Seq[(Int, Int, Long, Long)](
+      (0x0100, 4, 1, 100 + id % 900),
+      (0x0101, 4, 1, 100 + id % 600),
+      (0x0102, 3, 3, 74), // SHORT x3 -> offset heap
+      (0x010F, 2, 6, 80),
+      (0x0112, 3, 1, 1 + id % 8)), be)
+    Seq(74, 76, 78).foreach(Bytes.put16(t, _, 8, be))
+    System.arraycopy(s"Scan${id % 10}".getBytes("US-ASCII"), 0, t, 80, 5)
+    t
+  }
+
+  /** Little-endian TIFF holding one IFD: an inline SHORT Orientation
+    * and, with `gps`, a GPS-IFD pointer (offset 0) — the Exif payload of
+    * the WebP and HEIF metadata certificates.
+    */
+  def orientationTiff(orientation: Int, gps: Boolean): Array[Byte] = {
+    val entries = Seq[(Int, Int, Long, Long)]((0x0112, 3, 1, orientation)) ++
+      (if (gps) Seq((0x8825, 4, 1L, 0L)) else Nil)
+    val t = new Array[Byte](8 + 2 + entries.length * 12 + 4)
+    TiffImg.putHeader(t, 8, bigEndian = false)
+    TiffImg.putIfd(t, 8, entries, bigEndian = false)
+    t
+  }
+
+  /** Every second frame of each `(media_id, payload)` video, its PNG
+    * decoded back to a pixel sum: `media_id, frame_no, width, height,
+    * pixel_sum` — the result tail of the AVI and MP4 frame certificates.
+    */
+  def framePixelSums(media: DataFrame): DataFrame = {
+    val spark = media.sparkSession
+    import spark.implicits._
+    Multimodal.sampleFramesReal(media, stride = 2)
+      .map { sf =>
+        val img = Png.decode(sf.frame_png).getOrElse(
+          throw new IllegalStateException(
+            s"frame png decode failed for ${sf.media_id}/${sf.frame_no}"))
+        var sum = 0L
+        img.pixels.foreach(v => sum += (v & 0xFF))
+        (sf.media_id, sf.frame_no, sf.width, sf.height, sum)
+      }
+      .toDF("media_id", "frame_no", "width", "height", "pixel_sum")
   }
 
   /** Count of rows where `cond` holds (null when there are no rows). */

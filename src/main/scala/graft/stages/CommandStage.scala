@@ -1,6 +1,8 @@
 package graft.stages
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
 
 /** External-process stage — the Spark-native analog of the reference's
   * `toStream` (`/root/reference/index.js:14-27`): a shell command bridged
@@ -68,7 +70,26 @@ object CommandStage {
       Seq("/bin/sh", "-c", full),
       env,
       null, null, false, 8192, java.nio.charset.StandardCharsets.UTF_8.name())
+      .setName(PipedName)
     spark.createDataset(piped).toDF(ValueCol)
+  }
+
+  /** Name of the RDD each command stage pipes through its process. */
+  private val PipedName = "graft-command"
+
+  /** Whether computing `df` runs a command stage that no cache holds: the
+    * plan, with cached parts swapped in, reads an RDD whose lineage holds
+    * a command's pipe.
+    */
+  private[graft] def feeds(df: DataFrame): Boolean = {
+    val seen = scala.collection.mutable.Set.empty[Int] // lineages share ancestors
+    def piped(rdd: RDD[_]): Boolean =
+      seen.add(rdd.id) && (rdd.name == PipedName || rdd.dependencies.exists(d => piped(d.rdd)))
+    df.queryExecution.withCachedData.exists {
+      case r: ExternalRDD[_] => piped(r.rdd)
+      case r: LogicalRDD => piped(r.rdd)
+      case _ => false
+    }
   }
 
   /** Source form: run the command against empty stdin — how a leading

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Background-segment runner — streaming parity for the reference's
   * `background` composition type (`/root/reference/index.js:150-151,
@@ -28,16 +27,4 @@ object BackgroundRunner {
       try q.stop() catch { case _: Throwable => () }
     }
   }
-
-  /** Convenience: run a background memory-sink query for a DataFrame while
-    * the main action executes; returns the main result after stopping.
-    */
-  def runBeside[T](side: DataFrame, queryName: String)(main: => T): T =
-    withBackground(() =>
-      side.writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode("append")
-        .trigger(Trigger.ProcessingTime("1 second"))
-        .start())(main)
 }

@@ -136,12 +136,8 @@ object AnalyticsSoak {
       import spark.implicits._
       spark.range(0, 600000, 1, 64).as[Long]
         .mapPartitions { ids =>
-          def be32(v: Long): Array[Byte] = Array(((v >>> 24) & 0xFF).toByte,
-            ((v >>> 16) & 0xFF).toByte, ((v >>> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-          def box(tpe: String, parts: Array[Byte]*): Array[Byte] = {
-            val n = 8 + parts.map(_.length).sum
-            be32(n) ++ tpe.getBytes("US-ASCII") ++ parts.flatten
-          }
+          import graft.ext.Bytes.{be32Of, putBe32}
+          import graft.ext.Mp4.box
           ids.map { id =>
             val payload = (id % 3) match {
               case 0 => // MP3: 10-frame MPEG1 L3 CBR chain
@@ -157,28 +153,28 @@ object AnalyticsSoak {
                     new Array[Byte](64))
               case _ => // MP4: ftyp + two-track moov, metadata only
                 val mvhd = { val p = new Array[Byte](100)
-                  System.arraycopy(be32(1000), 0, p, 12, 4)
-                  System.arraycopy(be32(30000 + id % 1000), 0, p, 16, 4)
+                  putBe32(p, 12, 1000)
+                  putBe32(p, 16, 30000 + id % 1000)
                   box("mvhd", p) }
                 def track(tid: Int, handler: String, codec: String) = {
                   val tk = { val p = new Array[Byte](84)
-                    System.arraycopy(be32(tid), 0, p, 12, 4); box("tkhd", p) }
+                    putBe32(p, 12, tid); box("tkhd", p) }
                   val md = { val p = new Array[Byte](24)
-                    System.arraycopy(be32(90000), 0, p, 12, 4)
-                    System.arraycopy(be32(90000 + id % 9000), 0, p, 16, 4)
+                    putBe32(p, 12, 90000)
+                    putBe32(p, 16, 90000 + id % 9000)
                     box("mdhd", p) }
                   val hd = box("hdlr", new Array[Byte](8),
                     handler.getBytes("US-ASCII"), new Array[Byte](13))
-                  val sd = box("stsd", new Array[Byte](4), be32(1), be32(16),
+                  val sd = box("stsd", new Array[Byte](4), be32Of(1), be32Of(16),
                     codec.getBytes("US-ASCII"), new Array[Byte](8))
-                  val tt = box("stts", new Array[Byte](4), be32(1),
-                    be32(100 + id % 50), be32(3600))
-                  val sz = box("stsz", new Array[Byte](4), be32(512),
-                    be32(100 + id % 50))
+                  val tt = box("stts", new Array[Byte](4), be32Of(1),
+                    be32Of(100 + id % 50), be32Of(3600))
+                  val sz = box("stsz", new Array[Byte](4), be32Of(512),
+                    be32Of(100 + id % 50))
                   box("trak", tk, box("mdia", md, hd, box("minf",
                     box("stbl", sd, tt, sz))))
                 }
-                box("ftyp", "isom".getBytes("US-ASCII"), be32(0)) ++
+                box("ftyp", "isom".getBytes("US-ASCII"), be32Of(0)) ++
                   box("moov", mvhd, track(1, "vide", "avc1"),
                     track(2, "soun", "mp4a"))
             }

@@ -183,6 +183,14 @@ class MainSpec extends SparkSpec {
     }
   }
 
+  test("pipe through a command then a json stage releases the command's cache") {
+    withDir("""{"main": ["cat", {"module": "uppercase", "json": true}]}""") { cwd =>
+      spark.catalog.clearCache()
+      assert(piped("""{"value":"x"}""" + "\n", "pipe", "--cwd", cwd) == Seq("""{"value":"X"}"""))
+      assert(spark.sharedState.cacheManager.isEmpty)
+    }
+  }
+
   test("pipe --stream follows a growing directory incrementally") {
     withDir("""{"main": [{"module": "uppercase"}]}""") { cwd =>
       // module stage: command stages are batch-only; the module registry's

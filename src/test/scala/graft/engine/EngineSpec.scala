@@ -356,6 +356,7 @@ class EngineSpec extends SparkSpec {
     assert(jobsDuring { split = engine.run("split", spark, Some(in)) } == 2)
     // the second parse infers from text, and inference sorts the keys
     assert(collectValues(split) == Seq("""{"id":1,"note":"n","value":"x"}"""))
+    engine.release()
   }
 
   test("DEBUG taps report every fused json stage's own row count") {
@@ -399,6 +400,54 @@ class EngineSpec extends SparkSpec {
       assert(printed.toString("UTF-8").split("\n").toSeq == multi)
       assert(spawned().sorted == Seq("a", "b", "c", "d", "e"))
     } finally java.nio.file.Files.deleteIfExists(log)
+  }
+
+  test("a command stage ahead of a json stage spawns once, through collect and printLines") {
+    val log = java.nio.file.Files.createTempFile("graft-spawns", ".log")
+    def spawned(): Seq[String] = {
+      val got = java.nio.file.Files.readAllLines(log).toArray.toSeq.map(_.toString)
+      java.nio.file.Files.write(log, Array.emptyByteArray)
+      got
+    }
+    // the command logs one line per spawn and passes its stdin through
+    val cmd = Stage.Command(s"echo spawn >> '$log'; cat")
+    val tag = Stage.Inline("tag", _.withColumn("seen", lit(true)), json = true)
+    val keep = Stage.Inline("keep", df => df, json = true)
+    val spec = PipelineSpec(ListMap(
+      "cmd_json" -> Seq(cmd, tag),
+      "json_cmd_json" -> Seq(keep, cmd, tag)))
+    // one partition: the command runs one process per computation
+    val in = lines("""{"id":1}""", """{"id":2}""").coalesce(1)
+    val want = Seq("""{"id":1,"seen":true}""", """{"id":2,"seen":true}""")
+    val engine = new Engine(spec)
+    spark.catalog.clearCache()
+    try Seq("cmd_json", "json_cmd_json").foreach { name =>
+      // building runs the json stage's schema inference, which spawns the
+      // command once; the action then reads the cached command output
+      assert(collectValues(engine.run(name, spark, Some(in))) == want, name)
+      assert(spawned() == Seq("spawn"), s"$name collect")
+      val printed = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(printed, true, "UTF-8")) {
+        graft.sources.Sources.printLines(engine.run(name, spark, Some(in)), Int.MaxValue)
+      }
+      assert(printed.toString("UTF-8").split("\n").toSeq == want, name)
+      assert(spawned() == Seq("spawn"), s"$name printLines")
+      assert(!spark.sharedState.cacheManager.isEmpty, name)
+      engine.release()
+      assert(spark.sharedState.cacheManager.isEmpty, name)
+    } finally {
+      engine.release()
+      java.nio.file.Files.deleteIfExists(log)
+    }
+  }
+
+  test("a json stage fed by stdin alone persists nothing") {
+    val spec = PipelineSpec(ListMap("recs" -> Seq(
+      Stage.Inline("tag", _.withColumn("seen", lit(true)), json = true))))
+    spark.catalog.clearCache()
+    val out = new Engine(spec).run("recs", spark, Some(lines("""{"id":1}""")))
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(collectValues(out) == Seq("""{"id":1,"seen":true}"""))
   }
 
   test("registry surface: list/has/toJson round-trip (index.js:180-210)") {

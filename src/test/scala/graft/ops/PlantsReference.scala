@@ -3,9 +3,9 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The inline forms the [[Plants]] helpers replace in the [[ExtQueries]]
-  * certificates, kept verbatim as the reference the helpers are checked
-  * against.
+/** The inline forms the [[Plants]] helpers and the codecs' shared writers
+  * replace in the [[ExtQueries]] certificates, kept verbatim as the
+  * reference they are checked against.
   */
 object PlantsReference {
 
@@ -87,4 +87,218 @@ object PlantsReference {
       .select(col("vec_id"), round(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("vec_id"))
       .limit(10)
+
+  /** q_exif_meta's inline Exif TIFF. */
+  def exifMetaTiff(id: Long): Array[Byte] = {
+    val gps = id % 2 == 0
+    val make = s"Cam${id % 10}"
+    val dt = s"2026:01:15 10:0${id % 10}:00"
+    val n0 = 4 + (if (gps) 1 else 0)
+    val makeOff = 8 + 2 + n0 * 12 + 4
+    val dtOff = makeOff + 6
+    val exifOff = dtOff + 20
+    val gpsOff = exifOff + 30
+    val t = new Array[Byte](gpsOff + (if (gps) 6 else 0))
+    def w16(i: Int, v: Int): Unit = {
+      t(i) = v.toByte; t(i + 1) = (v >>> 8).toByte
+    }
+    def w32(i: Int, v: Long): Unit = {
+      t(i) = v.toByte; t(i + 1) = (v >>> 8).toByte
+      t(i + 2) = (v >>> 16).toByte; t(i + 3) = (v >>> 24).toByte
+    }
+    t(0) = 'I'; t(1) = 'I'; w16(2, 42); w32(4, 8)
+    w16(8, n0)
+    var e = 10
+    def entry(tag: Int, tpe: Int, cnt: Long, value: Long): Unit = {
+      w16(e, tag); w16(e + 2, tpe); w32(e + 4, cnt); w32(e + 8, value)
+      e += 12
+    }
+    entry(0x010F, 2, 5, makeOff)
+    entry(0x0112, 3, 1, 1 + id % 8)
+    entry(0x0132, 2, 20, dtOff)
+    entry(0x8769, 4, 1, exifOff)
+    if (gps) entry(0x8825, 4, 1, gpsOff)
+    w32(e, 0)
+    System.arraycopy(make.getBytes("US-ASCII"), 0, t, makeOff, 4)
+    System.arraycopy(dt.getBytes("US-ASCII"), 0, t, dtOff, 19)
+    w16(exifOff, 2)
+    e = exifOff + 2
+    entry(0xA002, 4, 1, 16)
+    entry(0xA003, 4, 1, 16)
+    w32(e, 0)
+    if (gps) { w16(gpsOff, 0); w32(gpsOff + 2, 0) }
+    t
+  }
+
+  /** q_media_curate_engine's inline per-copy Exif TIFF. */
+  def copyExifTiff(id: Long): Array[Byte] = {
+    val gps = id % 2 == 0
+    val n0 = 2 + (if (gps) 1 else 0)
+    val makeOff = 8 + 2 + n0 * 12 + 4
+    val gpsOff = makeOff + 6
+    val t = new Array[Byte](gpsOff + (if (gps) 6 else 0))
+    def w16(i: Int, v: Int): Unit = {
+      t(i) = v.toByte; t(i + 1) = (v >>> 8).toByte
+    }
+    def w32(i: Int, v: Long): Unit = {
+      t(i) = v.toByte; t(i + 1) = (v >>> 8).toByte
+      t(i + 2) = (v >>> 16).toByte; t(i + 3) = (v >>> 24).toByte
+    }
+    t(0) = 'I'; t(1) = 'I'; w16(2, 42); w32(4, 8)
+    w16(8, n0)
+    var e = 10
+    def entry(tag: Int, tpe: Int, cnt: Long, value: Long): Unit = {
+      w16(e, tag); w16(e + 2, tpe); w32(e + 4, cnt); w32(e + 8, value)
+      e += 12
+    }
+    entry(0x010F, 2, 5, makeOff)
+    entry(0x0112, 3, 1, 1 + id % 8)
+    if (gps) entry(0x8825, 4, 1, gpsOff)
+    w32(e, 0)
+    System.arraycopy(s"Cam${id % 10}".getBytes("US-ASCII"), 0, t, makeOff, 4)
+    if (gps) { w16(gpsOff, 0); w32(gpsOff + 2, 0) }
+    t
+  }
+
+  /** q_tiff_meta's inline standalone TIFF. */
+  def scanTiff(id: Long): Array[Byte] = {
+    val le = id % 2 == 0
+    val w = (100 + id % 900).toInt
+    val h = (100 + id % 600).toInt
+    val t = new Array[Byte](86)
+    def w16(i: Int, v: Int): Unit =
+      if (le) { t(i) = v.toByte; t(i + 1) = (v >>> 8).toByte }
+      else { t(i) = (v >>> 8).toByte; t(i + 1) = v.toByte }
+    def w32(i: Int, v: Long): Unit =
+      if (le) {
+        t(i) = v.toByte; t(i + 1) = (v >>> 8).toByte
+        t(i + 2) = (v >>> 16).toByte; t(i + 3) = (v >>> 24).toByte
+      } else {
+        t(i) = (v >>> 24).toByte; t(i + 1) = (v >>> 16).toByte
+        t(i + 2) = (v >>> 8).toByte; t(i + 3) = v.toByte
+      }
+    if (le) { t(0) = 'I'; t(1) = 'I' } else { t(0) = 'M'; t(1) = 'M' }
+    w16(2, 42); w32(4, 8); w16(8, 5)
+    var e = 10
+    def entry(tag: Int, tpe: Int, cnt: Long, value: Long,
+        short: Boolean = false): Unit = {
+      w16(e, tag); w16(e + 2, tpe); w32(e + 4, cnt)
+      if (short) w16(e + 8, value.toInt) else w32(e + 8, value)
+      e += 12
+    }
+    entry(0x0100, 4, 1, w)
+    entry(0x0101, 4, 1, h)
+    entry(0x0102, 3, 3, 74) // SHORT x3 -> offset heap
+    entry(0x010F, 2, 6, 80)
+    entry(0x0112, 3, 1, 1 + id % 8, short = true)
+    w32(e, 0)
+    w16(74, 8); w16(76, 8); w16(78, 8)
+    System.arraycopy(s"Scan${id % 10}".getBytes("US-ASCII"), 0, t, 80, 5)
+    t
+  }
+
+  /** The orientation TIFF q_webp_exif and q_heif_exif each wrote inline. */
+  def orientationTiff(orientation: Int, gps: Boolean): Array[Byte] = {
+    val n = if (gps) 2 else 1
+    val t = new Array[Byte](8 + 2 + n * 12 + 4)
+    t(0) = 'I'; t(1) = 'I'; t(2) = 42; t(4) = 8
+    def le16(i: Int, v: Int): Unit = {
+      t(i) = v.toByte; t(i + 1) = (v >> 8).toByte
+    }
+    def le32(i: Int, v: Long): Unit = {
+      t(i) = v.toByte; t(i + 1) = (v >> 8).toByte
+      t(i + 2) = (v >> 16).toByte; t(i + 3) = (v >> 24).toByte
+    }
+    le16(8, n)
+    le16(10, 0x0112); le16(12, 3); le32(14, 1); le16(18, orientation)
+    if (gps) { le16(22, 0x8825); le16(24, 4); le32(26, 1); le32(30, 0) }
+    t
+  }
+
+  /** The MP4 certificates' box builders with their own box writer. */
+  object Mp4Build {
+    def be32(v: Long): Array[Byte] = Array(
+      ((v >>> 24) & 0xFF).toByte, ((v >>> 16) & 0xFF).toByte,
+      ((v >>> 8) & 0xFF).toByte, (v & 0xFF).toByte)
+    def be16(v: Int): Array[Byte] =
+      Array(((v >>> 8) & 0xFF).toByte, (v & 0xFF).toByte)
+    def box(tpe: String, parts: Array[Byte]*): Array[Byte] = {
+      val n = 8 + parts.map(_.length).sum
+      val bos = new java.io.ByteArrayOutputStream(n)
+      bos.write(be32(n)); bos.write(tpe.getBytes("US-ASCII"))
+      parts.foreach(bos.write)
+      bos.toByteArray
+    }
+    val full0: Array[Byte] = Array(0, 0, 0, 0) // version 0 + zero flags
+    def ftyp(brand: String): Array[Byte] =
+      box("ftyp", brand.getBytes("US-ASCII"), be32(0))
+    def mvhd(timescale: Long, duration: Long): Array[Byte] = {
+      val p = new Array[Byte](100) // v0 payload: times/scale/dur + rate/vol/matrix/next
+      System.arraycopy(be32(timescale), 0, p, 12, 4)
+      System.arraycopy(be32(duration), 0, p, 16, 4)
+      System.arraycopy(be32(0x00010000L), 0, p, 20, 4) // rate 1.0
+      p(96) = 0; p(97) = 0; p(98) = 0; p(99) = 3 // next_track_id
+      box("mvhd", p)
+    }
+    def tkhd(trackId: Long, w: Int, h: Int): Array[Byte] = {
+      val p = new Array[Byte](84)
+      p(3) = 7 // flags: enabled | in-movie | in-preview
+      System.arraycopy(be32(trackId), 0, p, 12, 4)
+      // unity matrix at offset 40 (after reserved/layer/volume block)
+      System.arraycopy(be32(0x00010000L), 0, p, 40, 4)
+      System.arraycopy(be32(0x00010000L), 0, p, 56, 4)
+      System.arraycopy(be32(0x40000000L), 0, p, 72, 4)
+      System.arraycopy(be32(w.toLong << 16), 0, p, 76, 4)
+      System.arraycopy(be32(h.toLong << 16), 0, p, 80, 4)
+      box("tkhd", p)
+    }
+    def mdhd(timescale: Long, duration: Long): Array[Byte] = {
+      val p = new Array[Byte](24)
+      System.arraycopy(be32(timescale), 0, p, 12, 4)
+      System.arraycopy(be32(duration), 0, p, 16, 4)
+      p(20) = 0x55; p(21) = 0xC4.toByte // language "und"
+      box("mdhd", p)
+    }
+    def hdlr(handler: String): Array[Byte] =
+      box("hdlr", full0, be32(0), handler.getBytes("US-ASCII"),
+        new Array[Byte](12), Array[Byte](0))
+    def stsd(codec: String): Array[Byte] =
+      // one bare 16-byte SampleEntry: size + format 4cc + 6 reserved + dri
+      box("stsd", full0, be32(1),
+        be32(16), codec.getBytes("US-ASCII"), new Array[Byte](6), be16(1))
+    def stts(n: Long, delta: Long): Array[Byte] =
+      box("stts", full0, be32(1), be32(n), be32(delta))
+    def stszUniform(size: Long, n: Long): Array[Byte] =
+      box("stsz", full0, be32(size), be32(n))
+    def stszSizes(sizes: Seq[Int]): Array[Byte] =
+      box("stsz", full0 ++ be32(0) ++ be32(sizes.length) ++
+        sizes.flatMap(sz => be32(sz)).toArray)
+    def stsc(samplesPerChunk: Long): Array[Byte] =
+      box("stsc", full0, be32(1), be32(1), be32(samplesPerChunk), be32(1))
+    def stco(offsets: Seq[Long]): Array[Byte] =
+      box("stco", full0 ++ be32(offsets.length) ++
+        offsets.flatMap(o => be32(o)).toArray)
+    def trak(tkhdBox: Array[Byte], mdhdBox: Array[Byte], hdlrBox: Array[Byte],
+        stblParts: Array[Byte]*): Array[Byte] =
+      box("trak", tkhdBox,
+        box("mdia", mdhdBox, hdlrBox, box("minf", box("stbl", stblParts: _*))))
+  }
+
+  /** The sampled-frame pixel-sum tail q_avi_frames and q_mp4_frames each
+    * wrote inline.
+    */
+  def framePixelSums(m: DataFrame): DataFrame = {
+    val s = m.sparkSession
+    import s.implicits._
+    graft.ext.Multimodal.sampleFramesReal(m, stride = 2)
+      .map { sf =>
+        val img = graft.ext.Png.decode(sf.frame_png).getOrElse(
+          throw new IllegalStateException(
+            s"frame png decode failed for ${sf.media_id}/${sf.frame_no}"))
+        var sum = 0L
+        img.pixels.foreach(v => sum += (v & 0xFF))
+        (sf.media_id, sf.frame_no, sf.width, sf.height, sum)
+      }
+      .toDF("media_id", "frame_no", "width", "height", "pixel_sum")
+  }
 }

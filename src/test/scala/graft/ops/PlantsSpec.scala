@@ -58,6 +58,65 @@ class PlantsSpec extends SparkSpec {
     }
   }
 
+  test("the Exif and TIFF fixtures equal their inline IFD writers, both byte orders") {
+    (0L until 3000L).foreach { id =>
+      assert(Plants.exifMetaTiff(id).sameElements(PlantsReference.exifMetaTiff(id)), s"exif id=$id")
+      assert(Plants.copyExifTiff(id).sameElements(PlantsReference.copyExifTiff(id)), s"copy id=$id")
+      // even ids little-endian, odd ids big-endian
+      assert(Plants.scanTiff(id).sameElements(PlantsReference.scanTiff(id)), s"scan id=$id")
+    }
+    for (orientation <- 0 to 9; gps <- Seq(false, true))
+      assert(Plants.orientationTiff(orientation, gps)
+        .sameElements(PlantsReference.orientationTiff(orientation, gps)), s"o=$orientation gps=$gps")
+  }
+
+  test("the MP4 certificate boxes built on Mp4.box equal their own-box-writer forms") {
+    import ExtQueries.{Mp4Build => Ours}
+    import PlantsReference.{Mp4Build => Ref}
+    def same(a: Array[Byte], b: Array[Byte], clue: String): Unit = assert(a.sameElements(b), clue)
+    (0L until 500L).foreach { id =>
+      val (w, h) = ((320 + (id % 16) * 16).toInt, (240 + (id % 9) * 16).toInt)
+      same(Ours.ftyp("isom"), Ref.ftyp("isom"), "ftyp")
+      same(Ours.mvhd(1000 + id, 30000 + id * 40), Ref.mvhd(1000 + id, 30000 + id * 40), s"mvhd $id")
+      same(Ours.tkhd(id, w, h), Ref.tkhd(id, w, h), s"tkhd $id")
+      same(Ours.mdhd(90000, id * 3600), Ref.mdhd(90000, id * 3600), s"mdhd $id")
+      same(Ours.hdlr("vide"), Ref.hdlr("vide"), "hdlr")
+      same(Ours.stsd("jpeg"), Ref.stsd("jpeg"), "stsd")
+      same(Ours.stts(25 + id, 3600), Ref.stts(25 + id, 3600), s"stts $id")
+      same(Ours.stszUniform(500 + id, 25 + id), Ref.stszUniform(500 + id, 25 + id), s"stsz $id")
+      val sizes = (0 until (id % 7).toInt).map(k => (id * 37 + k * 101).toInt)
+      same(Ours.stszSizes(sizes), Ref.stszSizes(sizes), s"stszSizes $id")
+      same(Ours.stsc(id), Ref.stsc(id), s"stsc $id")
+      same(Ours.stco(sizes.map(_.toLong * 3)), Ref.stco(sizes.map(_.toLong * 3)), s"stco $id")
+      same(Ours.trak(Ours.tkhd(1, w, h), Ours.mdhd(90000, id), Ours.hdlr("soun"), Ours.stts(id, 960)),
+        Ref.trak(Ref.tkhd(1, w, h), Ref.mdhd(90000, id), Ref.hdlr("soun"), Ref.stts(id, 960)), s"trak $id")
+    }
+  }
+
+  test("framePixelSums equals the inline sampled-frame tail over planted MP4 videos") {
+    import spark.implicits._
+    import ExtQueries.Mp4Build._
+    import graft.ext.Mp4.box
+    val jpeg = new Plants.JpegWriter()
+    val media = (0L until 12L).map { id =>
+      val jpgs = (0 until 6).map { f =>
+        jpeg.encode(Plants.grayBlocks(b => ((id * 11 + 17 + 23 * b + 7 * f) % 256).toInt))
+      }
+      val header = ftyp("isom")
+      val moov = box("moov", mvhd(1000, 240),
+        trak(tkhd(1, 16, 16), mdhd(90000, 6 * 3600), hdlr("vide"),
+          stsd("jpeg"), stts(6, 3600), stszSizes(jpgs.map(_.length)),
+          stsc(6), stco(Seq(header.length + 8L))))
+      (id, header ++ box("mdat", jpgs: _*) ++ moov)
+    }.toDF("media_id", "payload")
+    val ours = Plants.framePixelSums(media).orderBy("media_id", "frame_no")
+    val ref = PlantsReference.framePixelSums(media).orderBy("media_id", "frame_no")
+    assert(ours.schema == ref.schema)
+    val rows = ours.collect().toSeq
+    assert(rows.size == 12 * 3)
+    assert(rows == ref.collect().toSeq)
+  }
+
   private val pairSchema = StructType.fromDDL("id1 BIGINT, id2 BIGINT, hamming INT")
 
   private def imageAnchorSummary(pairs: DataFrame): DataFrame =
