@@ -29,8 +29,131 @@ package graft.ext
   * Malformed input never throws past the envelope: a corrupt or
   * truncated stream ends the walk with everything decoded before the
   * damage (cut-short contract, uniform with every other parser arm).
+  *
+  * Deflate (RFC 1951, raw or RFC 1950 zlib-wrapped) lives here and only
+  * here: [[compressDeflate]], [[inflateExact]] and [[inflateToEnd]] are
+  * the one home of `java.util.zip`'s Deflater and Inflater for every
+  * codec (ZIP method 8, PNG IDAT, PDF FlateDecode, `.warc.gz` members)
+  * and fixture builder, and [[gzip]] is the one gzip-member writer.
+  *
+  * Pooling: each thread keeps one raw and one zlib Deflater and one raw
+  * and one zlib Inflater, reset between uses and never `end()`ed. A
+  * fresh instance per payload costs a native-buffer alloc/free that
+  * dominates small-payload decodes and builds at millions of rows
+  * (DocSoak's 6.4M diagnosis); the pool bounds native memory to four
+  * instances per executor thread.
+  *
+  * NO-NESTING INVARIANT: each pool holds ONE instance per thread, so a
+  * use must finish (the helpers reset in `finally`) before anything else
+  * on the same thread takes the same pool. A nested use — decoding an
+  * embedded deflate image while a PDF inflate loop is in flight — would
+  * silently clobber shared native state and corrupt output.
+  * [[PooledInflater.acquire]] enforces this loudly: the flag flips on
+  * acquire and clears on `reset()`, so a nested acquire throws instead
+  * of corrupting decodes. The helpers never call back into caller code
+  * while they hold an instance.
   */
 object Codecs {
+
+  // ---- deflate: the pooled Deflater/Inflater home --------------------
+
+  /** A per-thread pooled Inflater that refuses nested use (see the
+    * object's no-nesting invariant).
+    */
+  private[ext] final class PooledInflater(raw: Boolean)
+      extends java.util.zip.Inflater(raw) {
+    private var inUse = false
+    def acquire(): PooledInflater = {
+      if (inUse)
+        throw new IllegalStateException(
+          "pooled Inflater acquired re-entrantly on this thread — " +
+            "nested decode would clobber shared native state")
+      inUse = true
+      this
+    }
+    override def reset(): Unit = { inUse = false; super.reset() }
+  }
+  private[ext] val pooledInflaterRaw: ThreadLocal[PooledInflater] =
+    ThreadLocal.withInitial(() => new PooledInflater(true))
+  private[ext] val pooledInflaterZlib: ThreadLocal[PooledInflater] =
+    ThreadLocal.withInitial(() => new PooledInflater(false))
+
+  private val pooledDeflaterRaw: ThreadLocal[java.util.zip.Deflater] =
+    ThreadLocal.withInitial(() =>
+      new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true))
+  private val pooledDeflaterZlib: ThreadLocal[java.util.zip.Deflater] =
+    ThreadLocal.withInitial(() =>
+      new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION))
+
+  private def acquireInflater(zlib: Boolean): PooledInflater =
+    (if (zlib) pooledInflaterZlib else pooledInflaterRaw).get().acquire()
+
+  /** Deflate `b` at the default level on this thread's pooled Deflater:
+    * raw (ZIP method 8) or zlib-wrapped (PNG IDAT, PDF FlateDecode). The
+    * bytes equal a fresh `Deflater` of the same form.
+    */
+  def compressDeflate(b: Array[Byte], zlib: Boolean): Array[Byte] = {
+    val d = (if (zlib) pooledDeflaterZlib else pooledDeflaterRaw).get()
+    try {
+      d.setInput(b); d.finish()
+      val out = new java.io.ByteArrayOutputStream(b.length / 2 + 64)
+      val buf = new Array[Byte](8192)
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+      out.toByteArray
+    } finally d.reset()
+  }
+
+  /** Inflate `b[off, off+len)` into an array of exactly `size` bytes —
+    * the form whose container records the inflated size (ZIP method 8,
+    * PNG IDAT). None when the stream ends, runs out of input or asks
+    * for a preset dictionary before `size` bytes, or is corrupt
+    * (`DataFormatException`); bytes past `size` are not read.
+    */
+  def inflateExact(b: Array[Byte], off: Int, len: Int, size: Int,
+      zlib: Boolean): Option[Array[Byte]] = {
+    val inf = acquireInflater(zlib)
+    try {
+      inf.setInput(b, off, len)
+      val out = new Array[Byte](size)
+      var got = 0
+      while (got < size && !inf.finished()) {
+        val n = inf.inflate(out, got, size - got)
+        // truncated, or a preset dictionary no container here supplies
+        if (n == 0 && (inf.needsInput() || inf.needsDictionary())) return None
+        got += n
+      }
+      if (got == size) Some(out) else None
+    } catch {
+      case _: java.util.zip.DataFormatException => None
+    } finally inf.reset()
+  }
+
+  /** Inflate the one deflate stream starting at `b(off)` to its end —
+    * the form whose container does not record the inflated size (PDF
+    * FlateDecode, gzip members). Returns the inflated bytes and the
+    * number of input bytes the stream consumed (its trailer, if any,
+    * starts there), or None when the stream is truncated, corrupt or
+    * needs a preset dictionary. `bufSize` is the inflate window and
+    * `outHint` the output's initial capacity.
+    */
+  def inflateToEnd(b: Array[Byte], off: Int, len: Int, zlib: Boolean,
+      bufSize: Int, outHint: Int): Option[(Array[Byte], Int)] = {
+    val inf = acquireInflater(zlib)
+    try {
+      inf.setInput(b, off, len)
+      val out = new java.io.ByteArrayOutputStream(outHint)
+      val buf = new Array[Byte](bufSize)
+      while (!inf.finished()) {
+        val n = inf.inflate(buf)
+        if (n > 0) out.write(buf, 0, n)
+        else if (!inf.finished() && (inf.needsInput() || inf.needsDictionary()))
+          return None
+      }
+      Some((out.toByteArray, len - inf.getRemaining))
+    } catch {
+      case _: java.util.zip.DataFormatException => None
+    } finally inf.reset()
+  }
 
   /** Compression family by magic: "gzip" (RFC 1952 `1f 8b`), "zstd"
     * (RFC 8878 `28 b5 2f fd`), "xz" (`fd 37 7a 58 5a 00`), "bzip2"
@@ -231,11 +354,13 @@ object Codecs {
     bos.toByteArray
   }
 
-  /** gzip-compress one member (parity with the other builders). */
-  def gzip(b: Array[Byte]): Array[Byte] = {
+  /** gzip-compress one member whose payload is `parts` concatenated —
+    * given as parts so a large payload is never copied into one array.
+    */
+  def gzip(parts: Array[Byte]*): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     val o = new java.util.zip.GZIPOutputStream(bos)
-    o.write(b); o.close()
+    parts.foreach(o.write(_)); o.close()
     bos.toByteArray
   }
 

@@ -308,6 +308,31 @@ object Mp4 {
       width: Int,
       height: Int)
 
+  /** The `iinf` box's declared item count and each `infe` (version 2
+    * or 3) entry's (item_ID, item_type 4cc), in box order.
+    */
+  private def infeItems(b: Array[Byte], s: Int, me: Int): (Int, Seq[(Long, String)]) = {
+    var nItems = 0
+    val items = Seq.newBuilder[(Long, String)]
+    child(b, s, me, "iinf").foreach { case (is0, ie) =>
+      val v = b(is0) & 0xFF
+      var p = is0 + 4
+      if (v == 0 && p + 2 <= ie) { nItems = be16(b, p); p += 2 }
+      else if (p + 4 <= ie) { nItems = be32u(b, p).toInt; p += 4 }
+      boxes(b, p, ie).foreach { case (tpe, es, ee) =>
+        if (tpe == "infe" && ee - es >= 12) {
+          val ev = b(es) & 0xFF
+          val (iid, tOff) =
+            if (ev == 2) (be16(b, es + 4).toLong, es + 8)
+            else if (ev == 3) (be32u(b, es + 4), es + 10)
+            else (-1L, -1)
+          if (tOff >= 0 && tOff + 4 <= ee) items += ((iid, fourcc(b, tOff)))
+        }
+      }
+    }
+    (nItems, items.result())
+  }
+
   /** First extent of an item's `iloc` entry: (construction_method,
     * absolute-or-idat-relative offset incl. base, length). Versions 0-2;
     * method is 0 for version-0 boxes (file-absolute by definition).
@@ -417,25 +442,9 @@ object Mp4 {
           if (v == 0 && ps + 6 <= pe) primary = be16(b, ps + 4).toLong
           else if (v >= 1 && ps + 8 <= pe) primary = be32u(b, ps + 4)
         }
-        var nItems = 0
-        var primaryType = ""
-        child(b, s, me, "iinf").foreach { case (is0, ie) =>
-          val v = b(is0) & 0xFF
-          var p = is0 + 4
-          if (v == 0 && p + 2 <= ie) { nItems = be16(b, p); p += 2 }
-          else if (p + 4 <= ie) { nItems = be32u(b, p).toInt; p += 4 }
-          boxes(b, p, ie).foreach { case (tpe, es, ee) =>
-            if (tpe == "infe" && ee - es >= 12) {
-              val ev = b(es) & 0xFF
-              val (iid, tOff) =
-                if (ev == 2) (be16(b, es + 4).toLong, es + 8)
-                else if (ev == 3) (be32u(b, es + 4), es + 10)
-                else (-1L, -1)
-              if (iid == primary && tOff >= 0 && tOff + 4 <= ee)
-                primaryType = fourcc(b, tOff)
-            }
-          }
-        }
+        val (nItems, items) = infeItems(b, s, me)
+        val primaryType =
+          items.collect { case (iid, t) if iid == primary => t }.lastOption.getOrElse("")
         var width = 0
         var height = 0
         // every item's ipma-associated ispe — the primary reads out of
@@ -573,73 +582,12 @@ object Mp4 {
       if (!HeifBrands.contains(fourcc(b, 8))) return None
       boxes(b, 0, b.length).collectFirst { case ("meta", ms0, me) =>
         val s = ms0 + 4
-        // the Exif item's id from iinf/infe
-        var exifId = -1L
-        child(b, s, me, "iinf").foreach { case (is0, ie) =>
-          val v = b(is0) & 0xFF
-          var p = is0 + 4
-          if (v == 0 && p + 2 <= ie) p += 2 else if (p + 4 <= ie) p += 4
-          boxes(b, p, ie).foreach { case (tpe, es, ee) =>
-            if (tpe == "infe" && ee - es >= 12) {
-              val ev = b(es) & 0xFF
-              val (iid, tOff) =
-                if (ev == 2) (be16(b, es + 4).toLong, es + 8)
-                else if (ev == 3) (be32u(b, es + 4), es + 10)
-                else (-1L, -1)
-              if (tOff >= 0 && tOff + 4 <= ee && fourcc(b, tOff) == "Exif")
-                exifId = iid
-            }
-          }
-        }
-        if (exifId < 0) return None
-        // iloc: (offset, length) of that item's FIRST extent,
-        // file-absolute construction only
-        var loc: Option[(Long, Long)] = None
-        child(b, s, me, "iloc").foreach { case (ls0, le) =>
-          val v = b(ls0) & 0xFF
-          var p = ls0 + 4
-          if (p + 2 > le) return None
-          val offSize = (b(p) >> 4) & 0xF
-          val lenSize = b(p) & 0xF
-          val baseSize = (b(p + 1) >> 4) & 0xF
-          val idxSize = if (v == 1 || v == 2) b(p + 1) & 0xF else 0
-          p += 2
-          def readN(n: Int): Long = {
-            var x = 0L
-            var k = 0
-            while (k < n) { x = (x << 8) | (b(p) & 0xFFL); p += 1; k += 1 }
-            x
-          }
-          val count =
-            if (v < 2) { if (p + 2 > le) return None; val c = be16(b, p); p += 2; c }
-            else { if (p + 4 > le) return None; val c = be32u(b, p).toInt; p += 4; c }
-          var k = 0
-          while (k < count && loc.isEmpty && p < le) {
-            val iid =
-              if (v < 2) { val x = be16(b, p).toLong; p += 2; x }
-              else { val x = be32u(b, p); p += 4; x }
-            var method = 0
-            if (v == 1 || v == 2) {
-              if (p + 2 > le) return None
-              method = b(p + 1) & 0xF; p += 2
-            }
-            p += 2 // data_reference_index
-            if (p + baseSize > le) return None
-            val base = readN(baseSize)
-            if (p + 2 > le) return None
-            val extents = be16(b, p); p += 2
-            var e = 0
-            while (e < extents && p + idxSize + offSize + lenSize <= le) {
-              p += idxSize
-              val off = readN(offSize)
-              val len = readN(lenSize)
-              // envelope: file-absolute (method 0), first extent wins
-              if (iid == exifId && e == 0 && method == 0)
-                loc = Some((base + off, len))
-              e += 1
-            }
-            k += 1
-          }
+        // the Exif item's id from iinf/infe, then the FIRST extent of
+        // its iloc entry, file-absolute construction only
+        val exifId = infeItems(b, s, me)._2.collect { case (iid, "Exif") => iid }
+          .lastOption.getOrElse(return None)
+        val loc = ilocFirstExtent(b, s, me, exifId).collect {
+          case (0, off, len) => (off, len)
         }
         loc.flatMap { case (off, len) =>
           if (off < 0 || len < 8 || off + len > b.length) None

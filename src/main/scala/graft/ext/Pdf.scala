@@ -15,7 +15,7 @@ package graft.ext
   *   - Stream data is located by `stream`/`endstream` framing (the
   *     /Length value may be an indirect reference; scanning avoids
   *     resolving it). /FlateDecode streams inflate through
-  *     `java.util.zip.Inflater` (zlib); streams with any other filter,
+  *     [[Codecs.inflateToEnd]] (zlib); streams with any other filter,
   *     or undecodable Flate data, are SKIPPED — never partial-decoded.
   *   - Text comes from BT…ET blocks: `Tj`, `'`, `"` and `TJ` show
   *     operators; `Td`/`TD`/`T*`/`'`/`"` start a new output line; in
@@ -174,22 +174,9 @@ object Pdf {
   /** zlib inflate, damage-contained: null on any error (the stream is
     * then skipped whole — never partially decoded into the text).
     */
-  private def inflate(b: Array[Byte], from: Int, until: Int): Array[Byte] = {
-    val inf = Zip.pooledInflaterZlib.get().acquire()
-    try {
-      inf.setInput(b, from, until - from)
-      val out = new java.io.ByteArrayOutputStream(math.max(64, (until - from) * 4))
-      val buf = new Array[Byte](16 * 1024)
-      while (!inf.finished()) {
-        val n =
-          try inf.inflate(buf)
-          catch { case _: java.util.zip.DataFormatException => return null }
-        if (n > 0) out.write(buf, 0, n)
-        else if (inf.needsInput() || inf.needsDictionary()) return null
-      }
-      out.toByteArray
-    } finally inf.reset()
-  }
+  private def inflate(b: Array[Byte], from: Int, until: Int): Array[Byte] =
+    Codecs.inflateToEnd(b, from, until - from, zlib = true, bufSize = 16 * 1024,
+      outHint = math.max(64, (until - from) * 4)).map(_._1).orNull
 
   // -------------------------------------------- /Differences font tables
 
@@ -770,83 +757,120 @@ object Pdf {
     i
   }
 
-  // ------------------------------------------------------ fixture builder
+  // ----------------------------------------------------- fixture builders
+
+  private def latin1(s: String): Array[Byte] = s.getBytes("ISO-8859-1")
+
+  /** A literal show string's escapes: `(`, `)` and `\`. */
+  private def esc(s: String): String =
+    s.flatMap {
+      case '(' => "\\("
+      case ')' => "\\)"
+      case '\\' => "\\\\"
+      case c => c.toString
+    }
+
+  private def rot13(c: Char): Char =
+    if (c >= 'a' && c <= 'z') ('a' + (c - 'a' + 13) % 26).toChar
+    else if (c >= 'A' && c <= 'Z') ('A' + (c - 'A' + 13) % 26).toChar
+    else c
+
+  /** The /Differences array that maps every letter code through rot13
+    * (single-letter AGL glyph names).
+    */
+  private val rot13Differences = "/Differences [ 65 " +
+    ('A' to 'Z').map(c => "/" + rot13(c)).mkString(" ") + " 97 " +
+    ('a' to 'z').map(c => "/" + rot13(c)).mkString(" ") + " ]"
+
+  /** A content stream showing `lines` in /F1, one line per show operator
+    * (`show` writes the operator line for line k).
+    */
+  private def contentStream(lines: Seq[String])(show: (String, Int) => String): Array[Byte] = {
+    val content = new StringBuilder()
+    content.append("BT\n/F1 12 Tf\n72 720 Td\n")
+    lines.zipWithIndex.foreach { case (line, k) =>
+      if (k > 0) content.append("0 -14 Td\n")
+      content.append(show(line, k))
+    }
+    content.append("ET\n")
+    latin1(content.toString)
+  }
+
+  /** The three show-string forms line k rotates through, over the text
+    * `enc` stores for a line: literal `Tj`, a `TJ` array with a word-gap
+    * kern at a real space, and a hex `Tj`.
+    */
+  private def mixedShow(enc: String => String)(line: String, k: Int): String =
+    k % 3 match {
+      case 0 => "(" + esc(enc(line)) + ") Tj\n"
+      case 1 =>
+        val cut = line.indexOf(' ', math.max(0, line.length / 2 - 8))
+        if (cut > 0)
+          "[(" + esc(enc(line.substring(0, cut))) + ") -250 (" +
+            esc(enc(line.substring(cut + 1))) + ")] TJ\n"
+        else "[(" + esc(enc(line)) + ")] TJ\n"
+      case _ =>
+        "<" + latin1(enc(line)).map(b3 => f"${b3 & 0xFF}%02X").mkString + "> Tj\n"
+    }
+
+  /** A stream object's body: `<< keys/Length n >>` (plus
+    * `/Filter /FlateDecode` with the data zlib-deflated when `flate`)
+    * around the data.
+    */
+  private def streamObj(keys: String, raw: Array[Byte], flate: Boolean): Array[Byte] = {
+    val data = if (flate) Codecs.compressDeflate(raw, zlib = true) else raw
+    latin1(s"<< $keys/Length ${data.length}" +
+      (if (flate) " /Filter /FlateDecode" else "") + " >>\nstream\n") ++
+      data ++ latin1("\nendstream")
+  }
+
+  /** Catalog (1), page tree (2) and the one page (3), whose content is
+    * object 4 and whose /F1 is object 5.
+    */
+  private val pageTree: Seq[(Int, Array[Byte])] = Seq(
+    1 -> "<< /Type /Catalog /Pages 2 0 R >>",
+    2 -> "<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+    3 -> ("<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
+      "/Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>"))
+    .map { case (n, d) => n -> latin1(d) }
+
+  /** The one writer behind the fixture builders: the `%PDF-version`
+    * header, each (number, body) as `n 0 obj` … `endobj`, then the
+    * trailer (/Size one past the highest number). With `xref` the
+    * objects must be numbered 1..n in order; their cross-reference
+    * table and `startxref` precede the trailer's `%%EOF`.
+    */
+  private def writePdf(version: String, objs: Seq[(Int, Array[Byte])],
+      xref: Boolean): Array[Byte] = {
+    val sb = new java.io.ByteArrayOutputStream()
+    def w(s: String): Unit = sb.write(latin1(s))
+    w(s"%PDF-$version\n")
+    val offsets = objs.map { case (n, body) =>
+      val at = sb.size()
+      w(s"$n 0 obj\n"); sb.write(body, 0, body.length); w("\nendobj\n")
+      at
+    }
+    val size = objs.map(_._1).max + 1
+    if (xref) {
+      require(objs.map(_._1) == (1 until size), "xref needs objects 1..n in order")
+      val at = sb.size()
+      w(s"xref\n0 $size\n0000000000 65535 f \n" +
+        offsets.map(o => f"$o%010d 00000 n \n").mkString)
+      w(s"trailer\n<< /Size $size /Root 1 0 R >>\nstartxref\n$at\n%%EOF\n")
+    } else w(s"trailer\n<< /Size $size /Root 1 0 R >>\n%%EOF\n")
+    sb.toByteArray
+  }
 
   /** Minimal valid single-page PDF whose content stream shows
     * `lines` — mixed `Tj` / `TJ` / `'` forms with escapes and hex
     * strings so the extractor's full string machinery is exercised.
     * `flate=true` compresses the content stream (zlib).
     */
-  def buildSimple(lines: Seq[String], flate: Boolean): Array[Byte] = {
-    def esc(s: String): String =
-      s.flatMap {
-        case '(' => "\\("
-        case ')' => "\\)"
-        case '\\' => "\\\\"
-        case c => c.toString
-      }
-    val content = new StringBuilder()
-    content.append("BT\n/F1 12 Tf\n72 720 Td\n")
-    lines.zipWithIndex.foreach { case (line, k) =>
-      if (k > 0) content.append("0 -14 Td\n")
-      k % 3 match {
-        case 0 => // plain Tj
-          content.append("(").append(esc(line)).append(") Tj\n")
-        case 1 => // TJ: word-gap kern at a real space, else a plain array
-          val cut = line.indexOf(' ', math.max(0, line.length / 2 - 8))
-          if (cut > 0)
-            content.append("[(").append(esc(line.substring(0, cut)))
-              .append(") -250 (").append(esc(line.substring(cut + 1)))
-              .append(")] TJ\n")
-          else
-            content.append("[(").append(esc(line)).append(")] TJ\n")
-        case _ => // hex string via Tj
-          val hex = line.getBytes("ISO-8859-1")
-            .map(b3 => f"${b3 & 0xFF}%02X").mkString
-          content.append("<").append(hex).append("> Tj\n")
-      }
-    }
-    content.append("ET\n")
-    val raw = content.toString.getBytes("ISO-8859-1")
-    val data =
-      if (flate) {
-        val def_ = new java.util.zip.Deflater()
-        def_.setInput(raw); def_.finish()
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        while (!def_.finished()) out.write(buf, 0, def_.deflate(buf))
-        def_.end()
-        out.toByteArray
-      } else raw
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = sb.write(s.getBytes("ISO-8859-1"))
-    val offsets = scala.collection.mutable.ArrayBuffer.empty[Int]
-    w("%PDF-1.4\n")
-    offsets += sb.size()
-    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    offsets += sb.size()
-    w("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n")
-    offsets += sb.size()
-    w("3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>\nendobj\n")
-    offsets += sb.size()
-    w(s"4 0 obj\n<< /Length ${data.length}" +
-      (if (flate) " /Filter /FlateDecode" else "") + " >>\nstream\n")
-    sb.write(data, 0, data.length)
-    w("\nendstream\nendobj\n")
-    offsets += sb.size()
-    w("5 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>\nendobj\n")
-    val xref = sb.size()
-    w(s"xref\n0 6\n0000000000 65535 f \n" +
-      offsets.map(o => f"$o%010d 00000 n \n").mkString)
-    w(s"trailer\n<< /Size 6 /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    sb.toByteArray
-  }
-
-  private def rot13(c: Char): Char =
-    if (c >= 'a' && c <= 'z') ('a' + (c - 'a' + 13) % 26).toChar
-    else if (c >= 'A' && c <= 'Z') ('A' + (c - 'A' + 13) % 26).toChar
-    else c
+  def buildSimple(lines: Seq[String], flate: Boolean): Array[Byte] =
+    writePdf("1.4", pageTree ++ Seq(
+      4 -> streamObj("", contentStream(lines)(mixedShow(identity)), flate),
+      5 -> latin1("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")),
+      xref = true)
 
   /** Single-page PDF whose font carries a /Differences table remapping
     * every LETTER code through rot13 (single-letter AGL names): the
@@ -859,83 +883,14 @@ object Pdf {
     */
   def buildWithDifferences(lines: Seq[String], flate: Boolean,
       indirectEnc: Boolean): Array[Byte] = {
-    def esc(s: String): String =
-      s.flatMap {
-        case '(' => "\\("
-        case ')' => "\\)"
-        case '\\' => "\\\\"
-        case c => c.toString
-      }
-    def enc(s: String): String = s.map(rot13)
-    val content = new StringBuilder()
-    content.append("BT\n/F1 12 Tf\n72 720 Td\n")
-    lines.zipWithIndex.foreach { case (line, k) =>
-      if (k > 0) content.append("0 -14 Td\n")
-      k % 3 match {
-        case 0 =>
-          content.append("(").append(esc(enc(line))).append(") Tj\n")
-        case 1 =>
-          val cut = line.indexOf(' ', math.max(0, line.length / 2 - 8))
-          if (cut > 0)
-            content.append("[(").append(esc(enc(line.substring(0, cut))))
-              .append(") -250 (").append(esc(enc(line.substring(cut + 1))))
-              .append(")] TJ\n")
-          else
-            content.append("[(").append(esc(enc(line))).append(")] TJ\n")
-        case _ =>
-          val hex = enc(line).getBytes("ISO-8859-1")
-            .map(b3 => f"${b3 & 0xFF}%02X").mkString
-          content.append("<").append(hex).append("> Tj\n")
-      }
-    }
-    content.append("ET\n")
-    val raw = content.toString.getBytes("ISO-8859-1")
-    val data =
-      if (flate) {
-        val def_ = new java.util.zip.Deflater()
-        def_.setInput(raw); def_.finish()
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        while (!def_.finished()) out.write(buf, 0, def_.deflate(buf))
-        def_.end()
-        out.toByteArray
-      } else raw
-    // Differences: map(code) = rot13(code) for both letter runs — the
-    // names are the single-letter AGL glyphs
-    val diffs = "/Differences [ 65 " +
-      ('A' to 'Z').map(c => "/" + rot13(c)).mkString(" ") + " 97 " +
-      ('a' to 'z').map(c => "/" + rot13(c)).mkString(" ") + " ]"
-    val encDict = s"<< /Type /Encoding /BaseEncoding /WinAnsiEncoding $diffs >>"
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = sb.write(s.getBytes("ISO-8859-1"))
-    val offsets = scala.collection.mutable.ArrayBuffer.empty[Int]
-    w("%PDF-1.4\n")
-    offsets += sb.size()
-    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    offsets += sb.size()
-    w("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n")
-    offsets += sb.size()
-    w("3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>\nendobj\n")
-    offsets += sb.size()
-    w(s"4 0 obj\n<< /Length ${data.length}" +
-      (if (flate) " /Filter /FlateDecode" else "") + " >>\nstream\n")
-    sb.write(data, 0, data.length)
-    w("\nendstream\nendobj\n")
-    offsets += sb.size()
-    w("5 0 obj\n<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica " +
-      s"/Encoding ${if (indirectEnc) "6 0 R" else encDict} >>\nendobj\n")
-    val n =
-      if (indirectEnc) {
-        offsets += sb.size()
-        w(s"6 0 obj\n$encDict\nendobj\n")
-        7
-      } else 6
-    val xref = sb.size()
-    w(s"xref\n0 $n\n0000000000 65535 f \n" +
-      offsets.map(o => f"$o%010d 00000 n \n").mkString)
-    w(s"trailer\n<< /Size $n /Root 1 0 R >>\nstartxref\n$xref\n%%EOF\n")
-    sb.toByteArray
+    val encDict = s"<< /Type /Encoding /BaseEncoding /WinAnsiEncoding $rot13Differences >>"
+    val font = "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica " +
+      s"/Encoding ${if (indirectEnc) "6 0 R" else encDict} >>"
+    writePdf("1.4", pageTree ++ Seq(
+      4 -> streamObj("", contentStream(lines)(mixedShow(_.map(rot13))), flate),
+      5 -> latin1(font)) ++
+      (if (indirectEnc) Seq(6 -> latin1(encDict)) else Nil),
+      xref = true)
   }
 
   /** Single-page PDF whose text shows through a /Type0 (CID) font under
@@ -944,119 +899,49 @@ object Pdf {
     * font's /ToUnicode CMap (one incrementing bfrange). A reader without
     * the CID path emits raw code bytes (garbage); one that ignores
     * ToUnicode emits nothing. `flate` compresses both the content stream
-    * and the CMap stream.
+    * and the CMap stream. No xref table.
     */
   def buildType0(lines: Seq[String], flate: Boolean): Array[Byte] = {
     lines.foreach(l => l.foreach(c => require(c >= 0x20 && c <= 0xFE,
       s"builder envelope: printable Latin-1 only, got ${c.toInt}")))
-    val content = new StringBuilder()
-    content.append("BT\n/F1 12 Tf\n72 720 Td\n")
-    lines.zipWithIndex.foreach { case (line, k) =>
-      if (k > 0) content.append("0 -14 Td\n")
-      content.append("<")
-      line.foreach(c => content.append(f"${0x0100 + c.toInt}%04X"))
-      content.append("> Tj\n")
+    val content = contentStream(lines) { (line, _) =>
+      "<" + line.map(c => f"${0x0100 + c.toInt}%04X").mkString + "> Tj\n"
     }
-    content.append("ET\n")
-    def deflate(raw: Array[Byte]): Array[Byte] = {
-      val def_ = new java.util.zip.Deflater()
-      def_.setInput(raw); def_.finish()
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      while (!def_.finished()) out.write(buf, 0, def_.deflate(buf))
-      def_.end()
-      out.toByteArray
-    }
-    val raw = content.toString.getBytes("ISO-8859-1")
-    val data = if (flate) deflate(raw) else raw
-    val cmap = ("/CIDInit /ProcSet findresource begin\n12 dict begin\n" +
+    val cmap = latin1("/CIDInit /ProcSet findresource begin\n12 dict begin\n" +
       "begincmap\n/CMapName /Adobe-Identity-UCS def\n/CMapType 2 def\n" +
       "1 begincodespacerange\n<0000> <FFFF>\nendcodespacerange\n" +
       "1 beginbfrange\n<0120> <01FE> <0020>\nendbfrange\n" +
       "endcmap\nCMapName currentdict /CMap defineresource pop\nend\nend\n")
-      .getBytes("ISO-8859-1")
-    val cmapData = if (flate) deflate(cmap) else cmap
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = sb.write(s.getBytes("ISO-8859-1"))
-    w("%PDF-1.4\n")
-    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    w("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n")
-    w("3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>\nendobj\n")
-    w(s"4 0 obj\n<< /Length ${data.length}" +
-      (if (flate) " /Filter /FlateDecode" else "") + " >>\nstream\n")
-    sb.write(data, 0, data.length)
-    w("\nendstream\nendobj\n")
-    w("5 0 obj\n<< /Type /Font /Subtype /Type0 /BaseFont /Synth-Identity-H " +
-      "/Encoding /Identity-H /DescendantFonts [7 0 R] /ToUnicode 6 0 R >>\nendobj\n")
-    w(s"6 0 obj\n<< /Length ${cmapData.length}" +
-      (if (flate) " /Filter /FlateDecode" else "") + " >>\nstream\n")
-    sb.write(cmapData, 0, cmapData.length)
-    w("\nendstream\nendobj\n")
-    w("7 0 obj\n<< /Type /Font /Subtype /CIDFontType2 /BaseFont /Synth " +
-      "/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) " +
-      "/Supplement 0 >> >>\nendobj\n")
-    w("trailer\n<< /Size 8 /Root 1 0 R >>\n%%EOF\n")
-    sb.toByteArray
+    writePdf("1.4", pageTree ++ Seq(
+      4 -> streamObj("", content, flate),
+      5 -> latin1("<< /Type /Font /Subtype /Type0 /BaseFont /Synth-Identity-H " +
+        "/Encoding /Identity-H /DescendantFonts [7 0 R] /ToUnicode 6 0 R >>"),
+      6 -> streamObj("", cmap, flate),
+      7 -> latin1("<< /Type /Font /Subtype /CIDFontType2 /BaseFont /Synth " +
+        "/CIDSystemInfo << /Registry (Adobe) /Ordering (Identity) " +
+        "/Supplement 0 >> >>")),
+      xref = false)
   }
 
   /** The [[buildWithDifferences]] document with its font AND encoding
     * objects packed inside a Flate-compressed /ObjStm object stream —
     * the PDF 1.5+ layout where no top-level `N G obj` body exists for
     * either, so extraction is only correct if the object stream is
-    * unpacked during font resolution.
+    * unpacked during font resolution. Every line is a literal `Tj`; no
+    * xref table.
     */
   def buildWithDifferencesObjStm(lines: Seq[String], flate: Boolean): Array[Byte] = {
-    def esc(s: String): String =
-      s.flatMap {
-        case '(' => "\\("
-        case ')' => "\\)"
-        case '\\' => "\\\\"
-        case c => c.toString
-      }
-    val content = new StringBuilder()
-    content.append("BT\n/F1 12 Tf\n72 720 Td\n")
-    lines.zipWithIndex.foreach { case (line, k) =>
-      if (k > 0) content.append("0 -14 Td\n")
-      content.append("(").append(esc(line.map(rot13))).append(") Tj\n")
+    val content = contentStream(lines) { (line, _) =>
+      "(" + esc(line.map(rot13)) + ") Tj\n"
     }
-    content.append("ET\n")
-    def deflate(raw: Array[Byte]): Array[Byte] = {
-      val def_ = new java.util.zip.Deflater()
-      def_.setInput(raw); def_.finish()
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      while (!def_.finished()) out.write(buf, 0, def_.deflate(buf))
-      def_.end()
-      out.toByteArray
-    }
-    val raw = content.toString.getBytes("ISO-8859-1")
-    val data = if (flate) deflate(raw) else raw
-    val diffs = "/Differences [ 65 " +
-      ('A' to 'Z').map(c => "/" + rot13(c)).mkString(" ") + " 97 " +
-      ('a' to 'z').map(c => "/" + rot13(c)).mkString(" ") + " ]"
     // objects 5 (font) and 6 (encoding) exist ONLY inside the ObjStm
     val o5 = "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding 6 0 R >>"
-    val o6 = s"<< /Type /Encoding /BaseEncoding /WinAnsiEncoding $diffs >>"
+    val o6 = s"<< /Type /Encoding /BaseEncoding /WinAnsiEncoding $rot13Differences >>"
     val pairHdr = s"5 0 6 ${o5.length + 1} "
-    val stmRaw = (pairHdr + o5 + "\n" + o6).getBytes("ISO-8859-1")
-    val stmData = deflate(stmRaw)
-    val sb = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = sb.write(s.getBytes("ISO-8859-1"))
-    w("%PDF-1.5\n")
-    w("1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n")
-    w("2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n")
-    w("3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " +
-      "/Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>\nendobj\n")
-    w(s"4 0 obj\n<< /Length ${data.length}" +
-      (if (flate) " /Filter /FlateDecode" else "") + " >>\nstream\n")
-    sb.write(data, 0, data.length)
-    w("\nendstream\nendobj\n")
-    w(s"7 0 obj\n<< /Type /ObjStm /N 2 /First ${pairHdr.length} " +
-      s"/Length ${stmData.length} /Filter /FlateDecode >>\nstream\n")
-    sb.write(stmData, 0, stmData.length)
-    w("\nendstream\nendobj\n")
-    w("trailer\n<< /Size 8 /Root 1 0 R >>\n%%EOF\n")
-    sb.toByteArray
+    writePdf("1.5", pageTree ++ Seq(
+      4 -> streamObj("", content, flate),
+      7 -> streamObj(s"/Type /ObjStm /N 2 /First ${pairHdr.length} ",
+        latin1(pairHdr + o5 + "\n" + o6), flate = true)),
+      xref = false)
   }
 }

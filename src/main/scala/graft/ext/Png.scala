@@ -1,12 +1,12 @@
 package graft.ext
 
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.CRC32
 
 import graft.ext.Bytes.{be32, putBe32}
 
 /** Pure-JVM PNG codec — REAL pixel decode/encode with zero external
-  * dependencies (zlib via `java.util.zip`, CRC via `java.util.zip.CRC32`
-  * — both core JDK).
+  * dependencies (zlib via [[Codecs]]' pooled deflate, CRC via
+  * `java.util.zip.CRC32` — both core JDK).
   *
   * Coverage: the still-image subset a training-data lake actually stores
   * — 8-bit-per-sample, non-interlaced PNGs in all five color types
@@ -29,9 +29,6 @@ import graft.ext.Bytes.{be32, putBe32}
   * (`/root/reference/index.js` pipes opaque bytes only).
   */
 object Png {
-
-  private[ext] val pooledDeflater: ThreadLocal[Deflater] =
-    ThreadLocal.withInitial(() => new Deflater(Deflater.DEFAULT_COMPRESSION))
 
   /** Decoded raster: 8-bit samples, row-major, channel-interleaved.
     * `channels`: 1 = gray, 2 = gray+alpha, 3 = RGB, 4 = RGBA.
@@ -144,8 +141,9 @@ object Png {
       }
     val expectedRaw = passes.map(p => (strideOf(p.w).toLong + 1) * p.h).sum
     if (expectedRaw > Int.MaxValue) return None
-    val raw = inflate(idat.toByteArray, expectedRaw.toInt).getOrElse(return None)
-    if (raw.length != expectedRaw) return None
+    val zs = idat.toByteArray
+    val raw = Codecs.inflateExact(zs, 0, zs.length, expectedRaw.toInt, zlib = true)
+      .getOrElse(return None)
 
     // unfilter each pass independently, scattering its samples into the
     // raster (16-bit: high-byte scale-down; sub-byte: MSB-first unpack,
@@ -236,23 +234,6 @@ object Png {
     if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
   }
 
-  private def inflate(data: Array[Byte], expected: Int): Option[Array[Byte]] = {
-    val inf = Zip.pooledInflaterZlib.get().acquire()
-    try {
-      inf.setInput(data)
-      val out = new Array[Byte](expected)
-      var off = 0
-      while (off < expected && !inf.finished()) {
-        val n = inf.inflate(out, off, expected - off)
-        if (n == 0 && inf.needsInput()) return None // truncated stream
-        off += n
-      }
-      if (off == expected) Some(out) else None
-    } catch {
-      case _: java.util.zip.DataFormatException => None
-    } finally inf.reset()
-  }
-
   // ------------------------------------------------------------- encode
 
   /** Encode 8-bit samples as a non-interlaced PNG (filter 0, one IDAT).
@@ -270,22 +251,7 @@ object Png {
       System.arraycopy(img.pixels, y * stride, raw, y * (stride + 1) + 1, stride)
       y += 1
     }
-    // per-thread zlib Deflater (codec-pool pattern — a fresh native
-    // buffer per image dominates at millions of rows; see the Zip
-    // sibling): reset between uses, never end()'d
-    val deflater = Png.pooledDeflater.get()
-    deflater.reset()
-    val compressed = {
-      deflater.setInput(raw)
-      deflater.finish()
-      val buf = new java.io.ByteArrayOutputStream(raw.length / 2 + 64)
-      val chunk = new Array[Byte](8192)
-      while (!deflater.finished()) {
-        val n = deflater.deflate(chunk)
-        buf.write(chunk, 0, n)
-      }
-      buf.toByteArray
-    }
+    val compressed = Codecs.compressDeflate(raw, zlib = true) // pooled, see Codecs
 
     val out = new java.io.ByteArrayOutputStream(compressed.length + 64)
     out.write(Magic, 0, Magic.length)

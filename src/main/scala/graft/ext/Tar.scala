@@ -618,12 +618,6 @@ object Tar {
     }
     out.write(new Array[Byte](1024))
     val tar = out.toByteArray
-    if (!gzip) tar
-    else {
-      val bos = new java.io.ByteArrayOutputStream()
-      val g = new java.util.zip.GZIPOutputStream(bos)
-      g.write(tar); g.close()
-      bos.toByteArray
-    }
+    if (gzip) Codecs.gzip(tar) else tar
   }
 }

@@ -35,8 +35,8 @@ import org.apache.spark.sql.functions._
   * Compression envelope (the format real crawls distribute):
   *   - `.warc.gz` blobs — one gzip MEMBER per record (ISO 28500 annex;
   *     Common Crawl ships exactly this) — are detected by the `1f 8b`
-  *     magic and inflated member-by-member with a fresh
-  *     `Inflater(nowrap=true)` per member; a truncated or corrupt member
+  *     magic and inflated member-by-member through
+  *     [[Codecs.inflateToEnd]]; a truncated or corrupt member
   *     contributes nothing and parsing keeps every record from the
   *     complete members before it. Records spanning member boundaries
   *     (non-conforming but parseable) are handled by the carry.
@@ -76,8 +76,8 @@ object Warc {
       (b(at) & 0xff) == 0x1f && (b(at + 1) & 0xff) == 0x8b
 
   /** Inflate ONE gzip member (RFC 1952) starting at offset `i`:
-    * header-field walk (FEXTRA/FNAME/FCOMMENT/FHCRC), fresh
-    * `Inflater(nowrap=true)` over the deflate stream, CRC32 trailer
+    * header-field walk (FEXTRA/FNAME/FCOMMENT/FHCRC), raw
+    * [[Codecs.inflateToEnd]] over the deflate stream, CRC32 trailer
     * verification (deflate can inflate structurally through flipped
     * bits — the CRC is what certifies the member). Returns the member's
     * inflated bytes and the offset just past its 8-byte trailer, or None
@@ -106,30 +106,15 @@ object Warc {
     }
     if ((flg & 0x02) != 0) p += 2 // FHCRC
     if (p >= blob.length) return None
-    // --- raw deflate stream
-    val buf = new Array[Byte](64 * 1024)
-    val member = new java.io.ByteArrayOutputStream(buf.length)
-    val inf = Zip.pooledInflaterRaw.get().acquire()
-    try {
-      inf.setInput(blob, p, blob.length - p)
-      var ok = true
-      while (ok && !inf.finished()) {
-        val n =
-          try inf.inflate(buf)
-          catch { case _: java.util.zip.DataFormatException => ok = false; 0 }
-        if (n > 0) member.write(buf, 0, n)
-        else if (!inf.finished() && inf.needsInput()) ok = false // truncated
-      }
-      if (!ok || !inf.finished()) return None
-      val consumed = (blob.length - p) - inf.getRemaining
-      // CRC32 + ISIZE trailer must be present AND the CRC must match
-      if (p + consumed + 8 > blob.length) return None
-      val bytes = member.toByteArray
-      val crc = new java.util.zip.CRC32()
-      crc.update(bytes)
-      if (crc.getValue != Bytes.le32u(blob, p + consumed)) return None
-      Some((bytes, p + consumed + 8))
-    } finally inf.reset()
+    // --- raw deflate stream (pooled, see Codecs), 64 KiB window
+    val (bytes, consumed) = Codecs.inflateToEnd(blob, p, blob.length - p,
+      zlib = false, bufSize = 64 * 1024, outHint = 64 * 1024).getOrElse(return None)
+    // CRC32 + ISIZE trailer must be present AND the CRC must match
+    if (p + consumed + 8 > blob.length) return None
+    val crc = new java.util.zip.CRC32()
+    crc.update(bytes)
+    if (crc.getValue != Bytes.le32u(blob, p + consumed)) return None
+    Some((bytes, p + consumed + 8))
   }
 
   /** Lazy walk over the gzip members of a blob — each `next()` inflates

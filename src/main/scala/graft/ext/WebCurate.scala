@@ -35,11 +35,6 @@ object WebCurate {
     * rotating copyright) and a messy URL the pipeline must canonicalize.
     */
   def warcGzBlob(id: Long, text: String): Array[Byte] = {
-    def gz(b: Array[Byte]): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val g = new java.util.zip.GZIPOutputStream(bos)
-      g.write(b); g.close(); bos.toByteArray
-    }
     val page = "<html><body><p>" + text + "</p><div>SHARED FOOTER</div>" +
       "<div>Copyright w" + (id % 3) + "</div></body></html>"
     val http = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + page
@@ -50,7 +45,7 @@ object WebCurate {
       httpBytes ++ "\r\n\r\n".getBytes("ISO-8859-1")
     val info = ("WARC/1.0\r\nWARC-Type: warcinfo\r\n" +
       "Content-Length: 4\r\n\r\ninfo\r\n\r\n").getBytes("ISO-8859-1")
-    gz(info) ++ gz(resp)
+    Codecs.gzip(info) ++ Codecs.gzip(resp)
   }
 
   /** The declared pipeline. Input contract: a DataFrame of

@@ -17,9 +17,10 @@ import graft.ext.Bytes.{le16, le32u, le64, writeLe16, writeLe32, writeLe64}
   *   - Central directory entries (PK\x01\x02): name, method, CRC,
   *     compressed/uncompressed sizes, local-header offset.
   *   - [[read]] seeks the LOCAL header (PK\x03\x04) and decodes by the
-  *     directory's method id: 0 stored, 8 deflate (raw `Inflater(true)`),
-  *     9 Deflate64 (commons-compress — Windows' zipper switches to it
-  *     past 2 GiB), 12 bzip2, 14 zip-LZMA (props prelude, EOS-or-sized),
+  *     directory's method id: 0 stored, 8 deflate (raw,
+  *     [[Codecs.inflateExact]]), 9 Deflate64 (commons-compress —
+  *     Windows' zipper switches to it past 2 GiB), 12 bzip2, 14
+  *     zip-LZMA (props prelude, EOS-or-sized),
   *     93 zstd (zstd-jni), 95 xz (tukaani) — every decoder already on
   *     the Spark classpath. The result is CRC-verified against the
   *     central directory before it is returned — a corrupt member
@@ -56,45 +57,6 @@ import graft.ext.Bytes.{le16, le32u, le64, writeLe16, writeLe32, writeLe64}
   * a throw.
   */
 object Zip {
-
-  /** Per-thread raw Deflater (codec-pool pattern): reset between uses,
-    * never end()'d — one native buffer per executor thread, bounded.
-    */
-  /** Per-thread pooled Inflaters (raw-deflate and zlib-wrapped), the
-    * read-side twins of [[pooledDeflater]]: reset between uses, never
-    * end()'d — one bounded native buffer per executor thread instead of
-    * an alloc/free per decoded member/stream.
-    *
-    * NO-NESTING INVARIANT: each pool holds ONE Inflater per thread, so a
-    * caller must finish (try/finally reset()) before anything else on the
-    * same thread acquires the same pool — a nested acquisition (e.g.
-    * decoding an embedded deflate image while a PDF inflate loop is in
-    * flight) would silently clobber shared state and corrupt output.
-    * [[PooledInflater.acquire]] enforces this loudly: the flag flips on
-    * acquire and clears on the reset() every call site already runs in
-    * `finally`, so a nested use throws instead of corrupting decodes.
-    */
-  private[ext] final class PooledInflater(raw: Boolean)
-      extends java.util.zip.Inflater(raw) {
-    private var inUse = false
-    def acquire(): PooledInflater = {
-      if (inUse)
-        throw new IllegalStateException(
-          "pooled Inflater acquired re-entrantly on this thread — " +
-            "nested decode would clobber shared native state")
-      inUse = true
-      this
-    }
-    override def reset(): Unit = { inUse = false; super.reset() }
-  }
-  private[ext] val pooledInflaterRaw: ThreadLocal[PooledInflater] =
-    ThreadLocal.withInitial(() => new PooledInflater(true))
-  private[ext] val pooledInflaterZlib: ThreadLocal[PooledInflater] =
-    ThreadLocal.withInitial(() => new PooledInflater(false))
-
-  private[ext] val pooledDeflater: ThreadLocal[java.util.zip.Deflater] =
-    ThreadLocal.withInitial(() =>
-      new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true))
 
   /** WinZip AES extra field (0x9901): AE-1 keeps the real CRC, AE-2
     * zeroes it (the HMAC is the integrity check); strength 1/2/3 =
@@ -413,19 +375,8 @@ object Zip {
           if (srcLen.toLong != e.uncomp_size) return None
           java.util.Arrays.copyOfRange(src, srcOff, srcOff + srcLen)
         case 8 =>
-          val inf = Zip.pooledInflaterRaw.get().acquire() // raw deflate, pooled
-          try {
-            inf.setInput(src, srcOff, srcLen)
-            val out = new Array[Byte](e.uncomp_size.toInt)
-            var got = 0
-            while (got < out.length && !inf.finished()) {
-              val m = inf.inflate(out, got, out.length - got)
-              if (m == 0 && inf.needsInput()) return None // truncated
-              got += m
-            }
-            if (got != out.length) return None
-            out
-          } finally inf.reset()
+          Codecs.inflateExact(src, srcOff, srcLen, e.uncomp_size.toInt, zlib = false)
+            .getOrElse(return None)
         case 9 =>
           // Deflate64 / "enhanced deflate" (APPNOTE §4.4.5 method 9):
           // 64 KiB window + widened length/distance codes (285 gains
@@ -487,8 +438,8 @@ object Zip {
 
   /** Assemble a ZIP from (name, bytes, deflate?) members — the
     * spec/certificate builders' counterpart of the walk (local headers,
-    * central directory, EOCD; raw Deflater for method 8). With
-    * `zip64 = true` the archive is written the way crawl-scale writers
+    * central directory, EOCD; raw [[Codecs.compressDeflate]] for method
+    * 8). With `zip64 = true` the archive is written the way crawl-scale writers
     * emit it regardless of size: central sizes/offsets masked to
     * 0xFFFFFFFF with a 0x0001 extra field carrying the 64-bit values,
     * a masked EOCD, and the EOCD64 record + locator (version 4.5).
@@ -530,19 +481,6 @@ object Zip {
       writeLe16(out, ae); out.write('A'); out.write('E'); out.write(strength)
       writeLe16(out, realMethod)
     }
-    def rawDeflate(raw: Array[Byte]): Array[Byte] = {
-      // per-thread Deflater reuse: a fresh instance per member costs a
-      // native-buffer alloc/free that dominates small-archive builds at
-      // millions of rows (DocSoak 6.4M diagnosis) — the codec-pool
-      // pattern; the pooled instance is reset, never end()'d
-      val d = Zip.pooledDeflater.get()
-      d.reset()
-      d.setInput(raw); d.finish()
-      val buf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](8192)
-      while (!d.finished()) buf.write(tmp, 0, d.deflate(tmp))
-      buf.toByteArray
-    }
     for ((name, raw, method) <- members) {
       val crc = new java.util.zip.CRC32
       crc.update(raw)
@@ -569,7 +507,7 @@ object Zip {
       }
       val comp0 = method match {
         case 0       => raw
-        case 8       => rawDeflate(raw)
+        case 8       => Codecs.compressDeflate(raw, zlib = false) // pooled, see Codecs
         case 9       => storedDeflate(raw)
         case 12      => Codecs.bzip2(raw)
         case 14      =>

@@ -3738,47 +3738,9 @@ object ExtQueries {
       // slip in the unpacker (shift origin, padding, palette expansion)
       // breaks the row.
       import s.implicits._
-      val (w, h) = (9, 4) // 9 × 4 bits = 4.5 bytes → ragged pad per row
       documents(s, d).select(col("doc_id")).as[Long]
         .map { id =>
-          val stride = (w * 4 + 7) / 8
-          val raw = new Array[Byte]((stride + 1) * h)
-          var y = 0
-          while (y < h) {
-            raw(y * (stride + 1)) = 0 // filter 0
-            var x = 0
-            while (x < w) {
-              val idx = ((id + y * w + x) % 16).toInt
-              val off = y * (stride + 1) + 1 + (x >> 1)
-              raw(off) = (raw(off) | (idx << (if ((x & 1) == 0) 4 else 0))).toByte
-              x += 1
-            }
-            y += 1
-          }
-          val plte = new Array[Byte](48)
-          var k = 0
-          while (k < 16) {
-            plte(k * 3) = ((id * 3 + k * 7) % 256).toByte
-            plte(k * 3 + 1) = ((id * 5 + k * 11) % 256).toByte
-            plte(k * 3 + 2) = ((id * 7 + k * 13) % 256).toByte
-            k += 1
-          }
-          val out = new java.io.ByteArrayOutputStream()
-          out.write(Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A))
-          val ihdr = new Array[Byte](13)
-          ihdr(3) = w.toByte; ihdr(7) = h.toByte // widths < 256
-          ihdr(8) = 4; ihdr(9) = 3 // 4-bit, palette
-          graft.ext.Png.writeChunk(out, "IHDR", ihdr)
-          graft.ext.Png.writeChunk(out, "PLTE", plte)
-          val defl = new java.util.zip.Deflater()
-          defl.setInput(raw); defl.finish()
-          val cbuf = new java.io.ByteArrayOutputStream()
-          val tmp = new Array[Byte](512)
-          while (!defl.finished()) cbuf.write(tmp, 0, defl.deflate(tmp))
-          defl.end()
-          graft.ext.Png.writeChunk(out, "IDAT", cbuf.toByteArray)
-          graft.ext.Png.writeChunk(out, "IEND", Array.emptyByteArray)
-          val img = graft.ext.Png.decode(out.toByteArray).getOrElse(
+          val img = graft.ext.Png.decode(Plants.palette4Png(id)).getOrElse(
             throw new IllegalStateException(s"4-bit decode failed for $id"))
           var sum = 0L
           img.pixels.foreach(b => sum += (b & 0xFF))
@@ -4240,42 +4202,9 @@ object ExtQueries {
       // byte-exact; the oracle rebuilds the expected text in closed form,
       // so one leaked chunk-size line or trailer header breaks the hash.
       import s.implicits._
-      def gzBytes(b: Array[Byte]): Array[Byte] = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val g = new java.util.zip.GZIPOutputStream(bos)
-        g.write(b); g.close(); bos.toByteArray
-      }
       documents(s, d).select(col("doc_id"), col("text"))
         .as[(Long, String)]
-        .map { case (id, text) =>
-          val page = "<html><body><h1>Doc " + id + "</h1><p><b>" +
-            text.replace(" ", "</b> <b>") + "</b></p></body></html>"
-          val raw =
-            if (id % 2 == 0) gzBytes(page.getBytes("UTF-8"))
-            else page.getBytes("UTF-8")
-          // chunk the body at a doc-dependent stride (7..21 bytes)
-          val stride = 7 + (id % 15).toInt
-          val chunks = raw.grouped(stride).toSeq
-          val chunkedParts: Seq[Array[Byte]] =
-            chunks.zipWithIndex.map { case (c, ci) =>
-              val ext = if (ci == 0) ";graft=1" else ""
-              (c.length.toHexString + ext + "\r\n").getBytes("ISO-8859-1") ++
-                c ++ "\r\n".getBytes("ISO-8859-1")
-            } :+ "0\r\nX-Crawl-Trailer: t\r\n\r\n".getBytes("ISO-8859-1")
-          val body = chunkedParts.reduce(_ ++ _)
-          val hdr = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" +
-            "Transfer-Encoding: chunked\r\n" +
-            (if (id % 2 == 0) "Content-Encoding: gzip\r\n" else "") + "\r\n"
-          val http = hdr.getBytes("ISO-8859-1") ++ body
-          val recHdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
-            s"WARC-Target-URI: https://example.com/doc/$id\r\n" +
-            s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1")
-          val info = ("WARC/1.0\r\nWARC-Type: warcinfo\r\n" +
-            "Content-Length: 4\r\n\r\ninfo\r\n\r\n").getBytes("ISO-8859-1")
-          val blob = gzBytes(info) ++
-            gzBytes(recHdr ++ http ++ "\r\n\r\n".getBytes("ISO-8859-1"))
-          (id, blob)
-        }
+        .map { case (id, text) => (id, Plants.chunkedWarcGz(id, text)) }
         .toDF("doc_id", "warc")
         .transform(w => graft.ext.Warc.records(w, "doc_id", "warc"))
         .filter(col("warc_type") === "response" && col("http_status") === 200)

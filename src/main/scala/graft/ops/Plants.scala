@@ -7,7 +7,7 @@ import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 
-import graft.ext.{Bytes, Multimodal, Png, TiffImg}
+import graft.ext.{Bytes, Codecs, Multimodal, Png, TiffImg}
 
 /** Planted-fixture helpers shared by the [[ExtQueries]] certificates: the
   * per-doc payload synthesis (rasters, JPEG encodes, Exif TIFFs), the
@@ -172,6 +172,80 @@ private[ops] object Plants {
     TiffImg.putHeader(t, 8, bigEndian = false)
     TiffImg.putIfd(t, 8, entries, bigEndian = false)
     t
+  }
+
+  /** q_png4_stats's 9×4 4-bit PALETTE PNG for doc `id`, packed by hand
+    * (MSB-first indexes `(id + pixel) % 16` with ragged row padding, a
+    * 16-entry palette modular in `id`) and framed by [[Png.writeChunk]]
+    * around one zlib IDAT.
+    */
+  def palette4Png(id: Long): Array[Byte] = {
+    val (w, h) = (9, 4) // 9 × 4 bits = 4.5 bytes → ragged pad per row
+    val stride = (w * 4 + 7) / 8
+    val raw = new Array[Byte]((stride + 1) * h)
+    var y = 0
+    while (y < h) {
+      raw(y * (stride + 1)) = 0 // filter 0
+      var x = 0
+      while (x < w) {
+        val idx = ((id + y * w + x) % 16).toInt
+        val off = y * (stride + 1) + 1 + (x >> 1)
+        raw(off) = (raw(off) | (idx << (if ((x & 1) == 0) 4 else 0))).toByte
+        x += 1
+      }
+      y += 1
+    }
+    val plte = new Array[Byte](48)
+    var k = 0
+    while (k < 16) {
+      plte(k * 3) = ((id * 3 + k * 7) % 256).toByte
+      plte(k * 3 + 1) = ((id * 5 + k * 11) % 256).toByte
+      plte(k * 3 + 2) = ((id * 7 + k * 13) % 256).toByte
+      k += 1
+    }
+    val out = new ByteArrayOutputStream()
+    out.write(Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A))
+    val ihdr = new Array[Byte](13)
+    ihdr(3) = w.toByte; ihdr(7) = h.toByte // widths < 256
+    ihdr(8) = 4; ihdr(9) = 3 // 4-bit, palette
+    Png.writeChunk(out, "IHDR", ihdr)
+    Png.writeChunk(out, "PLTE", plte)
+    Png.writeChunk(out, "IDAT", Codecs.compressDeflate(raw, zlib = true))
+    Png.writeChunk(out, "IEND", Array.emptyByteArray)
+    out.toByteArray
+  }
+
+  /** q_warc_gzip's `.warc.gz` blob for doc `id`: a warcinfo member and a
+    * response member (each its own gzip member) whose HTTP body wraps
+    * `text` in a page, gzip content-coded on even ids, then chunked at a
+    * doc-dependent stride with a chunk extension and a trailer header.
+    */
+  def chunkedWarcGz(id: Long, text: String): Array[Byte] = {
+    val page = "<html><body><h1>Doc " + id + "</h1><p><b>" +
+      text.replace(" ", "</b> <b>") + "</b></p></body></html>"
+    val raw =
+      if (id % 2 == 0) Codecs.gzip(page.getBytes("UTF-8"))
+      else page.getBytes("UTF-8")
+    // chunk the body at a doc-dependent stride (7..21 bytes)
+    val stride = 7 + (id % 15).toInt
+    val chunks = raw.grouped(stride).toSeq
+    val chunkedParts: Seq[Array[Byte]] =
+      chunks.zipWithIndex.map { case (c, ci) =>
+        val ext = if (ci == 0) ";graft=1" else ""
+        (c.length.toHexString + ext + "\r\n").getBytes("ISO-8859-1") ++
+          c ++ "\r\n".getBytes("ISO-8859-1")
+      } :+ "0\r\nX-Crawl-Trailer: t\r\n\r\n".getBytes("ISO-8859-1")
+    val body = chunkedParts.reduce(_ ++ _)
+    val hdr = "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n" +
+      "Transfer-Encoding: chunked\r\n" +
+      (if (id % 2 == 0) "Content-Encoding: gzip\r\n" else "") + "\r\n"
+    val http = hdr.getBytes("ISO-8859-1") ++ body
+    val recHdr = ("WARC/1.0\r\nWARC-Type: response\r\n" +
+      s"WARC-Target-URI: https://example.com/doc/$id\r\n" +
+      s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1")
+    val info = ("WARC/1.0\r\nWARC-Type: warcinfo\r\n" +
+      "Content-Length: 4\r\n\r\ninfo\r\n\r\n").getBytes("ISO-8859-1")
+    Codecs.gzip(info) ++ Codecs.gzip(recHdr, http, "\r\n\r\n".getBytes("ISO-8859-1"))
   }
 
   /** Every second frame of each `(media_id, payload)` video, its PNG

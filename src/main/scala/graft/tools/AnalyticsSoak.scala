@@ -283,11 +283,8 @@ object AnalyticsSoak {
           val hdr = ("WARC/1.0\r\nWARC-Type: resource\r\n" +
             s"WARC-Target-URI: https://soak.example/$id\r\n" +
             s"Content-Length: $payloadLen\r\n\r\n").getBytes("ISO-8859-1")
-          val bos = new java.io.ByteArrayOutputStream()
-          val g = new java.util.zip.GZIPOutputStream(bos, 64 * 1024)
-          g.write(hdr); g.write(new Array[Byte](payloadLen))
-          g.write("\r\n\r\n".getBytes); g.close()
-          val member = bos.toByteArray
+          val member = graft.ext.Codecs.gzip(
+            hdr, new Array[Byte](payloadLen), "\r\n\r\n".getBytes)
           val blob = new Array[Byte](member.length * 40)
           (0 until 40).foreach(k =>
             System.arraycopy(member, 0, blob, k * member.length, member.length))

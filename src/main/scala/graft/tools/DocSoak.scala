@@ -100,12 +100,11 @@ object DocSoak {
       }.filter(_ >= 0).count()
     }
 
-    // Decode-ONLY soak over the four Inflater-bearing read paths
-    // (Zip.read raw, Warc gzip members, Png IDAT zlib, PDF FlateDecode):
-    // payloads are prebuilt to parquet OUTSIDE the timing, so the µs/doc
-    // isolates the read path — the parity check for the Deflater-pooling
-    // fix (a fresh Inflater per payload carries the same native
-    // buffer alloc/free the encode side was paying).
+    // Decode-ONLY soak over the four read paths that inflate through
+    // Codecs' pooled Inflaters (Zip.read raw, Warc gzip members, Png IDAT
+    // zlib, PDF FlateDecode): payloads are prebuilt to parquet OUTSIDE
+    // the timing, so the µs/doc isolates the read path (see Codecs for
+    // why the Inflaters are pooled).
     val inflateStages = Seq("inflate_zip", "inflate_warc", "inflate_png",
       "inflate_pdf")
     if (inflateStages.exists(stages.selected)) {

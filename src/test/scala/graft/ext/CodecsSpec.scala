@@ -114,4 +114,155 @@ class CodecsSpec extends AnyFunSuite {
     assert(bomb.length < 64 * 1024)
     assert(Codecs.decompress(bomb, cap = 1 << 16).length == (1 << 16))
   }
+
+  // ---- deflate: the pooled helpers against the JDK's streams ---------
+
+  private def zipDeflate(b: Array[Byte], zlib: Boolean,
+      dict: Option[Array[Byte]] = None): Array[Byte] = {
+    val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, !zlib)
+    try {
+      dict.foreach(d.setDictionary)
+      d.setInput(b); d.finish()
+      val out = new java.io.ByteArrayOutputStream()
+      val buf = new Array[Byte](4096)
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+      out.toByteArray
+    } finally d.end()
+  }
+
+  /** `InflaterInputStream` fed the whole input at once, read for
+    * exactly `size` bytes — [[Codecs.inflateExact]]'s contract.
+    */
+  private def jdkExact(b: Array[Byte], size: Int, zlib: Boolean): Option[Array[Byte]] = {
+    val inf = new java.util.zip.Inflater(!zlib)
+    try {
+      val in = new java.util.zip.InflaterInputStream(
+        new java.io.ByteArrayInputStream(b), inf, b.length + 1)
+      Some(in.readNBytes(size)).filter(_.length == size)
+    } catch { case _: java.io.IOException => None } finally inf.end()
+  }
+
+  /** `InflaterInputStream` read to the end of the stream, with the input
+    * bytes it consumed; a stream that stops on a preset dictionary is a
+    * failure — [[Codecs.inflateToEnd]]'s contract.
+    */
+  private def jdkToEnd(b: Array[Byte], zlib: Boolean): Option[(Seq[Byte], Int)] = {
+    val inf = new java.util.zip.Inflater(!zlib)
+    try {
+      val in = new java.util.zip.InflaterInputStream(
+        new java.io.ByteArrayInputStream(b), inf, b.length + 1)
+      val out = in.readAllBytes()
+      if (inf.finished()) Some((out.toSeq, b.length - inf.getRemaining)) else None
+    } catch { case _: java.io.IOException => None } finally inf.end()
+  }
+
+  /** Valid, truncated at every `step`-th cut, bit-flipped at every
+    * `step`-th byte, and trailing-garbage forms of one stream.
+    */
+  private def damaged(c: Array[Byte], from: Int = 0): Seq[(String, Array[Byte])] = {
+    val step = math.max(1, c.length / 40)
+    Seq("valid" -> c, "garbage" -> (c ++ "XYZ garbage".getBytes("ISO-8859-1"))) ++
+      (0 until c.length by step).map(k => s"cut $k" -> c.take(k)) ++
+      (from until c.length by step).flatMap { k =>
+        Seq(0, 3, 7).map { bit =>
+          val f = c.clone(); f(k) = (f(k) ^ (1 << bit)).toByte
+          s"flip $k.$bit" -> f
+        }
+      }
+  }
+
+  private val inflatePayloads: Seq[Array[Byte]] = {
+    val r = new scala.util.Random(20261019L)
+    Seq(Array.emptyByteArray, "x".getBytes("UTF-8"), payload,
+      Array.fill(100000)(r.nextInt(256).toByte), new Array[Byte](300000))
+  }
+
+  test("inflateExact equals InflaterInputStream read for the size, raw and zlib, on damaged input") {
+    for (p <- inflatePayloads; zlib <- Seq(false, true); (tag, b) <- damaged(zipDeflate(p, zlib))) {
+      for (size <- Seq(p.length, math.max(0, p.length - 1), p.length + 1)) {
+        val ours = Codecs.inflateExact(b, 0, b.length, size, zlib)
+        assert(ours.map(_.toSeq) == jdkExact(b, size, zlib).map(_.toSeq),
+          s"len=${p.length} zlib=$zlib $tag size=$size")
+      }
+    }
+    // an offset window reads only its slice
+    val c = zipDeflate(payload, zlib = true)
+    val framed = Array[Byte](9, 9, 9) ++ c ++ Array[Byte](9)
+    assert(Codecs.inflateExact(framed, 3, c.length, payload.length, zlib = true)
+      .exists(_.sameElements(payload)))
+  }
+
+  test("inflateToEnd equals InflaterInputStream read to the end, raw and zlib, on damaged input") {
+    for (p <- inflatePayloads; zlib <- Seq(false, true); (tag, b) <- damaged(zipDeflate(p, zlib));
+         bufSize <- Seq(16 * 1024, 64 * 1024)) {
+      val ours = Codecs.inflateToEnd(b, 0, b.length, zlib, bufSize, outHint = 64)
+      assert(ours.map { case (o, n) => (o.toSeq, n) } == jdkToEnd(b, zlib),
+        s"len=${p.length} zlib=$zlib $tag buf=$bufSize")
+    }
+  }
+
+  test("a zlib stream that needs a preset dictionary fails both inflates instead of spinning") {
+    val c = zipDeflate(payload, zlib = true, dict = Some("quick brown".getBytes("UTF-8")))
+    assert(((c(1) & 0xFF) & 0x20) != 0, "FDICT set")
+    assert(Codecs.inflateExact(c, 0, c.length, payload.length, zlib = true).isEmpty)
+    assert(Codecs.inflateToEnd(c, 0, c.length, zlib = true, 16 * 1024, 64).isEmpty)
+    assert(jdkToEnd(c, zlib = true).isEmpty)
+  }
+
+  test("gzip members through inflateToEnd plus the trailer check equal GZIPInputStream") {
+    // one member as Codecs.gzip writes it: a 10-byte header, the raw
+    // deflate stream, then CRC32 and ISIZE (Warc's member walk)
+    def ours(m: Array[Byte]): Option[Seq[Byte]] =
+      Codecs.inflateToEnd(m, 10, m.length - 10, zlib = false, 64 * 1024, 64 * 1024)
+        .filter { case (out, n) =>
+          val crc = new java.util.zip.CRC32(); crc.update(out)
+          10 + n + 8 <= m.length && Bytes.le32u(m, 10 + n) == crc.getValue &&
+            Bytes.le32u(m, 10 + n + 4) == (out.length & 0xFFFFFFFFL)
+        }.map(_._1.toSeq)
+    def jdk(m: Array[Byte]): Option[Seq[Byte]] =
+      try Some(new java.util.zip.GZIPInputStream(
+        new java.io.ByteArrayInputStream(m)).readAllBytes().toSeq)
+      catch { case _: java.io.IOException => None }
+    for (p <- inflatePayloads; (tag, m) <- damaged(Codecs.gzip(p), from = 10)
+         if m.length >= 10) {
+      assert(ours(m) == jdk(m), s"len=${p.length} $tag")
+      if (tag == "valid" || tag == "garbage") assert(ours(m).contains(p.toSeq), tag)
+    }
+  }
+
+  test("pooled Inflater: nested same-thread acquisition fails loudly") {
+    // the pool holds ONE native Inflater per thread; a nested acquire
+    // (e.g. an embedded deflate decode inside another inflate loop)
+    // would silently clobber shared state — the guard must throw instead
+    val inf = Codecs.pooledInflaterRaw.get().acquire()
+    try {
+      intercept[IllegalStateException] {
+        Codecs.pooledInflaterRaw.get().acquire()
+      }
+      // the two pools are independent: zlib acquire still works
+      Codecs.pooledInflaterZlib.get().acquire().reset()
+    } finally inf.reset()
+    // after reset the raw pool is reusable
+    Codecs.pooledInflaterRaw.get().acquire().reset()
+  }
+
+  test("src/main runs no Deflater, Inflater or gzip writer outside Codecs") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the project root: $root")
+    val banned = Seq(
+      """\bnew\s+(java\.util\.zip\.)?(Deflater|Inflater|GZIPOutputStream)\b""".r,
+      """\bextends\s+(java\.util\.zip\.)?(Deflater|Inflater)\b""".r,
+      """\bThreadLocal\b.*(Deflater|Inflater)""".r,
+      """\.(deflate|inflate)\(""".r)
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.exists(_.endsWith("ext/Codecs.scala")))
+    val found = for {
+      f <- files if !f.endsWith("ext/Codecs.scala")
+      (line, n) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if banned.exists(_.findFirstIn(line).isDefined)
+    } yield s"$f:${n + 1}: ${line.trim}"
+    assert(found.isEmpty, found.mkString("\n"))
+  }
 }

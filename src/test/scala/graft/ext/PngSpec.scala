@@ -691,4 +691,28 @@ class PngSpec extends AnyFunSuite {
     assert(probeForm == 3)
   }
 
+  test("an IDAT that asks for a preset dictionary is rejected, not spun on") {
+    // zlib FDICT: PNG supplies no dictionary, so the inflate can never
+    // progress — the decode must return None rather than loop forever
+    val raw = new Array[Byte]((4 * 3 + 1) * 4) // 4x4 RGB, filter 0
+    val d = new Deflater()
+    d.setDictionary("preset".getBytes("US-ASCII"))
+    d.setInput(raw); d.finish()
+    val bos = new ByteArrayOutputStream()
+    val buf = new Array[Byte](4096)
+    while (!d.finished()) bos.write(buf, 0, d.deflate(buf))
+    d.end()
+    val out = new ByteArrayOutputStream()
+    out.write(Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A))
+    val ihdr = new Array[Byte](13)
+    ihdr(3) = 4; ihdr(7) = 4; ihdr(8) = 8; ihdr(9) = 2
+    chunk(out, "IHDR", ihdr)
+    chunk(out, "IDAT", bos.toByteArray)
+    chunk(out, "IEND", Array.emptyByteArray)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val decoded = Future(Png.decode(out.toByteArray))
+    assert(Await.result(decoded, 30.seconds).isEmpty)
+  }
 }

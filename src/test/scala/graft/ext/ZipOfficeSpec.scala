@@ -269,20 +269,4 @@ class ZipOfficeSpec extends AnyFunSuite {
     assert(Zip.entries(zz).head.aes.map(_.method).contains(93))
     assert(Zip.read(zz, "m.txt", Some("pw")).map(_.toSeq).contains(text.toSeq))
   }
-
-  test("pooled Inflater: nested same-thread acquisition fails loudly") {
-    // the pool holds ONE native Inflater per thread; a nested acquire
-    // (e.g. an embedded deflate decode inside another inflate loop)
-    // would silently clobber shared state — the guard must throw instead
-    val inf = Zip.pooledInflaterRaw.get().acquire()
-    try {
-      intercept[IllegalStateException] {
-        Zip.pooledInflaterRaw.get().acquire()
-      }
-      // the two pools are independent: zlib acquire still works
-      Zip.pooledInflaterZlib.get().acquire().reset()
-    } finally inf.reset()
-    // after reset the raw pool is reusable
-    Zip.pooledInflaterRaw.get().acquire().reset()
-  }
 }

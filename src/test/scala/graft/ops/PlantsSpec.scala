@@ -70,6 +70,19 @@ class PlantsSpec extends SparkSpec {
         .sameElements(PlantsReference.orientationTiff(orientation, gps)), s"o=$orientation gps=$gps")
   }
 
+  test("the q_png4_stats and q_warc_gzip fixtures on Codecs equal their inline deflate writers") {
+    val rnd = new scala.util.Random(20261019L)
+    val words = Seq("gasket", "spark", "stage", "pipe", "deflate", "member", "chunk")
+    (0L until 3000L).foreach { id =>
+      assert(Plants.palette4Png(id).sameElements(PlantsReference.palette4Png(id)), s"png4 id=$id")
+      // empty, one-word and long texts; even ids take the gzip content-coding
+      val text = Seq.fill(rnd.nextInt(3) match { case 0 => 0; case 1 => 1; case _ => 200 })(
+        words(rnd.nextInt(words.length))).mkString(" ")
+      assert(Plants.chunkedWarcGz(id, text).sameElements(PlantsReference.chunkedWarcGz(id, text)),
+        s"warc id=$id text=${text.take(40)}")
+    }
+  }
+
   test("the MP4 certificate boxes built on Mp4.box equal their own-box-writer forms") {
     import ExtQueries.{Mp4Build => Ours}
     import PlantsReference.{Mp4Build => Ref}
