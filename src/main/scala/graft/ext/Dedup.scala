@@ -1,21 +1,23 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
-  * All variants are pure DataFrame algebra (no driver-side loops, no UDFs
-  * in the hot path) so every stage is codegen'd and scales by partitioning:
+  * All variants are DataFrame algebra (no driver-side loops, no UDFs in
+  * the hot path) so every stage is codegen'd and scales by partitioning;
+  * the one typed step is candidate pairing's ordered scan per partition:
   *
   *   - exact: hash groupBy on the content (or its md5) — one shuffle keyed
   *     by content hash; at 100 TB the shuffle carries (hash, min_id, count)
   *     after partial aggregation, not documents;
   *   - MinHash+LSH: shingle → k minhashes (a map-only array projection) →
-  *     b bands → bucket-join. Candidate generation never compares all
-  *     pairs: the only shuffle is the band-bucket self-join, keyed and
-  *     skew-resistant (bucket sizes are bounded by construction);
+  *     b bands → bucket scan. Candidate generation never compares all
+  *     pairs: the only shuffle is one exchange of the band rows on the
+  *     bucket key, and pair generation per bucket is capped;
   *   - SimHash: 64 sign-sums over token hashes, reassembled into one
   *     64-bit fingerprint; near-dup = small Hamming distance;
   *   - n-gram Jaccard: exact verification on candidate pairs only.
@@ -205,66 +207,116 @@ object Dedup {
       .select(col(idCol), posexplode(bandHashes).as(Seq("band_id", "band_hash")))
   }
 
-  /** Candidate pairs from LSH buckets (id1 < id2, distinct).
+  /** Candidate pairs from LSH buckets: distinct (id1, id2) with id1 < id2
+    * (id1 = id2 only from duplicate band rows, see below).
     *
-    * Bucket-grouping form, not a self-join: one keyed shuffle of the band
-    * rows builds each bucket's member list map-side, singleton buckets
-    * (the overwhelming majority) are dropped BEFORE any pair exists, and
-    * pairs are generated only inside ≥2-member buckets. The join form
-    * shuffled and sorted the full band table TWICE (both join sides) and
-    * emitted a (x,x) row per band row just to filter it — measured 6×
-    * slower at 2M docs.
+    * Sort-scan form, not a self-join and not a bucket aggregation: the raw
+    * (band_id, band_hash, id) rows cross ONE hash exchange on the bucket
+    * key, each partition sorts them by (band_id, band_hash, id), and one
+    * ordered pass ([[RunPairs]]) walks each bucket's run and emits its
+    * pairs. Singleton buckets emit nothing and cost one row of the scan.
+    * The join form shuffled and sorted the full band table TWICE (both
+    * join sides) and emitted a (x,x) row per band row just to filter it —
+    * measured 6× slower at 2M docs; the `collect_list` aggregation form
+    * built every bucket as one array and paired it through interpreted
+    * array lambdas — the orientation anchor's executor CPU per run was
+    * about twice this form's (2.1–2.6 s against 1.05–1.31 s at sf0.05).
     *
     * DEGENERATE-BUCKET BOUND: a mass-duplicate family that survives exact
     * dedup shares every band hash, so each of its buckets would emit all
-    * O(n²) pairs from one reducer task — and because the pair-gen
-    * lambda MATERIALIZES the bucket's pair array before the explode,
-    * an unbounded hot bucket is a measured heap death, not just a
-    * straggler (a planted 6000-member family × 16 band buckets OOMed a
-    * full executor heap at 8 M docs; the bounded form finished in 69 s).
-    * Pair GENERATION is therefore capped inside the aggregation
-    * expression: a bucket over `maxBucket` members emits full pairs among
-    * its first `maxBucket` (ascending-id) members plus a min-id STAR pair
-    * for every member past the cap — ≤ maxBucket²/2 + n pairs per bucket
-    * instead of n²/2 (≤ ~17 MB materialized per hot bucket at the
-    * default cap), all from the same single pass. For the
-    * realistic degenerate case (byte-identical boilerplate families) the
-    * star pairs verify at Jaccard 1 and keep the whole family one
-    * connected component, so downstream clustering/dedup is UNCHANGED;
-    * only an adversarial mixed mega-bucket loses pair recall beyond the
-    * cap, gracefully instead of exploding one task. The cap adds ZERO
-    * cost when no bucket exceeds it (the star arm is an empty slice) —
-    * an earlier auto-route design that pre-counted bucket sizes and
-    * salted-joined the hot keys cost 2.8× on the common path at 8 M docs
-    * (persist + extra pass over the full band table) and was reverted.
-    * [[candidatePairsSalted]] remains the exact-pair-set alternative
-    * when full recall inside hot buckets is worth a spread join.
+    * O(n²) pairs from one reducer task (a planted 6000-member family × 16
+    * band buckets OOMed a full executor heap at 8 M docs when the bucket's
+    * pair array was materialized; the bounded form finished in 69 s).
+    * Pair generation is therefore capped: a bucket over `maxBucket`
+    * members emits full pairs among its first `maxBucket` (ascending-id)
+    * members plus a min-id STAR pair for every member past the cap —
+    * ≤ maxBucket²/2 + n pairs per bucket instead of n²/2. The scan holds
+    * at most `maxBucket` ids per bucket and streams every pair, so no
+    * bucket, however hot, is ever built as one array. For the realistic
+    * degenerate case (byte-identical boilerplate families) the star pairs
+    * verify at Jaccard 1 and keep the whole family one connected
+    * component, so downstream clustering/dedup is UNCHANGED; only an
+    * adversarial mixed mega-bucket loses pair recall beyond the cap,
+    * gracefully instead of exploding one task. The cap costs nothing when
+    * no bucket exceeds it. [[candidatePairsSalted]] remains the
+    * exact-pair-set alternative when full recall inside hot buckets is
+    * worth a spread join.
+    *
+    * Null ids are dropped (a null is no document). Duplicate (band, id)
+    * rows are emitted as (x, x) or repeated pairs, which the terminal
+    * `distinct` collapses but does not filter; callers that band one id
+    * under several values drop `id1 = id2` themselves.
+    *
+    * The scan's function is a case class, equal by value: two builds of
+    * this plan canonicalize equal (`sameResult`), so a persisted result is
+    * found again by the cache manager. A closure would make every build a
+    * new plan.
     */
   def candidatePairs(
       bandsDf: DataFrame,
       idCol: String,
       maxBucket: Int = 1024): DataFrame = {
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
-    // clamped so the `cap + 1` slice start below stays a valid int literal
-    val cap = math.min(maxBucket, Int.MaxValue - 1)
-    val pairGen =
-      s"""concat(
-            flatten(transform(sequence(1, least(size(ids), $cap) - 1),
-              i -> transform(slice(ids, i + 1, least(size(ids), $cap) - i),
-                             j -> struct(ids[i - 1] AS id1, j AS id2)))),
-            transform(slice(ids, ${cap + 1}, greatest(size(ids) - $cap, 0)),
-              j -> struct(ids[0] AS id1, j AS id2)))"""
-    bandsDf
-      .groupBy("band_id", "band_hash")
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      // tiny by here: interpreted pair-gen lambdas touch only real buckets
-      .select(explode(expr(pairGen)).as("p"))
-      .select(col("p.id1").as("id1"), col("p.id2").as("id2"))
+    val rows = bandsDf
+      .select(col("band_id"), col("band_hash"), col(idCol))
+      .filter(col(idCol).isNotNull)
+    val idType = rows.schema(2).dataType
+    val pairSchema = StructType(Seq(StructField("id1", idType), StructField("id2", idType)))
+    rows
+      .repartition(col("band_id"), col("band_hash"))
+      .sortWithinPartitions(col("band_id"), col("band_hash"), col(idCol))
+      .mapPartitions(RunPairs(maxBucket))(Encoders.row(pairSchema))
       .distinct()
   }
 
-  /** Skew-hardened variant of [[candidatePairs]]: identical output, but a
+  /** The ordered scan behind [[candidatePairs]]. Its input is the band
+    * rows (band_id, band_hash, id) sorted by all three, so each bucket is
+    * one run of ascending ids. The k-th id of a run (from 0) pairs with
+    * every id before it while k < `cap` — together the full clique over
+    * the first `cap` ids — and with the run's first id from then on (the
+    * min-id star). Only the first `cap` ids of a run are held.
+    */
+  private final case class RunPairs(cap: Int) extends (Iterator[Row] => Iterator[Row]) {
+    // by content, so a binary band hash compares by its bytes
+    private def sameKey(a: Any, b: Any): Boolean = java.util.Objects.deepEquals(a, b)
+
+    def apply(rows: Iterator[Row]): Iterator[Row] = new Iterator[Row] {
+      private val head = scala.collection.mutable.ArrayBuffer.empty[Any]
+      private var band: Any = null
+      private var hash: Any = null
+      private var id: Any = null
+      // (head(i), id) is the next pair to emit while i < until
+      private var i = 0
+      private var until = 0
+
+      def hasNext: Boolean = {
+        while (i >= until && rows.hasNext) {
+          val r = rows.next()
+          id = r.get(2)
+          i = 0
+          if (head.isEmpty || !sameKey(r.get(0), band) || !sameKey(r.get(1), hash)) {
+            head.clear()
+            band = r.get(0)
+            hash = r.get(1)
+            until = 0
+          } else until = if (head.size < cap) head.size else 1
+          if (head.size < cap) head += id
+        }
+        i < until
+      }
+
+      def next(): Row = {
+        if (!hasNext) throw new NoSuchElementException("candidate pair")
+        val p = Row(head(i), id)
+        i += 1
+        p
+      }
+    }
+  }
+
+  /** Skew-hardened variant of [[candidatePairs]]: the same pair set as
+    * long as no bucket exceeds `maxBucket` (past it, this form keeps every
+    * pair that [[candidatePairs]]' cap trades for star pairs), but a
     * hot band bucket (one band hash shared by a huge near-dup family —
     * boilerplate pages, templated docs) is spread over `salts` reducers
     * instead of landing on one. The left side gets a deterministic

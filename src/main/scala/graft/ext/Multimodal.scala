@@ -367,10 +367,11 @@ object Multimodal {
     val exploded = orbits
       .select(col("media_id"), explode(array_distinct(col("orbit"))).as("phash"))
     val blocksN = if (nBlocks == 0) maxHamming + 1 else nBlocks
-    // no distinct on the band rows: duplicate (band, id) rows only
-    // produce self/duplicate candidate pairs, which candidatePairs'
-    // terminal distinct and the id1 =!= id2 filter already drop — a
-    // distinct here would be a full extra shuffle of the banded rows
+    // no distinct on the band rows: a duplicate (band, id) row only adds
+    // self and repeated candidate pairs, which candidatePairs' terminal
+    // distinct and the id1 =!= id2 filter drop (it does hold one of its
+    // bucket's maxBucket clique slots); a distinct here would be a second
+    // full exchange of the banded rows next to candidatePairs' one
     val total = Dedup.hammingSubsetCount(maxHamming, blocksN)
     val waves: Seq[(Int, Int)] =
       if (maxResidentSubsets <= 0 || maxResidentSubsets >= total) Seq((0, total))

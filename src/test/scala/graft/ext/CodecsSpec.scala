@@ -115,6 +115,93 @@ class CodecsSpec extends AnyFunSuite {
     assert(Codecs.decompress(bomb, cap = 1 << 16).length == (1 << 16))
   }
 
+  // ---- gzip slabs: chunks/decompress against GZIPInputStream ---------
+
+  /** Everything `GZIPInputStream` (the arm [[Codecs.stream]] routes gzip
+    * to) delivers before it ends or throws, read `step` bytes at a time.
+    */
+  private def gunzip(b: Array[Byte], step: Int): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    try {
+      val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(b), 64 * 1024)
+      val buf = new Array[Byte](step)
+      var n = in.read(buf)
+      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
+    } catch { case _: java.io.IOException => }
+    out.toByteArray
+  }
+
+  /** The earlier slab walk: one full `chunkSize` array per slab. */
+  private def fullSlabDecompress(b: Array[Byte], chunkSize: Int = 1 << 20): Array[Byte] = {
+    val in = Codecs.stream(b)
+    val out = new java.io.ByteArrayOutputStream()
+    var eof = false
+    while (!eof) {
+      val buf = new Array[Byte](chunkSize)
+      var got = 0
+      try {
+        while (got < chunkSize && !eof) {
+          val n = in.read(buf, got, chunkSize - got)
+          if (n < 0) eof = true else got += n
+        }
+      } catch { case scala.util.control.NonFatal(_) => eof = true }
+      out.write(buf, 0, got)
+    }
+    out.toByteArray
+  }
+
+  private val slabPayloads: Seq[Array[Byte]] = {
+    val r = new scala.util.Random(8L)
+    Seq(Array.emptyByteArray, "x".getBytes("UTF-8"), payload,
+      Array.fill(100000)(r.nextInt(256).toByte),
+      Array.tabulate(2500000)(i => ((i / 97) ^ (i % 13)).toByte))
+  }
+
+  test("decompress equals GZIPInputStream on valid, truncated, bit-flipped, trailing-garbage and concatenated gzip") {
+    val members = slabPayloads.map(Codecs.gzip(_))
+    val big = members.last
+    assert(java.util.Arrays.equals(Codecs.decompress(big), slabPayloads.last))
+    assert(java.util.Arrays.equals(Codecs.decompress(big ++ members(2)),
+      slabPayloads.last ++ slabPayloads(2)))
+    val concatenated = Seq(members(2) ++ members(3), members(1) ++ members(0) ++ members(2),
+      members(3) ++ members(2).take(members(2).length / 2))
+    for (c <- members.init ++ concatenated; (tag, b) <- damaged(c, from = 10)
+         if Codecs.detect(b) == "gzip") {
+      val ours = Codecs.decompress(b)
+      // read a byte at a time, GZIPInputStream delivers every byte decoded
+      // before the damage; on undamaged input the read size is immaterial
+      val all = gunzip(b, if (tag.startsWith("flip")) 1 else 8192)
+      if (tag.startsWith("flip")) {
+        // damage ends the walk: what came before it is delivered, never
+        // less than the full-slab walk delivered
+        assert(java.util.Arrays.equals(ours, all.take(ours.length)), s"${c.length} $tag")
+        assert(ours.length >= fullSlabDecompress(b).length, s"${c.length} $tag")
+      } else {
+        assert(java.util.Arrays.equals(ours, all), s"${c.length} $tag")
+        assert(java.util.Arrays.equals(ours, fullSlabDecompress(b)), s"${c.length} $tag")
+      }
+    }
+  }
+
+  test("decompress cuts at cap exactly, at and around the slab edges") {
+    val p = slabPayloads.last
+    val c = Codecs.gzip(p)
+    for (cap <- Seq(0L, 1L, 8191L, 8192L, 8193L, (1L << 20) - 1, 1L << 20, (1L << 20) + 1,
+                    p.length - 1L, p.length.toLong, p.length + 1L)) {
+      assert(java.util.Arrays.equals(Codecs.decompress(c, cap), p.take(cap.toInt)), s"cap=$cap")
+    }
+  }
+
+  test("chunks emits full slabs of exactly chunkSize, then the tail") {
+    for (p <- slabPayloads.take(4); size <- Seq(1, 100, 8191, 8192, 8193, 20000, 1 << 20)
+         if size > 1 || p.length <= 100000) {
+      val slabs = Codecs.chunks(Codecs.gzip(p), size).toSeq
+      assert(slabs.dropRight(1).forall(_.length == size), s"len=${p.length} size=$size")
+      assert(slabs.lastOption.forall(s => s.length >= 1 && s.length <= size))
+      assert(java.util.Arrays.equals(slabs.toArray.flatten, p), s"len=${p.length} size=$size")
+    }
+  }
+
   // ---- deflate: the pooled helpers against the JDK's streams ---------
 
   private def zipDeflate(b: Array[Byte], zlib: Boolean,

@@ -240,6 +240,21 @@ class DedupSpec extends SparkSpec {
     assert((0L until 60L).forall(cc(_) == 0L))
   }
 
+  test("a 200 000-id bucket at maxBucket 8 emits exactly 28 clique pairs plus 199 992 star pairs") {
+    // one mass-duplicate bucket, ids scrambled so the in-partition sort
+    // does the ordering: the scan holds 8 ids and streams the rest
+    val n = 200000L
+    val bands = spark.range(0, n).select(lit(0).as("band_id"), lit(7L).as("band_hash"),
+      ((col("id") * 7919L) % n * 3L).as("doc_id"))
+    val got = Dedup.candidatePairs(bands, "doc_id", maxBucket = 8)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val expected =
+      (for (i <- 0L until 8L; j <- (i + 1) until 8L) yield (i * 3L, j * 3L)).toSet ++
+        (8L until n).map(j => (0L, j * 3L))
+    assert(got.size == 28 + 199992)
+    assert(got == expected)
+  }
+
   test("span dedup: flags shared 5-token windows, prunes exactly those spans") {
     val shared = "alpha beta gamma delta epsilon" // one shared 5-token span
     val spanDocs = Seq(

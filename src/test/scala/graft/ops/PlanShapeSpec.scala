@@ -1,6 +1,14 @@
 package graft.ops
 
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
 import graft.SparkSpec
+import graft.ext.Dedup
 
 /** Physical-plan REGRESSION gate for the headline queries: the audited
   * plan shapes (shuffle-exchange count, broadcast vs sort-merge join,
@@ -11,7 +19,7 @@ import graft.SparkSpec
   * stats drift may only ever REMOVE work); join-strategy expectations
   * are exact because they are structural, not statistical.
   */
-class PlanShapeSpec extends SparkSpec {
+class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private final case class Shape(
       shuffles: Int, bcast: Int, bhj: Int, smj: Int, cartesian: Int)
@@ -97,5 +105,56 @@ class PlanShapeSpec extends SparkSpec {
       assert(s.smj <= maxSmj,
         s"a join fell back to sort-merge: $s (audited ≤$maxSmj)")
     }
+  }
+
+  // ---- candidatePairs: the sort-scan shape every LSH/Hamming path takes
+
+  private def bandTable = {
+    import spark.implicits._
+    (0 until 400).map(i => (i % 3, (i % 37).toLong, (i * 7919 % 400).toLong))
+      .toDF("band_id", "band_hash", "doc_id")
+  }
+
+  test("candidatePairs: one exchange on the bucket key ahead of the distinct, no collect_list aggregate") {
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      for (on <- Seq("true", "false")) {
+        spark.conf.set("spark.sql.adaptive.enabled", on)
+        val df = Dedup.candidatePairs(bandTable, "doc_id", maxBucket = 8)
+        assert(df.collect().nonEmpty)
+        val plan = df.queryExecution.executedPlan
+        def keys(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+          case other => Seq(other.toString)
+        }
+        val exchanges = collect(plan) { case e: ShuffleExchangeExec => e }
+        assert(exchanges.map(keys).toSet == Set(Seq("band_id", "band_hash"), Seq("id1", "id2")) &&
+          exchanges.size == 2, s"aqe=$on: ${exchanges.map(keys)}")
+        // the bucket-key exchange feeds the distinct's exchange
+        val distinctX = exchanges.find(keys(_) == Seq("id1", "id2")).get
+        assert(collect(distinctX.child) { case e: ShuffleExchangeExec => keys(e) } ==
+          Seq(Seq("band_id", "band_hash")), s"aqe=$on")
+        assert(collect(plan) {
+          case a: ObjectHashAggregateExec => a
+          case a: SortAggregateExec => a
+        }.isEmpty, s"aqe=$on")
+        assert(!collect(plan) { case a: BaseAggregateExec => a }
+          .flatMap(_.aggregateExpressions)
+          .exists(_.aggregateFunction.isInstanceOf[CollectList]), s"aqe=$on")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
+  test("two builds of candidatePairs over the same input are sameResult, so a persisted build is found again") {
+    val bands = bandTable
+    val a = Dedup.candidatePairs(bands, "doc_id", maxBucket = 8)
+    val b = Dedup.candidatePairs(bands, "doc_id", maxBucket = 8)
+    assert(a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed))
+    assert(!a.queryExecution.analyzed.sameResult(
+      Dedup.candidatePairs(bands, "doc_id", maxBucket = 9).queryExecution.analyzed))
+    // storageLevel asks the cache manager for b's plan
+    a.persist()
+    try assert(b.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    finally a.unpersist(blocking = true)
   }
 }

@@ -138,6 +138,54 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("candidatePairs' sort-scan equals the collect_list reference on generated band tables, AQE on and off") {
+    val cap = 8
+    // one band table per seed: buckets of size 1, 2, cap - 1, cap,
+    // cap + 1 and random sizes, ids drawn WITH replacement from a small
+    // universe (duplicate (band, id) rows, shared ids across buckets),
+    // ~5% null ids, and one bucket whose band_hash is null
+    def generated(seed: Long): Seq[(Int, Option[Long], Option[Long])] = {
+      val rnd = new scala.util.Random(seed)
+      val sizes = Seq(1, 1, 2, cap - 1, cap, cap + 1) ++ Seq.fill(6)(1 + rnd.nextInt(30))
+      sizes.zipWithIndex.flatMap { case (n, b) =>
+        val hash = if (b == 3) None else Some(b.toLong * 7919L)
+        Seq.fill(n) {
+          (b % 3, hash, if (rnd.nextInt(20) == 0) None else Some(rnd.nextInt(60).toLong))
+        }
+      }
+    }
+    // one 50 000-id bucket beside small ones; at cap 8 only (its
+    // unbounded clique would be 1.25 G pairs)
+    val mass = (0L until 50000L).map(i => (1, Option(42L), Option((i * 7919L) % 50000L))) ++
+      generated(99L).filter(_._1 != 1)
+    val cases: Seq[(String, Seq[(Int, Option[Long], Option[Long])], Seq[Int])] =
+      (1L to 4L).map(s => (s"seed $s", generated(s), Seq(cap, Int.MaxValue))) :+
+        (("50 000-id bucket", mass, Seq(cap)))
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Any, Any)] =
+      df.collect().map(r => (r.get(0), r.get(1))).toSet
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      for (on <- Seq("true", "false"); (tag, rows, maxBuckets) <- cases;
+           maxBucket <- maxBuckets; strIds <- Seq(false, true)) {
+        spark.conf.set("spark.sql.adaptive.enabled", on)
+        val longBands = rows.toDF("band_id", "band_hash", "doc_id")
+        val bands =
+          if (!strIds) longBands
+          else longBands.withColumn("doc_id", concat(lit("d"), lpad(col("doc_id").cast("string"), 5, "0")))
+        val ours = Dedup.candidatePairs(bands, "doc_id", maxBucket)
+        val ref = graft.ext.CandidatePairsReference.candidatePairs(bands, "doc_id", maxBucket)
+        val what = s"$tag maxBucket=$maxBucket aqe=$on strIds=$strIds"
+        assert(ours.schema.map(_.dataType) == ref.schema.map(_.dataType), what)
+        val expected = pairs(ref)
+        val got = pairs(ours)
+        assert(expected.nonEmpty, what)
+        assert(got.size == expected.size && (expected -- got).isEmpty,
+          s"$what: ${got.size} pairs, reference ${expected.size}; " +
+            s"missing ${(expected -- got).take(5)}, extra ${(got -- expected).take(5)}")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   test("span dedup matches a brute-force reference on generated corpora") {
     val n = 3
     (1L to 5L).foreach { seed =>
