@@ -83,38 +83,11 @@ object Ccitt {
   private val (whiteTerm, whiteMakeup) = buildEnc(CcittTables.whiteCodes)
   private val (blackTerm, blackMakeup) = buildEnc(CcittTables.blackCodes)
 
-  // -------------------------------------------------------- bit reader
-
-  private final class Reader(b: Array[Byte], from: Int, until: Int) {
-    private var pos = from.toLong << 3
-    private val end = until.toLong << 3
-    def exhausted: Boolean = pos >= end
-    def bit(): Int = {
-      if (pos >= end) { pos += 1; return 0 } // zero fill past end
-      val v = (b((pos >> 3).toInt) >> (7 - (pos & 7)).toInt) & 1
-      pos += 1
-      v
-    }
-    def peek(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) {
-        val p = pos + k
-        v = (v << 1) |
-          (if (p >= end) 0 else (b((p >> 3).toInt) >> (7 - (p & 7)).toInt) & 1)
-        k += 1
-      }
-      v
-    }
-    def skip(n: Int): Unit = pos += n
-    def alignByte(): Unit = pos = (pos + 7) & ~7L
-  }
-
   /** One full run of `white` pixels: 0+ makeup codes then a terminal.
     * -1 on any non-code prefix (the caller decides if EOL is legal
     * there) or truncation.
     */
-  private def readRun(r: Reader, white: Boolean): Int = {
+  private def readRun(r: MsbReader, white: Boolean): Int = {
     val lut = if (white) whiteLut else blackLut
     var total = 0
     var guard = 0
@@ -134,7 +107,7 @@ object Ccitt {
   /** Consume fill zeros + the 000000000001 EOL. Strict: a 1 bit before
     * 11 zeros have accumulated is corrupt (fill is zeros-only).
     */
-  private def syncEol(r: Reader): Boolean = {
+  private def syncEol(r: MsbReader): Boolean = {
     var zeros = 0
     var guard = 0
     while (guard < (1 << 16)) {
@@ -149,7 +122,7 @@ object Ccitt {
   // ------------------------------------------------------- row decode
 
   /** 1D (MH) row → transitions; strict: runs must sum to exactly w. */
-  private def row1D(r: Reader, w: Int, trans: Array[Int]): Int = {
+  private def row1D(r: MsbReader, w: Int, trans: Array[Int]): Int = {
     var n = 0
     var pos = 0
     var white = true
@@ -166,7 +139,7 @@ object Ccitt {
   }
 
   /** 2D (T.4 §4.2.1.3 / T.6) row against reference transitions. */
-  private def row2D(r: Reader, w: Int, refT: Array[Int], refN: Int,
+  private def row2D(r: MsbReader, w: Int, refT: Array[Int], refN: Int,
       trans: Array[Int]): Int = {
     var n = 0
     var a0 = -1
@@ -249,7 +222,7 @@ object Ccitt {
       return None
     if (w.toLong * rows > (1L << 26)) return None
     try {
-      val r = new Reader(b, from, until)
+      val r = new MsbReader(b, from, until)
       val out = new Array[Byte](w * rows)
       val cap = w + 3
       var refT = new Array[Int](cap)
@@ -260,7 +233,7 @@ object Ccitt {
       while (row < rows) {
         scheme match {
           case Mh =>
-            if (row > 0) r.alignByte()
+            if (row > 0) r.alignToByte()
           case G3(twoD, _) =>
             if (!syncEol(r)) return None
             if (twoD) oneD = r.bit() == 1
@@ -283,39 +256,22 @@ object Ccitt {
 
   // ----------------------------------------------------------- encode
 
-  private final class Writer {
-    private val buf = new java.io.ByteArrayOutputStream(256)
-    private var cur = 0
-    private var nbits = 0
-    def put(code: Int, len: Int): Unit = {
-      cur = (cur << len) | (code & ((1 << len) - 1))
-      nbits += len
-      while (nbits >= 8) {
-        buf.write((cur >>> (nbits - 8)) & 0xFF)
-        nbits -= 8
-      }
-    }
-    def alignByte(): Unit = if (nbits > 0) put(0, 8 - nbits)
-    def bitLength: Int = buf.size * 8 + nbits
-    def finish(): Array[Byte] = { alignByte(); buf.toByteArray }
-  }
-
-  private def putRun(wt: Writer, run0: Int, white: Boolean): Unit = {
+  private def putRun(wt: MsbWriter, run0: Int, white: Boolean): Unit = {
     val (term, makeup) =
       if (white) (whiteTerm, whiteMakeup) else (blackTerm, blackMakeup)
     var run = run0
     while (run >= 2624) { // chain max makeups for very long runs
       val p = makeup(39)
-      wt.put(p & 0xFFFF, p >>> 16)
+      wt.bits(p & 0xFFFF, p >>> 16)
       run -= 2560
     }
     if (run >= 64) {
       val p = makeup(run / 64 - 1)
-      wt.put(p & 0xFFFF, p >>> 16)
+      wt.bits(p & 0xFFFF, p >>> 16)
       run -= run / 64 * 64
     }
     val p = term(run)
-    wt.put(p & 0xFFFF, p >>> 16)
+    wt.bits(p & 0xFFFF, p >>> 16)
   }
 
   private def transitionsOf(bm: Array[Byte], off: Int, w: Int,
@@ -332,7 +288,7 @@ object Ccitt {
     n
   }
 
-  private def put1D(wt: Writer, trans: Array[Int], n: Int, w: Int): Unit = {
+  private def put1D(wt: MsbWriter, trans: Array[Int], n: Int, w: Int): Unit = {
     var pos = 0
     var white = true
     var i = 0
@@ -345,7 +301,7 @@ object Ccitt {
     }
   }
 
-  private def put2D(wt: Writer, curT: Array[Int], curN: Int,
+  private def put2D(wt: MsbWriter, curT: Array[Int], curN: Int,
       refT: Array[Int], refN: Int, w: Int): Unit = {
     var a0 = -1
     var white = true
@@ -360,24 +316,24 @@ object Ccitt {
       while (ci < curN && curT(ci) <= a0) ci += 1
       val a1 = if (ci < curN) curT(ci) else w
       if (b2 < a1) { // pass
-        wt.put(1, 4) // 0001
+        wt.bits(1, 4) // 0001
         a0 = b2
       } else if (math.abs(a1 - b1) <= 3) { // vertical
         (a1 - b1) match {
-          case 0 => wt.put(1, 1)
-          case 1 => wt.put(3, 3) // 011
-          case -1 => wt.put(2, 3) // 010
-          case 2 => wt.put(3, 6) // 000011
-          case -2 => wt.put(2, 6) // 000010
-          case 3 => wt.put(3, 7) // 0000011
-          case _ => wt.put(2, 7) // 0000010
+          case 0 => wt.bits(1, 1)
+          case 1 => wt.bits(3, 3) // 011
+          case -1 => wt.bits(2, 3) // 010
+          case 2 => wt.bits(3, 6) // 000011
+          case -2 => wt.bits(2, 6) // 000010
+          case 3 => wt.bits(3, 7) // 0000011
+          case _ => wt.bits(2, 7) // 0000010
         }
         a0 = a1
         white = !white
       } else { // horizontal: two runs from max(a0,0)
         val a2 = if (ci + 1 < curN) curT(ci + 1) else w
         val p0 = if (a0 < 0) 0 else a0
-        wt.put(1, 3) // 001
+        wt.bits(1, 3) // 001
         putRun(wt, a1 - p0, white)
         putRun(wt, a2 - a1, !white)
         a0 = a2
@@ -390,7 +346,7 @@ object Ccitt {
   /** Encode a bitmap (1 byte/pixel, nonzero = black) as one strip. */
   def encode(bm: Array[Byte], w: Int, rows: Int, scheme: Scheme): Array[Byte] = {
     require(bm.length >= w * rows && w > 0 && rows > 0, "ccitt encode: dims")
-    val wt = new Writer
+    val wt = new MsbWriter
     val cap = w + 3
     var refT = new Array[Int](cap)
     var refN = 0
@@ -400,17 +356,17 @@ object Ccitt {
       val n = transitionsOf(bm, row * w, w, curT)
       scheme match {
         case Mh =>
-          if (row > 0) wt.alignByte()
+          if (row > 0) wt.alignToByte()
           put1D(wt, curT, n, w)
         case G3(twoD, fill) =>
           if (fill) { // zero fill so the 12-bit EOL itself ends a byte
-            val tail = (wt.bitLength + 12) & 7 // (libtiff convention:
-            if (tail != 0) wt.put(0, 8 - tail) // the 2D tag bit follows)
+            val tail = ((wt.bitLength + 12) & 7).toInt // (libtiff convention:
+            if (tail != 0) wt.bits(0, 8 - tail) // the 2D tag bit follows)
           }
-          wt.put(Eol._1, Eol._2)
+          wt.bits(Eol._1, Eol._2)
           if (twoD) {
             val oneD = row == 0 // first row 1D, rest 2D
-            wt.put(if (oneD) 1 else 0, 1)
+            wt.bits(if (oneD) 1 else 0, 1)
             if (oneD) put1D(wt, curT, n, w)
             else put2D(wt, curT, n, refT, refN, w)
           } else put1D(wt, curT, n, w)
@@ -423,11 +379,11 @@ object Ccitt {
     }
     scheme match {
       case G4 => // EOFB
-        wt.put(Eol._1, Eol._2); wt.put(Eol._1, Eol._2)
+        wt.bits(Eol._1, Eol._2); wt.bits(Eol._1, Eol._2)
       case G3(_, _) => // RTC-style trailing EOL keeps libtiff happy
-        wt.put(Eol._1, Eol._2)
+        wt.bits(Eol._1, Eol._2)
       case Mh => ()
     }
-    wt.finish()
+    wt.result()
   }
 }

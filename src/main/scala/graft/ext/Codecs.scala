@@ -414,21 +414,13 @@ object Codecs {
     * accepts. Correctness, not ratio, is the point of a fixture.
     */
   def zCompress(b: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(b.length / 2 + 16)
-    out.write(0x1F); out.write(0x9D); out.write(0x80 | 9)
+    val out = new LsbWriter
+    out.bits(0x1F, 8); out.bits(0x9D, 8); out.bits(0x80 | 9, 8)
     // dictionary over (prefixCode << 8 | nextByte); 256 = CLEAR (block
     // mode reserves it even when never emitted), first free code = 257
     val dict = new java.util.HashMap[Integer, Integer]()
     var nextCode = 257
-    var bitBuf = 0L
-    var bitCnt = 0
-    def emit(code: Int): Unit = { // 9-bit codes, LSB-first packing
-      bitBuf |= (code.toLong & 0x1FF) << bitCnt
-      bitCnt += 9
-      while (bitCnt >= 8) {
-        out.write((bitBuf & 0xFF).toInt); bitBuf >>>= 8; bitCnt -= 8
-      }
-    }
+    def emit(code: Int): Unit = out.bits(code, 9) // LSB-first packing
     if (b.nonEmpty) {
       var w = b(0) & 0xFF
       var i = 1
@@ -446,7 +438,6 @@ object Codecs {
       }
       emit(w)
     }
-    if (bitCnt > 0) out.write((bitBuf & 0xFF).toInt)
-    out.toByteArray
+    out.result()
   }
 }

@@ -170,18 +170,14 @@ object Dedup {
       if (widen && df.queryExecution.toRdd.getNumPartitions < parallelism)
         df.repartition(parallelism)
       else df
-    // The two standard shinglers take the FUSED kernel (one compiled pass
-    // over the text bytes, no shingle strings materialized — bit-identical
-    // output, see MinHashText); a custom Shingler falls back to the
-    // composable HOF → minhash_signature path.
+    // Both shinglers take the FUSED kernel (one compiled pass over the
+    // text bytes, no shingle strings materialized — bit-identical output,
+    // see MinHashText).
     val sigCol = shingler match {
       case WordShingles(n) =>
         graft.functions.MinHashText.minhash_word_shingles(col(textCol), n, numHashes)
       case CharShingles(k) =>
         graft.functions.MinHashText.minhash_char_shingles(col(textCol), k, numHashes)
-      case other =>
-        graft.functions.MinHashSignature
-          .minhash_signature(other(textCol), numHashes)
     }
     src.select(col(idCol), sigCol.as("sig"))
   }
@@ -238,9 +234,7 @@ object Dedup {
     * component, so downstream clustering/dedup is UNCHANGED; only an
     * adversarial mixed mega-bucket loses pair recall beyond the cap,
     * gracefully instead of exploding one task. The cap costs nothing when
-    * no bucket exceeds it. [[candidatePairsSalted]] remains the
-    * exact-pair-set alternative when full recall inside hot buckets is
-    * worth a spread join.
+    * no bucket exceeds it.
     *
     * Null ids are dropped (a null is no document). Duplicate (band, id)
     * rows are emitted as (x, x) or repeated pairs, which the terminal
@@ -312,34 +306,6 @@ object Dedup {
         p
       }
     }
-  }
-
-  /** Skew-hardened variant of [[candidatePairs]]: the same pair set as
-    * long as no bucket exceeds `maxBucket` (past it, this form keeps every
-    * pair that [[candidatePairs]]' cap trades for star pairs), but a
-    * hot band bucket (one band hash shared by a huge near-dup family —
-    * boilerplate pages, templated docs) is spread over `salts` reducers
-    * instead of landing on one. The left side gets a deterministic
-    * content-derived salt (retry-safe, unlike rand()), the right side is
-    * replicated `salts`× — the standard salted self-join: every (id1, id2)
-    * bucket pair still meets exactly once, on salt = hash(id1) % salts.
-    *
-    * Caching: `bandsDf` is persisted here (it feeds both join sides) and,
-    * like every plan-local intermediate in this pipeline, stays cached for
-    * the session — callers own release via
-    * [[graft.ops.CacheUtils.releaseAll]] between units of work.
-    */
-  def candidatePairsSalted(bandsDf: DataFrame, idCol: String, salts: Int): DataFrame = {
-    // persisted: feeds both self-join sides (see caching note above)
-    val cached = bandsDf.persist(StorageLevel.MEMORY_AND_DISK)
-    val a = cached.select(col("band_id"), col("band_hash"), col(idCol).as("id1"))
-      .withColumn("_salt", graft.ops.SkewUtils.salt(col("id1"), salts))
-    val b = cached.select(col("band_id"), col("band_hash"), col(idCol).as("id2"))
-      .withColumn("_salt", explode(sequence(lit(0L), lit((salts - 1).toLong))))
-    a.join(b, Seq("band_id", "band_hash", "_salt"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2")
-      .distinct()
   }
 
   /** Materialize the LSH index as first-class WRITE-ONCE tables — the
@@ -673,9 +639,9 @@ object Dedup {
   /** Entropy guard for the shingling choice: when a CharShingles corpus
     * samples below `minOccupancy`, auto-widen to word shingles (the
     * selective choice for repetitive text) and warn; otherwise keep the
-    * caller's shingler. Word shingles and custom shinglers pass through
-    * untouched — the guard exists for the char-shingle default, whose
-    * failure mode is silent until the candidate explosion.
+    * caller's shingler. Word shingles pass through untouched — the guard
+    * exists for the char-shingle default, whose failure mode is silent
+    * until the candidate explosion.
     */
   def guardedShingler(
       df: DataFrame,

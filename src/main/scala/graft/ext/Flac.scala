@@ -75,60 +75,28 @@ object Flac {
     crc
   }
 
-  // ----------------------------------------------------------- bit reader
+  // ------------------------------------------------------- bit helpers
 
-  /** MSB-first bit reader. Reads past the end raise the private Bail
-    * exception, caught once in [[decode]] — keeps the hot loops free of
+  /** A malformed field ends the decode the way truncation does: both are
+    * None, caught once in [[decode]] — keeps the hot loops free of
     * per-read Option boxing.
     */
-  private final class Bail extends RuntimeException(null, null, false, false)
+  private def fail(): Nothing = throw new Bits.EndOfInput
 
-  private final class BitReader(val b: Array[Byte]) {
-    var pos = 0 // byte position
-    var bit = 0 // bits consumed of current byte (0-7)
+  /** Signed two's-complement n-bit read. */
+  private def readSigned(r: MsbReader, n: Int): Int = {
+    val v = r.bits(n)
+    if (n == 0) 0
+    else if (n == 32) v // already two's complement
+    else if ((v & (1 << (n - 1))) != 0) v - (1 << n)
+    else v
+  }
 
-    def fail(): Nothing = throw new Bail
-
-    def readBit(): Int = {
-      if (pos >= b.length) fail()
-      val v = (b(pos) >> (7 - bit)) & 1
-      bit += 1
-      if (bit == 8) { bit = 0; pos += 1 }
-      v
-    }
-
-    def readBits(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) { v = (v << 1) | readBit(); k += 1 }
-      v
-    }
-
-    def readBitsLong(n: Int): Long = {
-      var v = 0L
-      var k = 0
-      while (k < n) { v = (v << 1) | readBit(); k += 1 }
-      v
-    }
-
-    /** Signed two's-complement n-bit read. */
-    def readSigned(n: Int): Int = {
-      val v = readBits(n)
-      if (n == 0) 0
-      else if (n == 32) v // already two's complement
-      else if ((v & (1 << (n - 1))) != 0) v - (1 << n)
-      else v
-    }
-
-    /** FLAC unary: count of 0 bits before the terminating 1. */
-    def readUnary(): Int = {
-      var q = 0
-      while (readBit() == 0) q += 1
-      q
-    }
-
-    def alignToByte(): Unit = if (bit != 0) { bit = 0; pos += 1 }
-    def aligned: Boolean = bit == 0
+  /** FLAC unary: count of 0 bits before the terminating 1. */
+  private def readUnary(r: MsbReader): Int = {
+    var q = 0
+    while (r.bit() == 0) q += 1
+    q
   }
 
   // ------------------------------------------------------------- decoder
@@ -148,33 +116,33 @@ object Flac {
     if (b == null || b.length < 42) return None
     if (!(b(0) == 'f' && b(1) == 'L' && b(2) == 'a' && b(3) == 'C')) return None
     try {
-      val r = new BitReader(b)
-      r.pos = 4
+      val r = new MsbReader(b)
+      r.bytePos = 4
       // --- metadata blocks; first MUST be STREAMINFO (type 0, 34 bytes)
       var last = false
       var first = true
       var rate = 0; var nch = 0; var bps = 0; var total = 0L
       while (!last) {
-        if (r.pos + 4 > b.length) return None
-        val hdr = r.readBits(8)
+        if (r.bytePos + 4 > b.length) return None
+        val hdr = r.bits(8)
         last = (hdr & 0x80) != 0
         val btype = hdr & 0x7F
-        val len = r.readBits(24)
+        val len = r.bits(24)
         if (first) {
           if (btype != 0 || len != 34) return None
-          r.readBits(16) // min block size
-          r.readBits(16) // max block size
-          r.readBits(24); r.readBits(24) // min/max frame size
-          rate = r.readBits(20)
-          nch = r.readBits(3) + 1
-          bps = r.readBits(5) + 1
-          total = r.readBitsLong(36)
-          r.pos += 16 // MD5 (not verified — 0 = unstated, per spec)
+          r.bits(16) // min block size
+          r.bits(16) // max block size
+          r.bits(24); r.bits(24) // min/max frame size
+          rate = r.bits(20)
+          nch = r.bits(3) + 1
+          bps = r.bits(5) + 1
+          total = r.bitsLong(36)
+          r.bytePos += 16 // MD5 (not verified — 0 = unstated, per spec)
           first = false
         } else {
           if (btype == 127) return None // invalid block type
-          if (r.pos + len > b.length) return None
-          r.pos += len
+          if (r.bytePos + len > b.length) return None
+          r.bytePos += len
         }
       }
       if (rate <= 0 || nch <= 0 || nch > 8 || bps <= 0) return None
@@ -182,38 +150,38 @@ object Flac {
       val out = new java.util.ArrayList[Array[Array[Int]]]()
       var decoded = 0L
       // --- frames until the declared sample count (or EOF when unstated)
-      while ((total == 0L && r.pos < b.length) || decoded < total) {
-        val frameStart = r.pos
+      while ((total == 0L && r.bytePos < b.length) || decoded < total) {
+        val frameStart = r.bytePos
         // sync (14) + reserved (1) + blocking strategy (1)
-        val sync = r.readBits(14)
+        val sync = r.bits(14)
         if (sync != 0x3FFE) return None
-        if (r.readBit() != 0) return None
-        val variableBlocking = r.readBit() == 1
-        val bsCode = r.readBits(4)
-        val srCode = r.readBits(4)
-        val chCode = r.readBits(4)
-        val szCode = r.readBits(3)
-        if (r.readBit() != 0) return None
+        if (r.bit() != 0) return None
+        val variableBlocking = r.bit() == 1
+        val bsCode = r.bits(4)
+        val srCode = r.bits(4)
+        val chCode = r.bits(4)
+        val szCode = r.bits(3)
+        if (r.bit() != 0) return None
         // UTF-8-coded frame/sample number (up to 36 bits → 7 bytes)
-        val first0 = r.readBits(8)
+        val first0 = r.bits(8)
         var extra = 0
         var f = first0
         while ((f & 0x40) != 0 && extra < 6) { extra += 1; f <<= 1 }
         if ((first0 & 0x80) != 0 && extra == 0) return None // 10xxxxxx lead
         var k = 0
         while (k < extra) {
-          if ((r.readBits(8) & 0xC0) != 0x80) return None
+          if ((r.bits(8) & 0xC0) != 0x80) return None
           k += 1
         }
         val blockSize = bsCode match {
           case 0 => return None
-          case 6 => r.readBits(8) + 1
-          case 7 => r.readBits(16) + 1
+          case 6 => r.bits(8) + 1
+          case 7 => r.bits(16) + 1
           case c => BlockSizes(c)
         }
         srCode match {
-          case 12 => r.readBits(8)
-          case 13 | 14 => r.readBits(16)
+          case 12 => r.bits(8)
+          case 13 | 14 => r.bits(16)
           case 15 => return None
           case _ => ()
         }
@@ -231,7 +199,7 @@ object Flac {
         if (frameBps != bps) return None
         // header CRC-8 (header fields are byte-aligned by construction)
         if (!r.aligned) return None
-        if (crc8(b, frameStart, r.pos) != r.readBits(8)) return None
+        if (crc8(b, frameStart, r.bytePos) != r.bits(8)) return None
         if (blockSize <= 0 || decoded + blockSize > (1L << 26) / nch)
           return None
         // --- subframes
@@ -269,7 +237,7 @@ object Flac {
         }
         // --- frame CRC-16 over everything incl. the header CRC-8
         r.alignToByte()
-        if (crc16(b, frameStart, r.pos) != r.readBits(16)) return None
+        if (crc16(b, frameStart, r.bytePos) != r.bits(16)) return None
         val _ = variableBlocking // parsed for conformance; number unchecked
         out.add(chans)
         decoded += blockSize
@@ -293,30 +261,30 @@ object Flac {
       }
       Some(Audio(rate, nch, bps, samples))
     } catch {
-      case _: Bail => None
+      case _: Bits.EndOfInput => None
       case _: ArrayIndexOutOfBoundsException => None
     }
   }
 
-  private def decodeSubframe(r: BitReader, blockSize: Int, bps: Int): Array[Int] = {
-    if (r.readBit() != 0) r.fail() // padding bit must be 0
-    val t = r.readBits(6)
+  private def decodeSubframe(r: MsbReader, blockSize: Int, bps: Int): Array[Int] = {
+    if (r.bit() != 0) fail() // padding bit must be 0
+    val t = r.bits(6)
     val wasted =
-      if (r.readBit() == 1) r.readUnary() + 1
+      if (r.bit() == 1) readUnary(r) + 1
       else 0
     val ebps = bps - wasted
-    if (ebps <= 0 || ebps > 32) r.fail()
+    if (ebps <= 0 || ebps > 32) fail()
     val out = new Array[Int](blockSize)
     if (t == 0) { // CONSTANT
-      val v = r.readSigned(ebps)
+      val v = readSigned(r, ebps)
       java.util.Arrays.fill(out, v)
     } else if (t == 1) { // VERBATIM
       var i = 0
-      while (i < blockSize) { out(i) = r.readSigned(ebps); i += 1 }
+      while (i < blockSize) { out(i) = readSigned(r, ebps); i += 1 }
     } else if ((t & 0x38) == 0x08 && (t & 0x07) <= 4) { // FIXED 0-4
       val order = t & 0x07
       var i = 0
-      while (i < order) { out(i) = r.readSigned(ebps); i += 1 }
+      while (i < order) { out(i) = readSigned(r, ebps); i += 1 }
       decodeResidual(r, blockSize, order, out)
       // fixed predictors: out[i] += pred(order)
       i = order
@@ -334,14 +302,14 @@ object Flac {
     } else if ((t & 0x20) != 0) { // LPC, order = low 5 bits + 1
       val order = (t & 0x1F) + 1
       var i = 0
-      while (i < order) { out(i) = r.readSigned(ebps); i += 1 }
-      val precision = r.readBits(4) + 1
-      if (precision == 16) r.fail() // 0b1111 is invalid per spec
-      val shift = r.readSigned(5)
-      if (shift < 0) r.fail()
+      while (i < order) { out(i) = readSigned(r, ebps); i += 1 }
+      val precision = r.bits(4) + 1
+      if (precision == 16) fail() // 0b1111 is invalid per spec
+      val shift = readSigned(r, 5)
+      if (shift < 0) fail()
       val coefs = new Array[Int](order)
       var c = 0
-      while (c < order) { coefs(c) = r.readSigned(precision); c += 1 }
+      while (c < order) { coefs(c) = readSigned(r, precision); c += 1 }
       decodeResidual(r, blockSize, order, out)
       i = order
       while (i < blockSize) {
@@ -351,7 +319,7 @@ object Flac {
         out(i) += (acc >> shift).toInt
         i += 1
       }
-    } else r.fail() // reserved subframe type
+    } else fail() // reserved subframe type
     if (wasted > 0) {
       var i = 0
       while (i < blockSize) { out(i) = out(i) << wasted; i += 1 }
@@ -364,33 +332,33 @@ object Flac {
     * Writes residuals into `out(order until blockSize)`.
     */
   private def decodeResidual(
-      r: BitReader, blockSize: Int, predOrder: Int, out: Array[Int]): Unit = {
-    val method = r.readBits(2)
-    if (method > 1) r.fail()
+      r: MsbReader, blockSize: Int, predOrder: Int, out: Array[Int]): Unit = {
+    val method = r.bits(2)
+    if (method > 1) fail()
     val paramBits = if (method == 0) 4 else 5
     val escape = (1 << paramBits) - 1
-    val partOrder = r.readBits(4)
+    val partOrder = r.bits(4)
     val parts = 1 << partOrder
-    if (blockSize % parts != 0) r.fail()
+    if (blockSize % parts != 0) fail()
     val partLen = blockSize >> partOrder
     var i = predOrder
     var p = 0
     while (p < parts) {
       val count = if (p == 0) partLen - predOrder else partLen
-      if (count < 0) r.fail()
-      val param = r.readBits(paramBits)
+      if (count < 0) fail()
+      val param = r.bits(paramBits)
       if (param == escape) {
-        val raw = r.readBits(5)
+        val raw = r.bits(5)
         var k = 0
         while (k < count) {
-          out(i) = if (raw == 0) 0 else r.readSigned(raw)
+          out(i) = if (raw == 0) 0 else readSigned(r, raw)
           i += 1; k += 1
         }
       } else {
         var k = 0
         while (k < count) {
-          val q = r.readUnary()
-          val u = (q << param) | (if (param > 0) r.readBits(param) else 0)
+          val q = readUnary(r)
+          val u = (q << param) | (if (param > 0) r.bits(param) else 0)
           out(i) = (u >>> 1) ^ -(u & 1) // zigzag → signed
           i += 1; k += 1
         }
@@ -401,30 +369,11 @@ object Flac {
 
   // ------------------------------------------------------------- encoder
 
-  private final class BitWriter {
-    private val buf = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nbits = 0
-    def writeBit(v: Int): Unit = {
-      cur = (cur << 1) | (v & 1)
-      nbits += 1
-      if (nbits == 8) { buf.write(cur); cur = 0; nbits = 0 }
-    }
-    def writeBits(v: Int, n: Int): Unit = {
-      var k = n - 1
-      while (k >= 0) { writeBit((v >> k) & 1); k -= 1 }
-    }
-    def writeBitsLong(v: Long, n: Int): Unit = {
-      var k = n - 1
-      while (k >= 0) { writeBit(((v >> k) & 1L).toInt); k -= 1 }
-    }
-    def writeUnary(q: Int): Unit = {
-      var k = 0
-      while (k < q) { writeBit(0); k += 1 }
-      writeBit(1)
-    }
-    def align(): Unit = while (nbits != 0) writeBit(0)
-    def bytes: Array[Byte] = { require(nbits == 0); buf.toByteArray }
+  /** FLAC unary: `q` 0 bits, then a 1. */
+  private def writeUnary(w: MsbWriter, q: Int): Unit = {
+    var k = q
+    while (k >= 32) { w.bits(0, 32); k -= 32 }
+    w.bits(1, k + 1)
   }
 
   /** Per-channel subframe strategy for the fixture encoder. */
@@ -455,21 +404,21 @@ object Flac {
     val n = channels(0).length
     require(channels.forall(_.length == n))
     val assign = if (chAssign >= 0) chAssign else nch - 1
-    val head = new BitWriter
-    head.writeBits('f', 8); head.writeBits('L', 8)
-    head.writeBits('a', 8); head.writeBits('C', 8)
+    val head = new MsbWriter
+    head.bits('f', 8); head.bits('L', 8)
+    head.bits('a', 8); head.bits('C', 8)
     // STREAMINFO, last-metadata-block
-    head.writeBits(0x80, 8); head.writeBits(34, 24)
-    head.writeBits(blockSize, 16); head.writeBits(blockSize, 16)
-    head.writeBits(0, 24); head.writeBits(0, 24) // frame sizes unknown
-    head.writeBits(sampleRate, 20)
-    head.writeBits(nch - 1, 3)
-    head.writeBits(bps - 1, 5)
-    head.writeBitsLong(n.toLong, 36)
+    head.bits(0x80, 8); head.bits(34, 24)
+    head.bits(blockSize, 16); head.bits(blockSize, 16)
+    head.bits(0, 24); head.bits(0, 24) // frame sizes unknown
+    head.bits(sampleRate, 20)
+    head.bits(nch - 1, 3)
+    head.bits(bps - 1, 5)
+    head.bits(n.toLong, 36)
     var k = 0
-    while (k < 16) { head.writeBits(0, 8); k += 1 } // MD5 unstated
+    while (k < 16) { head.bits(0, 8); k += 1 } // MD5 unstated
     val out = new java.io.ByteArrayOutputStream()
-    out.write(head.bytes)
+    out.write(head.result())
     var frameNo = 0
     var off = 0
     while (off < n) {
@@ -503,23 +452,22 @@ object Flac {
   private def encodeFrame(
       channels: Array[Array[Int]], off: Int, bs: Int, rate: Int, bps: Int,
       sub: Sub, assign: Int, frameNo: Int, nominalBlock: Int): Array[Byte] = {
-    val w = new BitWriter
-    w.writeBits(0x3FFE, 14) // sync
-    w.writeBit(0) // reserved
-    w.writeBit(0) // fixed blocking
+    val w = new MsbWriter
+    w.bits(0x3FFE, 14) // sync
+    w.bits(0, 1) // reserved
+    w.bits(0, 1) // fixed blocking
     val bsc = if (bs == nominalBlock) blockSizeCode(bs) else 7
-    w.writeBits(bsc, 4)
-    w.writeBits(rateCode(rate), 4)
-    w.writeBits(assign, 4)
-    w.writeBits(sizeCode(bps), 3)
-    w.writeBit(0)
+    w.bits(bsc, 4)
+    w.bits(rateCode(rate), 4)
+    w.bits(assign, 4)
+    w.bits(sizeCode(bps), 3)
+    w.bits(0, 1)
     // UTF-8 frame number (fixture frames stay below 2^31)
     writeUtf8(w, frameNo)
-    if (bsc == 7) w.writeBits(bs - 1, 16)
-    w.align()
-    val headerBytes = w.bytes
+    if (bsc == 7) w.bits(bs - 1, 16)
+    val headerBytes = w.result()
     val crcH = crc8(headerBytes, 0, headerBytes.length)
-    val body = new BitWriter
+    val body = new MsbWriter
     var ch = 0
     while (ch < channels.length) {
       val sideBits =
@@ -529,11 +477,10 @@ object Flac {
       encodeSubframe(body, channels(ch), off, bs, bps + sideBits, sub)
       ch += 1
     }
-    body.align()
     val all = new java.io.ByteArrayOutputStream()
     all.write(headerBytes)
     all.write(crcH)
-    all.write(body.bytes)
+    all.write(body.result())
     val frame = all.toByteArray
     val crcF = crc16(frame, 0, frame.length)
     all.write((crcF >> 8) & 0xFF)
@@ -541,38 +488,38 @@ object Flac {
     all.toByteArray
   }
 
-  private def writeUtf8(w: BitWriter, v: Int): Unit = {
-    if (v < 0x80) w.writeBits(v, 8)
+  private def writeUtf8(w: MsbWriter, v: Int): Unit = {
+    if (v < 0x80) w.bits(v, 8)
     else if (v < 0x800) {
-      w.writeBits(0xC0 | (v >> 6), 8); w.writeBits(0x80 | (v & 0x3F), 8)
+      w.bits(0xC0 | (v >> 6), 8); w.bits(0x80 | (v & 0x3F), 8)
     } else if (v < 0x10000) {
-      w.writeBits(0xE0 | (v >> 12), 8)
-      w.writeBits(0x80 | ((v >> 6) & 0x3F), 8)
-      w.writeBits(0x80 | (v & 0x3F), 8)
+      w.bits(0xE0 | (v >> 12), 8)
+      w.bits(0x80 | ((v >> 6) & 0x3F), 8)
+      w.bits(0x80 | (v & 0x3F), 8)
     } else {
-      w.writeBits(0xF0 | (v >> 18), 8)
-      w.writeBits(0x80 | ((v >> 12) & 0x3F), 8)
-      w.writeBits(0x80 | ((v >> 6) & 0x3F), 8)
-      w.writeBits(0x80 | (v & 0x3F), 8)
+      w.bits(0xF0 | (v >> 18), 8)
+      w.bits(0x80 | ((v >> 12) & 0x3F), 8)
+      w.bits(0x80 | ((v >> 6) & 0x3F), 8)
+      w.bits(0x80 | (v & 0x3F), 8)
     }
   }
 
   private def encodeSubframe(
-      w: BitWriter, data: Array[Int], off: Int, bs: Int, bps: Int,
+      w: MsbWriter, data: Array[Int], off: Int, bs: Int, bps: Int,
       sub: Sub): Unit = {
-    w.writeBit(0)
+    w.bits(0, 1)
     sub match {
       case Constant =>
-        w.writeBits(0, 6); w.writeBit(0)
-        w.writeBits(data(off), bps)
+        w.bits(0, 6); w.bits(0, 1)
+        w.bits(data(off), bps)
       case Verbatim =>
-        w.writeBits(1, 6); w.writeBit(0)
+        w.bits(1, 6); w.bits(0, 1)
         var i = 0
-        while (i < bs) { w.writeBits(data(off + i), bps); i += 1 }
+        while (i < bs) { w.bits(data(off + i), bps); i += 1 }
       case Fixed(order, rice) =>
-        w.writeBits(0x08 | order, 6); w.writeBit(0)
+        w.bits(0x08 | order, 6); w.bits(0, 1)
         var i = 0
-        while (i < order) { w.writeBits(data(off + i), bps); i += 1 }
+        while (i < order) { w.bits(data(off + i), bps); i += 1 }
         val res = new Array[Int](bs - order)
         i = order
         while (i < bs) {
@@ -591,13 +538,13 @@ object Flac {
         writeRice(w, res, rice)
       case Lpc(coefs, shift, precision, rice) =>
         val order = coefs.length
-        w.writeBits(0x20 | (order - 1), 6); w.writeBit(0)
+        w.bits(0x20 | (order - 1), 6); w.bits(0, 1)
         var i = 0
-        while (i < order) { w.writeBits(data(off + i), bps); i += 1 }
-        w.writeBits(precision - 1, 4)
-        w.writeBits(shift, 5)
+        while (i < order) { w.bits(data(off + i), bps); i += 1 }
+        w.bits(precision - 1, 4)
+        w.bits(shift, 5)
         var c = 0
-        while (c < order) { w.writeBits(coefs(c), precision); c += 1 }
+        while (c < order) { w.bits(coefs(c), precision); c += 1 }
         val res = new Array[Int](bs - order)
         i = order
         while (i < bs) {
@@ -611,16 +558,16 @@ object Flac {
     }
   }
 
-  private def writeRice(w: BitWriter, res: Array[Int], param: Int): Unit = {
-    w.writeBits(0, 2) // method 0
-    w.writeBits(0, 4) // partition order 0
-    w.writeBits(param, 4)
+  private def writeRice(w: MsbWriter, res: Array[Int], param: Int): Unit = {
+    w.bits(0, 2) // method 0
+    w.bits(0, 4) // partition order 0
+    w.bits(param, 4)
     var i = 0
     while (i < res.length) {
       val r = res(i)
       val u = (r << 1) ^ (r >> 31)
-      w.writeUnary(u >>> param)
-      if (param > 0) w.writeBits(u & ((1 << param) - 1), param)
+      writeUnary(w, u >>> param)
+      if (param > 0) w.bits(u & ((1 << param) - 1), param)
       i += 1
     }
   }

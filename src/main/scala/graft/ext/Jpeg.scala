@@ -97,6 +97,8 @@ object Jpeg {
     * stuffed 0xFF data byte; a bare marker ends the segment (the reader
     * then feeds zero bits, per F.2.2.5's left-over-bits handling —
     * decode fails structurally later if the stream was truly short).
+    * The one bit reader outside [[MsbReader]]: the unstuffing and the
+    * marker stop are JPEG's byte format, not bit order, so it stays here.
     */
   private final class BitReader(b: Array[Byte], var pos: Int) {
     private var acc = 0

@@ -112,13 +112,13 @@ object Lzfu {
     val body = new java.io.ByteArrayOutputStream()
     val pending = new java.io.ByteArrayOutputStream()
     var flags = 0
-    var nBits = 0
-    def flushIfFull(): Unit = if (nBits == 8) {
+    var nFlags = 0
+    def flushIfFull(): Unit = if (nFlags == 8) {
       body.write(flags); pending.writeTo(body); pending.reset()
-      flags = 0; nBits = 0
+      flags = 0; nFlags = 0
     }
     def emitLiteral(c: Byte): Unit = {
-      pending.write(c); nBits += 1
+      pending.write(c); nFlags += 1
       if (wp >= 2) gram.put(key(dict((wp - 2) & 0xFFF),
         dict((wp - 1) & 0xFFF), c), wp - 2)
       dict(wp & 0xFFF) = c; wp += 1
@@ -127,7 +127,7 @@ object Lzfu {
     def emitRef(off: Int, len: Int, src: Array[Byte], at: Int): Unit = {
       val ref = (off << 4) | (len - 2)
       pending.write((ref >> 8) & 0xFF); pending.write(ref & 0xFF)
-      flags |= (1 << nBits); nBits += 1
+      flags |= (1 << nFlags); nFlags += 1
       var k = 0
       while (k < len) {
         val c = src(at + k)
@@ -164,7 +164,7 @@ object Lzfu {
     // end marker: offset == current write position
     val endRef = ((wp & 0xFFF) << 4)
     pending.write((endRef >> 8) & 0xFF); pending.write(endRef & 0xFF)
-    flags |= (1 << nBits); nBits += 1
+    flags |= (1 << nFlags); nFlags += 1
     body.write(flags); pending.writeTo(body)
 
     val payload = body.toByteArray

@@ -270,25 +270,6 @@ object Mp3 {
     }
   }
 
-  // ------------------------------------------------------------ bit IO
-
-  private[ext] final class BitReader(val b: Array[Byte], startBit: Long) {
-    var pos: Long = startBit // absolute bit position
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        val byteI = (pos >> 3).toInt
-        if (byteI >= b.length) throw new IllegalArgumentException("mp3: EOF")
-        v = (v << 1) | ((b(byteI) >> (7 - (pos & 7).toInt)) & 1)
-        pos += 1
-        i += 1
-      }
-      v
-    }
-    def bit(): Int = bits(1)
-  }
-
   // ------------------------------------------------------- side info
 
   private final class Granule {
@@ -317,7 +298,7 @@ object Mp3 {
     val gr = Array.fill(2, 2)(new Granule)
   }
 
-  private def parseSideInfo(r: BitReader, version: Int, channels: Int): SideInfo = {
+  private def parseSideInfo(r: MsbReader, version: Int, channels: Int): SideInfo = {
     val lsf = version != 1
     val si = new SideInfo(if (lsf) 1 else 2, channels)
     si.mainDataBegin = r.bits(if (lsf) 8 else 9)
@@ -375,7 +356,7 @@ object Mp3 {
   // -------------------------------------------------- scalefactors
 
   /** Returns part2 bit count. MPEG-1: slen pairs + scfsi reuse. */
-  private def scalefactorsV1(r: BitReader, gr: Granule, prev: Granule,
+  private def scalefactorsV1(r: MsbReader, gr: Granule, prev: Granule,
       scfsi: Array[Int], granule: Int): Unit = {
     val s1 = slen1(gr.sfCompress)
     val s2 = slen2(gr.sfCompress)
@@ -423,7 +404,7 @@ object Mp3 {
     * decoded run of nr_of_sfb values maps onto long or short bands by
     * block type.
     */
-  private def scalefactorsLsf(r: BitReader, gr: Granule): Boolean = {
+  private def scalefactorsLsf(r: MsbReader, gr: Granule): Boolean = {
     val sfc = gr.sfCompress
     val slen = new Array[Int](4)
     val nr = new Array[Int](4)
@@ -491,7 +472,7 @@ object Mp3 {
 
   // ---------------------------------------------------- huffman decode
 
-  private def readTree(r: BitReader, t: Tables.Huff): Int = {
+  private def readTree(r: MsbReader, t: Tables.Huff): Int = {
     var node = 0
     var depth = 0
     while (depth < 20) {
@@ -1045,7 +1026,7 @@ object Mp3 {
               else { if (chans == 1) 17 else 32 }
               if (sideStart + sideBytes > i + frameLen) allOk = false
               else {
-                val r = new BitReader(payload, sideStart.toLong * 8)
+                val r = new MsbReader(payload, sideStart)
                 val si = parseSideInfo(r, version, chans)
                 // append this frame's main data to the store
                 val mdStart = sideStart + sideBytes
@@ -1064,7 +1045,7 @@ object Mp3 {
                 val tset = scala.collection.mutable.Set.empty[Int]
                 var frameOk = frameDataStart >= 0
                 if (frameOk) {
-                  val mr = new BitReader(res, frameDataStart.toLong * 8)
+                  val mr = new MsbReader(res, frameDataStart)
                   val out = Array.ofDim[Double](chans, 576)
                   var g = 0
                   while (g < si.granules && frameOk) {
@@ -1128,7 +1109,7 @@ object Mp3 {
     }
   }
 
-  private def huffmanAt(r: BitReader, gr: Granule, part2Start: Long,
+  private def huffmanAt(r: MsbReader, gr: Granule, part2Start: Long,
       rate: Int, is: Array[Int],
       tset: scala.collection.mutable.Set[Int]): Boolean = {
     val limit = part2Start + gr.part23
@@ -1136,7 +1117,7 @@ object Mp3 {
     huffmanRegions(r, gr, limit, rate, is, tset)
   }
 
-  private def huffmanRegions(r: BitReader, gr: Granule, limit: Long,
+  private def huffmanRegions(r: MsbReader, gr: Granule, limit: Long,
       rate: Int, is: Array[Int],
       tset: scala.collection.mutable.Set[Int]): Boolean = {
     java.util.Arrays.fill(is, 0)

@@ -24,25 +24,6 @@ package graft.ext
   */
 object Mp3Enc {
 
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var n = 0
-    var bitCount: Long = 0
-    def bits(v: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        n += 1
-        bitCount += 1
-        if (n == 8) { out.write(cur); cur = 0; n = 0 }
-        i -= 1
-      }
-    }
-    def padToByte(): Unit = if (n > 0) bits(0, 8 - n)
-    def result(): Array[Byte] = { padToByte(); out.toByteArray }
-  }
-
   private val fwdLongCos = Array.tabulate(18, 36)((k, n) =>
     math.cos(math.Pi / 72.0 * (2 * n + 1 + 18) * (2 * k + 1)))
   private val fwdShortCos = Array.tabulate(6, 12)((k, n) =>
@@ -315,7 +296,7 @@ object Mp3Enc {
     val bv2 = math.min(576, ((lastNz + 2) / 2) * 2)
     val bigValues = bv2 / 2
     // emit: scalefactors then huffman
-    val w = new BitWriter
+    val w = new MsbWriter
     var sfBits = 0
     if (!shortBlocks) {
       var sb = 0
@@ -350,7 +331,7 @@ object Mp3Enc {
       if (ay != 0) w.bits(if (yv < 0) 1 else 0, 1)
       i += 2
     }
-    val part23 = w.bitCount.toInt
+    val part23 = w.bitLength.toInt
     (w.result(), GranuleMeta(part23, bigValues, gg, sfBits, shortBlocks,
       sfLong, sfShort))
   }
@@ -358,7 +339,7 @@ object Mp3Enc {
   /** Header + mono side info + both granules' main data + stuffing. */
   private def packFrame(rate: Int, kbps: Int, frameLen: Int,
       granBits: Array[Array[Byte]], meta: Array[GranuleMeta]): Array[Byte] = {
-    val w = new BitWriter
+    val w = new MsbWriter
     // header: sync, MPEG-1, Layer III, no CRC, 320 kbps, 44.1 kHz, no
     // padding, mono, no emphasis
     w.bits(0x7FF, 11)
@@ -406,7 +387,6 @@ object Mp3Enc {
     val bytes1 = granBits(1)
     appendBits(w, bytes0, meta(0).part23)
     appendBits(w, bytes1, meta(1).part23)
-    w.padToByte()
     val head = w.result()
     val frame = java.util.Arrays.copyOf(head, frameLen)
     frame
@@ -419,7 +399,7 @@ object Mp3Enc {
   private def packFrameIntensity(rate: Int, kbps: Int, frameLen: Int,
       granBits: Array[Array[Byte]], meta: Array[GranuleMeta],
       isPos: Int): Array[Byte] = {
-    val w = new BitWriter
+    val w = new MsbWriter
     w.bits(0x7FF, 11)
     w.bits(3, 2) // version 1
     w.bits(1, 2) // layer III
@@ -474,18 +454,20 @@ object Mp3Enc {
       while (sfb < 21) { w.bits(isPos, 3); sfb += 1 }
       g += 1
     }
-    w.padToByte()
     val head = w.result()
     require(head.length <= frameLen,
       s"intensity frame overflow: ${head.length} > $frameLen")
     java.util.Arrays.copyOf(head, frameLen)
   }
 
-  private def appendBits(w: BitWriter, bytes: Array[Byte], nBits: Int): Unit = {
-    var i = 0
-    while (i < nBits) {
-      w.bits((bytes(i / 8) >> (7 - i % 8)) & 1, 1)
-      i += 1
+  /** The first `nBits` bits of `bytes`, MSB-first, onto `w`. */
+  private def appendBits(w: MsbWriter, bytes: Array[Byte], nBits: Int): Unit = {
+    val r = new MsbReader(bytes)
+    var left = nBits
+    while (left > 0) {
+      val n = math.min(left, 32)
+      w.bits(r.bits(n), n)
+      left -= n
     }
   }
 }

@@ -79,20 +79,7 @@ object TiffImg {
       maxOut: Int): Option[Array[Byte]] = {
     val out = new Array[Byte](maxOut)
     var op = 0
-    var bitPos = from.toLong * 8
-    val endBit = until.toLong * 8
-    def read(width: Int): Int = {
-      if (bitPos + width > endBit) return -1
-      var v = 0
-      var k = 0
-      while (k < width) {
-        val byte = b((bitPos >> 3).toInt) & 0xFF
-        v = (v << 1) | ((byte >> (7 - (bitPos & 7)).toInt) & 1)
-        bitPos += 1
-        k += 1
-      }
-      v
-    }
+    val r = new MsbReader(b, from, until)
     val prefixOf = new Array[Int](4096)
     val suffixOf = new Array[Byte](4096)
     val stack = new Array[Byte](4096)
@@ -118,8 +105,9 @@ object TiffImg {
     }
     var done = false
     while (!done) {
-      val code = read(width)
-      if (code < 0 || code == Eoi) done = true
+      // fewer than `width` bits left ends the strip like an EOI
+      val code = if (r.remaining < width) Eoi else r.bits(width)
+      if (code == Eoi) done = true
       else if (code == Clear) { next = 258; width = 9; prev = -1 }
       else {
         val first =
@@ -176,18 +164,9 @@ object TiffImg {
     * restart before the 12-bit table fills).
     */
   private[ext] def lzwEncode(b: Array[Byte]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream(b.length + 16)
-    var cur = 0
-    var nbits = 0
+    val out = new MsbWriter
     var width = 9
-    def emit(code: Int): Unit = {
-      cur = (cur << width) | code
-      nbits += width
-      while (nbits >= 8) {
-        out.write((cur >> (nbits - 8)) & 0xFF)
-        nbits -= 8
-      }
-    }
+    def emit(code: Int): Unit = out.bits(code, width)
     // per-thread open-addressing (prefix<<8|byte) → code table (the
     // codec-pool pattern: a fresh boxing HashMap per strip was the
     // rising 6.4 M-doc curve); generation-stamped slots make reset O(1)
@@ -221,8 +200,7 @@ object TiffImg {
     }
     if (prev >= 0) emit(prev)
     emit(Eoi)
-    if (nbits > 0) out.write((cur << (8 - nbits)) & 0xFF)
-    out.toByteArray
+    out.result()
   }
 
   // -------------------------------------------------------------- decode

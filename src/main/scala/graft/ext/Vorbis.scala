@@ -47,37 +47,6 @@ object Vorbis {
 
   final case class Audio(sampleRate: Int, channels: Int, samples: Array[Int])
 
-  // ---------------------------------------------------------- bit reader
-
-  private[ext] final class Reader(b: Array[Byte]) {
-    var pos = 0L // absolute bit position, LSB-first within each byte
-    def bits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) {
-        val byteI = (pos >> 3).toInt
-        if (byteI >= b.length) throw new IllegalArgumentException("vorbis: EOP")
-        v |= ((b(byteI) >> (pos & 7).toInt) & 1) << i
-        pos += 1
-        i += 1
-      }
-      v
-    }
-    def bitsL(n: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < n) {
-        val byteI = (pos >> 3).toInt
-        if (byteI >= b.length) throw new IllegalArgumentException("vorbis: EOP")
-        v |= ((b(byteI) >> (pos & 7).toInt) & 1L) << i
-        pos += 1
-        i += 1
-      }
-      v
-    }
-    def bit(): Int = bits(1)
-  }
-
   private def ilog(x0: Int): Int = {
     var x = x0
     var r = 0
@@ -173,7 +142,7 @@ object Vorbis {
     }
 
     /** scalar context: the decoded entry number. */
-    def readEntry(r0: Reader): Int = {
+    def readEntry(r0: LsbReader): Int = {
       if (singleEntry >= 0) { r0.bit(); return singleEntry } // 1-entry book: 1 bit
       var node = 0
       var depth = 0
@@ -209,7 +178,7 @@ object Vorbis {
       }
   }
 
-  private[ext] def readCodebook(r: Reader): Codebook = {
+  private[ext] def readCodebook(r: LsbReader): Codebook = {
     if (r.bits(24) != 0x564342) // "BCV"
       throw new IllegalArgumentException("vorbis: codebook sync")
     val dims = r.bits(16)
@@ -241,8 +210,8 @@ object Vorbis {
     if (lookupType == 0)
       new Codebook(dims, entries, lengths, 0, 0, 0, seqP = false, null)
     else {
-      val minVal = float32Unpack(r.bitsL(32))
-      val delta = float32Unpack(r.bitsL(32))
+      val minVal = float32Unpack(r.bitsLong(32))
+      val delta = float32Unpack(r.bitsLong(32))
       val valueBits = r.bits(4) + 1
       val seqP = r.bit() == 1
       // allocation cap BEFORE Array.fill: entries (<=2^22) * dims
@@ -279,7 +248,7 @@ object Vorbis {
     val sortIdx: Array[Int] = xList.zipWithIndex.sortBy(_._1).map(_._2)
   }
 
-  private def readFloor1(r: Reader): Floor1 = {
+  private def readFloor1(r: LsbReader): Floor1 = {
     val partitions = r.bits(5)
     val partitionClasses = Array.fill(partitions)(r.bits(4))
     val maxClass = if (partitions == 0) -1 else partitionClasses.max
@@ -358,7 +327,7 @@ object Vorbis {
   /** Decode one channel's floor curve into out(0 until n2); false means
     * "unused channel" (zero energy).
     */
-  private def decodeFloor1Curve(r: Reader, f: Floor1, books: Array[Codebook],
+  private def decodeFloor1Curve(r: LsbReader, f: Floor1, books: Array[Codebook],
       n2: Int, out: Array[Double]): Boolean = {
     if (r.bit() == 0) return false
     val range = floorRange(f.multiplier - 1)
@@ -453,7 +422,7 @@ object Vorbis {
       val classifications: Int, val classbook: Int,
       val cascade: Array[Int], val books: Array[Array[Int]])
 
-  private def readResidue(r: Reader, rtype: Int): Residue = {
+  private def readResidue(r: LsbReader, rtype: Int): Residue = {
     val begin = r.bits(24)
     val end = r.bits(24)
     val partitionSize = r.bits(24) + 1
@@ -474,7 +443,7 @@ object Vorbis {
     * `doNotDecode` marks silent channels. Types 1 and 2 (2 = channel
     * interleave over one long vector).
     */
-  private def decodeResidue(r: Reader, res: Residue, books: Array[Codebook],
+  private def decodeResidue(r: LsbReader, res: Residue, books: Array[Codebook],
       vectors: Array[Array[Double]], doNotDecode: Array[Boolean], n2: Int): Unit = {
     val ch = vectors.length
     if (res.rtype == 2) {
@@ -491,7 +460,7 @@ object Vorbis {
     }
   }
 
-  private def decodeResidueInner(r: Reader, res: Residue, books: Array[Codebook],
+  private def decodeResidueInner(r: LsbReader, res: Residue, books: Array[Codebook],
       vectors: Array[Array[Double]], doNotDecode: Array[Boolean], n2: Int): Unit = {
     val actualSize = n2
     val begin = math.min(res.begin, actualSize)
@@ -583,7 +552,7 @@ object Vorbis {
 
   private def parseSetup(id: Array[Byte], setup: Array[Byte]): Setup = {
     // identification header
-    val ir = new Reader(id)
+    val ir = new LsbReader(id)
     require(ir.bits(8) == 1, "vorbis: id packet type")
     var k = 0
     val magic = "vorbis"
@@ -593,7 +562,7 @@ object Vorbis {
     }
     require(ir.bits(32) == 0, "vorbis: version")
     val channels = ir.bits(8)
-    val rate = ir.bitsL(32).toInt
+    val rate = ir.bitsLong(32).toInt
     ir.bits(32); ir.bits(32); ir.bits(32) // bitrate fields
     val bs0 = 1 << ir.bits(4)
     val bs1 = 1 << ir.bits(4)
@@ -601,7 +570,7 @@ object Vorbis {
     require(bs0 >= 64 && bs1 >= bs0 && bs1 <= 8192, "vorbis: blocksizes")
     require(ir.bit() == 1, "vorbis: framing")
     // setup header
-    val r = new Reader(setup)
+    val r = new LsbReader(setup)
     require(r.bits(8) == 5, "vorbis: setup packet type")
     k = 0
     while (k < 6) {
@@ -779,7 +748,7 @@ object Vorbis {
       while (p < pkts.length) {
         val pk = pkts(p)
         if (pk.nonEmpty) {
-          val r = new Reader(pk)
+          val r = new LsbReader(pk)
           if (r.bit() == 0) { // audio packet
             try {
               // mode field width is ilog(count-1): ZERO bits for a
@@ -828,8 +797,7 @@ object Vorbis {
               } catch {
                 // premature end-of-packet during audio decode is LEGAL
                 // (spec: the remainder of the vectors is zero)
-                case e: IllegalArgumentException
-                  if e.getMessage == "vorbis: EOP" => ()
+                case _: Bits.EndOfInput => ()
               }
               // inverse coupling (square polar), last step first
               var s = mapping.couplingMag.length - 1
@@ -886,7 +854,8 @@ object Vorbis {
               rightCenter = posThis + 3L * n / 4
               lastEnd = math.max(lastEnd, posThis + n)
             } catch {
-              case _: IllegalArgumentException => () // damaged packet: skip
+              // damaged or truncated packet: skip
+              case _: IllegalArgumentException | _: Bits.EndOfInput => ()
             }
           }
         }

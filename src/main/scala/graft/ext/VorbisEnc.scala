@@ -14,30 +14,6 @@ package graft.ext
   */
 object VorbisEnc {
 
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var n = 0
-    def bits(v: Long, len: Int): Unit = {
-      var i = 0
-      while (i < len) {
-        cur |= (((v >> i) & 1L).toInt) << n
-        n += 1
-        if (n == 8) { out.write(cur); cur = 0; n = 0 }
-        i += 1
-      }
-    }
-    /** codeword: MSB-first into the LSB-first stream (tree descent). */
-    def code(c: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { bits((c >> i) & 1, 1); i -= 1 }
-    }
-    def result(): Array[Byte] = {
-      if (n > 0) { out.write(cur); cur = 0; n = 0 }
-      out.toByteArray
-    }
-  }
-
   private val N = 256
   private val N2 = N / 2
 
@@ -53,7 +29,7 @@ object VorbisEnc {
     math.cos(math.Pi / (2.0 * N) * (2 * j + 1 + N2) * (2 * k + 1)))
 
   private def ident(rate: Int): Array[Byte] = {
-    val w = new BitWriter
+    val w = new LsbWriter
     w.bits(1, 8)
     "vorbis".foreach(c => w.bits(c.toLong, 8))
     w.bits(0, 32) // version
@@ -67,7 +43,7 @@ object VorbisEnc {
   }
 
   private def comment(): Array[Byte] = {
-    val w = new BitWriter
+    val w = new LsbWriter
     w.bits(3, 8)
     "vorbis".foreach(c => w.bits(c.toLong, 8))
     w.bits(0, 32) // vendor length
@@ -97,7 +73,7 @@ object VorbisEnc {
     * floor) — the minimal-floor decode path, kept as a variant.
     */
   private def setup(flatFloor: Boolean): Array[Byte] = {
-    val w = new BitWriter
+    val w = new LsbWriter
     w.bits(5, 8)
     "vorbis".foreach(c => w.bits(c.toLong, 8))
     // ---- codebooks: classbook + VQ lattice book + floor Y book
@@ -329,7 +305,7 @@ object VorbisEnc {
         if (q(k) != 0) anyNz = true
         k += 1
       }
-      val w = new BitWriter
+      val w = new LsbWriter
       w.bits(0, 1) // audio packet
       // mode number: zero bits (single mode)
       if (!anyNz) {

@@ -39,25 +39,6 @@ object Vp8l {
 
   final case class Image(width: Int, height: Int, argb: Array[Int])
 
-  // ------------------------------------------------------------- reader
-
-  private final class Reader(b: Array[Byte], var pos: Int) {
-    var bit = 0
-    def readBit(): Int = {
-      if (pos >= b.length) throw new IllegalArgumentException("vp8l: EOF")
-      val v = (b(pos) >> bit) & 1
-      bit += 1
-      if (bit == 8) { bit = 0; pos += 1 }
-      v
-    }
-    def readBits(n: Int): Int = {
-      var v = 0
-      var i = 0
-      while (i < n) { v |= readBit() << i; i += 1 }
-      v
-    }
-  }
-
   // ------------------------------------------------- canonical prefix code
 
   /** Decode-side canonical prefix code: first-read bit is the code's MSB
@@ -98,12 +79,12 @@ object Vp8l {
     val singleSymbol: Int = // a 1-symbol code consumes ZERO bits
       if (symbols.length == 1) symbols(0) else -1
 
-    def read(r: Reader): Int = {
+    def read(r: LsbReader): Int = {
       if (singleSymbol >= 0) return singleSymbol
       var code = 0
       var len = 0
       while (len < maxLen) {
-        code = (code << 1) | r.readBit()
+        code = (code << 1) | r.bit()
         len += 1
         val off = code - firstCode(len)
         if (off >= 0 && off < count(len)) return symbols(firstIdx(len) + off)
@@ -113,16 +94,16 @@ object Vp8l {
   }
 
   /** Read one prefix code (simple or normal form) for `alphabetSize`. */
-  private def readPrefixCode(r: Reader, alphabetSize: Int): Prefix = {
+  private def readPrefixCode(r: LsbReader, alphabetSize: Int): Prefix = {
     val lengths = new Array[Int](alphabetSize)
-    if (r.readBit() == 1) { // simple: 1 or 2 symbols
-      val numSymbols = r.readBit() + 1
-      val first8 = r.readBit()
-      val s0 = r.readBits(if (first8 == 1) 8 else 1)
+    if (r.bit() == 1) { // simple: 1 or 2 symbols
+      val numSymbols = r.bit() + 1
+      val first8 = r.bit()
+      val s0 = r.bits(if (first8 == 1) 8 else 1)
       if (s0 >= alphabetSize) throw new IllegalArgumentException("vp8l: sym")
       lengths(s0) = 1
       if (numSymbols == 2) {
-        val s1 = r.readBits(8)
+        val s1 = r.bits(8)
         if (s1 >= alphabetSize || s1 == s0)
           throw new IllegalArgumentException("vp8l: sym")
         lengths(s1) = 1
@@ -132,19 +113,19 @@ object Vp8l {
     } else {
       val Order = Array(17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11,
         12, 13, 14, 15)
-      val numCodeLengths = 4 + r.readBits(4)
+      val numCodeLengths = 4 + r.bits(4)
       if (numCodeLengths > Order.length)
         throw new IllegalArgumentException("vp8l: clc count")
       val clcLengths = new Array[Int](19)
       var i = 0
-      while (i < numCodeLengths) { clcLengths(Order(i)) = r.readBits(3); i += 1 }
+      while (i < numCodeLengths) { clcLengths(Order(i)) = r.bits(3); i += 1 }
       if (clcLengths.forall(_ == 0))
         throw new IllegalArgumentException("vp8l: empty clc")
       val clc = new Prefix(clcLengths)
       val maxSymbol =
-        if (r.readBit() == 1) {
-          val lengthNBits = 2 + 2 * r.readBits(3)
-          2 + r.readBits(lengthNBits)
+        if (r.bit() == 1) {
+          val lengthNBits = 2 + 2 * r.bits(3)
+          2 + r.bits(lengthNBits)
         } else alphabetSize
       var sym = 0
       var prevLen = 8
@@ -157,15 +138,15 @@ object Vp8l {
             lengths(sym) = x; sym += 1
             if (x != 0) prevLen = x
           case 16 =>
-            val rep = 3 + r.readBits(2)
+            val rep = 3 + r.bits(2)
             var k = 0
             while (k < rep && sym < alphabetSize) {
               lengths(sym) = prevLen; sym += 1; k += 1
             }
           case 17 =>
-            sym += 3 + r.readBits(3)
+            sym += 3 + r.bits(3)
           case _ =>
-            sym += 11 + r.readBits(7)
+            sym += 11 + r.bits(7)
         }
       }
       if (sym > alphabetSize) throw new IllegalArgumentException("vp8l: overflow")
@@ -175,12 +156,12 @@ object Vp8l {
 
 
   // the DEFLATE-style LZ77 prefix value: code<4 → code+1; else extra bits
-  private def lz77Value(r: Reader, code: Int): Int =
+  private def lz77Value(r: LsbReader, code: Int): Int =
     if (code < 4) code + 1
     else {
       val extra = (code - 2) >> 1
       val offset = (2 + (code & 1)) << extra
-      offset + r.readBits(extra) + 1
+      offset + r.bits(extra) + 1
     }
 
   /** 120-entry plane-code → (y, 8-x) neighbor map (spec table): high
@@ -218,7 +199,7 @@ object Vp8l {
     * (the main one) may carry a meta prefix-code image and color cache;
     * transform/palette sub-images may not.
     */
-  private def decodeImage(r: Reader, w: Int, h: Int, spatial: Boolean): Array[Int] = {
+  private def decodeImage(r: LsbReader, w: Int, h: Int, spatial: Boolean): Array[Int] = {
     var cacheBits = 0
     var metaBits = 0
     var metaImage: Array[Int] = null
@@ -227,13 +208,13 @@ object Vp8l {
     // (spatially-coded-image = color-cache-info meta-prefix data;
     // entropy-coded-image = color-cache-info data) — pinned against a
     // real libwebp-encoded stream in Vp8lInteropSpec
-    if (r.readBit() == 1) { // color cache (allowed on any image per spec)
-      cacheBits = r.readBits(4)
+    if (r.bit() == 1) { // color cache (allowed on any image per spec)
+      cacheBits = r.bits(4)
       if (cacheBits < 1 || cacheBits > 11)
         throw new IllegalArgumentException("vp8l: cache bits")
     }
-    if (spatial && r.readBit() == 1) { // meta prefix codes
-      metaBits = r.readBits(3) + 2
+    if (spatial && r.bit() == 1) { // meta prefix codes
+      metaBits = r.bits(3) + 2
       metaW = (w + (1 << metaBits) - 1) >> metaBits
       val metaH = (h + (1 << metaBits) - 1) >> metaBits
       metaImage = decodeImage(r, metaW, metaH, spatial = false)
@@ -438,11 +419,11 @@ object Vp8l {
   def decodePayload(b: Array[Byte]): Option[Image] = {
     try {
       if (b == null || b.length < 5 || (b(0) & 0xFF) != 0x2F) return None
-      val r = new Reader(b, 1)
-      val w = r.readBits(14) + 1
-      val h = r.readBits(14) + 1
-      r.readBit() // alpha hint
-      if (r.readBits(3) != 0) return None // version must be 0
+      val r = new LsbReader(b, 1)
+      val w = r.bits(14) + 1
+      val h = r.bits(14) + 1
+      r.bit() // alpha hint
+      if (r.bits(3) != 0) return None // version must be 0
       decodeBody(r, w, h)
     } catch { case scala.util.control.NonFatal(_) => None }
   }
@@ -457,11 +438,11 @@ object Vp8l {
   def decodeHeaderless(b: Array[Byte], w: Int, h: Int): Option[Image] = {
     try {
       if (b == null || b.length < 1 || w < 1 || h < 1) return None
-      decodeBody(new Reader(b, 0), w, h)
+      decodeBody(new LsbReader(b), w, h)
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  private def decodeBody(r: Reader, w: Int, h: Int): Option[Image] = {
+  private def decodeBody(r: LsbReader, w: Int, h: Int): Option[Image] = {
     {
       if (w.toLong * h > 16L * 1024 * 1024)
         throw new IllegalArgumentException("vp8l: image too large")
@@ -469,14 +450,14 @@ object Vp8l {
       var transforms = List.empty[Transform]
       var xsize = w
       var seen = 0
-      while (r.readBit() == 1) {
-        val kind = r.readBits(2)
+      while (r.bit() == 1) {
+        val kind = r.bits(2)
         if ((seen & (1 << kind)) != 0)
           throw new IllegalArgumentException("vp8l: dup transform")
         seen |= 1 << kind
         kind match {
           case 0 | 1 => // predictor / cross-color: block-mode sub-image
-            val bits = r.readBits(3) + 2
+            val bits = r.bits(3) + 2
             val tw = (xsize + (1 << bits) - 1) >> bits
             val th = (h + (1 << bits) - 1) >> bits
             val data = decodeImage(r, tw, th, spatial = false)
@@ -484,7 +465,7 @@ object Vp8l {
           case 2 => // subtract-green
             transforms ::= Transform(2, 0, null, 0)
           case _ => // color indexing
-            val paletteSize = r.readBits(8) + 1
+            val paletteSize = r.bits(8) + 1
             val pal = decodeImage(r, paletteSize, 1, spatial = false)
             // palette entries are delta-coded per channel
             var k = 1
@@ -560,30 +541,6 @@ object Vp8l {
   }
 
   // -------------------------------------------------------------- encode
-
-  private final class Writer {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nbits = 0
-    def writeBit(v: Int): Unit = {
-      cur |= (v & 1) << nbits
-      nbits += 1
-      if (nbits == 8) { out.write(cur); cur = 0; nbits = 0 }
-    }
-    def writeBits(v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) { writeBit((v >> i) & 1); i += 1 }
-    }
-    /** prefix code bits: MSB first (DEFLATE canonical convention). */
-    def writeCode(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { writeBit((code >> i) & 1); i -= 1 }
-    }
-    def result(): Array[Byte] = {
-      if (nbits > 0) { out.write(cur); cur = 0; nbits = 0 }
-      out.toByteArray
-    }
-  }
 
   /** Canonical code lengths (max 15) for a symbol histogram — standard
     * Huffman over parent-pointer node arrays (no per-merge list churn:
@@ -686,29 +643,29 @@ object Vp8l {
     * normal code-length-coded form (no 16/17/18 repeats — plain 3-bit
     * clc over the literal lengths; size-suboptimal, fully conformant).
     */
-  private def writePrefixCode(wr: Writer, lengths: Array[Int]): Unit = {
+  private def writePrefixCode(wr: LsbWriter, lengths: Array[Int]): Unit = {
     val used = lengths.zipWithIndex.filter(_._1 > 0).map(_._2)
     if (used.length <= 2 && used.forall(_ < 256) &&
         (used.length < 2 || used(0) < 256)) {
-      wr.writeBit(1) // simple
-      wr.writeBit(if (used.length == 2) 1 else 0)
+      wr.bits(1, 1) // simple
+      wr.bits(if (used.length == 2) 1 else 0, 1)
       val s0 = if (used.isEmpty) 0 else used(0)
-      if (s0 < 2 && used.length < 2) { wr.writeBit(0); wr.writeBit(s0) }
-      else { wr.writeBit(1); wr.writeBits(s0, 8) }
-      if (used.length == 2) wr.writeBits(used(1), 8)
+      if (s0 < 2 && used.length < 2) { wr.bits(0, 1); wr.bits(s0, 1) }
+      else { wr.bits(1, 1); wr.bits(s0, 8) }
+      if (used.length == 2) wr.bits(used(1), 8)
     } else {
-      wr.writeBit(0) // normal
+      wr.bits(0, 1) // normal
       val Order = Array(17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11,
         12, 13, 14, 15)
       // clc over the length symbols 0..15 that occur (incl. zeros)
       val clcFreq = new Array[Long](19)
       lengths.foreach(l => clcFreq(l) += 1)
       val clcLengths = huffmanLengths(clcFreq, maxLen = 7)
-      wr.writeBits(19 - 4, 4) // emit all 19 clc entries
-      Order.foreach(o => wr.writeBits(clcLengths(o), 3))
-      wr.writeBit(0) // no max_symbol
+      wr.bits(19 - 4, 4) // emit all 19 clc entries
+      Order.foreach(o => wr.bits(clcLengths(o), 3))
+      wr.bits(0, 1) // no max_symbol
       val clcCodes = canonicalCodes(clcLengths)
-      lengths.foreach(l => wr.writeCode(clcCodes(l), clcLengths(l)))
+      lengths.foreach(l => wr.code(clcCodes(l), clcLengths(l)))
     }
   }
 
@@ -754,24 +711,24 @@ object Vp8l {
     * simulate the color cache identically, so the decoder's cache state
     * replays bit-exactly.
     */
-  private def writeEntropyImage(wr: Writer, argb: Array[Int], w: Int, h: Int,
+  private def writeEntropyImage(wr: LsbWriter, argb: Array[Int], w: Int, h: Int,
       rowCopy: Boolean, cacheBits: Int, spatial: Boolean,
       metaTrivial: Boolean = false): Unit = {
     // emission order mirrors the decode/spec order: color-cache-info
     // first, then (spatial only) the meta prefix image
-    if (cacheBits > 0) { wr.writeBit(1); wr.writeBits(cacheBits, 4) }
-    else wr.writeBit(0)
+    if (cacheBits > 0) { wr.bits(1, 1); wr.bits(cacheBits, 4) }
+    else wr.bits(0, 1)
     if (spatial) {
       if (metaTrivial) {
         // meta prefix-code image: every block selects group 0 — pixels
         // all zero, (red<<8|green) = 0
-        wr.writeBit(1)
-        wr.writeBits(0, 3) // huffman_bits = 2
+        wr.bits(1, 1)
+        wr.bits(0, 3) // huffman_bits = 2
         val mw = (w + 3) >> 2
         val mh = (h + 3) >> 2
         writeEntropyImage(wr, new Array[Int](mw * mh), mw, mh,
           rowCopy = false, cacheBits = 0, spatial = false)
-      } else wr.writeBit(0)
+      } else wr.bits(0, 1)
     }
     val cacheSize = if (cacheBits > 0) 1 << cacheBits else 0
     val cache = if (cacheSize > 0) new Array[Int](cacheSize) else null
@@ -869,24 +826,24 @@ object Vp8l {
         if (hit) {
           if (gMulti) {
             val sym = 256 + 24 + cacheIdx(px)
-            wr.writeCode(greenC(sym), greenL(sym))
+            wr.code(greenC(sym), greenL(sym))
           }
         } else {
           val g = (px >> 8) & 0xFF
-          if (gMulti) wr.writeCode(greenC(g), greenL(g))
+          if (gMulti) wr.code(greenC(g), greenL(g))
           val rr = (px >> 16) & 0xFF
-          if (rMulti) wr.writeCode(redC(rr), redL(rr))
+          if (rMulti) wr.code(redC(rr), redL(rr))
           val bb = px & 0xFF
-          if (bMulti) wr.writeCode(blueC(bb), blueL(bb))
+          if (bMulti) wr.code(blueC(bb), blueL(bb))
           val aa = (px >>> 24) & 0xFF
-          if (aMulti) wr.writeCode(alphaC(aa), alphaL(aa))
+          if (aMulti) wr.code(alphaC(aa), alphaL(aa))
         },
       () => {
         if (gMulti)
-          wr.writeCode(greenC(256 + lenCode), greenL(256 + lenCode))
-        wr.writeBits(lenExtra, lenExtraBits)
-        if (dMulti) wr.writeCode(distC(distCode), distL(distCode))
-        wr.writeBits(distExtra, distExtraBits)
+          wr.code(greenC(256 + lenCode), greenL(256 + lenCode))
+        wr.bits(lenExtra, lenExtraBits)
+        if (dMulti) wr.code(distC(distCode), distL(distCode))
+        wr.bits(distExtra, distExtraBits)
       })
   }
 
@@ -899,12 +856,12 @@ object Vp8l {
     require(!(opts.palette &&
       (opts.subtractGreen || opts.colorTransform || opts.predictorT)),
       "palette is exclusive with pixel-space transforms")
-    val wr = new Writer
-    wr.writeBits(0x2F, 8)
-    wr.writeBits(w - 1, 14)
-    wr.writeBits(h - 1, 14)
-    wr.writeBit(if (img.argb.exists(p => (p >>> 24) != 0xFF)) 1 else 0)
-    wr.writeBits(0, 3) // version
+    val wr = new LsbWriter
+    wr.bits(0x2F, 8)
+    wr.bits(w - 1, 14)
+    wr.bits(h - 1, 14)
+    wr.bits(if (img.argb.exists(p => (p >>> 24) != 0xFF)) 1 else 0, 1)
+    wr.bits(0, 3) // version
     var pixels = img.argb.clone()
     var xsize = w
     if (opts.palette) {
@@ -912,8 +869,8 @@ object Vp8l {
       pixels.foreach(px => if (!distinct.contains(px)) distinct(px) = distinct.size)
       require(distinct.size <= 256, "palette: > 256 distinct colors")
       val pal = distinct.keys.toArray
-      wr.writeBit(1); wr.writeBits(3, 2) // transform: color indexing
-      wr.writeBits(pal.length - 1, 8)
+      wr.bits(1, 1); wr.bits(3, 2) // transform: color indexing
+      wr.bits(pal.length - 1, 8)
       // palette sub-image is per-channel delta-coded
       val delta = Array.tabulate(pal.length)(k =>
         if (k == 0) pal(0) else sub8(pal(k), pal(k - 1)))
@@ -944,7 +901,7 @@ object Vp8l {
       // declaration order == forward application order (decode inverts
       // in reverse): subtract-green, cross-color, predictor
       if (opts.subtractGreen) {
-        wr.writeBit(1); wr.writeBits(2, 2)
+        wr.bits(1, 1); wr.bits(2, 2)
         var i = 0
         while (i < pixels.length) {
           val px = pixels(i)
@@ -956,8 +913,8 @@ object Vp8l {
         }
       }
       if (opts.colorTransform) {
-        wr.writeBit(1); wr.writeBits(1, 2)
-        wr.writeBits(2, 3) // size_bits = 4 (16×16 blocks)
+        wr.bits(1, 1); wr.bits(1, 2)
+        wr.bits(2, 3) // size_bits = 4 (16×16 blocks)
         val tw = (xsize + 15) >> 4
         val th = (h + 15) >> 4
         writeEntropyImage(wr, Array.fill(tw * th)(EncCte), tw, th,
@@ -979,8 +936,8 @@ object Vp8l {
         }
       }
       if (opts.predictorT) {
-        wr.writeBit(1); wr.writeBits(0, 2)
-        wr.writeBits(2, 3) // size_bits = 4 (16×16 blocks)
+        wr.bits(1, 1); wr.bits(0, 2)
+        wr.bits(2, 3) // size_bits = 4 (16×16 blocks)
         val tw = (xsize + 15) >> 4
         val th = (h + 15) >> 4
         // all blocks mode 2 (T) — mode lives in the green channel
@@ -1001,7 +958,7 @@ object Vp8l {
         pixels = res
       }
     }
-    wr.writeBit(0) // transform list terminator
+    wr.bits(0, 1) // transform list terminator
     writeEntropyImage(wr, pixels, xsize, h,
       rowCopy = opts.rowCopy && !opts.palette, cacheBits = opts.cacheBits,
       spatial = true, metaTrivial = opts.metaTrivial)

@@ -33,29 +33,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
       r.asInstanceOf[ArrayData].toFloatArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val a = ctx.freshName("a")
-      val b = ctx.freshName("b")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val av = ctx.freshName("av")
-      val bv = ctx.freshName("bv")
-      s"""
-         |float[] $a = $l.toFloatArray();
-         |float[] $b = $r.toFloatArray();
-         |int $n = Math.min($a.length, $b.length);
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $av = (double) $a[$i]; double $bv = (double) $b[$i];
-         |  $dot += $av * $bv; $na += $av * $av; $nb += $bv * $bv;
-         |}
-         |${ev.value} = ($na == 0.0 || $nb == 0.0)
-         |  ? 0.0 : $dot / (Math.sqrt($na) * Math.sqrt($nb));
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (l, r) =>
+      s"${ev.value} = graft.functions.CosineSimilarity.compute(" +
+        s"$l.toFloatArray(), $r.toFloatArray());")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -84,37 +64,28 @@ case class DotProduct(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_product"
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData].toFloatArray()
-    val b = r.asInstanceOf[ArrayData].toFloatArray()
-    var i = 0; var dot = 0.0
-    val n = math.min(a.length, b.length)
-    while (i < n) { dot += a(i).toDouble * b(i).toDouble; i += 1 }
-    dot
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    DotProduct.compute(
+      l.asInstanceOf[ArrayData].toFloatArray(),
+      r.asInstanceOf[ArrayData].toFloatArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) => {
-      val a = ctx.freshName("a")
-      val b = ctx.freshName("b")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      s"""
-         |float[] $a = $l.toFloatArray();
-         |float[] $b = $r.toFloatArray();
-         |int $n = Math.min($a.length, $b.length);
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += ((double) $a[$i]) * ((double) $b[$i]);
-         |}
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (l, r) =>
+      s"${ev.value} = graft.functions.DotProduct.compute(" +
+        s"$l.toFloatArray(), $r.toFloatArray());")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object DotProduct {
+  def compute(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var i = 0; var dot = 0.0
+    while (i < n) { dot += a(i).toDouble * b(i).toDouble; i += 1 }
+    dot
+  }
 }
 
 object functions {

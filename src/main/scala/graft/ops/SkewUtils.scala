@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * (content-derived, not rand(), so results are reproducible and
   * retry-safe on task re-execution, which rand() salting is not).
   *
-  * Measured boundary (tools/SkewSoak, 50 M facts with 30 % on one key,
-  * PERF.md round-9): salting a JOIN is a LOSS — 7–19× — while the hot
+  * Measured boundary (planted-skew join soak, 50 M facts with 30 % on
+  * one key, PERF.md round-9): salting a JOIN is a LOSS — 7–19× — while the hot
   * key still fits one task's sort budget, because the right side
   * replicates buckets× and every row of both sides pays a wider
   * sort; AQE-on plain SMJ beat everything. Reach for [[saltedJoin]]

@@ -2,7 +2,7 @@ package graft.tools
 
 /** Round-12 dedup scale soak: the LSH near-dup pipeline and the span
   * gram index at corpus sizes 10× the previous largest measured point
-  * (2 M docs in AnalyticsSoak) — the evidence the 100-TB claims in
+  * (2 M docs, PERF.md's round-8 soak) — the evidence the 100-TB claims in
   * [[graft.ext.Dedup]] ride on.
   *
   * Two properties are asserted by measurement, per scale point:

@@ -468,7 +468,7 @@ object ContainerReference {
     }
   }
 
-  /** AnalyticsSoak's triage-corpus box writer. */
+  /** An ISO-BMFF box writer over a list of parts: size, type, body. */
   def soakBox(tpe: String, parts: Array[Byte]*): Array[Byte] = {
     def be32(v: Long): Array[Byte] = Array(((v >>> 24) & 0xFF).toByte,
       ((v >>> 16) & 0xFF).toByte, ((v >>> 8) & 0xFF).toByte, (v & 0xFF).toByte)

@@ -108,8 +108,9 @@ object DeflateReference {
     bos.toByteArray
   }
 
-  /** AnalyticsSoak's crawl-landing WARC member for doc `id`, its zero
-    * payload `payloadLen` bytes long (60 MiB in the soak).
+  /** A crawl-landing WARC member for doc `id` through one
+    * `GZIPOutputStream`: a resource record whose zero payload is
+    * `payloadLen` bytes long.
     */
   def soakWarcMember(id: Long, payloadLen: Int): Array[Byte] = {
     val hdr = ("WARC/1.0\r\nWARC-Type: resource\r\n" +

@@ -84,7 +84,7 @@ class DeflateWritersSpec extends AnyFunSuite {
   }
 
   test("Codecs.gzip of parts equals one GZIPOutputStream over their concatenation") {
-    // AnalyticsSoak's crawl-landing member (a 60 MiB zero body there)
+    // a crawl-landing WARC member: header, zero body, record trailer
     for (id <- Seq(0L, 7L); len <- Seq(0, 1, 1 << 20)) {
       val hdr = ("WARC/1.0\r\nWARC-Type: resource\r\n" +
         s"WARC-Target-URI: https://soak.example/$id\r\n" +

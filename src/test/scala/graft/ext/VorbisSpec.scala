@@ -145,7 +145,7 @@ class VorbisSpec extends AnyFunSuite {
     // IllegalArgumentException (NonFatal -> decode() gates None), not
     // OutOfMemoryError / NegativeArraySizeException from the allocation
     intercept[IllegalArgumentException] {
-      Vorbis.readCodebook(new Vorbis.Reader(payload))
+      Vorbis.readCodebook(new LsbReader(payload))
     }
   }
 
