@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
+import graft.sources.IndexTables
+
 /** Deduplication operators for large-scale training-data pipelines.
   *
   * All variants are DataFrame algebra (no driver-side loops, no UDFs in
@@ -85,7 +87,7 @@ object Dedup {
     // corpusIsFingerprintIndex: `corpus` is already the materialized
     // fingerprint table (an `fp` column — the write-time index this
     // scaladoc describes, e.g. a bucketed table from
-    // Sources.writeBucketed). The historical corpus is then never
+    // IndexTables.bucketed). The historical corpus is then never
     // re-scanned, and a bucketed index side joins without reshuffling
     // (DedupSpec proves the plan).
     val corpusFp =
@@ -346,25 +348,18 @@ object Dedup {
       s"bands ($bands) must divide numHashes ($numHashes) or band hashes drop coverage")
     val sigs = minHashSignatures(df, idCol, textCol, numHashes, shingler)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val bandsDf = lshBands(sigs, idCol, bands, numHashes / bands)
-    // both tables go through the shared bucketed writer, which owns the
-    // small-files discipline (repartition on the bucket key first)
-    graft.sources.Sources.writeBucketedBy(bandsDf, s"${tablePrefix}_bands",
-      Seq("band_id", "band_hash"), numBuckets,
-      basePath = basePath.map(p => s"$p/bands"))
-    graft.sources.Sources.writeBucketedBy(sigs, s"${tablePrefix}_sigs",
-      Seq(idCol), numBuckets, basePath = basePath.map(p => s"$p/sigs"))
+    val idx = IndexTables.Index(tablePrefix, basePath)
+    idx.bucketed("bands", lshBands(sigs, idCol, bands, numHashes / bands),
+      Seq("band_id", "band_hash"), numBuckets)
+    idx.bucketed("sigs", sigs, Seq(idCol), numBuckets)
     // the index's build parameters, recorded beside it: a probe with
     // mismatched hashing/banding/shingling produces band hashes that
     // match NOTHING — recall silently 0 — so the prefix overload of
     // [[nearDupAgainstIndex]] reads this table and self-configures
     val spark = df.sparkSession
     import spark.implicits._
-    val metaW = Seq((numHashes, bands, shinglerTag(shingler), idCol))
-      .toDF("num_hashes", "bands", "shingler", "id_col")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-    basePath.fold(metaW)(p => metaW.option("path", s"$p/meta"))
-      .saveAsTable(s"${tablePrefix}_meta")
+    idx.plain("meta", Seq((numHashes, bands, shinglerTag(shingler), idCol))
+      .toDF("num_hashes", "bands", "shingler", "id_col"))
     sigs.unpersist(blocking = false)
   }
 
@@ -387,14 +382,14 @@ object Dedup {
       textCol: String): Unit = {
     val meta = spark.table(s"${tablePrefix}_meta").head()
     val (numHashes, bands, shingler, idCol) =
-      (meta.getInt(0), meta.getInt(1), parseShingler(meta.getString(2)),
-        meta.getString(3))
+      (meta.getAs[Int]("num_hashes"), meta.getAs[Int]("bands"),
+        parseShingler(meta.getAs[String]("shingler")), meta.getAs[String]("id_col"))
     val sigs = minHashSignatures(batch, idCol, textCol, numHashes, shingler)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      graft.sources.Sources.appendBucketed(
+      IndexTables.append(
         lshBands(sigs, idCol, bands, numHashes / bands), s"${tablePrefix}_bands")
-      graft.sources.Sources.appendBucketed(sigs, s"${tablePrefix}_sigs")
+      IndexTables.append(sigs, s"${tablePrefix}_sigs")
     } finally sigs.unpersist(blocking = false)
   }
 
@@ -415,8 +410,9 @@ object Dedup {
     nearDupAgainstIndex(newBatch,
       spark.table(s"${tablePrefix}_bands"), spark.table(s"${tablePrefix}_sigs"),
       idCol, textCol, threshold,
-      numHashes = meta.getInt(0), bands = meta.getInt(1),
-      shingler = parseShingler(meta.getString(2)), corpusText = corpusText)
+      numHashes = meta.getAs[Int]("num_hashes"), bands = meta.getAs[Int]("bands"),
+      shingler = parseShingler(meta.getAs[String]("shingler")),
+      corpusText = corpusText)
   }
 
   /** Near-dup a NEW batch against a materialized band index
@@ -1025,21 +1021,14 @@ object Dedup {
       numBuckets: Int = 8,
       basePath: Option[String] = None): Unit = {
     val blocksN = resolveHammingBlocks(maxHamming, nBlocks)
-    graft.sources.Sources.writeBucketedBy(
-      hammingBands(fp, idCol, fpCol, maxHamming, blocksN),
-      s"${tablePrefix}_bands", Seq("band_id", "band_hash"), numBuckets,
-      basePath = basePath.map(p => s"$p/bands"))
-    graft.sources.Sources.writeBucketedBy(
-      fp.select(col(idCol), col(fpCol)),
-      s"${tablePrefix}_fps", Seq(idCol), numBuckets,
-      basePath = basePath.map(p => s"$p/fps"))
+    val idx = IndexTables.Index(tablePrefix, basePath)
+    idx.bucketed("bands", hammingBands(fp, idCol, fpCol, maxHamming, blocksN),
+      Seq("band_id", "band_hash"), numBuckets)
+    idx.bucketed("fps", fp.select(col(idCol), col(fpCol)), Seq(idCol), numBuckets)
     val spark = fp.sparkSession
     import spark.implicits._
-    val metaW = Seq((maxHamming, blocksN, idCol, fpCol))
-      .toDF("max_hamming", "n_blocks", "id_col", "fp_col")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-    basePath.fold(metaW)(p => metaW.option("path", s"$p/meta"))
-      .saveAsTable(s"${tablePrefix}_meta")
+    idx.plain("meta", Seq((maxHamming, blocksN, idCol, fpCol))
+      .toDF("max_hamming", "n_blocks", "id_col", "fp_col"))
   }
 
   /** Index MAINTENANCE for the Hamming family — [[absorbIntoBandIndex]]'s
@@ -1053,12 +1042,11 @@ object Dedup {
       batchFp: DataFrame): Unit = {
     val meta = spark.table(s"${tablePrefix}_meta").head()
     val (maxHamming, nBlocks, idCol, fpCol) =
-      (meta.getInt(0), meta.getInt(1), meta.getString(2), meta.getString(3))
-    graft.sources.Sources.appendBucketed(
-      hammingBands(batchFp, idCol, fpCol, maxHamming, nBlocks),
+      (meta.getAs[Int]("max_hamming"), meta.getAs[Int]("n_blocks"),
+        meta.getAs[String]("id_col"), meta.getAs[String]("fp_col"))
+    IndexTables.append(hammingBands(batchFp, idCol, fpCol, maxHamming, nBlocks),
       s"${tablePrefix}_bands")
-    graft.sources.Sources.appendBucketed(
-      batchFp.select(col(idCol), col(fpCol)), s"${tablePrefix}_fps")
+    IndexTables.append(batchFp.select(col(idCol), col(fpCol)), s"${tablePrefix}_fps")
   }
 
   /** Near-dup a NEW batch of fingerprints against a materialized
@@ -1079,8 +1067,9 @@ object Dedup {
       idCol: String,
       fpCol: String): DataFrame = {
     val meta = spark.table(s"${tablePrefix}_meta").head()
-    val (maxHamming, blocksN) = (meta.getInt(0), meta.getInt(1))
-    val (idxId, idxFp) = (meta.getString(2), meta.getString(3))
+    val (maxHamming, blocksN) =
+      (meta.getAs[Int]("max_hamming"), meta.getAs[Int]("n_blocks"))
+    val (idxId, idxFp) = (meta.getAs[String]("id_col"), meta.getAs[String]("fp_col"))
     val cand = hammingBands(newBatch, idCol, fpCol, maxHamming, blocksN)
       .select(col("band_id"), col("band_hash"), col(idCol).as("batch_id"))
       .join(spark.table(s"${tablePrefix}_bands")
@@ -1199,14 +1188,11 @@ object Dedup {
     val grams = spanGrams(spanToks(df, idCol, textCol), idCol, n)
       .groupBy("_g").agg(countDistinct(col(idCol)).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
-    graft.sources.Sources.writeBucketedBy(grams, s"${tablePrefix}_grams",
-      Seq("_g"), numBuckets, basePath = basePath.map(p => s"$p/grams"))
+    val idx = IndexTables.Index(tablePrefix, basePath)
+    idx.bucketed("grams", grams, Seq("_g"), numBuckets)
     val spark = df.sparkSession
     import spark.implicits._
-    val metaW = Seq((n, minDocs)).toDF("n", "min_docs")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-    basePath.fold(metaW)(p => metaW.option("path", s"$p/meta"))
-      .saveAsTable(s"${tablePrefix}_meta")
+    idx.plain("meta", Seq((n, minDocs)).toDF("n", "min_docs"))
   }
 
   /** Span-dedup a NEW batch against a materialized [[writeGramIndex]]
@@ -1225,7 +1211,7 @@ object Dedup {
       newBatch: DataFrame,
       idCol: String,
       textCol: String): DataFrame = {
-    val n = spark.table(s"${tablePrefix}_meta").head().getInt(0)
+    val n = spark.table(s"${tablePrefix}_meta").head().getAs[Int]("n")
     val toks = spanToks(newBatch, idCol, textCol)
     spanAssemble(toks, spanGrams(toks, idCol, n),
       spark.table(s"${tablePrefix}_grams"), idCol, n)

@@ -3,7 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{functions => gf, IvfAdcModel, IvfCells, IvfPqAdc, PqCodes}
+import graft.functions.{IvfAdcModel, IvfCells, IvfPqAdc, PqCodes}
+import graft.sources.IndexTables
 
 /** IVFADC — inverted file + residual product quantization (Jégou et al.,
   * TPAMI 2011 §IV; the FAISS `IVFx,PQy` layout): THE standard serve
@@ -151,10 +152,8 @@ object IvfPq {
 
   /** Exact-cosine scores of the ADC top-`candidates` within the `nprobe`
     * nearest cells: stage 1 reads only probed partitions of the codes
-    * table, stage 2 scores only `candidates` raw rows (broadcast
-    * candidate-id join — the raw corpus is scanned map-only, never
-    * shuffled). No top-k cut here ([[Pq.rerankScores]] contract: callers
-    * rank after their own transform).
+    * table, stage 2 is [[Similarity.exactRerank]] (`candidates` raw rows
+    * scored, no top-k cut).
     */
   def rerankScores(
       encoded: DataFrame,
@@ -168,13 +167,8 @@ object IvfPq {
       cellCol: String = "ivf_cell"): DataFrame = {
     val probeCells = IvfCells
       .computeCells(query, model.centroids, nprobe).toIntArray()
-    val cand = adcScores(encoded, idCol, model, query, probeCells, cellCol)
-      .orderBy(col("score_adc").desc, col(idCol))
-      .limit(candidates)
-      .select(idCol)
-    val qCol = array(query.map(lit).toIndexedSeq: _*)
-    raw.join(broadcast(cand), idCol)
-      .select(col(idCol), gf.cosine_similarity(col(embCol), qCol).as("score"))
+    Similarity.exactRerank(adcScores(encoded, idCol, model, query, probeCells, cellCol),
+      "score_adc", raw, idCol, embCol, query, candidates)
   }
 
   /** Materialize the IVFADC index as first-class WRITE-ONCE tables: the
@@ -204,23 +198,10 @@ object IvfPq {
         mm.books.forall(_.length == codes)),
       "pre-trained model must be cells × (m × codes)")
     val mod = model.getOrElse(train(embeddings, embCol, cells, m, codes, iters))
-    def writer(out: DataFrame, suffix: String) = {
-      val w = out.write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      basePath.fold(w)(p => w.option("path", s"$p/$suffix"))
-    }
-    writer(encode(embeddings, idCol, embCol, mod, cellCol)
-        .hint("rebalance", col(cellCol)), "codes")
-      .partitionBy(cellCol)
-      .saveAsTable(s"${tablePrefix}_codes")
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    writer(mod.centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-        .toSeq.toDF("cell", "centroid"), "centroids")
-      .saveAsTable(s"${tablePrefix}_centroids")
-    writer(mod.books.zipWithIndex.flatMap { case (bj, j) =>
-        bj.zipWithIndex.map { case (cw, c) => (j, c, cw.toSeq) }
-      }.toSeq.toDF("subspace", "code", "codeword"), "codebooks")
-      .saveAsTable(s"${tablePrefix}_codebooks")
+    val idx = IndexTables.Index(tablePrefix, basePath)
+    idx.cells("codes", encode(embeddings, idCol, embCol, mod, cellCol), cellCol)
+    idx.plain("centroids", Similarity.centroidsDf(embeddings.sparkSession, mod.centroids))
+    idx.plain("codebooks", Pq.codebooksDf(embeddings.sparkSession, mod.books))
     mod
   }
 

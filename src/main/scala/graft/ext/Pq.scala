@@ -3,8 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{functions => gf}
 import graft.functions.PqCodes
+import graft.sources.IndexTables
 
 /** Product quantization for embedding compression + approximate search
   * (Jégou et al., TPAMI 2011 — the standard 100 TB embedding layout,
@@ -156,11 +156,10 @@ object Pq {
   }
 
   /** Exact-cosine scores of the ADC top-`candidates`: the two-stage serve
-    * path. Stage 1 never reads the raw corpus; stage 2 never scores more
-    * than `candidates` rows (broadcast candidate-id hash join — the raw
-    * corpus is scanned map-only, not shuffled). No top-k cut here: callers
-    * rank after their own transform (see [[Similarity.bruteForceScoresLazy]]
-    * for why), typically `round(score) → orderBy → limit(k)`.
+    * path. Stage 1 never reads the raw corpus; stage 2 is
+    * [[Similarity.exactRerank]] (broadcast candidate-id join, `candidates`
+    * rows scored, no top-k cut — callers typically
+    * `round(score) → orderBy → limit(k)`).
     */
   def rerankScores(
       encoded: DataFrame,
@@ -170,15 +169,9 @@ object Pq {
       codeCol: String,
       books: Array[Array[Array[Float]]],
       query: Array[Float],
-      candidates: Int): DataFrame = {
-    val cand = adcScores(encoded, idCol, codeCol, books, query)
-      .orderBy(col("score_adc").desc, col(idCol))
-      .limit(candidates)
-      .select(idCol)
-    val qCol = array(query.map(lit): _*)
-    raw.join(broadcast(cand), idCol)
-      .select(col(idCol), gf.cosine_similarity(col(embCol), qCol).as("score"))
-  }
+      candidates: Int): DataFrame =
+    Similarity.exactRerank(adcScores(encoded, idCol, codeCol, books, query),
+      "score_adc", raw, idCol, embCol, query, candidates)
 
   /** ADC-then-rerank top-k (raw-score ranking form of [[rerankScores]]). */
   def searchRerank(
@@ -217,19 +210,22 @@ object Pq {
     require(books.forall(b => b.length == m && b.forall(_.length == codes)),
       "pre-trained codebooks must be m × codes")
     val model = books.getOrElse(trainCodebooks(embeddings, embCol, m, codes, iters))
-    def writer(out: DataFrame, suffix: String) = {
-      val w = out.write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      basePath.fold(w)(p => w.option("path", s"$p/$suffix"))
-    }
-    writer(encode(embeddings, embCol, model).select(idCol, "pq_code"), "codes")
-      .saveAsTable(s"${tablePrefix}_codes")
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    writer(model.zipWithIndex.flatMap { case (bj, j) =>
-        bj.zipWithIndex.map { case (cw, c) => (j, c, cw.toSeq) }
-      }.toSeq.toDF("subspace", "code", "codeword"), "codebooks")
-      .saveAsTable(s"${tablePrefix}_codebooks")
+    val idx = IndexTables.Index(tablePrefix, basePath)
+    idx.plain("codes", encode(embeddings, embCol, model).select(idCol, "pq_code"))
+    idx.plain("codebooks", codebooksDf(embeddings.sparkSession, model))
     model
+  }
+
+  /** The `_codebooks` table of a PQ index: (subspace, code, codeword), the
+    * shape [[loadCodebooks]] reloads.
+    */
+  private[ext] def codebooksDf(
+      spark: org.apache.spark.sql.SparkSession,
+      books: Array[Array[Array[Float]]]): DataFrame = {
+    import spark.implicits._
+    books.zipWithIndex.flatMap { case (bj, j) =>
+      bj.zipWithIndex.map { case (cw, c) => (j, c, cw.toSeq) }
+    }.toSeq.toDF("subspace", "code", "codeword")
   }
 
   /** Reload a [[writePqIndex]] model (bit-exact floats — encode and ADC

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{functions => gf}
+import graft.sources.IndexTables
 import scala.util.Random
 
 /** Similarity search over an embedding column (`Array[Float]`).
@@ -49,30 +50,17 @@ object Similarity {
       .orderBy(col("score").desc, col(idCol))
       .limit(k)
 
-  /** Brute-force cosine top-k where the query vector is a ONE-ROW
+  /** Brute-force cosine scores where the query vector is a ONE-ROW
     * DataFrame instead of a driver-side array: the query is broadcast
     * into a nested-loop join with a single build row, so the whole
     * operator is ONE lazy plan — no eager `.head()` job runs when the
-    * query is declared, and the scoring scan still finishes with
-    * TakeOrdered (k rows per partition to the driver-side merge).
-    */
-  def bruteForceTopKLazy(
-      embeddings: DataFrame,
-      idCol: String,
-      embCol: String,
-      query: DataFrame,
-      queryEmbCol: String,
-      k: Int): DataFrame =
-    bruteForceScoresLazy(embeddings, idCol, embCol, query, queryEmbCol)
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-
-  /** Score-every-vector form of [[bruteForceTopKLazy]] with no top-k cut:
-    * callers that post-process the score (e.g. rounding for a cross-engine
-    * compare) apply their transform BEFORE their own orderBy+limit, so the
-    * selection key is exactly the key they rank by — a raw-score top-k
-    * followed by rounding could keep a different row at the k boundary
-    * than a rounded-score top-k when raw scores differ but round equal.
+    * query is declared. No top-k cut: callers that post-process the score
+    * (e.g. rounding for a cross-engine compare) apply their transform
+    * BEFORE their own orderBy+limit (still TakeOrdered — k rows per
+    * partition), so the selection key is exactly the key they rank by — a
+    * raw-score top-k followed by rounding could keep a different row at
+    * the k boundary than a rounded-score top-k when raw scores differ but
+    * round equal.
     */
   def bruteForceScoresLazy(
       embeddings: DataFrame,
@@ -131,14 +119,12 @@ object Similarity {
       .select(col("role"), col("rank"), col(idCol), col("score"))
   }
 
-  /** ANN top-k with a one-row DataFrame query (lazy-plan twin of the
-    * array form below): the query row carries its own LSH bucket, and the
-    * corpus keeps rows within `probeRadius` bucket bits of it
-    * (bit_count(xor) ≤ r ≡ the multi-probe bucket set). Trade-off vs the
-    * array form: the bucket predicate here is a join-side filter, not a
-    * driver-known literal — when the corpus is bucket-partitioned on
-    * disk, use the array form so the probe set prunes partitions at the
-    * scan.
+  /** ANN top-k with a one-row DataFrame query: the query row carries its
+    * own LSH bucket, and the corpus keeps rows within `probeRadius` bucket
+    * bits of it (bit_count(xor) ≤ r ≡ the multi-probe bucket set; radius 1
+    * probes the query's bucket plus every bucket at Hamming distance 1).
+    * Every corpus row's bucket is computed in the scan, so the probe is a
+    * join-side filter that saves scoring, not reading.
     */
   def annTopKLazy(
       embeddings: DataFrame,
@@ -181,35 +167,29 @@ object Similarity {
       .select(col(idCol), gf.cosine_similarity(col(embCol), col("_qvec")).as("score"))
   }
 
-  /** ANN top-k: probe the query's LSH bucket plus all buckets within
-    * Hamming distance 1 (multi-probe), then exact-score the candidates.
-    * Recall/cost trades via numPlanes and the probe radius. The bucket
-    * probe set is a driver-known literal `isin` — the partition-pruning
-    * path when the corpus is bucket-partitioned on disk.
+  /** Exact-cosine scores of the `candidates` best rows of `approx` by its
+    * approximate score `approxCol` — the second stage of every compressed
+    * serve path ([[Pq]], [[IvfPq]], [[Sq]]). The cut is by approximate
+    * score desc then id (TakeOrdered: only `candidates` rows per partition
+    * travel); the candidate ids join `raw` as a broadcast, so the raw
+    * corpus is scanned map-only, never shuffled, and exactly `candidates`
+    * raw rows are scored. No top-k cut here: callers rank after their own
+    * transform (see [[bruteForceScoresLazy]] for why).
     */
-  def annTopK(
-      embeddings: DataFrame,
+  def exactRerank(
+      approx: DataFrame,
+      approxCol: String,
+      raw: DataFrame,
       idCol: String,
       embCol: String,
       query: Array[Float],
-      k: Int,
-      numPlanes: Int = 8,
-      seed: Long = 42L): DataFrame = {
-    val dim = query.length
-    val planes = hyperplanes(numPlanes, dim, seed)
-    val queryBucket: Long = planes.zipWithIndex.map { case (p, i) =>
-      val dot = p.zip(query).map { case (a, b) => a.toDouble * b.toDouble }.sum
-      if (dot >= 0) 1L << i else 0L
-    }.reduce(_ | _)
-    val probes: Seq[Long] =
-      queryBucket +: (0 until numPlanes).map(i => queryBucket ^ (1L << i))
-    embeddings
-      .withColumn("_bucket", lshBucket(col(embCol), planes))
-      .filter(col("_bucket").isin(probes: _*))
-      .select(col(idCol),
-        gf.cosine_similarity(col(embCol), planeCol(query)).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
+      candidates: Int): DataFrame = {
+    val cand = approx
+      .orderBy(col(approxCol).desc, col(idCol))
+      .limit(candidates)
+      .select(idCol)
+    raw.join(broadcast(cand), idCol)
+      .select(col(idCol), gf.cosine_similarity(col(embCol), planeCol(query)).as("score"))
   }
 
   // ------------------------------------------------------------------ IVF
@@ -295,29 +275,21 @@ object Similarity {
     require(centroids.forall(_.length == k),
       "pre-trained centroids must have exactly k cells")
     val cents = centroids.getOrElse(trainIvfCentroids(embeddings, embCol, k, iters))
-    def writer(out: DataFrame, suffix: String) = {
-      val w = out.write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      basePath.fold(w)(p => w.option("path", s"$p/$suffix"))
-    }
-    // REBALANCE on the cell BEFORE the partitioned write: otherwise
-    // every input task writes a sliver into every cell directory
-    // (writers × cells files) and probes drown in file-open overhead —
-    // measured 11.9 s → 1.0 s per probe at 1 M vectors. The rebalance
-    // hint (not a plain repartition, which pins each cell to exactly one
-    // task) lets AQE both coalesce small cells and SPLIT a skewed hot
-    // cell across tasks — real encoder embeddings cluster heavily, and a
-    // hot cell written by one straggler task as one giant file would
-    // also be read without parallelism at probe time.
-    writer(ivfAssign(embeddings, embCol, cents, cellCol)
-        .hint("rebalance", col(cellCol)), "cells")
-      .partitionBy(cellCol)
-      .saveAsTable(s"${tablePrefix}_cells")
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    writer(cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-        .toSeq.toDF("cell", "centroid"), "centroids")
-      .saveAsTable(s"${tablePrefix}_centroids")
+    val idx = IndexTables.Index(tablePrefix, basePath)
+    idx.cells("cells", ivfAssign(embeddings, embCol, cents, cellCol), cellCol)
+    idx.plain("centroids", centroidsDf(embeddings.sparkSession, cents))
     cents
+  }
+
+  /** The `_centroids` table of an IVF index: (cell, centroid), the shape
+    * [[loadIvfCentroids]] reloads.
+    */
+  private[ext] def centroidsDf(
+      spark: org.apache.spark.sql.SparkSession,
+      cents: Array[Array[Float]]): DataFrame = {
+    import spark.implicits._
+    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
+      .toSeq.toDF("cell", "centroid")
   }
 
   /** Index MAINTENANCE: append a new vector batch to a materialized
@@ -329,28 +301,21 @@ object Similarity {
     * cell-partitioned table, so new files land INSIDE the cell
     * directories and partition pruning keeps working unchanged. Only the
     * batch is scanned or shuffled — cost is O(|batch|), independent of
-    * index size. Same rebalance-before-write discipline as the initial
-    * build (writers × cells sliver files would otherwise accumulate per
-    * appended batch). Periodic retraining on drifted corpora is a new
-    * [[writeIvfIndex]] under a fresh prefix + an atomic swap, deliberately
-    * NOT this path.
+    * index size. [[IndexTables.append]] keeps the initial build's
+    * rebalance-before-write rule (writers × cells sliver files would
+    * otherwise accumulate per appended batch). Periodic retraining on
+    * drifted corpora is a new [[writeIvfIndex]] under a fresh prefix + an
+    * atomic swap, deliberately NOT this path.
     */
   def appendToIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       batch: DataFrame,
       embCol: String,
       tablePrefix: String,
-      cellCol: String = "ivf_cell"): Unit = {
-    val cents = loadIvfCentroids(spark, tablePrefix)
-    // match the existing table's column order (partition column last)
-    val cols = spark.table(s"${tablePrefix}_cells").columns
-    ivfAssign(batch, embCol, cents, cellCol)
-      .select(cols.map(col).toIndexedSeq: _*)
-      .hint("rebalance", col(cellCol))
-      .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
-      .partitionBy(cellCol)
-      .saveAsTable(s"${tablePrefix}_cells")
-  }
+      cellCol: String = "ivf_cell"): Unit =
+    IndexTables.append(
+      ivfAssign(batch, embCol, loadIvfCentroids(spark, tablePrefix), cellCol),
+      s"${tablePrefix}_cells")
 
   /** Reload a [[writeIvfIndex]] model: the k×dim centroid artifact (bit-
     * exact floats — cell assignment and probe order reproduce exactly).
@@ -400,36 +365,13 @@ object Similarity {
         gf.cosine_similarity(col(embCol), planeCol(query)).as("score"))
   }
 
-  /** IVF top-k search, driver-known query form: the probe set is a
-    * LITERAL `isin` over the query's nearest `nprobe` cells — the
-    * partition-pruning path over a cell-partitioned corpus. Exact cosine
-    * ranks within the probed cells; recall/cost trades via nprobe.
-    */
-  def ivfSearch(
-      embeddings: DataFrame,
-      idCol: String,
-      embCol: String,
-      query: Array[Float],
-      k: Int,
-      centroids: Array[Array[Float]],
-      nprobe: Int): DataFrame = {
-    val probeCells = graft.functions.IvfCells
-      .computeCells(query, centroids, nprobe)
-      .toIntArray()
-      .toSeq
-    ivfAssign(embeddings, embCol, centroids, "_cell")
-      .filter(col("_cell").isin(probeCells: _*))
-      .select(col(idCol),
-        gf.cosine_similarity(col(embCol), planeCol(query)).as("score"))
-      .orderBy(col("score").desc, col(idCol))
-      .limit(k)
-  }
-
   /** IVF top-k search, lazy one-plan form: the query is a one-row
     * DataFrame broadcast into the scan; its probe-cell set is computed by
     * the same codegen'd kernel and the corpus keeps rows whose assigned
-    * cell is in it. Use the array form when the corpus is cell-partitioned
-    * on disk (literal probes prune partitions; a join-side filter can't).
+    * cell is in it. Every row's cell is computed in the scan, so nothing
+    * is pruned at the read; a materialized [[writeIvfIndex]] index
+    * searched with [[ivfSearchIndex]] is the form whose literal probe set
+    * prunes cell directories.
     */
   def ivfSearchLazy(
       embeddings: DataFrame,

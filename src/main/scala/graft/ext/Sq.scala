@@ -3,7 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{functions => gf, Sq8, Sq8Model}
+import graft.functions.{Sq8, Sq8Model}
+import graft.sources.IndexTables
 
 /** 8-bit scalar-quantized embedding storage + approximate search — the
   * simple point on the compression curve (FAISS's `SQ8`): 4× smaller
@@ -83,9 +84,8 @@ object Sq {
       Sq8.sq8_score(col(codeCol), model(query, lo, hi)).as("score_sq"))
 
   /** Exact-cosine scores of the SQ8 top-`candidates` — the serve path:
-    * stage 1 scans dim-byte codes, stage 2 scores `candidates` raw rows
-    * (broadcast candidate-id join). No top-k cut ([[Pq.rerankScores]]
-    * contract).
+    * stage 1 scans dim-byte codes, stage 2 is [[Similarity.exactRerank]]
+    * (`candidates` raw rows scored, no top-k cut).
     */
   def rerankScores(
       encoded: DataFrame,
@@ -96,15 +96,9 @@ object Sq {
       hi: Array[Float],
       query: Array[Float],
       candidates: Int,
-      codeCol: String = "sq_code"): DataFrame = {
-    val cand = adcScores(encoded, idCol, lo, hi, query, codeCol)
-      .orderBy(col("score_sq").desc, col(idCol))
-      .limit(candidates)
-      .select(idCol)
-    val qCol = array(query.map(lit).toIndexedSeq: _*)
-    raw.join(broadcast(cand), idCol)
-      .select(col(idCol), gf.cosine_similarity(col(embCol), qCol).as("score"))
-  }
+      codeCol: String = "sq_code"): DataFrame =
+    Similarity.exactRerank(adcScores(encoded, idCol, lo, hi, query, codeCol),
+      "score_sq", raw, idCol, embCol, query, candidates)
 
   /** Materialize the SQ8 index as WRITE-ONCE tables ([[Pq.writePqIndex]]
     * sibling): codes in `{prefix}_codes` (idCol, dim-byte binary), bounds
@@ -118,16 +112,11 @@ object Sq {
       basePath: Option[String] = None,
       bounds: Option[(Array[Float], Array[Float])] = None): (Array[Float], Array[Float]) = {
     val (lo, hi) = bounds.getOrElse(trainBounds(embeddings, embCol))
-    def writer(out: DataFrame, suffix: String) = {
-      val w = out.write.mode(org.apache.spark.sql.SaveMode.Overwrite).format("parquet")
-      basePath.fold(w)(p => w.option("path", s"$p/$suffix"))
-    }
-    writer(encode(embeddings, embCol, lo, hi).select(idCol, "sq_code"), "codes")
-      .saveAsTable(s"${tablePrefix}_codes")
+    val idx = IndexTables.Index(tablePrefix, basePath)
+    idx.plain("codes", encode(embeddings, embCol, lo, hi).select(idCol, "sq_code"))
     val spark = embeddings.sparkSession
     import spark.implicits._
-    writer(lo.indices.map(i => (i, lo(i), hi(i))).toDF("pos", "lo", "hi"), "bounds")
-      .saveAsTable(s"${tablePrefix}_bounds")
+    idx.plain("bounds", lo.indices.map(i => (i, lo(i), hi(i))).toDF("pos", "lo", "hi"))
     (lo, hi)
   }
 

@@ -1,7 +1,8 @@
 package graft.ext
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+
+import graft.sources.IndexTables
 
 /** Write-once/reload lifecycle for the tokenizer model artifacts — the
   * [[Similarity.writeIvfIndex]]/[[Similarity.loadIvfCentroids]] discipline
@@ -12,48 +13,14 @@ import org.apache.spark.sql.functions.col
   * bit-identically by every later serving session. Order columns
   * (`rank`/`piece_id`) make the reload exact: merge RANK is semantic in
   * BPE (apply order), and vocab iteration order feeds deterministic
-  * tie-breaks.
+  * tie-breaks. The tables are written by [[IndexTables]], which also
+  * clears a stale catalog entry or location left by an earlier JVM.
   */
 object TokenizerStore {
 
-  /** Overwrite-proof managed-table create: a crashed/previous JVM can
-    * leave the table's warehouse DIRECTORY behind without its catalog
-    * entry, and `mode("overwrite")` then fails with
-    * LOCATION_ALREADY_EXISTS (Spark validates the location on CREATE).
-    * Drop the entry (resolving the real location from the catalog while
-    * it still exists) AND clear the stale location. Handles qualified
-    * `db.tbl` names — the managed path is `<wh>/<db>.db/<tbl>`, not
-    * `<wh>/<db>.tbl` — and surfaces (rather than swallows) a failed
-    * directory delete, since the overwrite would fail right after anyway.
-    */
-  private def reset(spark: SparkSession, table: String): Unit = {
-    // Prefer the catalog's own answer while the table entry still exists.
-    val catalogLoc: Option[String] =
-      if (spark.catalog.tableExists(table))
-        try Option(spark.sql(s"DESCRIBE TABLE EXTENDED $table")
-          .filter(col("col_name") === "Location")
-          .select("data_type").head().getString(0))
-        catch { case _: Exception => None }
-      else None
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val path = catalogLoc.getOrElse {
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val parts = table.toLowerCase(java.util.Locale.ROOT).split('.')
-      val rel = parts match {
-        case Array(db, tbl) => s"$db.db/$tbl"
-        case _              => parts.mkString("/")
-      }
-      s"$wh/$rel"
-    }
-    val loc = new java.io.File(path.stripPrefix("file:"))
-    if (loc.exists()) org.apache.commons.io.FileUtils.deleteDirectory(loc)
-  }
-
   def writeBpe(spark: SparkSession, merges: Seq[(String, String)],
-      table: String): Unit = {
-    reset(spark, table)
-    Bpe.mergesDf(spark, merges).write.mode("overwrite").saveAsTable(table)
-  }
+      table: String): Unit =
+    IndexTables.plain(Bpe.mergesDf(spark, merges), table)
 
   def loadBpe(spark: SparkSession, table: String): Seq[(String, String)] =
     spark.table(table).orderBy("rank")
@@ -61,20 +28,16 @@ object TokenizerStore {
       .map(r => (r.getString(0), r.getString(1))).toSeq
 
   def writeWordPiece(spark: SparkSession, vocab: Seq[String],
-      table: String): Unit = {
-    reset(spark, table)
-    WordPiece.vocabDf(spark, vocab).write.mode("overwrite").saveAsTable(table)
-  }
+      table: String): Unit =
+    IndexTables.plain(WordPiece.vocabDf(spark, vocab), table)
 
   def loadWordPiece(spark: SparkSession, table: String): Seq[String] =
     spark.table(table).orderBy("piece_id")
       .select("piece").collect().map(_.getString(0)).toSeq
 
   def writeUnigram(spark: SparkSession, pieces: Seq[(String, Double)],
-      table: String): Unit = {
-    reset(spark, table)
-    Unigram.vocabDf(spark, pieces).write.mode("overwrite").saveAsTable(table)
-  }
+      table: String): Unit =
+    IndexTables.plain(Unigram.vocabDf(spark, pieces), table)
 
   def loadUnigram(spark: SparkSession, table: String): Seq[(String, Double)] =
     spark.table(table).orderBy("rank")

@@ -637,13 +637,8 @@ object AdvancedQueries {
       "diffusion + integer argmax, hash-equal to DuckDB's unrolled replay")
 
   // ---------------------------------------------------- unigram tokenizer
-  /** Trained unigram model memoized per corpus dir (the bpeMerges /
-    * ivfModels train-once-serve-many pattern).
-    */
-  private val unigramCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(String, Double)]]
   private def unigramVocab(s: org.apache.spark.sql.SparkSession, d: String) =
-    unigramCache.getOrElseUpdate(d,
+    trainedModel(d, "unigram", 256, 20000, 5000)(
       graft.ext.Unigram.train(documents(s, d), "text", vocabSize = 256,
         maxWords = 20000, seedSize = 5000))
 

@@ -268,13 +268,8 @@ object AnalyticsQueries {
       "pass (custom codegen expression) — oracle replays with m contains()")
 
   // ------------------------------------------------------------ WordPiece
-  /** Corpus-trained vocab memoized per dir (train-once-serve-many, the
-    * [[graft.ext.Bpe]] cache discipline).
-    */
-  private val wpVocabCache = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[String]]
   private def wpVocab(s: org.apache.spark.sql.SparkSession, d: String) =
-    wpVocabCache.getOrElseUpdate(d,
+    trainedModel(d, "wordpiece", 64)(
       graft.ext.WordPiece.train(documents(s, d), "text", numMerges = 64))
 
   private val qWordpieceVocab = Q(
@@ -1036,8 +1031,7 @@ object AnalyticsQueries {
       // distributed stage is the corpus scoring + TakeOrdered pool, the
       // greedy runs over the bounded rerank set.
       val emb = embeddings(s, d)
-      val q = emb.filter(col("vec_id") === 0).select("embedding")
-        .head().getSeq[Float](0).toArray
+      val q = Plants.queryVector(emb)
       graft.ext.Mmr.diversifiedTopK(s, emb.filter(col("vec_id") =!= 0),
         "vec_id", "embedding", q, k = 5, poolSize = 50)
     },

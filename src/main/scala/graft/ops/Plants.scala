@@ -296,4 +296,11 @@ private[ops] object Plants {
 
   /** [[ranked]] cut at 10 rows (compiles to TakeOrderedAndProject). */
   def top10(scores: DataFrame): DataFrame = ranked(scores).limit(10)
+
+  /** The query of the vector certificates, vec_id 0's embedding,
+    * collected (one job) for the serve paths that take an array.
+    */
+  def queryVector(emb: DataFrame): Array[Float] =
+    emb.filter(col("vec_id") === 0).select("embedding")
+      .head().getSeq[Float](0).toArray
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.sources.IndexTables
 import Catalog.dec
 import Tables._
 
@@ -326,40 +327,30 @@ object RelationalQueries {
     "fact⋈fact shuffle join — Catalyst/AQE picks SMJ or SHJ on l_orderkey")
 
   /** Bucketed twins of the two fact tables, written once per corpus dir
-    * (write-once serve-many, the tokenizer/IVF model discipline applied
-    * to STORAGE LAYOUT). Both bucketed+sorted on the join key with the
-    * same bucket count, so the q_join_bucketed join needs neither
-    * Exchange nor Sort — the co-located-join layout that at 100 TB turns
-    * the recurring fact⋈fact shuffle (the single largest cost in
-    * q_join_sortmerge's plan) into a per-bucket merge.
+    * and catalog ([[IndexTables.ensure]]; write-once serve-many, the
+    * tokenizer/IVF model discipline applied to STORAGE LAYOUT). Both
+    * bucketed+sorted on the join key with the same bucket count, so the
+    * q_join_bucketed join needs neither Exchange nor Sort — the
+    * co-located-join layout that at 100 TB turns the recurring fact⋈fact
+    * shuffle (the single largest cost in q_join_sortmerge's plan) into a
+    * per-bucket merge.
     */
-  private val bucketedJoinTables =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-  private[ops] def resetBucketedFactsMemo(): Unit = bucketedJoinTables.clear()
-  private[ops] def ensureBucketedFacts(s: SparkSession, d: String): (String, String) =
-    bucketedJoinTables.synchronized {
-      // memo hit is only valid while the CURRENT catalog still has the
-      // tables — a new SparkContext in the same JVM starts with an empty
-      // in-memory catalog, so a bare name memo would serve dangling names
-      bucketedJoinTables.get(d)
-        .filter { case (lt, ot) =>
-          s.catalog.tableExists(lt) && s.catalog.tableExists(ot) }
-        .getOrElse {
-          val tag = Tables.corpusTag(d)
-          val lt = s"graft_bkt_lineitem_$tag"
-          val ot = s"graft_bkt_orders_$tag"
-          graft.sources.Sources.writeBucketedBy(
-            lineitem(s, d).select("l_orderkey", "l_quantity", "l_returnflag"),
-            lt, Seq("l_orderkey"), numBuckets = 16, sortCol = Some("l_orderkey"),
-            basePath = Some(s"/tmp/graft_bkt_$tag/lineitem"))
-          graft.sources.Sources.writeBucketedBy(
-            orders(s, d).select("o_orderkey", "o_orderpriority"),
-            ot, Seq("o_orderkey"), numBuckets = 16, sortCol = Some("o_orderkey"),
-            basePath = Some(s"/tmp/graft_bkt_$tag/orders"))
-          bucketedJoinTables(d) = (lt, ot)
-          (lt, ot)
-        }
+  private[ops] def ensureBucketedFacts(s: SparkSession, d: String): (String, String) = {
+    val tag = Tables.corpusTag(d)
+    val lt = s"graft_bkt_lineitem_$tag"
+    val ot = s"graft_bkt_orders_$tag"
+    IndexTables.ensure(s, lt, ot) {
+      IndexTables.bucketed(
+        lineitem(s, d).select("l_orderkey", "l_quantity", "l_returnflag"),
+        lt, Seq("l_orderkey"), numBuckets = 16, sortCol = Some("l_orderkey"),
+        location = Some(s"/tmp/graft_bkt_$tag/lineitem"))
+      IndexTables.bucketed(
+        orders(s, d).select("o_orderkey", "o_orderpriority"),
+        ot, Seq("o_orderkey"), numBuckets = 16, sortCol = Some("o_orderkey"),
+        location = Some(s"/tmp/graft_bkt_$tag/orders"))
     }
+    (lt, ot)
+  }
 
   private val qJoinBucketed = Q(
     "q_join_bucketed",

@@ -186,71 +186,6 @@ object Sources {
       mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).format("xml").option("rowTag", rowTag).save(path)
 
-  /** Bucketed managed table: pre-shuffles once at write time so repeated
-    * equi-joins/aggregations on the bucket key run WITHOUT a shuffle —
-    * the co-located-join layout for fact⋈fact at 100 TB (write cost is
-    * paid once, every downstream join on the key is exchange-free).
-    */
-  def writeBucketed(
-      df: DataFrame,
-      table: String,
-      bucketCol: String,
-      numBuckets: Int,
-      sortCol: Option[String] = None): Unit =
-    writeBucketedBy(df, table, Seq(bucketCol), numBuckets, sortCol)
-
-  /** Multi-column form of [[writeBucketed]] — the single write-layout
-    * implementation every bucketed index in the library goes through
-    * (corpus fingerprint index, LSH band + signature tables), so the
-    * small-files discipline below cannot be missed by one of them.
-    * `basePath` makes the table external (data under `basePath`).
-    */
-  def writeBucketedBy(
-      df: DataFrame,
-      table: String,
-      bucketCols: Seq[String],
-      numBuckets: Int,
-      sortCol: Option[String] = None,
-      basePath: Option[String] = None): Unit = {
-    require(bucketCols.nonEmpty, "bucketCols must be non-empty")
-    // repartition on the bucket key first: Spark's bucketed write emits
-    // one file per (task × bucket), so writing from arbitrary upstream
-    // partitioning costs writers × buckets small files. The repartition
-    // uses the same Murmur3 pmod as the bucket id, so each task holds
-    // exactly one bucket → one well-sized file per bucket (measured
-    // 2048 → 64 on the 8 M-doc LSH band index).
-    val w0 = df.repartition(numBuckets, bucketCols.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .format("parquet")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-    val w1 = basePath.fold(w0)(p => w0.option("path", p))
-    sortCol.fold(w1)(c => w1.sortBy(c)).saveAsTable(table)
-  }
-
-  /** Append a batch into an EXISTING bucketed table with the table's own
-    * bucket spec (read from the catalog, so the caller cannot mis-bucket —
-    * a mismatched spec is rejected by Spark rather than silently breaking
-    * the shuffle-free join property). Each appended batch adds one file
-    * per bucket (the same repartition-first discipline as the initial
-    * write); a long-running ingest compacts periodically with
-    * [[compactParquet]] — append keeps serving correct in between because
-    * bucket pruning is by id, not file count.
-    */
-  def appendBucketed(df: DataFrame, table: String): Unit = {
-    val spark = df.sparkSession
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(
-      throw new IllegalArgumentException(s"$table is not bucketed"))
-    val bucketCols = spec.bucketColumnNames
-    df.select(meta.schema.fieldNames.map(col).toIndexedSeq: _*)
-      .repartition(spec.numBuckets, bucketCols.map(col): _*)
-      .write.mode(SaveMode.Append)
-      .format("parquet")
-      .bucketBy(spec.numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(table)
-  }
-
   /** stdout sink (CLI `gasket run` prints to stdout, bin.js:149). Driver-
     * side by nature, so the result is fetched one partition per job — a
     * whole-result `collect()` would cap output size at driver memory, and

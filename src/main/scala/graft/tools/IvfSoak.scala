@@ -37,20 +37,24 @@ object IvfSoak {
     val spark = Harness.session(32, 64)
 
     val prefix = s"ivfsoak_$n"
+    // a location an earlier JVM left behind is cleared by the index write
     val base = s"/tmp/graft_ivfsoak_$n"
-    // clean slate across JVMs: catalog entry AND location (the
-    // LOCATION_ALREADY_EXISTS class — see TokenizerStore.reset)
-    Seq(s"${prefix}_cells", s"${prefix}_centroids").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t"))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
 
     def timed[A](name: String)(body: => A): A =
       Harness.step(spark)(body).report("ivf-soak", f"n=$n%-9d $name")
 
     println(s"[ivf-soak] base=$n batch=$batch nBatches=$nBatches dim=64 k=256")
-    timed("build_index") {
-      Similarity.writeIvfIndex(vectors(spark, 0, n, 64), "embedding",
-        prefix, k = 256, iters = 2, basePath = Some(base))
+    // the index build split by phase: init alone (iters = 0), init plus
+    // two Lloyd passes, then assign + write with the trained centroids;
+    // one pass costs (ivf_train - ivf_init) / 2
+    val corpus = vectors(spark, 0, n, 64)
+    timed("ivf_init")(Similarity.trainIvfCentroids(corpus, "embedding", k = 256, iters = 0))
+    val cents = timed("ivf_train") {
+      Similarity.trainIvfCentroids(corpus, "embedding", k = 256, iters = 2)
+    }
+    timed("assign_write") {
+      Similarity.writeIvfIndex(corpus, "embedding", prefix, k = 256,
+        basePath = Some(base), centroids = Some(cents))
     }
     val query = Array.tabulate(64)(i =>
       (((i * 2654435761L % 2000) - 1000).toFloat / 1000.0f))

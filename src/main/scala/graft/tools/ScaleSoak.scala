@@ -433,6 +433,8 @@ object ScaleSoak {
       if (selected(name)) s.report("soak", name) else s.value
     }
     val q = Array.tabulate(64)(i => ((i * 2654435761L % 1000) / 500.0 - 1.0).toFloat)
+    // the same query as a one-row frame, for the lazy one-plan searches
+    val qRow = spark.createDataFrame(Seq(Tuple1(q.toSeq))).toDF("embedding")
     vtimed("brute_force_top10") {
       graft.ext.Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10).count()
     }
@@ -448,8 +450,8 @@ object ScaleSoak {
         .agg(expr("bit_xor(cast(ivf_cell as bigint))")).collect().length.toLong
     }
     vtimed("ivf_search_nprobe4") {
-      graft.ext.Similarity.ivfSearch(emb, "vec_id", "embedding", q, 10,
-        centroids, nprobe = 4).count()
+      graft.ext.Similarity.ivfSearchLazy(emb, "vec_id", "embedding", qRow,
+        "embedding", 10, centroids, nprobe = 4).count()
     }
     def buildIvfIndex(): Unit =
       graft.ext.Similarity.writeIvfIndex(emb, "embedding", "soak_ivf_idx",
@@ -474,7 +476,8 @@ object ScaleSoak {
         "vec_id", "embedding", q, 10, nprobe = 4).count()
     }
     vtimed("ann_lsh_top10") {
-      graft.ext.Similarity.annTopK(emb, "vec_id", "embedding", q, 10).count()
+      graft.ext.Similarity.annTopKLazy(emb, "vec_id", "embedding", qRow,
+        "embedding", 10, dim = q.length).count()
     }
     // product quantization: 64-dim float (256 B) → one packed BIGINT
     // (8 B) — the compression serve path (m=8 × 256 codes)

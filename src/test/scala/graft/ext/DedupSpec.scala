@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.sources.Sources
+import graft.sources.IndexTables
 
 /** Seeded correctness tests for the model-defined dedup operators (the
   * oracle-omitted surface, SURVEY §7.3).
@@ -499,9 +499,9 @@ class DedupSpec extends SparkSpec {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      Sources.writeBucketed(
+      IndexTables.bucketed(
         corpus.select(md5(col("text")).as("fp")).distinct(),
-        idxT, "fp", 4, Some("fp"))
+        idxT, Seq("fp"), 4, Some("fp"))
       val batch = (380 until 420).map(i => (i + 1000L, s"historic doc $i"))
         .toDF("doc_id", "text") // 20 dup, 20 new
       val out = Dedup.incremental(batch, spark.table(idxT), "text", "doc_id",

@@ -308,7 +308,9 @@ class MultimodalSpec extends SparkSpec {
     norms.foreach(n2 => assert(math.abs(n2 - 1.0) < 1e-3, s"not unit-norm: $n2"))
     // the output column drives vector search directly
     val q = emb.limit(1).select("embedding")
-    val top = graft.ext.Similarity.bruteForceTopKLazy(emb, "media_id", "embedding", q, "embedding", 3)
+    val top = graft.ext.Similarity
+      .bruteForceScoresLazy(emb, "media_id", "embedding", q, "embedding")
+      .orderBy(col("score").desc, col("media_id")).limit(3)
     assert(top.count() == 3)
   }
 

@@ -43,19 +43,20 @@ class SimilaritySpec extends SparkSpec {
   test("ANN probe set contains the query bucket and recalls the self-match") {
     val emb = Tables.embeddings(spark, sfDir)
     val q = emb.filter(col("vec_id") === 7).select("embedding")
-      .head().getSeq[Float](0).toArray
-    val top = Similarity.annTopK(emb, "vec_id", "embedding", q, 5).collect()
+    val top = Similarity.annTopKLazy(emb, "vec_id", "embedding", q, "embedding", 5,
+      dim = 64).collect()
     assert(top.nonEmpty)
     assert(top.head.getLong(0) == 7L) // self is always in its own bucket
   }
 
   test("ANN candidates are a subset of brute-force scores (same scoring)") {
     val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.filter(col("vec_id") === 3).select("embedding")
-      .head().getSeq[Float](0).toArray
+    val qRow = emb.filter(col("vec_id") === 3).select("embedding")
+    val q = qRow.head().getSeq[Float](0).toArray
     val brute = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 500)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val ann = Similarity.annTopK(emb, "vec_id", "embedding", q, 10).collect()
+    val ann = Similarity.annTopKLazy(emb, "vec_id", "embedding", qRow, "embedding", 10,
+      dim = 64).collect()
     ann.foreach(r => assert(math.abs(brute(r.getLong(0)) - r.getDouble(1)) < 1e-12))
   }
 
@@ -81,11 +82,12 @@ class SimilaritySpec extends SparkSpec {
   test("IVF search with nprobe = k equals brute force exactly") {
     val emb = Tables.embeddings(spark, sfDir)
     val centroids = Similarity.trainIvfCentroids(emb, "embedding", k = 4, iters = 2)
-    val q = emb.filter(col("vec_id") === 7).select("embedding")
-      .head().getSeq[Float](0).toArray
+    val qRow = emb.filter(col("vec_id") === 7).select("embedding")
+    val q = qRow.head().getSeq[Float](0).toArray
     val brute = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val ivf = Similarity.ivfSearch(emb, "vec_id", "embedding", q, 10, centroids, nprobe = 4)
+    val ivf = Similarity.ivfSearchLazy(emb, "vec_id", "embedding", qRow, "embedding", 10,
+        centroids, nprobe = 4)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(ivf == brute, "probing every cell must degrade to exact search")
   }
@@ -380,11 +382,12 @@ class SimilaritySpec extends SparkSpec {
   test("IVF probed search reaches useful recall against brute force") {
     val emb = Tables.embeddings(spark, sfDir)
     val centroids = Similarity.trainIvfCentroids(emb, "embedding", k = 8, iters = 2)
-    val q = emb.filter(col("vec_id") === 3).select("embedding")
-      .head().getSeq[Float](0).toArray
+    val qRow = emb.filter(col("vec_id") === 3).select("embedding")
+    val q = qRow.head().getSeq[Float](0).toArray
     val brute = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, 10)
       .collect().map(_.getLong(0)).toSet
-    val ivf = Similarity.ivfSearch(emb, "vec_id", "embedding", q, 10, centroids, nprobe = 4)
+    val ivf = Similarity.ivfSearchLazy(emb, "vec_id", "embedding", qRow, "embedding", 10,
+        centroids, nprobe = 4)
       .collect().map(_.getLong(0)).toSet
     val recall = (brute & ivf).size.toDouble / brute.size
     assert(recall >= 0.5, s"recall@10 was $recall with half the cells probed")

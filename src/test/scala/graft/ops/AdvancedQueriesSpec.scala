@@ -122,7 +122,6 @@ class AdvancedQueriesSpec extends SparkSpec {
   test("ensureBucketedFacts: per-corpus tags never collide; rebuild survives stale locations") {
     val d1 = sfDir
     val d2 = "/root/testdata/sf0.01"
-    RelationalQueries.resetBucketedFactsMemo()
     val (lt1, ot1) = RelationalQueries.ensureBucketedFacts(spark, d1)
     val (lt2, ot2) = RelationalQueries.ensureBucketedFacts(spark, d2)
     // md5-hex tags: distinct per corpus dir (the old 32-bit hashCode tag
@@ -139,7 +138,6 @@ class AdvancedQueriesSpec extends SparkSpec {
     // /tmp/graft_bkt_* location still on disk — the rebuild must
     // overwrite the stale location, not fail (the TokenizerStore
     // stale-location class applied to the bucketed twins)
-    RelationalQueries.resetBucketedFactsMemo()
     Seq(lt1, ot1).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     val (lt1b, ot1b) = RelationalQueries.ensureBucketedFacts(spark, d1)
     assert((lt1b, ot1b) == ((lt1, ot1)), "tag must be stable across rebuilds")

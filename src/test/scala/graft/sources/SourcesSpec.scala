@@ -140,9 +140,9 @@ class SourcesSpec extends SparkSpec {
       // force the shuffle-join path so the bucket layout (not a broadcast)
       // is what eliminates the exchange
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      Sources.writeBucketed(li, liT, "l_orderkey", 4, Some("l_orderkey"))
-      Sources.writeBucketed(o.withColumnRenamed("o_orderkey", "l_orderkey"),
-        oT, "l_orderkey", 4, Some("l_orderkey"))
+      IndexTables.bucketed(li, liT, Seq("l_orderkey"), 4, Some("l_orderkey"))
+      IndexTables.bucketed(o.withColumnRenamed("o_orderkey", "l_orderkey"),
+        oT, Seq("l_orderkey"), 4, Some("l_orderkey"))
       val joined = spark.table(liT).join(spark.table(oT), "l_orderkey")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
