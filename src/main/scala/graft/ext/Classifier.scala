@@ -226,13 +226,12 @@ object Classifier {
       while (!converged && itersRun < iters) {
         // Per-doc: margin (left-to-right double dot — the SparseDotW
         // order), sigmoid, residual; per-coordinate gradient terms
-        // quantized to DECIMAL scale 12 (BigDecimal.valueOf = Spark's
-        // double→decimal cast path, HALF_UP) and summed EXACTLY — the
-        // sum is associative/commutative, so the trained model is
+        // quantized to DECIMAL scale 12 and summed EXACTLY ([[GradSum]]) —
+        // the sum is associative/commutative, so the trained model is
         // bit-stable under any partitioning, as the SQL DECIMAL(28,12)
         // aggregate it replaces was.
         val wB = w // captured by the closure, serialized per job
-        val seqOp: (Array[java.math.BigDecimal], (Double, Array[Int], Array[Double])) => Array[java.math.BigDecimal] = {
+        val seqOp: (GradSum, (Double, Array[Int], Array[Double])) => GradSum = {
           case (acc, (y, is, xs)) =>
             var z = 0.0
             var j = 0
@@ -241,33 +240,22 @@ object Classifier {
             // bit-matching the DECIMAL-aggregate form this loop replaced
             val r = 1.0 / (1.0 + java.lang.StrictMath.exp(-z)) - y
             j = 0
-            while (j < is.length) {
-              acc(is(j)) = acc(is(j)).add(java.math.BigDecimal
-                .valueOf(r * xs(j))
-                .setScale(12, java.math.RoundingMode.HALF_UP))
-              j += 1
-            }
+            while (j < is.length) { acc.add(is(j), r * xs(j)); j += 1 }
             acc
         }
         val grad =
           if (localFeats != null) {
-            val acc = Array.fill[java.math.BigDecimal](dim + 1)(java.math.BigDecimal.ZERO)
+            val acc = new GradSum(dim + 1)
             var di = 0
             while (di < localFeats.length) { seqOp(acc, localFeats(di)); di += 1 }
             acc
-          } else featRdd.treeAggregate(
-            Array.fill[java.math.BigDecimal](dim + 1)(java.math.BigDecimal.ZERO))(
-            seqOp = seqOp,
-            combOp = { (a, b) =>
-              var i = 0
-              while (i < a.length) { a(i) = a(i).add(b(i)); i += 1 }
-              a
-            })
+          } else featRdd.treeAggregate(new GradSum(dim + 1))(seqOp, _ merge _)
         var normSq = 0.0
         var i = 0
-        while (i < grad.length) {
-          if (grad(i).signum != 0) {
-            val g = grad(i).doubleValue() / nDocs
+        while (i <= dim) {
+          val gi = grad.value(i)
+          if (gi.signum != 0) {
+            val g = gi.doubleValue() / nDocs
             normSq += g * g
             gsq(i) += g * g
             if (gsq(i) > 0.0) w(i) -= lr * g / math.sqrt(gsq(i))
@@ -283,5 +271,62 @@ object Classifier {
       }
     } finally featRdd.unpersist()
     Model(w, dim, itersRun)
+  }
+
+  /** Exact per-coordinate sum of gradient terms, each term quantized to
+    * DECIMAL scale 12 as `BigDecimal.valueOf(d).setScale(12, HALF_UP)`
+    * (Spark's double→decimal cast). [[value]] is that `BigDecimal` sum,
+    * but a term costs a multiply and a `long` add, not a `Double.toString`
+    * and two allocations: most terms are rounded in binary to units of
+    * 1e-12 and added to a `long` per coordinate. That rounding equals the
+    * decimal one wherever the double error cannot cross a rounding
+    * boundary: |d·1e12| < 2^40 bounds the product's error by 2^-14 units
+    * and the gap between `Double.toString(d)` and d by 1e12·ulp(d) < 2.5e-4
+    * units, so a fraction at least [[TieMargin]] from ½ rounds the same way
+    * in both. Every other term (near-ties, |d| ≥ ~1.1, NaN or infinite,
+    * which throw as the cast does), and any `long` add that would
+    * overflow, goes to a sparse `BigDecimal` side sum.
+    */
+  private[ext] final class GradSum(n: Int) extends Serializable {
+    private[ext] val units = new Array[Long](n)
+    private val spilled = scala.collection.mutable.HashMap.empty[Int, java.math.BigDecimal]
+
+    def add(i: Int, d: Double): Unit = {
+      val t = d * 1e12
+      val a = math.abs(t)
+      val fl = math.floor(a)
+      if (a < GradSum.FastBound && math.abs(a - fl - 0.5) >= GradSum.TieMargin) {
+        val u = fl.toLong + (if (a - fl > 0.5) 1L else 0L)
+        addUnits(i, if (t < 0) -u else u)
+      } else addBig(i, GradSum.quantize(d))
+    }
+
+    def merge(o: GradSum): GradSum = {
+      var i = 0
+      while (i < n) { addUnits(i, o.units(i)); i += 1 }
+      o.spilled.foreach { case (j, v) => addBig(j, v) }
+      this
+    }
+
+    def value(i: Int): java.math.BigDecimal = {
+      val u = java.math.BigDecimal.valueOf(units(i), 12)
+      spilled.get(i).fold(u)(u.add)
+    }
+
+    private def addUnits(i: Int, u: Long): Unit =
+      try units(i) = Math.addExact(units(i), u)
+      catch { case _: ArithmeticException => addBig(i, java.math.BigDecimal.valueOf(u, 12)) }
+
+    private def addBig(i: Int, v: java.math.BigDecimal): Unit =
+      spilled.update(i, spilled.get(i).fold(v)(_.add(v)))
+  }
+
+  private[ext] object GradSum {
+    val FastBound: Double = (1L << 40).toDouble
+    val TieMargin: Double = 1e-3
+
+    /** The decimal form of one term: the reference [[GradSum]] equals. */
+    def quantize(d: Double): java.math.BigDecimal =
+      java.math.BigDecimal.valueOf(d).setScale(12, java.math.RoundingMode.HALF_UP)
   }
 }

@@ -133,27 +133,39 @@ object Codecs {
     * FlateDecode, gzip members). Returns the inflated bytes and the
     * number of input bytes the stream consumed (its trailer, if any,
     * starts there), or None when the stream is truncated, corrupt or
-    * needs a preset dictionary. `bufSize` is the inflate window and
-    * `outHint` the output's initial capacity.
+    * needs a preset dictionary. The stream inflates straight into the
+    * output array, which starts at four times `len`, clamped to 4–64 KiB
+    * (a large `len`, such as the rest of a crawl file after a gzip
+    * member's header, says little about one stream), and doubles whenever
+    * it fills: a few-hundred-byte gzip member allocates 4 KiB, and a
+    * high-ratio stream still inflates in a few calls. An output past the
+    * largest array throws `OutOfMemoryError`.
     */
-  def inflateToEnd(b: Array[Byte], off: Int, len: Int, zlib: Boolean,
-      bufSize: Int, outHint: Int): Option[(Array[Byte], Int)] = {
+  def inflateToEnd(b: Array[Byte], off: Int, len: Int,
+      zlib: Boolean): Option[(Array[Byte], Int)] = {
     val inf = acquireInflater(zlib)
     try {
       inf.setInput(b, off, len)
-      val out = new java.io.ByteArrayOutputStream(outHint)
-      val buf = new Array[Byte](bufSize)
+      var out = new Array[Byte](math.min(64 * 1024, math.max(4 * 1024, len.toLong * 4)).toInt)
+      var got = 0
       while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n > 0) out.write(buf, 0, n)
-        else if (!inf.finished() && (inf.needsInput() || inf.needsDictionary()))
+        if (got == out.length) {
+          if (got == MaxArray) throw new OutOfMemoryError("inflated stream exceeds the largest array")
+          out = java.util.Arrays.copyOf(out, math.min(got.toLong * 2, MaxArray).toInt)
+        }
+        val n = inf.inflate(out, got, out.length - got)
+        got += n
+        if (n == 0 && !inf.finished() && (inf.needsInput() || inf.needsDictionary()))
           return None
       }
-      Some((out.toByteArray, len - inf.getRemaining))
+      Some((java.util.Arrays.copyOf(out, got), len - inf.getRemaining))
     } catch {
       case _: java.util.zip.DataFormatException => None
     } finally inf.reset()
   }
+
+  /** The largest array length the JVM allocates. */
+  private val MaxArray = Int.MaxValue - 8
 
   /** Compression family by magic: "gzip" (RFC 1952 `1f 8b`), "zstd"
     * (RFC 8878 `28 b5 2f fd`), "xz" (`fd 37 7a 58 5a 00`), "bzip2"

@@ -175,8 +175,7 @@ object Pdf {
     * then skipped whole — never partially decoded into the text).
     */
   private def inflate(b: Array[Byte], from: Int, until: Int): Array[Byte] =
-    Codecs.inflateToEnd(b, from, until - from, zlib = true, bufSize = 16 * 1024,
-      outHint = math.max(64, (until - from) * 4)).map(_._1).orNull
+    Codecs.inflateToEnd(b, from, until - from, zlib = true).map(_._1).orNull
 
   // -------------------------------------------- /Differences font tables
 

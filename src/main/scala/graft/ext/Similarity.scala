@@ -217,13 +217,7 @@ object Similarity {
       .collect()
       .map(_.getSeq[Float](0).toArray)
     for (_ <- 0 until iters) {
-      val means = embeddings
-        .select(graft.functions.IvfCells
-          .nearest_cell(col(embCol), cents.map(_.toSeq).toSeq).as("cell"),
-          posexplode(col(embCol)).as(Seq("pos", "v")))
-        .groupBy("cell", "pos")
-        .agg((sum(col("v")) / count(lit(1))).as("mean"))
-        .collect()
+      val means = lloydMeans(embeddings, embCol, cents).collect()
       val next = cents.map(_.clone())
       means.foreach { r =>
         next(r.getInt(0))(r.getInt(1)) = r.getDouble(2).toFloat
@@ -232,6 +226,22 @@ object Similarity {
     }
     cents
   }
+
+  /** One Lloyd pass's per-(cell, pos) means. The cell is assigned in a
+    * projection below the explode: selected next to `posexplode`, Catalyst
+    * evaluates it above the Generate, once per dimension instead of once
+    * per vector.
+    */
+  private[ext] def lloydMeans(
+      embeddings: DataFrame,
+      embCol: String,
+      cents: Array[Array[Float]]): DataFrame =
+    embeddings
+      .select(graft.functions.IvfCells
+        .nearest_cell(col(embCol), cents.map(_.toSeq).toSeq).as("cell"), col(embCol).as("e"))
+      .select(col("cell"), posexplode(col("e")).as(Seq("pos", "v")))
+      .groupBy("cell", "pos")
+      .agg((sum(col("v")) / count(lit(1))).as("mean"))
 
   /** Cell assignment — the IVF WRITE path. At scale, assign at ingest and
     * `partitionBy(cellCol)` the stored corpus: searches then prune to the

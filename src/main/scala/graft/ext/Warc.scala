@@ -106,9 +106,9 @@ object Warc {
     }
     if ((flg & 0x02) != 0) p += 2 // FHCRC
     if (p >= blob.length) return None
-    // --- raw deflate stream (pooled, see Codecs), 64 KiB window
-    val (bytes, consumed) = Codecs.inflateToEnd(blob, p, blob.length - p,
-      zlib = false, bufSize = 64 * 1024, outHint = 64 * 1024).getOrElse(return None)
+    // --- raw deflate stream (pooled, see Codecs)
+    val (bytes, consumed) = Codecs.inflateToEnd(blob, p, blob.length - p, zlib = false)
+      .getOrElse(return None)
     // CRC32 + ISIZE trailer must be present AND the CRC must match
     if (p + consumed + 8 > blob.length) return None
     val crc = new java.util.zip.CRC32()

@@ -823,24 +823,15 @@ object RelationalQueries {
     */
   private[ops] val streamRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** The file-stream source needs an explicit schema, which costs an eager
-    * parquet-footer read per declaration; memoized per directory since the
-    * corpus schema is immutable within a run (saves a ~0.3 s driver job on
-    * every streaming-query construction).
-    */
-  private val streamSchemaCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
-  private[ops] def eventsSchema(s: org.apache.spark.sql.SparkSession, d: String) =
-    streamSchemaCache.getOrElseUpdate(d, s.read.parquet(s"$d/events.parquet").schema)
-
   /** The events table as a bounded file-stream source (explicit schema,
     * ts normalization mirroring Tables.events — ns-long and NTZ corpus
     * generations both surface as a plain TIMESTAMP for watermarks).
     */
   private[ops] def streamEvents(s: SparkSession, d: String): DataFrame = {
     // glob form: the file-stream source requires a directory or glob
-    // basePath (a bare file path is rejected)
-    val raw = s.readStream.schema(eventsSchema(s, d)).parquet(s"$d/events.*")
+    // basePath (a bare file path is rejected); the explicit schema is the
+    // batch table's, from the Tables schema memo
+    val raw = s.readStream.schema(Tables.table(s, d, "events").schema).parquet(s"$d/events.*")
     Tables.normalizeEventTs(raw)
   }
 
@@ -1088,8 +1079,7 @@ object RelationalQueries {
       // surviving doc_id set is arrival-order-INDEPENDENT, so the full
       // anti-join is oracle-checkable cross-engine.
       val name = s"graft_stream_dedupc_${streamRuns.incrementAndGet()}"
-      val docsSchema = streamSchemaCache.getOrElseUpdate(s"$d/documents",
-        s.read.parquet(s"$d/documents.parquet").schema)
+      val docsSchema = Tables.documents(s, d).schema
       val stream = s.readStream.schema(docsSchema).parquet(s"$d/documents.*")
       val corpusFp = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(3)) =!= 0)
@@ -1122,8 +1112,7 @@ object RelationalQueries {
       // hash-checkable against a batch DuckDB oracle — serving parity is
       // proven cross-engine, not just claimed.
       val name = s"graft_stream_classify_${streamRuns.incrementAndGet()}"
-      val docsSchema = streamSchemaCache.getOrElseUpdate(s"$d/documents",
-        s.read.parquet(s"$d/documents.parquet").schema)
+      val docsSchema = Tables.documents(s, d).schema
       val stream = s.readStream.schema(docsSchema).parquet(s"$d/documents.*")
       val w = Array.tabulate(257)(j => if (j < 256) j / 256.0 - 0.5 else 0.0)
       val kept = graft.streaming.StreamOps.classifyStream(

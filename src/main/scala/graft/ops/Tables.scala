@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet corpus (TESTDATA.md).
   *
@@ -12,8 +12,48 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * and prunes columns into the scan regardless of data size.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** `dir/name.parquet`, read with its inferred schema from [[schemas]]
+    * when the path is a file: schema inference reads a footer in a Spark
+    * job of its own, which the memo runs once per table version instead of
+    * once per table reference. A path that cannot be stat'ed, or a
+    * directory (whose status does not name its contents), keeps the plain
+    * read and its errors.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    inferredSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** Inferred parquet schemas, memoized per table version. Owner: this
+    * object, on behalf of [[table]]. The key is the file's qualified path,
+    * its modification time and length (a rewrite in place is a new entry)
+    * and the session confs the inference reads — the parquet schema
+    * converter's eight flags (binary as string, INT96 as timestamp, case
+    * sensitivity, NTZ inference, nanos as long, field ids, variant and
+    * unknown type annotations) and schema merging and summary files — so a
+    * session with other settings never gets another session's types.
+    * Entries live as long as the JVM; they are bounded by the corpus files
+    * it reads, times their versions, times the conf combinations its
+    * sessions use.
+    */
+  private val schemas =
+    scala.collection.concurrent.TrieMap.empty[(String, Long, Long, Seq[Boolean]), StructType]
+
+  private def inferredSchema(spark: SparkSession, path: String): Option[StructType] =
+    scala.util.Try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p)
+    }.toOption.filter(_.isFile).map { st =>
+      val c = spark.sessionState.conf
+      val confs = Seq(c.isParquetBinaryAsString, c.isParquetINT96AsTimestamp,
+        c.caseSensitiveAnalysis, c.parquetInferTimestampNTZEnabled, c.legacyParquetNanosAsLong,
+        c.parquetFieldIdReadEnabled, c.parquetIgnoreVariantAnnotation,
+        c.parquetReaderRespectUnknownTypeAnnotation, c.isParquetSchemaMergingEnabled,
+        c.isParquetSchemaRespectSummaries)
+      schemas.getOrElseUpdate((st.getPath.toString, st.getModificationTime, st.getLen, confs),
+        spark.read.parquet(path).schema)
+    }
 
   /** Collision-safe per-corpus tag for write-once artifact names (bucketed
     * twins, LSH/ANN index tables, scratch dirs): md5-hex of the corpus

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.Bridge
 
@@ -53,9 +53,11 @@ object Harness {
       shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long)
 
   /** The Spark work of one step: the jobs it started and the stages they
-    * completed (spill is bytes spilled to disk).
+    * completed (spill is bytes spilled to disk), and `driverS`, the step's
+    * wall seconds that no job of it covered — planning, schema work and
+    * driver-side loops: the per-query floor that no executor metric shows.
     */
-  final case class Cost(jobs: Int, stages: Seq[StageCost]) {
+  final case class Cost(jobs: Int, stages: Seq[StageCost], driverS: Double) {
     def tasks: Long = stages.map(_.tasks.toLong).sum
     def cpuNs: Long = stages.map(_.cpuNs).sum
     def gcMs: Long = stages.map(_.gcMs).sum
@@ -67,13 +69,15 @@ object Harness {
     def columns: String =
       f"jobs=$jobs stages=${stages.size} tasks=$tasks cpu=${cpuNs / 1e9}%.2f s " +
         f"gc=${gcMs / 1e3}%.2f s shufR=${shuffleReadBytes / 1e6}%.1f MB " +
-        f"shufW=${shuffleWriteBytes / 1e6}%.1f MB spill=${spillBytes / 1e6}%.1f MB"
+        f"shufW=${shuffleWriteBytes / 1e6}%.1f MB spill=${spillBytes / 1e6}%.1f MB " +
+        f"driver=$driverS%.2f s"
 
     def json: String =
       s"""{"jobs":$jobs,"stages":${stages.size},"tasks":$tasks,""" +
         s""""cpu_s":${cpuNs / 1e9},"gc_s":${gcMs / 1e3},""" +
         s""""shuffle_read_mb":${shuffleReadBytes / 1e6},""" +
-        s""""shuffle_write_mb":${shuffleWriteBytes / 1e6},"spill_mb":${spillBytes / 1e6}}"""
+        s""""shuffle_write_mb":${shuffleWriteBytes / 1e6},"spill_mb":${spillBytes / 1e6},""" +
+        s""""driver_s":$driverS}"""
   }
 
   /** A step's value, wall seconds and cost. */
@@ -89,7 +93,14 @@ object Harness {
   private final class Meter extends SparkListener {
     val jobs = new AtomicInteger
     val stages = new ConcurrentLinkedQueue[StageCost]
-    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    val jobStartMs = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    val jobSpansMs = new ConcurrentLinkedQueue[(Long, Long)]
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet()
+      jobStartMs.put(e.jobId, e.time)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      Option(jobStartMs.remove(e.jobId)).foreach(t => jobSpansMs.add((t, e.time)))
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val si = e.stageInfo
       val m = si.taskMetrics
@@ -101,10 +112,24 @@ object Harness {
     }
   }
 
+  /** Milliseconds of [from, to] that no span covers (the spans may
+    * overlap or reach outside it).
+    */
+  def uncoveredMs(from: Long, to: Long, spans: Seq[(Long, Long)]): Long = {
+    var covered = 0L
+    var reach = from
+    spans.sortBy(_._1).foreach { case (s, e) =>
+      val (lo, hi) = (math.max(s, reach), math.min(e, to))
+      if (hi > lo) { covered += hi - lo; reach = hi }
+    }
+    math.max(0L, to - from - covered)
+  }
+
   /** Runs `body` as one measured step. The listener bus is drained before
     * the step's listener is added and again before its counters are read,
     * so no event of an earlier step is counted and none of this one is
-    * missed.
+    * missed. A job still running when `body` returns (none, for a body
+    * that waits for its actions) covers none of the step.
     */
   def step[A](spark: SparkSession)(body: => A): Step[A] = {
     val sc = spark.sparkContext
@@ -112,11 +137,12 @@ object Harness {
     val meter = new Meter
     sc.addSparkListener(meter)
     try {
-      val t0 = System.nanoTime()
+      val (t0, t0Ms) = (System.nanoTime(), System.currentTimeMillis())
       val value = body
-      val wallS = (System.nanoTime() - t0) / 1e9
+      val (wallS, t1Ms) = ((System.nanoTime() - t0) / 1e9, System.currentTimeMillis())
       Bridge.drainListenerBus(sc)
-      Step(value, wallS, Cost(meter.jobs.get, meter.stages.asScala.toVector))
+      Step(value, wallS, Cost(meter.jobs.get, meter.stages.asScala.toVector,
+        uncoveredMs(t0Ms, t1Ms, meter.jobSpansMs.asScala.toSeq) / 1e3))
     } finally sc.removeSparkListener(meter)
   }
 

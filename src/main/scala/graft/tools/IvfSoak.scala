@@ -30,6 +30,13 @@ object IvfSoak {
           "cast((pmod(hash(id, i), 2000) - 1000) / 1000.0 as float))")
           .as("embedding"))
 
+  /** A hash of the centroids' float bits: two builds with equal hashes
+    * trained the same quantizer, bit for bit (up to hash collisions).
+    */
+  def bitsHash(cents: Array[Array[Float]]): Int =
+    scala.util.hashing.MurmurHash3.orderedHash(
+      cents.map(c => scala.util.hashing.MurmurHash3.arrayHash(c.map(java.lang.Float.floatToRawIntBits))))
+
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(1000000L)
     val batch = args.lift(1).map(_.toLong).getOrElse(250000L)
@@ -49,9 +56,8 @@ object IvfSoak {
     // one pass costs (ivf_train - ivf_init) / 2
     val corpus = vectors(spark, 0, n, 64)
     timed("ivf_init")(Similarity.trainIvfCentroids(corpus, "embedding", k = 256, iters = 0))
-    val cents = timed("ivf_train") {
-      Similarity.trainIvfCentroids(corpus, "embedding", k = 256, iters = 2)
-    }
+    val train = Harness.step(spark)(Similarity.trainIvfCentroids(corpus, "embedding", k = 256, iters = 2))
+    val cents = train.report("ivf-soak", f"n=$n%-9d ivf_train", f"centroids=${bitsHash(train.value)}%08x")
     timed("assign_write") {
       Similarity.writeIvfIndex(corpus, "embedding", prefix, k = 256,
         basePath = Some(base), centroids = Some(cents))

@@ -29,7 +29,8 @@ import org.apache.spark.sql.functions._
   * `reps` timed passes (odd, so the median is a middle element);
   * CacheUtils.releaseAll after every run. Each rep prints its wall, its
   * cost and its stages slower than 0.15 s; each query then prints min
-  * (floor), median, and executor CPU and shuffle write per rep.
+  * (floor), median, and executor CPU, shuffle write and driver-only
+  * seconds (wall that no job covered) per rep.
   */
 object ScaleExperiments {
 
@@ -160,7 +161,8 @@ object ScaleExperiments {
       val (minS, medianS) = (sorted.head, sorted(sorted.size / 2))
       println(f"[scalex] $n%-28s min=$minS%7.2f s  median=$medianS%7.2f s  " +
         f"cpu/rep=${steps.map(_.cost.cpuNs).sum / 1e9 / cfg.reps}%7.2f s  " +
-        f"shufMB/rep=${steps.map(_.cost.shuffleWriteBytes).sum / 1e6 / cfg.reps}%8.1f")
+        f"shufMB/rep=${steps.map(_.cost.shuffleWriteBytes).sum / 1e6 / cfg.reps}%8.1f  " +
+        f"driver/rep=${steps.map(_.cost.driverS).sum / cfg.reps}%6.2f s")
       s""""$n":{"min":$minS,"median":$medianS,""" +
         s""""runs":${steps.map(_.wallS).mkString("[", ",", "]")},""" +
         s""""cost":${steps.map(_.cost.json).mkString("[", ",", "]")}}"""

@@ -174,4 +174,95 @@ class ClassifierSpec extends SparkSpec {
       dim = dim, iters = 25, lr = 5.0, tol = 0.0)
     assert(full.itersRun == 25)
   }
+
+  /** The reference [[Classifier.GradSum]] equals: each term quantized to
+    * scale 12 and added as a `BigDecimal`, per coordinate.
+    */
+  private def referenceSums(terms: Seq[(Int, Double)], n: Int): Seq[java.math.BigDecimal] = {
+    val acc = Array.fill(n)(java.math.BigDecimal.ZERO.setScale(12))
+    terms.foreach { case (i, d) => acc(i) = acc(i).add(Classifier.GradSum.quantize(d)) }
+    acc.toSeq
+  }
+
+  private def gradSums(terms: Seq[(Int, Double)], n: Int): Seq[java.math.BigDecimal] = {
+    val acc = new Classifier.GradSum(n)
+    terms.foreach { case (i, d) => acc.add(i, d) }
+    (0 until n).map(acc.value)
+  }
+
+  test("the fixed-point gradient sum equals the BigDecimal sum on random terms") {
+    val r = new scala.util.Random(901L)
+    val n = 17
+    // classifier-shaped terms (residual in (-1, 1) times a feature weight
+    // in (0, 1]), then doubles across many magnitudes
+    val shaped = Seq.fill(200000)((r.nextInt(n), (r.nextDouble() * 2 - 1) * (1.0 / (1 + r.nextInt(40)))))
+    val wide = Seq.fill(50000)((r.nextInt(n),
+      (r.nextDouble() - 0.5) * math.pow(10, r.nextInt(20) - 16)))
+    val terms = r.shuffle(shaped ++ wide)
+    assert(gradSums(terms, n) == referenceSums(terms, n))
+    // any split into partial sums merges to the same value
+    val parts = terms.grouped(9973).map { g =>
+      val a = new Classifier.GradSum(n); g.foreach { case (i, d) => a.add(i, d) }; a
+    }.toSeq
+    val merged = parts.reduce(_ merge _)
+    assert((0 until n).map(merged.value) == referenceSums(terms, n))
+  }
+
+  test("the fixed-point gradient sum equals the BigDecimal sum on ties, large terms and overflow") {
+    def dec(s: String): Double = new java.math.BigDecimal(s).doubleValue()
+    // exact decimal ties at scale 12 (k.5e-12), both signs, and terms just
+    // inside and outside the fast path's tie margin
+    val ties = for {
+      k <- Seq(0L, 1L, 2L, 7L, 12345L, 999999999L, 123456789012L)
+      frac <- Seq("5", "4995", "5005", "4990", "5010", "49999999", "50000001")
+      sign <- Seq("", "-")
+    } yield dec(s"$sign$k.${frac}e-12")
+    // |d| past the fast bound (|d·1e12| ≥ 2^40), and classifier extremes
+    val large = Seq(1.0, -1.0, 1.0995, 1.1, -1.5, 3.75, 1e6, -9.9e6, 1e12, 1e300, -1e300,
+      Double.MinPositiveValue, -0.0, 0.0)
+    val terms = (ties ++ large).zipWithIndex.map { case (d, j) => (j % 5, d) }
+    assert(gradSums(terms, 5) == referenceSums(terms, 5))
+    // a forced long overflow spills into the side sum, in add and in merge
+    val acc = new Classifier.GradSum(3)
+    acc.units(0) = Long.MaxValue - 5
+    acc.units(1) = Long.MinValue + 5
+    Seq(1.0, 0.5, 2e-12, 1.0).foreach(acc.add(0, _))
+    Seq(-1.0, -0.5, -2e-12).foreach(acc.add(1, _))
+    val other = new Classifier.GradSum(3)
+    other.units(0) = Long.MaxValue
+    other.units(2) = 7
+    acc.merge(other)
+    def units(u: Long) = java.math.BigDecimal.valueOf(u, 12)
+    assert(acc.value(0) == units(Long.MaxValue - 5).add(units(Long.MaxValue))
+      .add(Classifier.GradSum.quantize(1.0)).add(Classifier.GradSum.quantize(0.5))
+      .add(units(2)).add(Classifier.GradSum.quantize(1.0)))
+    assert(acc.value(1) == units(Long.MinValue + 5).add(Classifier.GradSum.quantize(-1.0))
+      .add(Classifier.GradSum.quantize(-0.5)).add(units(-2)))
+    assert(acc.value(2) == units(7))
+    // ten million intercept terms of 1.0 pass 2^63 units, as at ~9 M docs
+    val bias = new Classifier.GradSum(1)
+    var i = 0
+    while (i < 10000000) { bias.add(0, if (i % 2 == 0) 1.0 else 0.999999999999); i += 1 }
+    assert(bias.value(0) == new java.math.BigDecimal("9999999.999995000000"))
+    // a NaN term fails as the decimal cast does
+    intercept[NumberFormatException](new Classifier.GradSum(1).add(0, Double.NaN))
+    intercept[NumberFormatException](Classifier.GradSum.quantize(Double.NaN))
+  }
+
+  test("a model is bit-identical through the driver loop and the treeAggregate loop") {
+    val r = new scala.util.Random(7L)
+    val vocab = Seq.tabulate(300)(i => s"w$i")
+    val docs = (0 until 400).map { i =>
+      val label = i % 2
+      val n = 3 + r.nextInt(30)
+      val text = Seq.fill(n)(vocab(r.nextInt(if (label == 1) 300 else 200))).mkString(" ")
+      (i.toLong, text, label)
+    }.toDF("doc_id", "text", "label")
+    val local = Classifier.train(docs, "doc_id", "text", "label", dim = 256, iters = 8, lr = 2.0)
+    val dist = Classifier.train(docs.repartition(3), "doc_id", "text", "label",
+      dim = 256, iters = 8, lr = 2.0, driverLoopMaxDocs = 0)
+    assert(local.itersRun == 8 && dist.itersRun == 8)
+    assert(local.weights.toSeq == dist.weights.toSeq)
+    assert(local.weights.count(_ != 0.0) > 150)
+  }
 }

@@ -280,19 +280,66 @@ class CodecsSpec extends AnyFunSuite {
   }
 
   test("inflateToEnd equals InflaterInputStream read to the end, raw and zlib, on damaged input") {
-    for (p <- inflatePayloads; zlib <- Seq(false, true); (tag, b) <- damaged(zipDeflate(p, zlib));
-         bufSize <- Seq(16 * 1024, 64 * 1024)) {
-      val ours = Codecs.inflateToEnd(b, 0, b.length, zlib, bufSize, outHint = 64)
+    for (p <- inflatePayloads; zlib <- Seq(false, true); (tag, b) <- damaged(zipDeflate(p, zlib))) {
+      val ours = Codecs.inflateToEnd(b, 0, b.length, zlib)
       assert(ours.map { case (o, n) => (o.toSeq, n) } == jdkToEnd(b, zlib),
-        s"len=${p.length} zlib=$zlib $tag buf=$bufSize")
+        s"len=${p.length} zlib=$zlib $tag")
     }
+  }
+
+  /** inflateToEnd as it was before its output was sized from the input:
+    * a fresh 64 KiB window copied into a 64 KiB `ByteArrayOutputStream`.
+    */
+  private def windowed64k(b: Array[Byte], off: Int, len: Int,
+      zlib: Boolean): Option[(Seq[Byte], Int)] = {
+    val inf = new java.util.zip.Inflater(!zlib)
+    try {
+      inf.setInput(b, off, len)
+      val out = new java.io.ByteArrayOutputStream(64 * 1024)
+      val buf = new Array[Byte](64 * 1024)
+      while (!inf.finished()) {
+        val n = inf.inflate(buf)
+        if (n > 0) out.write(buf, 0, n)
+        else if (!inf.finished() && (inf.needsInput() || inf.needsDictionary()))
+          return None
+      }
+      Some((out.toByteArray.toSeq, len - inf.getRemaining))
+    } catch {
+      case _: java.util.zip.DataFormatException => None
+    } finally inf.end()
+  }
+
+  test("inflateToEnd equals the 64 KiB-window form for outputs across its capacity steps") {
+    // inflated sizes from empty through the 4 KiB floor, the 64 KiB cap
+    // and several doublings past it, text-like and high-ratio, each
+    // framed at an offset with trailing bytes after the stream
+    val r = new scala.util.Random(901L)
+    val sizes = Seq(0, 1, 300, 4095, 4096, 4097, 16384, 65535, 65536, 65537, 200000, 1 << 20)
+    for (size <- sizes; zlib <- Seq(false, true);
+         p <- Seq(Array.fill(size)("abcdefgh "(r.nextInt(9)).toByte), new Array[Byte](size))) {
+      val c = zipDeflate(p, zlib)
+      val framed = Array[Byte](7, 7) ++ c ++ Array.fill[Byte](9)(1)
+      val ours = Codecs.inflateToEnd(framed, 2, framed.length - 2, zlib)
+      assert(ours.map { case (o, n) => (o.toSeq, n) } == windowed64k(framed, 2, framed.length - 2, zlib),
+        s"size=$size zlib=$zlib")
+      assert(ours.exists { case (o, n) => o.sameElements(p) && n == c.length }, s"size=$size")
+      // truncated, and cut one byte short: no stream end, so no output
+      for (cut <- Seq(c.length / 2, c.length - 1) if cut >= 0) {
+        assert(Codecs.inflateToEnd(c, 0, cut, zlib).isEmpty, s"size=$size cut=$cut")
+        assert(windowed64k(c, 0, cut, zlib).isEmpty)
+      }
+    }
+    // a corrupt block header (reserved block type 3) fails both forms
+    val bad = Array[Byte](0x07, 0, 0)
+    assert(Codecs.inflateToEnd(bad, 0, bad.length, zlib = false).isEmpty)
+    assert(windowed64k(bad, 0, bad.length, zlib = false).isEmpty)
   }
 
   test("a zlib stream that needs a preset dictionary fails both inflates instead of spinning") {
     val c = zipDeflate(payload, zlib = true, dict = Some("quick brown".getBytes("UTF-8")))
     assert(((c(1) & 0xFF) & 0x20) != 0, "FDICT set")
     assert(Codecs.inflateExact(c, 0, c.length, payload.length, zlib = true).isEmpty)
-    assert(Codecs.inflateToEnd(c, 0, c.length, zlib = true, 16 * 1024, 64).isEmpty)
+    assert(Codecs.inflateToEnd(c, 0, c.length, zlib = true).isEmpty)
     assert(jdkToEnd(c, zlib = true).isEmpty)
   }
 
@@ -300,7 +347,7 @@ class CodecsSpec extends AnyFunSuite {
     // one member as Codecs.gzip writes it: a 10-byte header, the raw
     // deflate stream, then CRC32 and ISIZE (Warc's member walk)
     def ours(m: Array[Byte]): Option[Seq[Byte]] =
-      Codecs.inflateToEnd(m, 10, m.length - 10, zlib = false, 64 * 1024, 64 * 1024)
+      Codecs.inflateToEnd(m, 10, m.length - 10, zlib = false)
         .filter { case (out, n) =>
           val crc = new java.util.zip.CRC32(); crc.update(out)
           10 + n + 8 <= m.length && Bytes.le32u(m, 10 + n) == crc.getValue &&

@@ -79,6 +79,29 @@ class SimilaritySpec extends SparkSpec {
     assert(cells.size > 1, "separable corpus should occupy several cells")
   }
 
+  test("a Lloyd pass assigns each vector once, below the explode, with the same means") {
+    val emb = Tables.embeddings(spark, sfDir)
+    val cents = Similarity.trainIvfCentroids(emb, "embedding", k = 8, iters = 0)
+    val pass = Similarity.lloydMeans(emb, "embedding", cents)
+    val plan = pass.queryExecution.executedPlan
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def assigns(p: org.apache.spark.sql.execution.SparkPlan) =
+      p.expressions.exists(_.exists(_.isInstanceOf[graft.functions.NearestCell]))
+    val gen = Aqe.collect(plan) { case g: org.apache.spark.sql.execution.GenerateExec => g }
+    assert(gen.size == 1, plan)
+    assert(gen.head.child.exists(assigns), plan)
+    assert(Aqe.collect(plan) { case p if assigns(p) => p }.size == 1, plan)
+    // the form that selected the cell next to the explode
+    val nextToExplode = emb
+      .select(graft.functions.IvfCells.nearest_cell(col("embedding"),
+        cents.map(_.toSeq).toSeq).as("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
+      .groupBy("cell", "pos")
+      .agg((sum(col("v")) / count(lit(1))).as("mean"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2))).sorted.toSeq
+    assert(rows(pass) == rows(nextToExplode))
+  }
+
   test("IVF search with nprobe = k equals brute force exactly") {
     val emb = Tables.embeddings(spark, sfDir)
     val centroids = Similarity.trainIvfCentroids(emb, "embedding", k = 4, iters = 2)

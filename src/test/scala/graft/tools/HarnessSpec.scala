@@ -86,6 +86,29 @@ class HarnessSpec extends SparkSpec {
     }
   }
 
+  test("uncoveredMs counts the part of a window no span covers, overlaps once") {
+    assert(Harness.uncoveredMs(0, 100, Nil) == 100)
+    assert(Harness.uncoveredMs(0, 100, Seq((10L, 30L), (20L, 40L), (60L, 70L))) == 60)
+    assert(Harness.uncoveredMs(0, 100, Seq((60L, 70L), (-50L, 10L), (90L, 500L))) == 70)
+    assert(Harness.uncoveredMs(0, 100, Seq((10L, 90L), (20L, 30L))) == 20)
+    assert(Harness.uncoveredMs(0, 100, Seq((-5L, 200L))) == 0)
+    assert(Harness.uncoveredMs(50, 100, Seq((0L, 40L), (120L, 130L))) == 50)
+  }
+
+  test("a step's driver seconds are its wall time outside its jobs") {
+    val sc = spark.sparkContext
+    val idle = Harness.step(spark)(Thread.sleep(300))
+    assert(idle.cost.driverS >= 0.29 && idle.cost.driverS <= idle.wallS + 0.01, idle)
+    val mixed = Harness.step(spark) {
+      Thread.sleep(200)
+      sc.parallelize(1 to 4, 4).map { x => Thread.sleep(400); x }.count()
+    }
+    assert(mixed.cost.jobs == 1)
+    assert(mixed.cost.driverS >= 0.19 && mixed.cost.driverS <= mixed.wallS - 0.39, mixed)
+    assert(mixed.cost.columns.endsWith(f"driver=${mixed.cost.driverS}%.2f s"))
+    assert(mixed.cost.json.endsWith(s""""driver_s":${mixed.cost.driverS}}"""))
+  }
+
   test("materialize writes once and rewrites a dir without _SUCCESS") {
     val dir = Files.createTempDirectory("graft-harness").resolve("data").toString
     try {
@@ -123,7 +146,8 @@ class HarnessSpec extends SparkSpec {
       val doc = ScaleExperiments.run(spark, cfg)
       val par = spark.sparkContext.defaultParallelism
       Seq(s""""sf":"$sfDir"""", """"cpus":""", s""""parallelism":$par,""", """"reps":1,""",
-        """"warmup":1,""", """"queries":{"q_filter":{"min":""", """"cost":[{"jobs":""")
+        """"warmup":1,""", """"queries":{"q_filter":{"min":""", """"cost":[{"jobs":""",
+        """"driver_s":""")
         .foreach(f => assert(doc.contains(f), f))
       // an existing artifact is never overwritten
       assert(Files.readString(path) == "earlier run")
