@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.types.StringType
 
-import graft.functions.{CosineSimilarity, DotProduct, MinHashSignature}
+import graft.functions._
 
 /** Spark extensions entry point: registers the engine's custom Catalyst
   * expressions for any session, including spark-submit deployments:
@@ -34,73 +36,47 @@ object GraftExtensions {
 
   /** Name → expression builder for every custom SQL function. */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "cosine_similarity" -> ((exprs: Seq[Expression]) =>
-      CosineSimilarity(exprs(0), exprs(1))),
-    "audio_fingerprint" -> ((exprs: Seq[Expression]) => {
-      if (exprs.length != 1)
-        throw new IllegalArgumentException(
-          s"audio_fingerprint expects (payload), got ${exprs.length} arguments")
-      graft.functions.AudioFingerprintExpr(exprs(0))
-    }),
-    "dot_product" -> ((exprs: Seq[Expression]) =>
-      DotProduct(exprs(0), exprs(1))),
-    "minhash_signature" -> ((exprs: Seq[Expression]) => {
-      if (exprs.length != 2)
-        throw new IllegalArgumentException(
-          s"minhash_signature expects (shingles, k), got ${exprs.length} arguments")
-      if (!exprs(1).foldable)
-        throw new IllegalArgumentException(
-          "minhash_signature: k must be an integer literal")
-      val k = exprs(1).eval(null) match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"minhash_signature: k must be an integer literal, got $other")
-      }
-      MinHashSignature(exprs(0), k)
-    }),
-    "minhash_word_shingles" -> ((exprs: Seq[Expression]) => {
-      val (n, k) = twoIntLiterals("minhash_word_shingles", exprs)
-      graft.functions.MinHashWordShingles(exprs(0), n, k)
-    }),
-    "minhash_char_shingles" -> ((exprs: Seq[Expression]) => {
-      val (c, k) = twoIntLiterals("minhash_char_shingles", exprs)
-      graft.functions.MinHashCharShingles(exprs(0), c, k)
-    }),
+    "cosine_similarity" -> { exprs =>
+      val a = Args("cosine_similarity", "a, b", exprs)
+      CosineSimilarity(a(0), a(1))
+    },
+    "audio_fingerprint" -> { exprs =>
+      AudioFingerprintExpr(Args("audio_fingerprint", "payload", exprs)(0))
+    },
+    "dot_product" -> { exprs =>
+      val a = Args("dot_product", "a, b", exprs)
+      DotProduct(a(0), a(1))
+    },
+    "minhash_signature" -> { exprs =>
+      val a = Args("minhash_signature", "shingles, k", exprs)
+      MinHashSignature(a(0), a.int(1))
+    },
+    // both size parameters are baked into the generated kernel call
+    "minhash_word_shingles" -> { exprs =>
+      val a = Args("minhash_word_shingles", "text, size, k", exprs)
+      MinHashWordShingles(a(0), a.int(1), a.int(2))
+    },
+    "minhash_char_shingles" -> { exprs =>
+      val a = Args("minhash_char_shingles", "text, size, k", exprs)
+      MinHashCharShingles(a(0), a.int(1), a.int(2))
+    },
     // stopword-vote language ID over the engine's built-in inventories;
     // returns struct<lang, score> (SELECT stopword_votes(text).lang ...)
-    "stopword_votes" -> ((exprs: Seq[Expression]) => {
-      if (exprs.length != 1)
-        throw new IllegalArgumentException(
-          s"stopword_votes expects (text), got ${exprs.length} arguments")
-      graft.functions.StopwordVotesExpr(exprs(0),
+    "stopword_votes" -> { exprs =>
+      StopwordVotesExpr(Args("stopword_votes", "text", exprs)(0),
         graft.ext.TextAnalysis.stopwords.toSeq)
-    }),
-    "subword_count" -> ((exprs: Seq[Expression]) => {
-      if (exprs.length != 2)
-        throw new IllegalArgumentException(
-          s"subword_count expects (text, divisor), got ${exprs.length} arguments")
-      if (!exprs(1).foldable)
-        throw new IllegalArgumentException(
-          "subword_count: divisor must be an integer literal")
-      val d = exprs(1).eval(null) match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"subword_count: divisor must be an integer literal, got $other")
-      }
-      if (d < 1)
-        throw new IllegalArgumentException(
-          s"subword_count: divisor must be >= 1, got $d")
-      graft.functions.SubwordCount(exprs(0), d)
-    }),
+    },
+    "subword_count" -> { exprs =>
+      val a = Args("subword_count", "text, divisor", exprs)
+      SubwordCount(a(0), a.int(1)) // SubwordCount requires divisor >= 1
+    },
     // Spark's internal bloom expressions (the machinery behind runtime
     // join filters), surfaced for user queries: a mergeable set sketch
     // built in one distributed agg + a map-only membership probe. The
     // probe's sketch argument must be a literal or scalar subquery
     // (enforced by the expression itself) — the plan-shape guarantee that
     // the sketch is broadcast, never joined.
-    "bloom_filter_agg" -> ((exprs: Seq[Expression]) => exprs match {
+    "bloom_filter_agg" -> (exprs => exprs match {
       case Seq(child) => new BloomFilterAggregate(child)
       case Seq(child, items) => new BloomFilterAggregate(child, items)
       case Seq(child, items, bits) => new BloomFilterAggregate(child, items, bits)
@@ -108,69 +84,61 @@ object GraftExtensions {
         s"bloom_filter_agg expects (hashed[, estimatedItems[, numBits]]), " +
           s"got ${exprs.length} arguments")
     }),
-    "might_contain" -> ((exprs: Seq[Expression]) => {
-      if (exprs.length != 2)
-        throw new IllegalArgumentException(
-          s"might_contain expects (sketch, hashed), got ${exprs.length} arguments")
-      // graft's BloomProbe, not Spark's BloomFilterMightContain: identical
-      // semantics, but codegen-clean on constant-folded negative probes
-      // (Spark's (Long)-literal cast trips Janino → interpreter fallback)
-      graft.functions.BloomProbe(exprs(0), exprs(1))
-    }),
-    "stopword_count" -> ((exprs: Seq[Expression]) => {
-      if (exprs.length != 2 || !exprs(1).foldable)
-        throw new IllegalArgumentException(
-          "stopword_count expects (text, array-of-strings literal)")
-      val words = exprs(1).eval(null) match {
-        case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-          val elems = a.toObjectArray(org.apache.spark.sql.types.StringType)
-          if (elems.exists(_ == null))
-            throw new IllegalArgumentException(
-              "stopword_count: words array must not contain NULL")
-          elems.map(_.toString).toSeq
-        case other => throw new IllegalArgumentException(
-          s"stopword_count: words must be an array literal, got $other")
-      }
-      graft.functions.StopwordCount(exprs(0), words)
-    }),
-    "multi_match_count" -> ((exprs: Seq[Expression]) => {
-      if (exprs.length != 2 || !exprs(1).foldable)
-        throw new IllegalArgumentException(
-          "multi_match_count expects (text, array-of-strings literal)")
-      val terms = exprs(1).eval(null) match {
-        case a: org.apache.spark.sql.catalyst.util.ArrayData =>
-          val elems = a.toObjectArray(org.apache.spark.sql.types.StringType)
-          if (elems.exists(_ == null))
-            throw new IllegalArgumentException(
-              "multi_match_count: terms array must not contain NULL")
-          if (elems.exists(_.toString.isEmpty))
-            throw new IllegalArgumentException(
-              "multi_match_count: terms array must not contain empty strings")
-          elems.map(_.toString).toSeq
-        case other => throw new IllegalArgumentException(
-          s"multi_match_count: terms must be an array literal, got $other")
-      }
-      graft.functions.MultiMatchCount(exprs(0), terms)
-    }))
+    // graft's BloomProbe, not Spark's BloomFilterMightContain: identical
+    // semantics, but codegen-clean on constant-folded negative probes
+    // (Spark's (Long)-literal cast trips Janino → interpreter fallback)
+    "might_contain" -> { exprs =>
+      val a = Args("might_contain", "sketch, hashed", exprs)
+      BloomProbe(a(0), a(1))
+    },
+    "stopword_count" -> { exprs =>
+      val a = Args("stopword_count", "text, words", exprs)
+      StopwordCount(a(0), a.strings(1))
+    },
+    "multi_match_count" -> { exprs =>
+      val a = Args("multi_match_count", "text, terms", exprs)
+      MultiMatchCount(a(0), a.strings(1, nonEmpty = true))
+    })
 
-  /** (text, n, k) argument shape shared by the fused shingle functions:
-    * both size parameters must be integer literals (they are baked into
-    * the generated kernel call).
+  /** The arguments of one call of `name(shape)`, `shape` naming them
+    * (`"text, size, k"`): checks the arity and reads literal arguments.
+    * Every error names the function and what it expected.
     */
-  private def twoIntLiterals(name: String, exprs: Seq[Expression]): (Int, Int) = {
-    if (exprs.length != 3)
+  private final case class Args(name: String, shape: String, exprs: Seq[Expression]) {
+    private val params = shape.split(", ")
+    if (exprs.length != params.length)
       throw new IllegalArgumentException(
-        s"$name expects (text, size, k), got ${exprs.length} arguments")
-    def lit(e: Expression, what: String): Int = {
-      if (!e.foldable)
-        throw new IllegalArgumentException(s"$name: $what must be an integer literal")
-      e.eval(null) match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"$name: $what must be an integer literal, got $other")
-      }
+        s"$name expects ($shape), got ${exprs.length} arguments")
+
+    def apply(i: Int): Expression = exprs(i)
+
+    private def fail(msg: String) = throw new IllegalArgumentException(s"$name: $msg")
+
+    private def literal(i: Int, what: String): Any = {
+      if (!exprs(i).foldable) fail(s"${params(i)} must be $what")
+      exprs(i).eval(null)
     }
-    (lit(exprs(1), "size"), lit(exprs(2), "k"))
+
+    /** An integer literal (an INT, or a BIGINT taken as INT). */
+    def int(i: Int): Int = literal(i, "an integer literal") match {
+      case v: Int => v
+      case v: Long => v.toInt
+      case other => fail(s"${params(i)} must be an integer literal, got $other")
+    }
+
+    /** An array-of-strings literal without NULL (and without empty strings
+      * when `nonEmpty`).
+      */
+    def strings(i: Int, nonEmpty: Boolean = false): Seq[String] =
+      literal(i, "an array-of-strings literal") match {
+        case a: ArrayData =>
+          val elems = a.toObjectArray(StringType)
+          if (elems.contains(null)) fail(s"${params(i)} array must not contain NULL")
+          val out = elems.map(_.toString).toSeq
+          if (nonEmpty && out.exists(_.isEmpty))
+            fail(s"${params(i)} array must not contain empty strings")
+          out
+        case other => fail(s"${params(i)} must be an array-of-strings literal, got $other")
+      }
   }
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -60,35 +60,15 @@ object Graph {
     // never observes this call's data-derived width.
     val caller = edges.sparkSession
     LoopSessions.withLoopSession(caller, "graph.pagerank") { clone =>
-    val e = org.apache.spark.sql.graftbridge.Bridge.rebind(clone, edges)
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // N is a MODEL SCALAR (like IVF centroid counts), not a data path
-    val n = nodes.count()
+    val (fan, (nodes, n)) = edgeFan(caller, clone, edges) { e =>
+      val nodes = e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node")))
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // N is a MODEL SCALAR (like IVF centroid counts), not a data path
+      (nodes, nodes.count())
+    }
     val base = scale * (100L - damp) / 100L / n
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // one edge-side join, reused every round: (src, dst, deg)
-    val fan = e.join(outDeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    val m = fan.count()
-    e.unpersist(blocking = false)
-    // Iteration shuffle width rides the EDGE COUNT (one reducer per ~1 M
-    // fan rows, floor 1): `iterations` rounds × 3 shuffle stages at the
-    // session width is pure task-scheduling overhead on small graphs,
-    // while a large graph keeps — and a huge one grows — its
-    // parallelism. Results are exact integers, partitioning-invariant.
-    // The width is set on the CLONE only; all rounds materialize on the
-    // clone (ranks.count below), so the width governs the loop's stages
-    // without ever touching the caller's session conf.
-    val callerParts = scala.util.Try(
-      caller.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(caller.sparkContext.defaultParallelism)
-    val loopWidth = math.max(1L,
-      math.min(callerParts.toLong * 4, m / 1000000L + 1L)).toString
-    clone.conf.set("spark.sql.shuffle.partitions", loopWidth)
     var ranks = nodes.select(col("node"), lit(scale / n).as("rank"))
     for (_ <- 0 until iterations) {
       val contrib = fan.join(ranks, fan("src") === ranks("node"))
@@ -108,6 +88,37 @@ object Graph {
     fan.unpersist(blocking = false)
     org.apache.spark.sql.graftbridge.Bridge.rebind(caller, ranks)
     } // lease ends: ranks are checkpoint-materialized, conf may be retuned
+  }
+
+  /** The edge fan both diffusion loops join every round: `edges` rebound
+    * to the loop session `clone`, cast to long, joined with each source's
+    * out-degree — (src, dst, deg) — and persisted. `useEdges` sees the
+    * persisted edges before the fan is counted and they are released.
+    *
+    * Then the loop's shuffle width is set on the clone from the fan's row
+    * count: one reducer per ~1 M rows, floor 1, at most 4× the caller's
+    * width. `iterations` rounds × 3 shuffle stages at the session width
+    * is pure task-scheduling overhead on small graphs, while a large
+    * graph keeps — and a huge one grows — its parallelism. Both loops'
+    * arithmetic is exact integers, so results are width-invariant. The
+    * width never touches the caller's session conf.
+    */
+  private def edgeFan[A](caller: SparkSession, clone: SparkSession, edges: DataFrame)(
+      useEdges: DataFrame => A): (DataFrame, A) = {
+    val e = org.apache.spark.sql.graftbridge.Bridge.rebind(clone, edges)
+      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val used = useEdges(e)
+    val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+    val fan = e.join(outDeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    val m = fan.count()
+    e.unpersist(blocking = false)
+    val callerParts = scala.util.Try(
+      caller.conf.get("spark.sql.shuffle.partitions").toInt)
+      .getOrElse(caller.sparkContext.defaultParallelism)
+    val loopWidth = math.max(1L, math.min(callerParts.toLong * 4, m / 1000000L + 1L))
+    clone.conf.set("spark.sql.shuffle.partitions", loopWidth.toString)
+    (fan, used)
   }
 
   /** Semi-supervised label propagation by FIXED-POINT mass diffusion —
@@ -147,28 +158,16 @@ object Graph {
     // conf-isolated leased clone, exactly as in [[pageRank]]
     val caller = edges.sparkSession
     LoopSessions.withLoopSession(caller, "graph.labelspread") { clone =>
-    val e = org.apache.spark.sql.graftbridge.Bridge.rebind(clone, edges)
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val fan = e.join(outDeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    val mEdges = fan.count()
-    e.unpersist(blocking = false)
     val seedsC = org.apache.spark.sql.graftbridge.Bridge.rebind(clone, seeds)
+    // cached before edgeFan sets the loop width, so the seeds' own plan
+    // keeps the clone's width
     val seedMass = seedsC
       .select(col("node").cast("long").as("node"), col("label").cast("long").as("label"),
         lit(scale * keep / 100L).as("m"))
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val (fan, _) = edgeFan(caller, clone, edges)(_ => ())
     var mass = seedsC.select(col("node").cast("long").as("node"),
       col("label").cast("long").as("label"), lit(scale).as("m"))
-    // edge-count-derived loop width, exactly as in [[pageRank]]: the mass
-    // arithmetic is exact integers, so the result is width-invariant
-    val callerParts = scala.util.Try(
-      caller.conf.get("spark.sql.shuffle.partitions").toInt)
-      .getOrElse(caller.sparkContext.defaultParallelism)
-    val loopWidth = math.max(1L,
-      math.min(callerParts.toLong * 4, mEdges / 1000000L + 1L)).toString
-    clone.conf.set("spark.sql.shuffle.partitions", loopWidth)
     for (_ <- 0 until iterations) {
       val inflow = fan.join(mass, fan("src") === mass("node"))
         .select(col("dst").as("node"), col("label"), expr("m div deg").as("c"))

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -57,6 +57,19 @@ object Multimodal {
       format: String,
       checksum: Long)
 
+  /** `f` over every (media_id, payload) row, one partition at a time —
+    * the batch shape of every stage below. A null payload reaches `f` as
+    * empty bytes.
+    */
+  private def perPayload[T: Encoder](media: DataFrame)(
+      f: (Long, Array[Byte]) => IterableOnce[T]): Dataset[T] = {
+    import media.sparkSession.implicits._
+    media.select("media_id", "payload").as[(Long, Array[Byte])]
+      .mapPartitions(_.flatMap { case (id, p) =>
+        f(id, if (p == null) Array.emptyByteArray else p)
+      })
+  }
+
   /** Decode stage: mapPartitions over the binary payloads. Batch shape:
     * one partition = one decoder session (a real codec would amortize
     * library init across the partition exactly here).
@@ -64,25 +77,20 @@ object Multimodal {
   def decodeImages(media: DataFrame): Dataset[DecodedMeta] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        // per-partition decoder init would go here
-        batch.map { case (id, payload) =>
-          val bytes = if (payload == null) Array.emptyByteArray else payload
-          Png.decodeAny(bytes) match {
-            // REAL pixel decode (own PNG codec, JDK ImageIO for the
-            // rest): checksum is the pixel-layer content identity,
-            // stable across re-encodes
-            case Some(img) =>
-              val fmt = ImageHeaders.decode(bytes).map(_._3).getOrElse("img")
-              DecodedMeta(id, bytes.length.toLong, img.width, img.height,
-                fmt, Png.pixelChecksum(img))
-            case None =>
-              val (w, h, fmt, sum) = StubDecoders.decodeImageMeta(bytes)
-              DecodedMeta(id, bytes.length.toLong, w, h, fmt, sum)
-          }
-        }
-      }
+    perPayload(media) { (id, bytes) =>
+      Some(Png.decodeAny(bytes) match {
+        // REAL pixel decode (own PNG codec, JDK ImageIO for the rest):
+        // checksum is the pixel-layer content identity, stable across
+        // re-encodes
+        case Some(img) =>
+          val fmt = ImageHeaders.decode(bytes).map(_._3).getOrElse("img")
+          DecodedMeta(id, bytes.length.toLong, img.width, img.height,
+            fmt, Png.pixelChecksum(img))
+        case None =>
+          val (w, h, fmt, sum) = StubDecoders.decodeImageMeta(bytes)
+          DecodedMeta(id, bytes.length.toLong, w, h, fmt, sum)
+      })
+    }
   }
 
   final case class DecodedAudioMeta(
@@ -102,14 +110,10 @@ object Multimodal {
   def decodeAudio(media: DataFrame): Dataset[DecodedAudioMeta] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, payload) =>
-          val bytes = if (payload == null) Array.emptyByteArray else payload
-          val (sr, ch, bits, dur, fmt, sum) = StubDecoders.decodeAudioMeta(bytes)
-          DecodedAudioMeta(id, bytes.length.toLong, sr, ch, bits, dur, fmt, sum)
-        }
-      }
+    perPayload(media) { (id, bytes) =>
+      val (sr, ch, bits, dur, fmt, sum) = StubDecoders.decodeAudioMeta(bytes)
+      Some(DecodedAudioMeta(id, bytes.length.toLong, sr, ch, bits, dur, fmt, sum))
+    }
   }
 
   final case class AudioSampleStats(
@@ -130,21 +134,17 @@ object Multimodal {
   def audioSampleStats(media: DataFrame): Dataset[AudioSampleStats] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.flatMap { case (id, payload) =>
-          val bytes = if (payload == null) Array.emptyByteArray else payload
-          // FLAC payloads (fLaC magic) go through the pure-JVM codec arm;
-          // everything else through the WAV/PCM family decoder
-          val stats =
-            if (bytes.length >= 4 && bytes(0) == 'f' && bytes(1) == 'L' &&
-              bytes(2) == 'a' && bytes(3) == 'C') flacStats(bytes)
-            else AudioHeaders.pcm(bytes)
-          stats.map { case (r, ch, bits, n, sum, sq) =>
-            AudioSampleStats(id, r, ch, bits, n, sum, sq)
-          }
-        }
+    perPayload(media) { (id, bytes) =>
+      // FLAC payloads (fLaC magic) go through the pure-JVM codec arm;
+      // everything else through the WAV/PCM family decoder
+      val stats =
+        if (bytes.length >= 4 && bytes(0) == 'f' && bytes(1) == 'L' &&
+          bytes(2) == 'a' && bytes(3) == 'C') flacStats(bytes)
+        else AudioHeaders.pcm(bytes)
+      stats.map { case (r, ch, bits, n, sum, sq) =>
+        AudioSampleStats(id, r, ch, bits, n, sum, sq)
       }
+    }
   }
 
   /** FLAC sample stats with the same 16-bit quantization discipline as
@@ -182,23 +182,16 @@ object Multimodal {
     require(width > 0 && height > 0, s"target dims must be positive: ${width}x$height")
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        // per-partition resizer init would go here
-        batch.map { case (id, payload) =>
-          val bytes = if (payload == null) Array.emptyByteArray else payload
-          Png.decodeAny(bytes) match {
-            // REAL resize: deterministic box-average downscale (nearest
-            // on upscale) re-encoded as PNG by the pure-JVM codec
-            case Some(img) =>
-              ResizedImage(id, width, height,
-                Png.encode(Png.resize(img, width, height)))
-            case None =>
-              ResizedImage(id, width, height,
-                StubDecoders.resizePayload(bytes, width, height))
-          }
-        }
-      }
+    perPayload(media) { (id, bytes) =>
+      Some(Png.decodeAny(bytes) match {
+        // REAL resize: deterministic box-average downscale (nearest on
+        // upscale) re-encoded as PNG by the pure-JVM codec
+        case Some(img) =>
+          ResizedImage(id, width, height, Png.encode(Png.resize(img, width, height)))
+        case None =>
+          ResizedImage(id, width, height, StubDecoders.resizePayload(bytes, width, height))
+      })
+    }
   }
 
   /** Feature-extraction stage: payload → dense `Array[Float]` embedding —
@@ -212,22 +205,16 @@ object Multimodal {
     require(dim > 0, s"dim must be positive: $dim")
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        // per-partition encoder init would go here
-        batch.map { case (id, payload) =>
-          val bytes = if (payload == null) Array.emptyByteArray else payload
-          val emb = Png.decodeAny(bytes) match {
-            // REAL pixel features: channel histograms — re-encodes of
-            // the same raster embed identically (cosine 1), which the
-            // content-hash stub cannot do
-            case Some(img) => Png.features(img, dim)
-            case None      => StubDecoders.embedPayload(bytes, dim)
-          }
-          (id, emb)
-        }
+    perPayload(media) { (id, bytes) =>
+      val emb = Png.decodeAny(bytes) match {
+        // REAL pixel features: channel histograms — re-encodes of the
+        // same raster embed identically (cosine 1), which the
+        // content-hash stub cannot do
+        case Some(img) => Png.features(img, dim)
+        case None      => StubDecoders.embedPayload(bytes, dim)
       }
-      .toDF("media_id", "embedding")
+      Some((id, emb))
+    }.toDF("media_id", "embedding")
   }
 
   final case class MediaFingerprint(
@@ -253,21 +240,16 @@ object Multimodal {
   def perceptualHashes(media: DataFrame, rotInvariant: Boolean): Dataset[MediaFingerprint] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        // per-partition decoder init would go here
-        batch.map { case (id, payload) =>
-          val bytes = if (payload == null) Array.emptyByteArray else payload
-          val ph = Png.decodeAny(bytes) match {
-            // classic aHash over REAL 8×8 downscaled grayscale pixels —
-            // invariant to re-encoding, robust to small pixel edits
-            case Some(img) =>
-              if (rotInvariant) Png.aHashCanonical(img) else Png.aHash(img)
-            case None => StubDecoders.perceptualHash(bytes)
-          }
-          MediaFingerprint(id, bytes.length.toLong, ph)
-        }
+    perPayload(media) { (id, bytes) =>
+      val ph = Png.decodeAny(bytes) match {
+        // classic aHash over REAL 8×8 downscaled grayscale pixels —
+        // invariant to re-encoding, robust to small pixel edits
+        case Some(img) =>
+          if (rotInvariant) Png.aHashCanonical(img) else Png.aHash(img)
+        case None => StubDecoders.perceptualHash(bytes)
       }
+      Some(MediaFingerprint(id, bytes.length.toLong, ph))
+    }
   }
 
   /** Perceptual near-dup image pairs: aHash fingerprints blocked and
@@ -310,18 +292,13 @@ object Multimodal {
       nBlocks: Int = 0, maxResidentSubsets: Int = 0): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    val orbits = media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, payload) =>
-          val bytes = if (payload == null) Array.emptyByteArray else payload
-          val orbit = Png.decodeAny(bytes) match {
-            case Some(img) => Png.aHashD4(img)
-            case None => Array(StubDecoders.perceptualHash(bytes))
-          }
-          (id, orbit)
-        }
+    val orbits = perPayload(media) { (id, bytes) =>
+      val orbit = Png.decodeAny(bytes) match {
+        case Some(img) => Png.aHashD4(img)
+        case None => Array(StubDecoders.perceptualHash(bytes))
       }
-      .toDF("media_id", "orbit")
+      Some((id, orbit))
+    }.toDF("media_id", "orbit")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pairs = orientedPairsFromOrbits(orbits, maxHamming, nBlocks,
       maxResidentSubsets)
@@ -419,15 +396,10 @@ object Multimodal {
   def audioFingerprints(media: DataFrame): Dataset[MediaFingerprint] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.map { case (id, payload) =>
-          val bytes = if (payload == null) Array.emptyByteArray else payload
-          val fp = AudioFp.fingerprint(bytes)
-            .getOrElse(StubDecoders.perceptualHash(bytes))
-          MediaFingerprint(id, bytes.length.toLong, fp)
-        }
-      }
+    perPayload(media) { (id, bytes) =>
+      val fp = AudioFp.fingerprint(bytes).getOrElse(StubDecoders.perceptualHash(bytes))
+      Some(MediaFingerprint(id, bytes.length.toLong, fp))
+    }
   }
 
   /** Perceptual near-dup audio pairs: [[audioFingerprints]] through the
@@ -479,25 +451,21 @@ object Multimodal {
     require(stride > 0, s"stride must be positive: $stride")
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        System.setProperty("java.awt.headless", "true")
-        batch.flatMap { case (id, payload) =>
-          val bytes = if (payload == null) Array.emptyByteArray else payload
-          gifFrames(bytes, stride).orElse(aviFrames(bytes, stride))
-            .orElse(Mp4.frames(bytes, stride))
-            .orElse(webpAnimFrames(bytes, stride))
-            .orElse(apngFrames(bytes, stride)) match {
-            case Some(frames) =>
-              frames.map { case (no, img) =>
-                SampledFrame(id, no, img.width, img.height, Png.encode(img))
-              }
-            case None =>
-              Png.decodeAny(bytes).map(img =>
-                SampledFrame(id, 0, img.width, img.height, Png.encode(img))).toSeq
+    perPayload(media) { (id, bytes) =>
+      System.setProperty("java.awt.headless", "true")
+      gifFrames(bytes, stride).orElse(aviFrames(bytes, stride))
+        .orElse(Mp4.frames(bytes, stride))
+        .orElse(webpAnimFrames(bytes, stride))
+        .orElse(apngFrames(bytes, stride)) match {
+        case Some(frames) =>
+          frames.map { case (no, img) =>
+            SampledFrame(id, no, img.width, img.height, Png.encode(img))
           }
-        }
+        case None =>
+          Png.decodeAny(bytes).map(img =>
+            SampledFrame(id, 0, img.width, img.height, Png.encode(img))).toSeq
       }
+    }
   }
 
   final case class ContainerTrackMeta(
@@ -526,18 +494,13 @@ object Multimodal {
   def mp4Meta(media: DataFrame): Dataset[ContainerTrackMeta] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.flatMap { case (id, payload) =>
-          val bytes = if (payload == null) Array.emptyByteArray else payload
-          Mp4.parse(bytes).toSeq.flatMap { m =>
-            m.tracks.map(t => ContainerTrackMeta(id, m.brand, m.timescale,
-              m.duration_ms, t.track_id, t.handler, t.codec, t.width,
-              t.height, t.timescale, t.duration_ms, t.n_samples,
-              t.total_bytes))
-          }
-        }
+    perPayload(media) { (id, bytes) =>
+      Mp4.parse(bytes).toSeq.flatMap { m =>
+        m.tracks.map(t => ContainerTrackMeta(id, m.brand, m.timescale,
+          m.duration_ms, t.track_id, t.handler, t.codec, t.width,
+          t.height, t.timescale, t.duration_ms, t.n_samples, t.total_bytes))
       }
+    }
   }
 
   final case class MpegAudioMeta(
@@ -561,15 +524,11 @@ object Multimodal {
   def mpegMeta(media: DataFrame): Dataset[MpegAudioMeta] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.flatMap { case (id, payload) =>
-          Mpeg.mp3Meta(payload).map(m =>
-            MpegAudioMeta(id, m.version, m.layer, m.sample_rate, m.channels,
-              m.bitrate_kbps, m.n_frames, m.duration_ms,
-              if (m.is_vbr) 1 else 0))
-        }
-      }
+    perPayload(media) { (id, bytes) =>
+      Mpeg.mp3Meta(bytes).map(m =>
+        MpegAudioMeta(id, m.version, m.layer, m.sample_rate, m.channels,
+          m.bitrate_kbps, m.n_frames, m.duration_ms, if (m.is_vbr) 1 else 0))
+    }
   }
 
   final case class OggContainerMeta(
@@ -589,14 +548,10 @@ object Multimodal {
   def oggMeta(media: DataFrame): Dataset[OggContainerMeta] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.flatMap { case (id, payload) =>
-          Ogg.meta(payload).map(m =>
-            OggContainerMeta(id, m.codec, m.channels, m.sample_rate,
-              m.n_pages, m.duration_ms))
-        }
-      }
+    perPayload(media) { (id, bytes) =>
+      Ogg.meta(bytes).map(m =>
+        OggContainerMeta(id, m.codec, m.channels, m.sample_rate, m.n_pages, m.duration_ms))
+    }
   }
 
   final case class ExifRow(
@@ -617,14 +572,10 @@ object Multimodal {
   def exifMeta(media: DataFrame): Dataset[ExifRow] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.flatMap { case (id, payload) =>
-          Exif.meta(if (payload == null) Array.emptyByteArray else payload)
-            .map(m => ExifRow(id, m.make, m.model, m.orientation, m.datetime,
-              m.width, m.height, if (m.has_gps) 1 else 0))
-        }
-      }
+    perPayload(media) { (id, bytes) =>
+      Exif.meta(bytes).map(m => ExifRow(id, m.make, m.model, m.orientation,
+        m.datetime, m.width, m.height, if (m.has_gps) 1 else 0))
+    }
   }
 
   /** Image-side PII redaction: every Exif APP1 segment removed from JPEG
@@ -635,18 +586,13 @@ object Multimodal {
   def stripExif(media: DataFrame): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, payload) =>
-        val p = if (payload == null) Array.emptyByteArray else payload
-        // format-aware redaction: JPEG APP1 surgery ([[Exif.strip]]) or
-        // WebP chunk surgery ([[Webp.stripMeta]]); other formats ride
-        // through unchanged (both strips are reference-preserving no-ops
-        // on payloads without metadata)
-        val stripped =
-          if (sniffFormat(p) == "webp") Webp.stripMeta(p) else Exif.strip(p)
-        (id, stripped)
-      })
-      .toDF("media_id", "payload")
+    perPayload(media) { (id, p) =>
+      // format-aware redaction: JPEG APP1 surgery ([[Exif.strip]]) or
+      // WebP chunk surgery ([[Webp.stripMeta]]); other formats ride
+      // through unchanged (both strips are reference-preserving no-ops
+      // on payloads without metadata)
+      Some((id, if (sniffFormat(p) == "webp") Webp.stripMeta(p) else Exif.strip(p)))
+    }.toDF("media_id", "payload")
   }
 
   final case class WebmTrackMeta(
@@ -669,16 +615,13 @@ object Multimodal {
   def webmMeta(media: DataFrame): Dataset[WebmTrackMeta] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions { batch =>
-        batch.flatMap { case (id, payload) =>
-          Webm.meta(payload).toSeq.flatMap { m =>
-            m.tracks.map(t => WebmTrackMeta(id, m.doc_type, m.duration_ms,
-              t.track_number, t.track_type, t.codec, t.width, t.height,
-              t.sample_rate, t.channels))
-          }
-        }
+    perPayload(media) { (id, bytes) =>
+      Webm.meta(bytes).toSeq.flatMap { m =>
+        m.tracks.map(t => WebmTrackMeta(id, m.doc_type, m.duration_ms,
+          t.track_number, t.track_type, t.codec, t.width, t.height,
+          t.sample_rate, t.channels))
       }
+    }
   }
 
   final case class HeifRow(
@@ -696,11 +639,10 @@ object Multimodal {
   def heifMeta(media: DataFrame): Dataset[HeifRow] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, p) =>
-        Mp4.heifMeta(p).map(m => HeifRow(id, m.brand, m.primary_item,
-          m.item_type, m.n_items, m.width, m.height))
-      })
+    perPayload(media) { (id, p) =>
+      Mp4.heifMeta(p).map(m => HeifRow(id, m.brand, m.primary_item,
+        m.item_type, m.n_items, m.width, m.height))
+    }
   }
 
   final case class WebpRow(
@@ -721,11 +663,10 @@ object Multimodal {
   def webpMeta(media: DataFrame): Dataset[WebpRow] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, p) =>
-        Webp.meta(p).map(m => WebpRow(id, m.variant, m.width, m.height,
-          m.has_alpha, m.has_animation, m.has_exif, m.has_icc, m.n_frames))
-      })
+    perPayload(media) { (id, p) =>
+      Webp.meta(p).map(m => WebpRow(id, m.variant, m.width, m.height,
+        m.has_alpha, m.has_animation, m.has_exif, m.has_icc, m.n_frames))
+    }
   }
 
   /** Format detection for one payload — the dispatch step a multimodal
@@ -921,11 +862,7 @@ object Multimodal {
   def sniffMedia(media: DataFrame): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.select("media_id", "payload").as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, p) =>
-        (id, sniffFormat(if (p == null) Array.emptyByteArray else p),
-          if (p == null) 0L else p.length.toLong)
-      })
+    perPayload(media)((id, p) => Some((id, sniffFormat(p), p.length.toLong)))
       .toDF("media_id", "format", "byte_len")
   }
 

@@ -3,8 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
@@ -15,8 +13,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * near-dup pipeline expressible from `spark.sql`, matching the text
   * (minhash/simhash) and vector surfaces.
   *
-  * Codegen emits one static call per row; the per-row cost is the audio
-  * decode itself, so there is nothing further to inline.
+  * The per-row cost is the audio decode itself, so there is nothing to
+  * inline beyond the one static call.
   */
 object AudioFingerprint {
 
@@ -29,7 +27,7 @@ object AudioFingerprint {
     Bridge.column(AudioFingerprintExpr(Bridge.expression(payload)))
 }
 
-case class AudioFingerprintExpr(child: Expression) extends UnaryExpression {
+case class AudioFingerprintExpr(child: Expression) extends UnaryExpression with Kernel {
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case BinaryType => TypeCheckResult.TypeCheckSuccess
@@ -40,22 +38,8 @@ case class AudioFingerprintExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def prettyName: String = "audio_fingerprint"
-
-  override def nullSafeEval(input: Any): Any =
-    AudioFingerprint.compute(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      boolean ${ev.isNull} = true;
-      long ${ev.value} = -1L;
-      if (!${c.isNull}) {
-        java.lang.Long r =
-          graft.functions.AudioFingerprint.compute(${c.value});
-        if (r != null) { ${ev.isNull} = false; ${ev.value} = r.longValue(); }
-      }""")
-  }
+  def kernel = Kernel.Static(AudioFingerprint, "compute")
+  override protected def resultNullable: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

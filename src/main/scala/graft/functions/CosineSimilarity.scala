@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -22,20 +21,11 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * (the `embeddings.embedding` type).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with Kernel {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_similarity"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    CosineSimilarity.compute(
-      l.asInstanceOf[ArrayData].toFloatArray(),
-      r.asInstanceOf[ArrayData].toFloatArray())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.functions.CosineSimilarity.compute(" +
-        s"$l.toFloatArray(), $r.toFloatArray());")
+  def kernel = Kernel.Static(CosineSimilarity, "compute")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -43,6 +33,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
+  def compute(a: ArrayData, b: ArrayData): Double =
+    compute(a.toFloatArray(), b.toFloatArray())
+
   def compute(a: Array[Float], b: Array[Float]): Double = {
     val n = math.min(a.length, b.length)
     var i = 0; var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -59,20 +52,11 @@ object CosineSimilarity {
   * dot IS the cosine — one multiply-add per element, no sqrt).
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with Kernel {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_product"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    DotProduct.compute(
-      l.asInstanceOf[ArrayData].toFloatArray(),
-      r.asInstanceOf[ArrayData].toFloatArray())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.functions.DotProduct.compute(" +
-        s"$l.toFloatArray(), $r.toFloatArray());")
+  def kernel = Kernel.Static(DotProduct, "compute")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -80,7 +64,8 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object DotProduct {
-  def compute(a: Array[Float], b: Array[Float]): Double = {
+  def compute(l: ArrayData, r: ArrayData): Double = {
+    val a = l.toFloatArray(); val b = r.toFloatArray()
     val n = math.min(a.length, b.length)
     var i = 0; var dot = 0.0
     while (i < n) { dot += a(i).toDouble * b(i).toDouble; i += 1 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -177,16 +176,10 @@ object HtmlText {
     Bridge.column(HtmlTextExpr(Bridge.expression(html)))
 }
 
-case class HtmlTextExpr(child: Expression) extends UnaryExpression {
+case class HtmlTextExpr(child: Expression) extends UnaryExpression with Kernel {
   override def dataType: DataType = StringType
   override def prettyName: String = "html_text"
-
-  override def nullSafeEval(input: Any): Any =
-    HtmlText.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HtmlText.compute($c);")
+  def kernel = Kernel.Static(HtmlText, "compute")
 
   override protected def withNewChildInternal(newChild: Expression): HtmlTextExpr =
     copy(child = newChild)

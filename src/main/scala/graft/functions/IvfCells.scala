@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
@@ -34,6 +33,9 @@ object IvfCells {
     if (java.lang.Double.isNaN(s)) Double.NegativeInfinity else s
   }
 
+  def computeCell(vec: ArrayData, cents: Array[Array[Float]]): Int =
+    computeCell(vec.toFloatArray(), cents)
+
   /** argmax-cosine cell index. */
   def computeCell(vec: Array[Float], cents: Array[Array[Float]]): Int = {
     var best = 0
@@ -46,6 +48,9 @@ object IvfCells {
     }
     best
   }
+
+  def computeCells(vec: ArrayData, cents: Array[Array[Float]], nprobe: Int): ArrayData =
+    computeCells(vec.toFloatArray(), cents, nprobe)
 
   /** Top-`nprobe` cell indices by cosine, descending (ties → lower index
     * first): the query-side multi-probe set.
@@ -78,6 +83,10 @@ object IvfCells {
     new GenericArrayData(picked)
   }
 
+  /** The centroid matrix as the kernels read it. */
+  def matrix(centroids: Seq[Seq[Float]]): Array[Array[Float]] =
+    centroids.map(_.toArray).toArray
+
   def nearest_cell(vec: Column, centroids: Seq[Seq[Float]]): Column =
     Bridge.column(NearestCell(Bridge.expression(vec), centroids))
 
@@ -86,44 +95,20 @@ object IvfCells {
 }
 
 case class NearestCell(child: Expression, centroids: Seq[Seq[Float]])
-    extends UnaryExpression {
-
-  @transient private lazy val matrix: Array[Array[Float]] =
-    centroids.map(_.toArray).toArray
-
+    extends UnaryExpression with Kernel {
   override def dataType: DataType = IntegerType
   override def prettyName: String = "ivf_nearest_cell"
-
-  override def nullSafeEval(input: Any): Any =
-    IvfCells.computeCell(input.asInstanceOf[ArrayData].toFloatArray(), matrix)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", matrix, "float[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.IvfCells.computeCell($c.toFloatArray(), $cents);")
-  }
+  def kernel = Kernel.Static(IvfCells, "computeCell", IvfCells.matrix(centroids))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 case class NearestCells(child: Expression, centroids: Seq[Seq[Float]], nprobe: Int)
-    extends UnaryExpression {
-
-  @transient private lazy val matrix: Array[Array[Float]] =
-    centroids.map(_.toArray).toArray
-
+    extends UnaryExpression with Kernel {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "ivf_nearest_cells"
-
-  override def nullSafeEval(input: Any): Any =
-    IvfCells.computeCells(input.asInstanceOf[ArrayData].toFloatArray(), matrix, nprobe)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", matrix, "float[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.IvfCells.computeCells($c.toFloatArray(), $cents, $nprobe);")
-  }
+  def kernel = Kernel.Static(IvfCells, "computeCells", IvfCells.matrix(centroids), nprobe)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

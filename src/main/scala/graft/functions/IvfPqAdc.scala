@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -53,7 +52,8 @@ object IvfPqAdc {
   /** vec − centroids(cell), elementwise in float — the residual the PQ
     * codebooks are trained on and encode.
     */
-  def residual(vec: Array[Float], cell: Int, cents: Array[Array[Float]]): ArrayData = {
+  def residual(v: ArrayData, cell: Int, cents: Array[Array[Float]]): ArrayData = {
+    val vec = v.toFloatArray()
     val c = cents(cell)
     val n = math.min(vec.length, c.length)
     val out = new Array[Float](n)
@@ -88,19 +88,10 @@ case class IvfAdcModel(
     qNorm: Double)
 
 case class IvfAdcScore(left: Expression, right: Expression, model: IvfAdcModel)
-    extends BinaryExpression {
-
+    extends BinaryExpression with Kernel {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "ivf_adc_score"
-
-  override def nullSafeEval(code: Any, cell: Any): Any =
-    IvfPqAdc.score(code.asInstanceOf[Long], cell.asInstanceOf[Int], model)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("ivfAdcModel", model, classOf[IvfAdcModel].getName)
-    nullSafeCodeGen(ctx, ev, (code, cell) =>
-      s"${ev.value} = graft.functions.IvfPqAdc.score($code, $cell, $m);")
-  }
+  def kernel = Kernel.Static(IvfPqAdc, "score", model)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -108,23 +99,10 @@ case class IvfAdcScore(left: Expression, right: Expression, model: IvfAdcModel)
 }
 
 case class CellResidual(left: Expression, right: Expression, centroids: Seq[Seq[Float]])
-    extends BinaryExpression {
-
-  @transient private lazy val matrix: Array[Array[Float]] =
-    centroids.map(_.toArray).toArray
-
+    extends BinaryExpression with Kernel {
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
   override def prettyName: String = "ivf_cell_residual"
-
-  override def nullSafeEval(vec: Any, cell: Any): Any =
-    IvfPqAdc.residual(
-      vec.asInstanceOf[ArrayData].toFloatArray(), cell.asInstanceOf[Int], matrix)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cents = ctx.addReferenceObj("centroids", matrix, "float[][]")
-    nullSafeCodeGen(ctx, ev, (vec, cell) =>
-      s"${ev.value} = graft.functions.IvfPqAdc.residual($vec.toFloatArray(), $cell, $cents);")
-  }
+  def kernel = Kernel.Static(IvfPqAdc, "residual", IvfCells.matrix(centroids))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

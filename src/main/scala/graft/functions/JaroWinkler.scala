@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,7 +31,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the two match-flag arrays.
   */
 object JaroWinklerKernel {
-  /** Static kernel — called from generated code and from `nullSafeEval`. */
+  /** The static kernel of [[JaroWinklerSim]]. */
   def similarity(l: UTF8String, r: UTF8String): Double = {
     val a = l.toString
     val b = r.toString
@@ -88,18 +87,10 @@ object JaroWinklerKernel {
 }
 
 case class JaroWinklerSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-
+    extends BinaryExpression with Kernel {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "jaro_winkler"
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    JaroWinklerKernel.similarity(
-      l.asInstanceOf[UTF8String], r.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, r) =>
-      s"${ev.value} = graft.functions.JaroWinklerKernel.similarity($l, $r);")
+  def kernel = Kernel.Static(JaroWinklerKernel, "similarity")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

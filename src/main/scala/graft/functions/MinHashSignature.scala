@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -21,17 +20,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * static kernel.
   */
 case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-
+    extends UnaryExpression with Kernel {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_signature"
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashSignature.compute(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashSignature.compute($c, $numHashes);")
+  def kernel = Kernel.Static(MinHashSignature, "compute", numHashes)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -132,32 +131,20 @@ object MinHashText {
 }
 
 case class MinHashWordShingles(child: Expression, n: Int, numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with Kernel {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_word_shingles"
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashText.computeWords(input.asInstanceOf[UTF8String], n, numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashText.computeWords($c, $n, $numHashes);")
+  def kernel = Kernel.Static(MinHashText, "computeWords", n, numHashes)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 case class MinHashCharShingles(child: Expression, c: Int, numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with Kernel {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_char_shingles"
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashText.computeChars(input.asInstanceOf[UTF8String], c, numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, cIn =>
-      s"${ev.value} = graft.functions.MinHashText.computeChars($cIn, $c, $numHashes);")
+  def kernel = Kernel.Static(MinHashText, "computeChars", c, numHashes)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

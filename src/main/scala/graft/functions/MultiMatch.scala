@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -104,31 +103,24 @@ final class AhoCorasick(terms: Seq[String]) extends Serializable {
 }
 
 object MultiMatch {
+  /** The static kernel of [[MultiMatchCount]]. */
+  def count(text: UTF8String, ac: AhoCorasick): Long = ac.matchedCount(text)
+
   /** Column API: distinct-term match count via one automaton pass. */
   def multi_match_count(text: Column, terms: Seq[String]): Column =
     Bridge.column(MultiMatchCount(Bridge.expression(text), terms))
 }
 
 case class MultiMatchCount(child: Expression, terms: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with Kernel {
   require(terms.nonEmpty, "multi_match_count: empty term list")
-  // Fail at plan construction, not from the transient lazy automaton's
-  // first evaluation on an executor (a confusing mid-query error).
+  // Fail at plan construction, not from the automaton's first build on
+  // an executor (a confusing mid-query error).
   require(terms.forall(_.nonEmpty), "multi_match_count: empty term")
-
-  @transient private lazy val ac = new AhoCorasick(terms)
 
   override def dataType: DataType = LongType
   override def prettyName: String = "multi_match_count"
-
-  override def nullSafeEval(input: Any): Any =
-    ac.matchedCount(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val a = ctx.addReferenceObj("ahoCorasick", ac,
-      classOf[AhoCorasick].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $a.matchedCount($c);")
-  }
+  def kernel = Kernel.Static(MultiMatch, "count", new AhoCorasick(terms))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -58,7 +57,7 @@ case class NearestCellQExpr(
     child: Expression,
     cents: Array[Array[Long]],
     ids: Array[Long])
-    extends UnaryExpression {
+    extends UnaryExpression with Kernel {
   require(cents.nonEmpty && cents.length == ids.length,
     "nearest_cell_q: empty or mismatched centroid set")
 
@@ -71,16 +70,7 @@ case class NearestCellQExpr(
   }
   override def dataType: DataType = LongType
   override def prettyName: String = "nearest_cell_q"
-
-  override def nullSafeEval(input: Any): Any =
-    NearestCellQ.compute(input.asInstanceOf[ArrayData], cents, ids)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("kmeansCentroids", cents, "long[][]")
-    val is = ctx.addReferenceObj("kmeansCellIds", ids, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NearestCellQ.compute($c, $m, $is);")
-  }
+  def kernel = Kernel.Static(NearestCellQ, "compute", cents, ids)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

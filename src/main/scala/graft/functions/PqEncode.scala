@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -52,7 +51,8 @@ object PqCodes {
     * A vector shorter than the codebooks' implied dim reads as if
     * zero-padded is NOT supported — caller guarantees consistent dim.
     */
-  def computePacked(vec: Array[Float], books: Array[Array[Array[Float]]], bitsPerCode: Int): Long = {
+  def computePacked(v: ArrayData, books: Array[Array[Array[Float]]], bitsPerCode: Int): Long = {
+    val vec = v.toFloatArray()
     val m = books.length
     val sub = if (m == 0) 0 else books(0)(0).length
     var packed = 0L
@@ -78,23 +78,11 @@ object PqCodes {
 }
 
 case class PqEncode(child: Expression, codebooks: Seq[Seq[Seq[Float]]], bitsPerCode: Int)
-    extends UnaryExpression {
-
-  @transient private lazy val tensor: Array[Array[Array[Float]]] =
-    codebooks.map(_.map(_.toArray).toArray).toArray
-
+    extends UnaryExpression with Kernel {
   override def dataType: DataType = LongType
   override def prettyName: String = "pq_encode"
-
-  override def nullSafeEval(input: Any): Any =
-    PqCodes.computePacked(
-      input.asInstanceOf[ArrayData].toFloatArray(), tensor, bitsPerCode)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val books = ctx.addReferenceObj("pqCodebooks", tensor, "float[][][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PqCodes.computePacked($c.toFloatArray(), $books, $bitsPerCode);")
-  }
+  def kernel = Kernel.Static(PqCodes, "computePacked",
+    codebooks.map(_.map(_.toArray).toArray).toArray, bitsPerCode)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
@@ -33,7 +32,7 @@ object QuantizedDot {
 }
 
 case class QuantizedDotExpr(child: Expression, q: Array[Long])
-    extends UnaryExpression {
+    extends UnaryExpression with Kernel {
   require(q.nonEmpty, "quantized_dot: empty query")
 
   // Strict array<float> contract: compute() reads 4-byte slots via
@@ -46,15 +45,7 @@ case class QuantizedDotExpr(child: Expression, q: Array[Long])
   }
   override def dataType: DataType = LongType
   override def prettyName: String = "quantized_dot"
-
-  override def nullSafeEval(input: Any): Any =
-    QuantizedDot.compute(input.asInstanceOf[ArrayData], q)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qr = ctx.addReferenceObj("quantizedQuery", q, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.QuantizedDot.compute($c, $qr);")
-  }
+  def kernel = Kernel.Static(QuantizedDot, "compute", q)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

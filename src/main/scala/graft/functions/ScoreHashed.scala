@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -60,7 +59,7 @@ object ScoreHashed {
 }
 
 case class ScoreHashedExpr(child: Expression, w: Array[Double], dim: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with Kernel {
   require(dim > 0 && w.length == dim + 1,
     s"score_hashed: weights must be dim+1 (${dim + 1}), got ${w.length}")
 
@@ -68,15 +67,7 @@ case class ScoreHashedExpr(child: Expression, w: Array[Double], dim: Int)
     StructField("n_toks", LongType, nullable = false),
     StructField("score", DoubleType, nullable = false)))
   override def prettyName: String = "score_hashed"
-
-  override def nullSafeEval(input: Any): Any =
-    ScoreHashed.compute(input.asInstanceOf[UTF8String], w, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wr = ctx.addReferenceObj("scoreWeights", w, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ScoreHashed.compute($c, $wr, $dim);")
-  }
+  def kernel = Kernel.Static(ScoreHashed, "compute", w, dim)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

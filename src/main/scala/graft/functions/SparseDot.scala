@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StructType}
@@ -41,7 +40,7 @@ object SparseDot {
 }
 
 case class SparseDotW(child: Expression, w: Array[Double])
-    extends UnaryExpression {
+    extends UnaryExpression with Kernel {
   require(w.nonEmpty, "sparse_dot_w: empty weight vector")
 
   // Strict array<struct<int, double>> contract — compute() reads the
@@ -57,15 +56,7 @@ case class SparseDotW(child: Expression, w: Array[Double])
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "sparse_dot_w"
-
-  override def nullSafeEval(input: Any): Any =
-    SparseDot.compute(input.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wr = ctx.addReferenceObj("sparseDotWeights", w, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SparseDot.compute($c, $wr);")
-  }
+  def kernel = Kernel.Static(SparseDot, "compute", w)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

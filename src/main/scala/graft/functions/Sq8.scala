@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
@@ -32,7 +31,8 @@ object Sq8 {
     if (b < 0) 0 else if (b > 255) 255 else b
   }
 
-  def encodeVec(vec: Array[Float], lo: Array[Float], hi: Array[Float]): Array[Byte] = {
+  def encodeVec(v: ArrayData, lo: Array[Float], hi: Array[Float]): Array[Byte] = {
+    val vec = v.toFloatArray()
     val n = math.min(vec.length, lo.length)
     val out = new Array[Byte](n)
     var i = 0
@@ -82,42 +82,20 @@ case class Sq8Model(
     qNorm: Double)
 
 case class Sq8Encode(child: Expression, loB: Seq[Float], hiB: Seq[Float])
-    extends UnaryExpression {
-
-  @transient private lazy val lo: Array[Float] = loB.toArray
-  @transient private lazy val hi: Array[Float] = hiB.toArray
-
+    extends UnaryExpression with Kernel {
   override def dataType: DataType = BinaryType
   override def prettyName: String = "sq8_encode"
-
-  override def nullSafeEval(input: Any): Any =
-    Sq8.encodeVec(input.asInstanceOf[ArrayData].toFloatArray(), lo, hi)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val loRef = ctx.addReferenceObj("sq8Lo", lo, "float[]")
-    val hiRef = ctx.addReferenceObj("sq8Hi", hi, "float[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Sq8.encodeVec($c.toFloatArray(), $loRef, $hiRef);")
-  }
+  def kernel = Kernel.Static(Sq8, "encodeVec", loB.toArray, hiB.toArray)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 case class Sq8Score(child: Expression, model: Sq8Model)
-    extends UnaryExpression {
-
+    extends UnaryExpression with Kernel {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "sq8_score"
-
-  override def nullSafeEval(input: Any): Any =
-    Sq8.score(input.asInstanceOf[Array[Byte]], model)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("sq8Model", model, classOf[Sq8Model].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Sq8.score($c, $m);")
-  }
+  def kernel = Kernel.Static(Sq8, "score", model)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

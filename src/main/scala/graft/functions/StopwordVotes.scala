@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -73,28 +72,20 @@ object StopwordVotes {
     }
   }
 
+  /** The static kernel of [[StopwordVotesExpr]]. */
+  def compute(text: UTF8String, model: Model): InternalRow = model.compute(text)
+
   def stopword_votes(text: Column, langs: Seq[(String, Seq[String])]): Column =
     Bridge.column(StopwordVotesExpr(Bridge.expression(text), langs))
 }
 
 case class StopwordVotesExpr(child: Expression, langs: Seq[(String, Seq[String])])
-    extends UnaryExpression {
-
-  @transient private lazy val model = new StopwordVotes.Model(langs)
-
+    extends UnaryExpression with Kernel {
   override def dataType: DataType = StructType(Seq(
     StructField("lang", StringType, nullable = false),
     StructField("score", IntegerType, nullable = false)))
   override def prettyName: String = "stopword_votes"
-
-  override def nullSafeEval(input: Any): Any =
-    model.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("stopwordModel", model,
-      classOf[StopwordVotes.Model].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $m.compute($c);")
-  }
+  def kernel = Kernel.Static(StopwordVotes, "compute", new StopwordVotes.Model(langs))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

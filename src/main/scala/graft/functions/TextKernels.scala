@@ -1,10 +1,12 @@
 package graft.functions
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused single-pass text kernels for the quality/token scans that run
@@ -94,11 +96,11 @@ object TextKernels {
     * of the text's byte array. Rows with fewer than n tokens yield an
     * empty array — matching the composable form's guard.
     */
-  def computeWordNgrams(text: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def computeWordNgrams(text: UTF8String, n: Int): ArrayData = {
     val bytes = text.getBytes
     val (starts, ends, tokens) = tokenBounds(bytes)
     if (tokens < n)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+      return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](tokens - n + 1)
     var s = 0
     while (s < out.length) {
@@ -106,7 +108,7 @@ object TextKernels {
       out(s) = UTF8String.fromBytes(bytes, from, ends(s + n - 1) - from)
       s += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** Word n-shingles: like [[computeWordNgrams]] but with the shingling
@@ -114,7 +116,7 @@ object TextKernels {
     * whole text), matching `Dedup.WordShingles`' composable form (and the
     * window rule of [[MinHashText.computeWords]]).
     */
-  def computeWordShingles(text: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def computeWordShingles(text: UTF8String, n: Int): ArrayData = {
     val bytes = text.getBytes
     val (starts, ends, tokens) = tokenBounds(bytes)
     val numShingles = math.max(tokens - n + 1, 1)
@@ -126,7 +128,7 @@ object TextKernels {
       out(s) = UTF8String.fromBytes(bytes, from, to - from)
       s += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** Char k-shingles (UTF-8 aware: a window of k CHARACTERS is still a
@@ -134,7 +136,7 @@ object TextKernels {
     * shorter than k chars — matching `Dedup.CharShingles`' composable
     * form and [[MinHashText.computeChars]].
     */
-  def computeCharShingles(text: UTF8String, k: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def computeCharShingles(text: UTF8String, k: Int): ArrayData = {
     val bytes = text.getBytes
     val len = bytes.length
     var chars = 0
@@ -158,7 +160,7 @@ object TextKernels {
       out(s) = UTF8String.fromBytes(bytes, from, to - from)
       s += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** Overlapping token windows (context-window chunking): window w at
@@ -168,7 +170,7 @@ object TextKernels {
     * array_join(slice(toks, i, w), ' '))` form: at least one window, the
     * last window clamped to the end.
     */
-  def computeChunks(text: UTF8String, window: Int, stride: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def computeChunks(text: UTF8String, window: Int, stride: Int): ArrayData = {
     val bytes = text.getBytes
     val (starts, ends, tokens) = tokenBounds(bytes)
     val span = math.max(tokens - window + 1, 1)
@@ -182,7 +184,7 @@ object TextKernels {
       out(k) = UTF8String.fromBytes(bytes, from, to - from)
       k += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** `regexp_replace` decodes its input to a Java string and re-encodes the
@@ -368,145 +370,82 @@ object TextKernels {
     Bridge.column(ChunkWindows(Bridge.expression(text), window, stride))
 }
 
-case class SubwordCount(child: Expression, divisor: Int) extends UnaryExpression {
+case class SubwordCount(child: Expression, divisor: Int) extends UnaryExpression with Kernel {
   require(divisor >= 1, s"subword_count: divisor must be >= 1, got $divisor")
   override def dataType: DataType = LongType
   override def prettyName: String = "subword_count"
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.computeSubwords(input.asInstanceOf[UTF8String], divisor)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.computeSubwords($c, $divisor);")
+  def kernel = Kernel.Static(TextKernels, "computeSubwords", divisor)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
+case class WordNgrams(child: Expression, n: Int) extends UnaryExpression with Kernel {
   require(n >= 1, s"word_ngrams: n must be >= 1, got $n")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = false)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_ngrams"
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.computeWordNgrams(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.computeWordNgrams($c, $n);")
+  def kernel = Kernel.Static(TextKernels, "computeWordNgrams", n)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-case class WordShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
+case class WordShinglesExpr(child: Expression, n: Int) extends UnaryExpression with Kernel {
   require(n >= 1, s"word_shingles: n must be >= 1, got $n")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = false)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_shingles"
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.computeWordShingles(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.computeWordShingles($c, $n);")
+  def kernel = Kernel.Static(TextKernels, "computeWordShingles", n)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-case class CharShinglesExpr(child: Expression, k: Int) extends UnaryExpression {
+case class CharShinglesExpr(child: Expression, k: Int) extends UnaryExpression with Kernel {
   require(k >= 1, s"char_shingles: k must be >= 1, got $k")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = false)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "char_shingles"
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.computeCharShingles(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, cIn =>
-      s"${ev.value} = graft.functions.TextKernels.computeCharShingles($cIn, $k);")
+  def kernel = Kernel.Static(TextKernels, "computeCharShingles", k)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 case class ChunkWindows(child: Expression, window: Int, stride: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with Kernel {
   require(window >= 1 && stride >= 1,
     s"chunk_windows: window and stride must be >= 1, got ($window, $stride)")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType, containsNull = false)
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "chunk_windows"
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.computeChunks(input.asInstanceOf[UTF8String], window, stride)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.computeChunks($c, $window, $stride);")
+  def kernel = Kernel.Static(TextKernels, "computeChunks", window, stride)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-case class StopwordCount(child: Expression, words: Seq[String]) extends UnaryExpression {
-
-  @transient private lazy val set: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    words.foreach(s.add)
-    s
-  }
-
+case class StopwordCount(child: Expression, words: Seq[String])
+    extends UnaryExpression with Kernel {
   override def dataType: DataType = LongType
   override def prettyName: String = "stopword_count"
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.computeStopwordHits(input.asInstanceOf[UTF8String], set)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val w = ctx.addReferenceObj("stopwordSet", set, "java.util.HashSet<String>")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.computeStopwordHits($c, $w);")
-  }
+  def kernel = Kernel.Static(TextKernels, "computeStopwordHits",
+    new java.util.HashSet[String](words.asJava))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-case class RedactExpr(child: Expression) extends UnaryExpression {
+case class RedactExpr(child: Expression) extends UnaryExpression with Kernel {
   override def dataType: DataType = StringType
   override def prettyName: String = "redact"
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.computeRedact(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.computeRedact($c);")
+  def kernel = Kernel.Static(TextKernels, "computeRedact")
 
   override protected def withNewChildInternal(newChild: Expression): RedactExpr =
     copy(child = newChild)
 }
 
-case class SqueezeSpacesExpr(child: Expression) extends UnaryExpression {
+case class SqueezeSpacesExpr(child: Expression) extends UnaryExpression with Kernel {
   override def dataType: DataType = StringType
   override def prettyName: String = "squeeze_spaces"
-
-  override def nullSafeEval(input: Any): Any =
-    TextKernels.computeSqueezeSpaces(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextKernels.computeSqueezeSpaces($c);")
+  def kernel = Kernel.Static(TextKernels, "computeSqueezeSpaces")
 
   override protected def withNewChildInternal(newChild: Expression): SqueezeSpacesExpr =
     copy(child = newChild)

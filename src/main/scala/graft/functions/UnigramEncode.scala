@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -108,23 +107,11 @@ case class UnigramTokens(
     vocab: Seq[(String, Double)],
     maxPieceLen: Int,
     unkLogProb: Double)
-    extends UnaryExpression {
-
-  @transient private lazy val table: java.util.HashMap[String, java.lang.Double] =
-    UnigramOps.buildTable(vocab)
-
+    extends UnaryExpression with Kernel {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "unigram_tokens"
-
-  override def nullSafeEval(input: Any): Any =
-    UnigramOps.encodeText(input.asInstanceOf[UTF8String], table, maxPieceLen, unkLogProb)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val t = ctx.addReferenceObj("unigramTable", table,
-      "java.util.HashMap<String, Double>")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.UnigramOps.encodeText($c, $t, $maxPieceLen, ${unkLogProb}D);")
-  }
+  def kernel = Kernel.Static(UnigramOps, "encodeText",
+    UnigramOps.buildTable(vocab), maxPieceLen, unkLogProb)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,9 +1,10 @@
 package graft.functions
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -92,28 +93,15 @@ object WordPieceOps {
 }
 
 case class WordPieceStats(child: Expression, vocab: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with Kernel {
   require(vocab.nonEmpty, "wordpiece_stats: empty vocabulary")
-
-  @transient private lazy val set: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    vocab.foreach(s.add)
-    s
-  }
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_pieces", LongType, nullable = false),
     StructField("n_unk", LongType, nullable = false)))
   override def prettyName: String = "wordpiece_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    WordPieceOps.computeStats(input.asInstanceOf[UTF8String], set)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val v = ctx.addReferenceObj("wordpieceVocab", set, "java.util.HashSet<String>")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordPieceOps.computeStats($c, $v);")
-  }
+  def kernel = Kernel.Static(WordPieceOps, "computeStats",
+    new java.util.HashSet[String](vocab.asJava))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 import graft.SparkSpec
 
@@ -43,5 +44,29 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(r.getLong(6) == 3L) // 1 + ceil(8/4)
     assert(r.getLong(7) == 2L)
     assert(r.getLong(8) == 2L) // 'red' and the cross-word phrase 'g r'
+  }
+
+  test("builders reject a wrong arity or a non-literal argument, naming the function") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, CreateArray, Literal}
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    val builder = GraftExtensions.builders.toMap
+    def error(name: String, args: Expression*): String =
+      intercept[IllegalArgumentException](builder(name)(args)).getMessage
+    for (name <- builder.keys)
+      assert(error(name).startsWith(name), name)
+    val text = Literal("a b")
+    val col = AttributeReference("n", IntegerType)()
+    assert(error("minhash_word_shingles", text, col, Literal(4)) ==
+      "minhash_word_shingles: size must be an integer literal")
+    assert(error("minhash_signature", text, Literal("4")) ==
+      "minhash_signature: k must be an integer literal, got 4")
+    assert(error("subword_count", text, Literal(0)).contains("divisor must be >= 1"))
+    assert(error("stopword_count", text,
+      CreateArray(Seq(Literal("the"), Literal(null, StringType)))) ==
+      "stopword_count: words array must not contain NULL")
+    assert(error("multi_match_count", text, CreateArray(Seq(Literal("")))) ==
+      "multi_match_count: terms array must not contain empty strings")
+    assert(error("multi_match_count", text, Literal("cat")).startsWith(
+      "multi_match_count: terms must be an array-of-strings literal"))
   }
 }

@@ -1,7 +1,5 @@
 package graft.ext
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[MsbReader]], [[LsbReader]], [[MsbWriter]] and [[LsbWriter]] against a
@@ -260,8 +258,6 @@ class BitsSpec extends AnyFunSuite {
   }
 
   test("src/main defines no bit reader, bit writer or bit accumulator outside Bits") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the project root: $root")
     // a bit-stream class by name, or the pending-bit counter of an inline one
     val pattern =
       """\bclass\s+(\w*Bits?(Reader|Writer)|(Msb|Lsb)\w*|Reader|Writer)\b|\bvar\s+(nbits|nBits|bitCnt|bitCount|bitBuf|bitPos|bitsLeft)\b""".r
@@ -270,15 +266,7 @@ class BitsSpec extends AnyFunSuite {
     val jpegReader = Set(
       "private final class BitReader(b: Array[Byte], var pos: Int) {",
       "private var nBits = 0")
-    val files = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.exists(_.endsWith("ext/Bits.scala")))
-    val found = for {
-      f <- files if !f.endsWith("ext/Bits.scala")
-      (line, n) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-      if pattern.findFirstIn(line).isDefined
-      if !(f.endsWith("ext/Jpeg.scala") && jpegReader.contains(line.trim))
-    } yield s"$f:${n + 1}: ${line.trim}"
-    assert(found.isEmpty, found.mkString("\n"))
+    graft.OneHome.assertOnlyIn(Seq("ext/Bits.scala"), Seq(pattern),
+      (f, line) => f.endsWith("ext/Jpeg.scala") && jpegReader.contains(line))
   }
 }

@@ -2,8 +2,6 @@ package graft.ext
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Bytes]] against `java.nio.ByteBuffer` as the independent reference:
@@ -178,17 +176,7 @@ class BytesSpec extends AnyFunSuite {
   }
 
   test("src/main defines no byte-order helper outside Bytes") {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the project root: $root")
-    val helper = """\bdef\s+(le16|le32|be16|be32|u16|u32|w16|w32|putLe\w*|putBe\w*)\b""".r
-    val files = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.exists(_.endsWith("ext/Bytes.scala")))
-    val found = for {
-      f <- files if !f.endsWith("ext/Bytes.scala")
-      (line, n) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-      if helper.findFirstIn(line).isDefined
-    } yield s"$f:${n + 1}: ${line.trim}"
-    assert(found.isEmpty, found.mkString("\n"))
+    graft.OneHome.assertOnlyIn(Seq("ext/Bytes.scala"), Seq(
+      """\bdef\s+(le16|le32|be16|be32|u16|u32|w16|w32|putLe\w*|putBe\w*)\b""".r))
   }
 }

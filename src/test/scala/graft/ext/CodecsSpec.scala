@@ -381,22 +381,10 @@ class CodecsSpec extends AnyFunSuite {
   }
 
   test("src/main runs no Deflater, Inflater or gzip writer outside Codecs") {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root), s"run from the project root: $root")
-    val banned = Seq(
+    graft.OneHome.assertOnlyIn(Seq("ext/Codecs.scala"), Seq(
       """\bnew\s+(java\.util\.zip\.)?(Deflater|Inflater|GZIPOutputStream)\b""".r,
       """\bextends\s+(java\.util\.zip\.)?(Deflater|Inflater)\b""".r,
       """\bThreadLocal\b.*(Deflater|Inflater)""".r,
-      """\.(deflate|inflate)\(""".r)
-    val files = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.exists(_.endsWith("ext/Codecs.scala")))
-    val found = for {
-      f <- files if !f.endsWith("ext/Codecs.scala")
-      (line, n) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-      if banned.exists(_.findFirstIn(line).isDefined)
-    } yield s"$f:${n + 1}: ${line.trim}"
-    assert(found.isEmpty, found.mkString("\n"))
+      """\.(deflate|inflate)\(""".r))
   }
 }

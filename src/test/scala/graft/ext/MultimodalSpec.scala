@@ -491,4 +491,14 @@ class MultimodalSpec extends SparkSpec {
     val docx = Zip.build(Seq(("word/document.xml", "<w/>".getBytes, true)))
     assert(Multimodal.sniffFormat(docx) == "zip")
   }
+
+  test("the triage decoders read a null payload as they read empty bytes") {
+    // Multimodal's stages hand a null payload to these decoders as empty bytes
+    val empty = Array.emptyByteArray
+    assert(Mpeg.mp3Meta(null) == Mpeg.mp3Meta(empty) && Mpeg.mp3Meta(empty).isEmpty)
+    assert(Ogg.meta(null) == Ogg.meta(empty) && Ogg.meta(empty).isEmpty)
+    assert(Webm.meta(null) == Webm.meta(empty) && Webm.meta(empty).isEmpty)
+    assert(Mp4.heifMeta(null) == Mp4.heifMeta(empty) && Mp4.heifMeta(empty).isEmpty)
+    assert(Webp.meta(null) == Webp.meta(empty) && Webp.meta(empty).isEmpty)
+  }
 }

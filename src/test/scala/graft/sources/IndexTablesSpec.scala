@@ -2,8 +2,6 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
@@ -159,17 +157,7 @@ class IndexTablesSpec extends SparkSpec {
   }
 
   test("src/main writes catalog tables only through IndexTables") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the project root: $root")
-    val write = """\b(saveAsTable|insertInto)\b""".r
-    val files = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.exists(_.endsWith("sources/IndexTables.scala")))
-    val found = for {
-      f <- files if !f.endsWith("sources/IndexTables.scala")
-      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
-      if write.findFirstIn(line).isDefined
-    } yield s"$f:${n + 1}: ${line.trim}"
-    assert(found.isEmpty, found.mkString("\n"))
+    graft.OneHome.assertOnlyIn(Seq("sources/IndexTables.scala"),
+      Seq("""\b(saveAsTable|insertInto)\b""".r))
   }
 }
